@@ -9,12 +9,12 @@ Design rules for this family:
   the COMPARISON of two near-equal cosines drives control flow (IVF probe
   argmax, k-means assignment) — there the DuckDB oracle replicates the same
   sequential fold, so bit-level parity matters more than constant factor.
-- MinHash-LSH is hand-rolled in DataFrame ops (explode → min-per-permutation
-  → banded re-hash → bucket join), not spark.ml's MinHashLSH: the DataFrame
-  form shuffles candidates by (band, key) — linear in data + candidate pairs
-  — instead of ml's memory-heavy model broadcast, and AQE handles skewed
-  buckets. At 100 TB only band-bucket grouping and the verified-candidate
-  join shuffle; no all-pairs stage exists anywhere.
+- MinHash-LSH is hand-rolled (shingle hashes → one Arrow signature kernel
+  → exact (band, key) buckets), not spark.ml's MinHashLSH: the DataFrame
+  form shuffles candidates by (band, key) — linear in data + candidate
+  pairs — instead of ml's memory-heavy model broadcast, and AQE handles
+  skewed buckets. At 100 TB only band-bucket grouping and the
+  verified-candidate join shuffle; no all-pairs stage exists anywhere.
 - Exact all-pairs forms (J4's cross join) are correctness baselines at test
   scale; scale paths are the LSH/blocked variants (see llm_extras).
 """
@@ -258,9 +258,11 @@ def _collect_embeddings(e: DataFrame):
     """(ids, M, norms) numpy triple for the gather kernel, or None when
     the corpus cannot be gathered: over the per-task byte bound, ragged
     or zero dims, null embeddings (rows the matrix could not represent),
-    or non-integral ids. One tiny agg job prices the decision before
-    anything is collected — the same collect-at-build pattern as
-    llm_extras._distinct_pairs' sizing job."""
+    non-integral ids, or duplicate ids (the kernel's searchsorted would
+    score one arbitrary row of the duplicates; the join path scores
+    every row, as the oracle does). One tiny agg job prices the
+    decision before anything is collected; the duplicate check reads
+    the ids already collected and sorted here, so it costs no job."""
     import numpy as np
 
     if not _gather_feasible(e):
@@ -274,6 +276,8 @@ def _collect_embeddings(e: DataFrame):
         return None  # non-integral ids / malformed vectors: join path
     order = np.argsort(ids, kind="stable")
     ids = ids[order]
+    if (ids[1:] == ids[:-1]).any():
+        return None
     M = np.ascontiguousarray(M[order])
     norms = np.sqrt(np.einsum("ij,ij->i", M, M))
     return ids, M, norms
@@ -410,7 +414,8 @@ def dedup_docs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- J2: MinHash-LSH near-dup pairs ------------------------------------------
 
 _NUM_PERM = 64
-_BAND_ROWS = 2  # 32 bands × 2 rows: recall ≈ 1 at jaccard ≥ 0.8
+_BAND_ROWS = 2  # 32 bands × 2 rows: recall ≈ 1 at jaccard ≥ 0.8;
+# two 31-bit minima are what one exact int64 band key can hold
 _MH_PRIME = 2147483647  # 2^31-1, keeps a*h+b inside int64
 _rng = random.Random(42)
 _MH_A = [_rng.randrange(1, _MH_PRIME) for _ in range(_NUM_PERM)]
@@ -448,21 +453,20 @@ def _shingles(df: DataFrame) -> DataFrame:
     )
 
 
-def _explode_shingle_hashes(sh: DataFrame, hash_fn) -> DataFrame:
-    """(doc_id, h) rows: ``hash_fn`` applied per shingle, with the
-    shingling expression evaluated ONCE per doc. A plain
-    ``select(explode(sh))`` triggers InferFiltersFromGenerate, which
-    pushes ``size(shExpr) > 0 AND isnotnull(shExpr)`` below the aliasing
+def _hashed_shingles(hash_fn):
+    """Per-doc array of ``hash_fn`` over the ``sh`` column's shingles,
+    with the shingling expression evaluated ONCE per doc. Exploding
+    ``sh`` directly triggers InferFiltersFromGenerate, which pushes
+    ``size(shExpr) > 0 AND isnotnull(shExpr)`` below the aliasing
     Project with the whole interpreted shingling expression inlined —
     shingling then runs 3× per doc row (Filter + Project are separate
     codegen operators, CSE never spans them; the r14 §9 jaccard-kernel
-    finding, measured again here: 6.05 s → 2.06 s for the minhash hash
-    stream at sf1). Binding the array to a lambda variable via the
-    1-element transform defeats the re-inlining, and the hash runs on
-    the BOUND variable's elements."""
-    hashed = F.flatten(F.transform(
+    finding: 6.05 s → 2.06 s for the minhash hash stream at sf1).
+    Binding the array to a lambda variable via the 1-element transform
+    defeats the re-inlining, and the hash runs on the BOUND variable's
+    elements."""
+    return F.flatten(F.transform(
         F.array("sh"), lambda a: F.transform(a, hash_fn)))
-    return sh.select("doc_id", F.explode(hashed).alias("h"))
 
 
 def _verify_jaccard_pairs(d: DataFrame, cand: DataFrame,
@@ -482,14 +486,12 @@ def _verify_jaccard_pairs(d: DataFrame, cand: DataFrame,
     from silvia_spark.io import managed_persist
 
     d = d.select("doc_id", F.split(F.lower("text"), " ").alias("w"))
+    # A cold run's broadcast below stays within broadcastTimeout with no
+    # action at plan build: AQE plans the persisted slot as its own
+    # TableCacheQueryStage, materialized before the BroadcastQueryStage
+    # above it, so the broadcast job reads the cache instead of running
+    # the banded-candidate subtree (tests/test_minhash_kernel.py).
     cand = managed_persist(cand, f"{slot}.cand")
-    # Eager-materialize the slot (r15, r14 verdict item 2): the
-    # broadcast below otherwise executes the whole banded-candidate
-    # subtree under spark.sql.broadcastTimeout on a cold run — one
-    # count() at plan build fills the cache first, so the broadcast is
-    # built from the InMemoryRelation (the _distinct_pairs
-    # collect-at-build pattern).
-    cand.count()
     ids = (cand.select(F.col("doc_a").alias("doc_id"))
            .union(cand.select(F.col("doc_b").alias("doc_id")))
            .distinct())
@@ -511,55 +513,73 @@ def _verify_jaccard_pairs(d: DataFrame, cand: DataFrame,
     )
 
 
+def _minhash_bands_gen(batches):
+    """mapInArrow kernel: (doc_id, h array<bigint>) batches → one
+    (doc_id, band_id, band_key) row per band of every doc with ≥1
+    shingle. Signature m[i] = min over the doc's h of
+    (A[i]·h + B[i]) mod P — the same int64 arithmetic as the JVM
+    ``pmod`` form (h, A, B < 2³¹, so A·h + B < 2⁶³ never wraps), one
+    permutation at a time so memory stays O(shingles in the batch).
+    band_key = m[2b] << 31 | m[2b+1] is exact (both minima < 2³¹)."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    nb = _NUM_PERM // _BAND_ROWS
+    for batch in batches:
+        hs = batch.column("h")
+        lens = pc.fill_null(pc.list_value_length(hs), 0).to_numpy()
+        rows = np.flatnonzero(lens > 0)
+        if len(rows) == 0:
+            continue  # empty shingle sets have no signature
+        h = hs.flatten().to_numpy()  # honours slice offsets and nulls
+        starts = (np.cumsum(lens) - lens)[rows]
+        m = np.empty((_NUM_PERM, len(rows)), dtype=np.int64)
+        for i in range(_NUM_PERM):
+            m[i] = np.minimum.reduceat((_MH_A[i] * h + _MH_B[i]) % _MH_PRIME,
+                                       starts)
+        keys = (m[0::2] << 31) | m[1::2]
+        yield pa.RecordBatch.from_arrays(
+            [batch.column("doc_id").take(np.tile(rows, nb)),
+             pa.array(np.repeat(np.arange(nb, dtype=np.int32), len(rows))),
+             pa.array(keys.ravel())],
+            names=["doc_id", "band_id", "band_key"])
+
+
+# Within-bucket pairs of a sorted, duplicate-free id array (a < b).
+_BUCKET_PAIRS = (
+    "inline(flatten(transform(sequence(0, size(ids) - 2), i ->"
+    " transform(slice(ids, i + 2, size(ids) - i - 1),"
+    " b -> named_struct('doc_a', ids[i], 'doc_b', b)))))")
+
+
 @contract("dedup_docs_minhash", oracle=_J2_ORACLE)
 def dedup_docs_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pairs at 3-word-shingle Jaccard ≥ 0.8 via banded MinHash.
 
-    Pipeline (all DataFrame ops): shingle → xxhash64 → 64 permutation mins
-    (one groupBy) → 32 band keys → bucket join for candidates → exact
-    Jaccard verify. The oracle is the exact all-pairs query, so the hash
-    check also proves LSH recall = 1 on this corpus (planted pairs are all
-    ≥0.8; 32×2 banding detects jaccard 0.8 with p ≈ 1-5e-15).
+    Pipeline: the JVM shingles and hashes each doc to one array of
+    pmod(xxhash64(shingle), 2³¹-1); ONE mapInArrow kernel
+    (``_minhash_bands_gen``) emits 32 exact band keys per doc; the
+    within-bucket pairs of each (band_id, band_key) are deduplicated
+    and exact-Jaccard verified. The signature is one map-only pass and
+    the plan build runs no Spark job. The oracle is the exact all-pairs
+    query, so the hash check also proves LSH recall = 1 on this corpus
+    (planted pairs are all ≥0.8; 32×2 banding detects jaccard 0.8 with
+    p ≈ 1-5e-15).
     """
     docs = load_table(spark, sf_dir, "documents")
-    d = docs.select(
-        "doc_id", F.split(F.lower("text"), " ").alias("w"))
-    sh = _shingles(d)
-    # r14 §11: lambda-bound hash explode — shingling evaluated once per
-    # doc (see _explode_shingle_hashes; the plain explode form ran it 3×
-    # via InferFiltersFromGenerate, 6.05 s → 2.06 s at sf1).
-    h = _explode_shingle_hashes(
-        sh, lambda s: F.pmod(F.xxhash64(s), F.lit(_MH_PRIME)))
-    sig = h.groupBy("doc_id").agg(*[
-        F.min(F.pmod(F.lit(_MH_A[i]) * F.col("h") + F.lit(_MH_B[i]),
-                     F.lit(_MH_PRIME))).alias(f"m{i}")
-        for i in range(_NUM_PERM)
-    ])
-    bands = sig.select(
-        "doc_id",
-        F.posexplode(F.array(*[
-            F.xxhash64(*[F.col(f"m{b * _BAND_ROWS + r}")
-                         for r in range(_BAND_ROWS)], F.lit(b))
-            for b in range(_NUM_PERM // _BAND_ROWS)
-        ])).alias("band_id", "band_key"),
-    )
-    # r14: persist the band table — without the barrier Catalyst plans
-    # the whole 64-permutation signature chain once PER SELF-JOIN SIDE
-    # (the same measured-2× lineage duplication sim_ann_lsh's bucket
-    # persist fixes), and the right-sized packed-key dedup
-    # (llm_extras._distinct_pairs sizing note) needs a cheap band table
-    # to price the join it is about to dedup.
-    from silvia_spark.functions.llm_extras import _distinct_pairs
-    from silvia_spark.io import managed_persist
-
-    bands = managed_persist(bands, "dedup_docs_minhash.bands")
-    left = bands.select(F.col("doc_id").alias("doc_a"), "band_id", "band_key")
-    right = bands.select(F.col("doc_id").alias("doc_b"), "band_id", "band_key")
-    cand = _distinct_pairs(
-        left.join(right, ["band_id", "band_key"])
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b"),
-        left, right, ("band_id", "band_key"), "doc_a", "doc_b")
+    sh = _shingles(docs.select(
+        "doc_id", F.split(F.lower("text"), " ").alias("w")))
+    h = sh.select("doc_id", _hashed_shingles(
+        lambda s: F.pmod(F.xxhash64(s), F.lit(_MH_PRIME))).alias("h"))
+    bands = h.mapInArrow(
+        _minhash_bands_gen,
+        f"doc_id {dict(docs.dtypes)['doc_id']}, band_id int, band_key bigint")
+    cand = (bands.groupBy("band_id", "band_key")
+            .agg(F.array_sort(F.collect_set("doc_id")).alias("ids"))
+            .where(F.size("ids") > 1)
+            .select(F.expr(_BUCKET_PAIRS))
+            .distinct())
     # r14 §11: candidate-pruned exact verify (was: two more FULL-corpus
     # tokenize+shingle passes, one per join side).
     return _verify_jaccard_pairs(docs, cand, "dedup_docs_minhash")

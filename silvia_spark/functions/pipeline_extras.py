@@ -110,18 +110,18 @@ def dedup_docs_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     Verification is the same exact-Jaccard kernel as J2, so false
     candidates never reach the output. At 100 TB the per-band bucket
     cap/salting guard of SCALE.md §ANN applies identically."""
-    from silvia_spark.functions.llm_ops import (_explode_shingle_hashes,
-                                                _shingles,
+    from silvia_spark.functions.llm_ops import (_hashed_shingles, _shingles,
                                                 _verify_jaccard_pairs)
 
     docs = load_table(spark, sf_dir, "documents")
     d = docs.select(
         "doc_id", F.split(F.lower("text"), " ").alias("w"))
     sh = _shingles(d)
-    # r14 §11: lambda-bound hash explode — shingling once per doc (the
-    # plain explode ran the interpreted shingling 3× per doc via
-    # InferFiltersFromGenerate; same fix as dedup_docs_minhash).
-    th = _explode_shingle_hashes(sh, lambda t: F.xxhash64(t))
+    # r14 §11: lambda-bound hashes — shingling once per doc (the plain
+    # explode ran the interpreted shingling 3× per doc via
+    # InferFiltersFromGenerate; see llm_ops._hashed_shingles).
+    th = sh.select("doc_id", F.explode(
+        _hashed_shingles(lambda t: F.xxhash64(t))).alias("h"))
     bits = (
         th.select("doc_id", "h",
                   F.explode(F.expr("sequence(0, 63)")).alias("j"))

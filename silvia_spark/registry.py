@@ -51,48 +51,22 @@ def contract(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryF
 _NEW_CONTRACTS_HERE = "__new_contracts_here__"
 
 _PRIORITY: tuple[str, ...] = (
-    # ============ r15 packing (evidence ledger after r14: r08=8 left,
-    # r09=43, r10=39, r11=24, r12=44, r13=50, r14=50; zero failures
-    # ever). Window arithmetic: tier 0 = 10 contracts whose
-    # implementation/plan changed in the r15 OPTIMIZATION pass after
-    # their newest evidence (the gather-in-kernel verify + fused
-    # per-bucket GEMM across the six ANN-verify consumers and
-    # sim_join_threshold; the eager candidate materialization + the
-    # occupancy guard in the two banded dedups; the session-sort
-    # barrier — results oracle-identical, re-proven by tests/parity,
-    # but a driver green must postdate the plan it vouches for; see
-    # OPTIMIZATION_r15.md). No new contracts (optimization round).
-    # 10 head slots + the 8 r08 leftovers + the oldest 32 of the
-    # r09 tail fill the window to 50; oldest evidence after r15 = r09.
-    # The 42 keys whose newest evidence is r14 (the old tier 0/0a/0b
-    # minus the 8 re-touched here, plus the 21 r08 keys r14 checked)
-    # moved to the END as r14-era evidence. ======
-    # -- tier 0: implementation/plan changed in the r15 pass --
-    "sim_ann_lsh", "sim_ann_lsh_multiprobe", "sim_ann_lsh_multiprobe2",
-    "sim_ann_auto", "sim_ann_indexed", "sim_join_threshold",
-    "dedup_docs_embedding", "dedup_docs_minhash", "dedup_docs_simhash",
-    "stream_session_30m",
+    # ============ packing after r15 (evidence ledger: r09=11, r10=36,
+    # r11=22, r12=40, r13=38, r14=42, r15=50; zero failures ever).
+    # Head: the two banded dedups whose plan changed after their r15
+    # evidence (MinHash signature kernel with exact band keys; the
+    # shared Jaccard verify lost its eager count). Then evidence
+    # oldest-first: 2 + 11 r09 + 36 r10 + 1 r11 fill the 50-slot window,
+    # so the oldest evidence after the next round is r11. ======
+    # -- plan changed after their newest evidence --
+    "dedup_docs_minhash", "dedup_docs_simhash",
     # -- new contracts registered mid-round slot in here --
     _NEW_CONTRACTS_HERE,
-    # -- r08-era evidence (the 8 keys the r14 window could not hold) --
-    "stream_tumbling_live", "stream_watermark_late", "text_lang_detect",
-    "text_pack_sequences", "text_pii_scrub",
-    "text_unicode_normalize", "window_gaps_islands",
-    "window_ignore_nulls",
-    # -- r09-era evidence (oldest 32 make the r15 window) --
-    "agg_approx_distinct", "agg_approx_percentile", "agg_bitwise",
-    "agg_count_distinct", "agg_cube", "agg_grouping_sets", "agg_having",
-    "agg_histogram_width", "agg_pricing_summary", "agg_rollup", "agg_stats",
-    "data_mix_sample", "doc_chunk_windows", "embed_quantize_int8",
-    "generator_outer_pos", "join_5way_star", "join_asof",
-    "join_bloom_pruned", "join_broadcast", "join_cross", "join_full_outer",
-    "join_inner_equi", "join_left_anti", "join_left_outer", "join_left_semi",
-    "join_self", "join_theta_range", "q12_shipmode_priority",
-    "q3_shipping_priority", "sample_reservoir_group", "set_except_all",
-    "set_intersect_all", "shard_assign_balanced", "sink_merge_keyed",
-    "stream_running_moments", "text_contamination", "text_repetition_filter",
-    "udf_arrow_scalar", "udtf_lateral", "window_anomaly_zscore",
-    "window_lag_lead", "window_rank_topn", "window_row_dense_ntile",
+    # -- r09-era evidence --
+    "shard_assign_balanced", "sink_merge_keyed", "stream_running_moments",
+    "text_contamination", "text_repetition_filter", "udf_arrow_scalar",
+    "udtf_lateral", "window_anomaly_zscore", "window_lag_lead",
+    "window_rank_topn", "window_row_dense_ntile",
     # -- r10-era evidence --
     "agg_bool_quantifiers", "agg_collect_sorted", "agg_corr_exact",
     "agg_filtered_counts", "agg_percentiles", "agg_rollup_multires",
@@ -105,12 +79,10 @@ _PRIORITY: tuple[str, ...] = (
     "scalar_bit_ops", "scalar_collation", "scalar_datetime_iso",
     "scalar_radix", "scalar_try_arith", "scalar_url_parse", "scalar_variant",
     "sink_sorted_zonemap", "source_json_corrupt", "source_xml",
-    "stream_moments_live", "text_entropy_quality",
-    "window_trailing_interval",
+    "stream_moments_live", "text_entropy_quality", "window_trailing_interval",
     # -- r11-era evidence --
-    "scan_partition_pruned", "source_python_datasource",
-    "stream_dedup_exact", "stream_sliding",
-    "stream_static_join", "stream_stream_join",
+    "scan_partition_pruned", "source_python_datasource", "stream_dedup_exact",
+    "stream_sliding", "stream_static_join", "stream_stream_join",
     "stream_tumbling_1h", "text_fingerprint", "text_fuzzy_pairs",
     "text_lang_profile", "text_quality_filter", "text_term_freq",
     "text_token_bpe", "text_tokenize_stats", "udaf_pandas_grouped",
@@ -118,56 +90,64 @@ _PRIORITY: tuple[str, ...] = (
     "udtf_apply_in_pandas", "udtf_python", "window_first_last",
     "window_moving_frame",
     # -- r12-era evidence --
-    "agg_heavy_hitters",
-    "events_retention_cohort", "filter_compound", "filter_like_regexp",
-    "join_null_safe", "join_range_banded", "limit_offset", "pivot_unpivot",
-    "proj_distinct", "proj_select_alias",
+    "agg_heavy_hitters", "events_retention_cohort", "filter_compound",
+    "filter_like_regexp", "join_null_safe", "join_range_banded",
+    "limit_offset", "pivot_unpivot", "proj_distinct", "proj_select_alias",
     "q16_supplier_part_counts", "q17_small_quantity", "q18_large_orders",
     "q20_dominant_suppliers", "q2_min_cost_supplier", "q6_forecast_revenue",
     "q9_product_profit", "scalar_array", "scalar_cast", "scalar_conditional",
     "scalar_date", "scan_changes_row_level", "scan_manifest_pruned",
     "scan_manifest_renamed", "scan_manifest_schema_evolution",
-    "scan_manifest_widened", "scan_manifest_zorder",
-    "scan_partition_evolved", "scan_partition_hidden_days",
-    "scan_sql_time_travel", "sink_compact_clustered", "sink_merge_pruned",
-    "sink_restore_version", "sink_table_manifest_commit",
-    "stream_manifest_admission", "stream_manifest_sink",
-    "stream_manifest_source", "stream_replicate_table",
-    "window_percent_rank", "window_range_frame",
+    "scan_manifest_widened", "scan_manifest_zorder", "scan_partition_evolved",
+    "scan_partition_hidden_days", "scan_sql_time_travel",
+    "sink_compact_clustered", "sink_merge_pruned", "sink_restore_version",
+    "sink_table_manifest_commit", "stream_manifest_admission",
+    "stream_manifest_sink", "stream_manifest_source",
+    "stream_replicate_table", "window_percent_rank", "window_range_frame",
     # -- r13-era evidence --
-    "agg_mode_frequent", "agg_time_gapfill",
-    "etl_events_enriched", "multimodal_frame_sample", "multimodal_join",
-    "q10_returned_items", "q13_order_distribution", "q14_promo_revenue",
-    "q19_disjunctive", "q21_waiting_orders",
-    "scalar_hash", "scalar_json", "scalar_map", "scalar_math",
-    "scalar_regexp", "scalar_string", "scan_catalog_attached",
+    "agg_mode_frequent", "agg_time_gapfill", "etl_events_enriched",
+    "multimodal_frame_sample", "multimodal_join", "q10_returned_items",
+    "q13_order_distribution", "q14_promo_revenue", "q19_disjunctive",
+    "q21_waiting_orders", "scalar_hash", "scalar_json", "scalar_map",
+    "scalar_math", "scalar_regexp", "scalar_string", "scan_catalog_attached",
     "scan_manifest_changes", "scan_parquet", "scan_schema_evolution",
     "scan_table_clone", "scan_time_travel_ts", "set_except", "set_intersect",
-    "set_union_all", "set_union_distinct",
-    "sink_compaction_small_files",
+    "set_union_all", "set_union_distinct", "sink_compaction_small_files",
     "sink_jdbc_postgres", "sink_merge_scd2", "sink_parquet_partitioned",
     "sink_python_datasource", "sort_multikey_nulls", "source_csv_tsv",
     "source_json_lines", "stream_changes_cdf", "stream_kafka_shim_live",
     "subquery_scalar", "topk_limit",
-    # -- r14-era evidence (the r14 window minus the 8 keys re-touched
-    # in r15's tier 0; the two other tier-0 keys were lifted out of
-    # their old era sections above — _PRIORITY stays duplicate-free) --
+    # -- r14-era evidence --
     "sink_sql_insert", "source_delta_interop", "source_iceberg_interop",
-    "sink_append_constrained", "sink_delete_dv",
-    "dedup_cluster_cc", "dedup_near_keep_best", "curation_pipeline",
-    "text_ngram_jaccard", "text_tfidf", "text_unigram_logprob",
-    "q15_top_supplier", "q11_important_parts", "stream_stateful_funnel",
-    "sim_ann_ivf_kmeans",
+    "sink_append_constrained", "sink_delete_dv", "dedup_cluster_cc",
+    "dedup_near_keep_best", "curation_pipeline", "text_ngram_jaccard",
+    "text_tfidf", "text_unigram_logprob", "q15_top_supplier",
+    "q11_important_parts", "stream_stateful_funnel", "sim_ann_ivf_kmeans",
     "sink_sql_merge", "sink_sql_update", "sink_sql_delete",
     "sink_sql_optimize", "sink_sql_ctas", "sink_sql_insert_overwrite",
     "q22_dormant_customers", "q4_order_priority", "q5_local_supplier",
     "q7_volume_shipping", "q8_market_share", "sample_stratified",
-    "scan_dpp_join", "scan_schema_enforce", "sim_ann_ivf",
-    "sim_centroids", "sim_topk_cosine",
-    "sink_partition_overwrite", "source_orc", "source_rate_stream",
-    "stream_dedup_live", "stream_foreachbatch_upsert", "stream_funnel_live",
-    "stream_session_live", "stream_static_join_live",
+    "scan_dpp_join", "scan_schema_enforce", "sim_ann_ivf", "sim_centroids",
+    "sim_topk_cosine", "sink_partition_overwrite", "source_orc",
+    "source_rate_stream", "stream_dedup_live", "stream_foreachbatch_upsert",
+    "stream_funnel_live", "stream_session_live", "stream_static_join_live",
     "stream_stream_join_live", "stream_transform_with_state",
+    # -- r15-era evidence --
+    "sim_ann_lsh", "sim_ann_lsh_multiprobe", "sim_ann_lsh_multiprobe2",
+    "sim_ann_auto", "sim_ann_indexed", "sim_join_threshold",
+    "dedup_docs_embedding", "stream_session_30m", "stream_tumbling_live",
+    "stream_watermark_late", "text_lang_detect", "text_pack_sequences",
+    "text_pii_scrub", "text_unicode_normalize", "window_gaps_islands",
+    "window_ignore_nulls", "agg_approx_distinct", "agg_approx_percentile",
+    "agg_bitwise", "agg_count_distinct", "agg_cube", "agg_grouping_sets",
+    "agg_having", "agg_histogram_width", "agg_pricing_summary", "agg_rollup",
+    "agg_stats", "data_mix_sample", "doc_chunk_windows",
+    "embed_quantize_int8", "generator_outer_pos", "join_5way_star",
+    "join_asof", "join_bloom_pruned", "join_broadcast", "join_cross",
+    "join_full_outer", "join_inner_equi", "join_left_anti", "join_left_outer",
+    "join_left_semi", "join_self", "join_theta_range",
+    "q12_shipmode_priority", "q3_shipping_priority", "sample_reservoir_group",
+    "set_except_all", "set_intersect_all",
 )
 
 

@@ -89,3 +89,44 @@ def test_gather_kernel_rejects_foreign_candidate_ids(spark):
     with pytest.raises(Exception, match="not present in the corpus"):
         hits.collect()
     clear_caches()
+
+
+def _corpus_with_duplicate_vec_id(tmp_path):
+    """sf0.01 with one extra embeddings row that reuses vec_id 5 for
+    vec_id 7's vector. The other tables are symlinks."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from silvia_spark.schemas import TABLE_NAMES
+
+    for t in TABLE_NAMES:
+        if t != "embeddings":
+            os.symlink(f"{SF}/{t}.parquet", tmp_path / f"{t}.parquet")
+    emb = pq.read_table(f"{SF}/embeddings.parquet").replace_schema_metadata()
+    extra = emb.filter(pa.compute.equal(emb["vec_id"], 7))
+    extra = extra.set_column(0, "vec_id",
+                             pa.array([5], emb.schema.field("vec_id").type))
+    pq.write_table(pa.concat_tables([emb, extra]),
+                   tmp_path / "embeddings.parquet")
+    return str(tmp_path)
+
+
+def test_duplicate_vec_ids_take_join_path(spark, tmp_path):
+    """The gather kernel searchsorts into sorted ids, so a duplicate id
+    would score one arbitrary row of its duplicates. A corpus with a
+    duplicate vec_id must take the join path and match the DuckDB
+    oracle; the clean corpus keeps the gather path."""
+    from silvia_spark import registry
+    from tests.parity import check
+
+    registry.load_all_modules()
+    dup = _corpus_with_duplicate_vec_id(tmp_path)
+    for sf_dir, gathered in ((SF, True), (dup, False)):
+        clear_caches()
+        df = registry.QUERIES["sim_join_threshold"](spark, sf_dir)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert ("_gather_cos_gen" in plan) == gathered, sf_dir
+        assert check("sim_join_threshold", spark, sf_dir, verbose=False)
+    clear_caches()
