@@ -132,11 +132,9 @@ from silvia_spark.functions.llm_ops import (
 )
 from silvia_spark.functions.llm_extras import (
     ann_index_fresh,
+    ann_join,
     bucket_keys,
-    choose_ann_variant,
-    estimate_ann_candidates_per_vec,
-    bucket_keys_multiprobe,
-    bucket_keys_multiprobe2,
+    bucket_keys_probed,
     cap_buckets,
     persist_ann_index,
     sim_ann_lsh_indexed,
@@ -184,8 +182,7 @@ __all__ = [
     "jaccard_pairs", "two_phase_components", "min_label_components",
     # similarity / ANN
     "cosine", "cosine_expr", "dot64", "norm64", "label_centroids",
-    "bucket_keys", "bucket_keys_multiprobe", "bucket_keys_multiprobe2",
-    "choose_ann_variant", "estimate_ann_candidates_per_vec",
+    "bucket_keys", "bucket_keys_probed", "ann_join",
     "cap_buckets", "persist_ann_index", "ann_index_fresh",
     "sim_ann_lsh_indexed",
     # training-data kernels

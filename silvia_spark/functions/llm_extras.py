@@ -2,27 +2,38 @@
 
 ``sim_join_threshold`` (llm_ops.py, J4) is the exact all-pairs baseline: a
 cross join that is quadratic in the corpus and cannot run at 100 TB. This
-module holds the scale-shaped variant:
+module holds the scale-shaped path: ONE planner, ``ann_join``, behind
+every hyperplane-LSH consumer — ``sim_ann_lsh``, the two multiprobe
+contracts, the index-served ``sim_ann_indexed``, ``sim_ann_auto`` and
+training_ops' ``dedup_docs_embedding`` are each one (tables, probes,
+seed, tau) point of it:
 
-``sim_ann_lsh`` — hyperplane (sign-random-projection) LSH similarity join:
-
-1. Per vector, compute ``T`` bucket keys (one per hash table). A key packs
-   ``B`` sign bits; bit *(t,b)* is the sign of a dot product with a
-   Rademacher ±1 hyperplane (fixed seed). The dots run as ONE numpy GEMM
-   per Arrow batch inside a map-only kernel (``_bucket_keys_np``, r14 —
-   measured 22× the r13 JVM GEMM-by-join at sf1; that posexplode ⋈
-   broadcast sign-table → hash-aggregate chain is retained as
-   ``_quantized_dots``, the reference the equality tests compare
-   against). Dot terms are quantized to 1e-9 and summed exactly as
-   integers, so the sign bits are bit-reproducible under any
+1. Bucket keys. Per vector, ``T`` bucket keys (one per hash table). A
+   key packs ``B`` sign bits; bit *(t,b)* is the sign of a dot product
+   with a Rademacher ±1 hyperplane (fixed seed). The dots run as ONE
+   numpy GEMM per Arrow batch inside a map-only kernel
+   (``_bucket_keys_np``, r14 — measured 22× the r13 JVM GEMM-by-join at
+   sf1; that posexplode ⋈ broadcast sign-table → hash-aggregate chain is
+   retained as ``_quantized_dots``, the reference the equality tests
+   compare against). Dot terms are quantized to 1e-9 and summed exactly
+   as integers, so the sign bits are bit-reproducible under any
    partitioning and batch split (a double sum's last-ulp order
-   sensitivity could otherwise flip a near-zero sign).
-2. posexplode keys → self equi-join on ``(table_id, bucket_key)`` — only
-   same-bucket pairs are ever materialized. This is the one shuffle that
-   grows with candidates, keyed by 16 bytes, never by vectors.
-3. ``distinct`` candidate pairs (a pair can collide in many tables), then
-   exact-cosine verify against the threshold — identical verify kernel to
-   the baseline, so false positives cost compute but never correctness.
+   sensitivity could otherwise flip a near-zero sign). ``probes`` > 0
+   adds the flips of each key's weakest-margin bits as probe keys
+   (multi-probe LSH, Lv et al.); a persisted index can supply the base
+   keys instead (``buckets=``).
+2. Gather decision, made ONCE: one tiny sizing job decides whether the
+   corpus matrix fits the per-task gather bound
+   (``llm_ops._gather_broadcast``).
+3. Gatherable corpora: fused per-bucket GEMM candidates — each bucket's
+   pair cosines as one dense block (bucket self-join, a < b, for
+   ``probes`` = 0; probe ⋈ base otherwise), only threshold survivors
+   leave the kernel, a tiny distinct, then the exact einsum rescore.
+4. Past the bound: the join fallback — same-bucket equi-join, the
+   right-sized ``_distinct_pairs``, an embedding join and the scalar
+   kernel's persisted single-eval score (``llm_ops``). Both routes end
+   in the same exact verify, so false positives cost compute but never
+   correctness.
 
 Recall: a pair at cosine *c* collides in one table with p = (1 - θ/π)^B,
 θ = arccos(c). At the contract threshold 0.4 (θ ≈ 66.4°, per-bit p ≈ 0.631)
@@ -34,7 +45,7 @@ per-bit p ≈ 0.8) the same recall needs far fewer tables; tune (B, T) with
 the closed form. See SCALE.md §ANN.
 
 At 100 TB: index work is O(n·dim·T·B) multiply-adds at BLAS speed in a
-map-only stage — nothing shuffles until the bucket self-join, and the
+map-only stage — nothing shuffles until the bucket grouping, and the
 kernel ships only (vec_id, embedding) across the Arrow boundary (guide
 §4.1/§4.2). Bucket skew (dense
 clusters) is handled by AQE skew-join splitting PLUS the explicit
@@ -207,9 +218,9 @@ def _bucket_keys_np(spark: SparkSession, e: DataFrame, seed: int,
     (see OPTIMIZATION_r14.md §10). w0/w1 are the two weakest bit
     positions; base callers drop them, probe callers fold them into
     probe keys with the same JVM xor expressions as before.
-    ``sample_proj`` serves the occupancy estimator: only the FIRST
-    ``sample_proj`` projections of the family are computed (the same
-    proj_id < n filter the estimator applied to the JVM dots)."""
+    ``sample_proj`` computes only the FIRST ``sample_proj`` projections
+    of the family — a slice of the same hyperplanes, bit-identical to
+    the full family's first tables, not a smaller family."""
     # r15 ADVICE hardening: bits < 2 would silently emit w1 == w0 where
     # the JVM reference's weak2[1] is NULL (a self-probe instead of a
     # null-propagating key); no caller uses bits < 2 — refuse loudly.
@@ -288,89 +299,6 @@ def _bucket_keys_np(spark: SparkSession, e: DataFrame, seed: int,
         _ann_gemm_gen,
         f"vec_id {vid_t}, table_id bigint, bucket_key bigint, "
         "w0 int, w1 int")
-
-
-# --- ANN variant chooser (r10 verdict item 4) ---------------------------------
-# The multiprobe trade pays only while the pipeline is INDEX-bound
-# (ANN_CROSSOVER.json + BENCH_sf1_heavy.json, both regimes measured):
-# at sf0.1 the GEMM is 85% of base wall time and mp2 wins 2.1×; at sf1
-# the corpus is candidate-dense (the same-bucket join + distinct is
-# ~95% of wall) and the probe fan-out GROWS the join input — base wins
-# by ~25%. The boundary constants below are the geometric midpoints of
-# the two measured regimes; the distinct/raw candidate ratio is the
-# SAME at both scales (1.94M/8.0M = 194M/800M = 0.243 — a property of
-# the hash-family geometry, not the corpus), which is what lets the
-# occupancy sampler below estimate distinct candidates near-exactly
-# (971 measured vs 972 estimated at sf0.1; 9715 vs 9720 at sf1).
-
-_ANN_CONFIGS = {
-    "base": {"tables": 64, "probes_per_table": 1},
-    "mp1": {"tables": 24, "probes_per_table": 2},
-    "mp2": {"tables": 16, "probes_per_table": 4},
-}
-_ANN_DISTINCT_RATIO = 0.243
-_CAND_PER_VEC_CROSSOVER = 3000.0   # geometric mid of 971 / 9715
-_INDEX_SHARE_CROSSOVER = 0.5       # geometric mid of 0.85 / 0.049 ≈ 0.2;
-#                                    0.5 keeps a safety margin toward
-#                                    base (the variant that never loses
-#                                    more than the capped index share)
-
-
-def choose_ann_variant(est_candidates_per_vec: float | None = None,
-                       index_share: float | None = None
-                       ) -> tuple[str, dict]:
-    """The measured decision rule as code: (variant name, {tables,
-    probes_per_table}). INDEX-bound regimes (few candidates per vector
-    / GEMM-dominated wall time) take the multiprobe config — fewer
-    tables, same recall floor, measured 2.1× at sf0.1; candidate-bound
-    regimes take the base tables — the probe fan-out multiplies the
-    join input exactly where the join already dominates (sf1: base
-    208 s vs mp2 264 s). Pass ``est_candidates_per_vec`` from
-    ``estimate_ann_candidates_per_vec`` (preferred — it prices the
-    join input the probes multiply) or a known ``index_share`` (GEMM
-    fraction of wall time from a prior run's stage split)."""
-    if est_candidates_per_vec is None and index_share is None:
-        raise ValueError(
-            "pass est_candidates_per_vec (estimate_ann_candidates_per_"
-            "vec) or index_share — the rule needs one measured signal")
-    if est_candidates_per_vec is not None:
-        index_bound = est_candidates_per_vec <= _CAND_PER_VEC_CROSSOVER
-    else:
-        index_bound = index_share >= _INDEX_SHARE_CROSSOVER
-    name = "mp2" if index_bound else "base"
-    return name, dict(_ANN_CONFIGS[name])
-
-
-def estimate_ann_candidates_per_vec(spark: SparkSession, e: DataFrame,
-                                    sample_tables: int = 2) -> float:
-    """Estimate the LSH join's distinct candidates per vector by
-    SAMPLING bucket occupancy: hash only the first ``sample_tables``
-    tables (a ``sample_tables``/64 slice of the base GEMM), sum each
-    bucket's pair mass c·(c−1)/2, scale to the full table count, and
-    apply the measured distinct/raw ratio (see module constant). Uses
-    ACTUAL occupancy, so skewed corpora (hot buckets) price correctly
-    where the uniform n²·2^-B closed form would not."""
-    n = e.count()
-    if n < 2:
-        return 0.0
-    # sample the REAL index's hyperplanes: the sign family is keyed on
-    # id = pos·nproj + proj_id, so generating a small family
-    # (nproj = sample slice) would hash DIFFERENT hyperplanes than the
-    # 64-table index actually uses — a skew-aligned corpus would then
-    # be priced against buckets that never exist (r11 review finding).
-    # sample_proj slices the FULL family's matrix to its first
-    # projections, keeping the GEMM cost at the sampled slice while
-    # matching bucket_keys bit for bit.
-    nsample = sample_tables * _ANN_BITS
-    occ = (_bucket_keys_np(spark, e, _ANN_SEED, _N_PROJ,
-                           sample_proj=nsample)
-           .groupBy("table_id", "bucket_key")
-           .agg(F.count(F.lit(1)).alias("c")))
-    mass = occ.agg(F.sum(F.col("c") * (F.col("c") - 1) / 2)
-                   .alias("m")).collect()[0]["m"] or 0.0
-    per_table = mass / sample_tables
-    tables = _N_PROJ // _ANN_BITS
-    return per_table * tables * _ANN_DISTINCT_RATIO / n
 
 
 def bucket_keys(spark: SparkSession, e: DataFrame) -> DataFrame:
@@ -477,62 +405,6 @@ def _distinct_pairs(cand_raw: DataFrame, left: DataFrame,
             .distinct())
 
 
-def _verify_candidates(e: DataFrame, cand: DataFrame,
-                       slot: str = "lsh") -> DataFrame:
-    """Shared exact-cosine verify tail for the whole LSH family: score
-    each candidate (vec_a, vec_b) pair against the raw embeddings, keep
-    cosine ≥ 0.4, round for output, order. ONE definition so the
-    threshold/rounding contract cannot diverge between the base and
-    multiprobe variants (their outputs are asserted set-equal in
-    tests/test_properties.py).
-
-    r15: gather-in-kernel first — ship only the id pair to Python and
-    row-gather the vectors from a broadcast matrix (the verify stage
-    was Arrow-TRANSFER-bound: ~100 GB of shipped embedding pairs at
-    sf1's 194 M candidates vs ~3 GB of ids; llm_ops.verify_pairs_gather
-    has the numbers and the bit-identity argument). The kernel
-    thresholds inside, so the 194 M-row scored barrier AND the pair
-    DISK_ONLY stage cut disappear with the transfer — mapInPandas
-    replaces its input (no scalar-eval result-rejoin queue, which was
-    what the r13 stage cut existed to protect). Corpora over the
-    per-task gather bound fall back to the r14 join + scalar-kernel
-    shape below, unchanged."""
-    from silvia_spark.functions.llm_ops import (score_pairs_threshold,
-                                                verify_pairs_gather)
-
-    out = verify_pairs_gather(e, cand, slot=f"verify.{slot}")
-    if out is not None:
-        return out
-
-    a = e.select(F.col("vec_id").alias("vec_a"),
-                 F.col("embedding").alias("ea"))
-    b = e.select(F.col("vec_id").alias("vec_b"),
-                 F.col("embedding").alias("eb"))
-    # Stage cut BEFORE the Python eval: persist the 16 B/row candidate
-    # PAIRS (DISK_ONLY) so the distinct's shuffle-reduce and the
-    # ArrowEvalPython row-queue never share one task's memory. Fused,
-    # the scalar eval's result-rejoin queue (it buffers the 1 KB
-    # embedding-attached input rows while Python computes) on top of
-    # the distinct's hash structures OOMed the 8 g executor at
-    # mp2-sf1's 195 M candidates (measured r13, twice); the
-    # verify-kernel bench never hit it precisely because it persisted
-    # pairs first — this reproduces that measured-safe shape in the
-    # shipping path. The old mapInPandas kernel didn't need the cut
-    # (map output replaces input, no rejoin queue) but cost 3× the
-    # verify time (ANN_VERIFY_KERNEL.json).
-    cand = managed_persist(cand, f"verify.{slot}.pairs",
-                           level="DISK_ONLY")
-    # score_pairs_threshold: scalar-UDF score into a persist barrier,
-    # JVM threshold over the cache — ONE ArrowEvalPython structurally
-    # (nothing for Catalyst's pushdown to duplicate: it stops at the
-    # InMemoryRelation), no asNondeterministic marker (the r11
-    # executor-heap hazard). Measured 43 s vs the previous kernel's
-    # 145-150 s at sf1's 195 M candidates — ANN_VERIFY_KERNEL.json.
-    return score_pairs_threshold(
-        cand.join(a, "vec_a").join(b, "vec_b"),
-        slot=f"verify.{slot}")
-
-
 # --- fused per-bucket GEMM candidates + threshold (r15) ------------------------
 # The candidate stage used to materialize the raw same-bucket pair
 # stream (~800 M 16-byte rows at sf1) into a right-sized packed-key
@@ -569,23 +441,17 @@ _FUSED_EPS = 1e-9
 _FUSED_CHUNK = 4_000_000  # max f64 elements per GEMM block (~32 MB)
 
 
-def _fused_candidate_hits(spark: SparkSession, e: DataFrame,
-                          grouped: DataFrame, mode: str,
-                          out_a: str, out_b: str, id_t: str,
-                          tau: float, slot: str):
-    """(survivor-pair DataFrame, shared broadcast) from a grouped
-    bucket table, or (None, None) when the corpus can't be gathered.
-    ``mode`` 'self': ``grouped`` carries `vids` (bucket self-join,
-    emits a < b); 'probe': `pv` + `bv` lists (probe ⋈ base, emits
-    least/greatest of l ≠ r). Output pairs are dgemm-thresholded at
-    tau − _FUSED_EPS (superset; see the module note) and may repeat
-    across buckets — callers dedup then exact-rescore."""
-    from silvia_spark.functions.llm_ops import _gather_broadcast
-
-    bc = _gather_broadcast(spark, e, f"verify.{slot}")
-    if bc is None:
-        return None, None
+def _fused_candidate_hits(grouped: DataFrame, bc, out_a: str, out_b: str,
+                          id_t: str, tau: float) -> DataFrame:
+    """Survivor pairs of a grouped bucket table, scored against the
+    broadcast corpus matrix ``bc``. ``grouped`` carries either `vids`
+    (bucket self-join: emits a < b) or `pv` + `bv` member lists (probe
+    ⋈ base: emits least/greatest of l ≠ r). Pairs are
+    dgemm-thresholded at tau − _FUSED_EPS (superset; see the section
+    note) and may repeat across buckets — the caller dedups, then
+    exact-rescores."""
     thr = float(tau) - _FUSED_EPS
+    self_join = "vids" in grouped.columns
 
     def _fused_gemm_gen(batches):
         import numpy as np
@@ -607,339 +473,52 @@ def _fused_candidate_hits(spark: SparkSession, e: DataFrame,
         for pdf in batches:
             acc_a: list = []
             acc_b: list = []
-            if mode == "self":
-                pairs_iter = ((v, None) for v in pdf["vids"])
-            else:
-                pairs_iter = zip(pdf["pv"], pdf["bv"])
-            for a_ids, b_ids in pairs_iter:
+            sides = (zip(pdf["vids"], pdf["vids"]) if self_join
+                     else zip(pdf["pv"], pdf["bv"]))
+            for a_ids, b_ids in sides:
                 va = np.sort(np.asarray(a_ids, dtype=np.int64))
-                if mode == "self":
-                    s = va.shape[0]
-                    if s < 2:
-                        continue
-                    A = rows_of(va)
-                    step = max(1, _FUSED_CHUNK // s)
-                    for i0 in range(0, s - 1, step):
-                        i1 = min(i0 + step, s)
-                        with np.errstate(invalid="ignore"):
-                            G = A[i0:i1] @ A.T
-                        keep = (G >= thr) | np.isnan(G)
-                        ii, jj = np.nonzero(keep)
-                        gi = ii + i0
-                        m = jj > gi  # strict upper triangle: a < b
-                        if m.any():
-                            acc_a.append(va[gi[m]])
-                            acc_b.append(va[jj[m]])
-                else:
-                    vb = np.sort(np.asarray(b_ids, dtype=np.int64))
-                    p, s = va.shape[0], vb.shape[0]
-                    if p == 0 or s == 0:
-                        continue
-                    P, B = rows_of(va), rows_of(vb)
-                    step = max(1, _FUSED_CHUNK // s)
-                    for i0 in range(0, p, step):
-                        i1 = min(i0 + step, p)
-                        with np.errstate(invalid="ignore"):
-                            G = P[i0:i1] @ B.T
-                        keep = (G >= thr) | np.isnan(G)
-                        ii, jj = np.nonzero(keep)
-                        lv = va[ii + i0]
-                        rv = vb[jj]
-                        m = lv != rv
-                        if m.any():
-                            lv, rv = lv[m], rv[m]
-                            acc_a.append(np.minimum(lv, rv))
-                            acc_b.append(np.maximum(lv, rv))
+                vb = (va if self_join
+                      else np.sort(np.asarray(b_ids, dtype=np.int64)))
+                p, s = va.shape[0], vb.shape[0]
+                if p == 0 or s == 0:
+                    continue
+                P = rows_of(va)
+                B = P if self_join else rows_of(vb)
+                step = max(1, _FUSED_CHUNK // s)
+                for i0 in range(0, p, step):
+                    with np.errstate(invalid="ignore"):
+                        G = P[i0:i0 + step] @ B.T
+                    ii, jj = np.nonzero((G >= thr) | np.isnan(G))
+                    lv = va[ii + i0]
+                    rv = vb[jj]
+                    # self: strict upper triangle (ids are unique in a
+                    # bucket); probe: every l ≠ r, normalized below
+                    m = lv < rv if self_join else lv != rv
+                    if m.any():
+                        lv, rv = lv[m], rv[m]
+                        acc_a.append(np.minimum(lv, rv))
+                        acc_b.append(np.maximum(lv, rv))
             if acc_a:
                 yield pd.DataFrame({out_a: np.concatenate(acc_a),
                                     out_b: np.concatenate(acc_b)})
 
-    surv = grouped.mapInPandas(_fused_gemm_gen,
+    return grouped.mapInPandas(_fused_gemm_gen,
                                f"{out_a} {id_t}, {out_b} {id_t}")
-    return surv, bc
-
-
-def _fused_verify_self(spark: SparkSession, e: DataFrame,
-                       buckets: DataFrame, keys: tuple, vid: str,
-                       out_a: str, out_b: str, tau: float, slot: str):
-    """Fused bucket-SELF-join verify: grouped buckets → per-bucket GEMM
-    threshold kernel → tiny distinct → exact einsum rescore. Returns
-    the (ida, idb, cos_raw) exact survivors, or None when the corpus
-    can't be gathered (callers fall back to the join + distinct +
-    verify shape). The groupBy rides the persisted bucket table's
-    existing hash partitioning (cap_buckets' window exchange), so no
-    new corpus-scale shuffle exists anywhere on this path."""
-    from silvia_spark.functions.llm_ops import _gather_score_hits
-
-    grouped = buckets.groupBy(*keys).agg(
-        F.collect_list(vid).alias("vids"))
-    id_t = dict(buckets.dtypes)[vid]
-    surv, bc = _fused_candidate_hits(spark, e, grouped, "self",
-                                     out_a, out_b, id_t, tau, slot)
-    if surv is None:
-        return None
-    return _gather_score_hits(e, surv.distinct(), tau,
-                              f"verify.{slot}", bc=bc)
-
-
-def _fused_verify_probe(spark: SparkSession, e: DataFrame,
-                        probes: DataFrame, base: DataFrame, keys: tuple,
-                        lid: str, rid: str, out_a: str, out_b: str,
-                        tau: float, slot: str):
-    """Fused probe ⋈ base verify (the multiprobe join shape): tag the
-    two sides, group per bucket into probe/base member lists, per-bucket
-    P×B GEMM threshold, distinct, exact rescore. None when the corpus
-    can't be gathered."""
-    from silvia_spark.functions.llm_ops import _gather_score_hits
-
-    keys = list(keys)
-    tagged = (probes.select(F.col(lid).alias("v"), *keys,
-                            F.lit(True).alias("p"))
-              .union(base.select(F.col(rid).alias("v"), *keys,
-                                 F.lit(False).alias("p"))))
-    grouped = tagged.groupBy(*keys).agg(
-        F.collect_list(F.when(F.col("p"), F.col("v"))).alias("pv"),
-        F.collect_list(F.when(~F.col("p"), F.col("v"))).alias("bv"))
-    id_t = dict(probes.dtypes)[lid]
-    surv, bc = _fused_candidate_hits(spark, e, grouped, "probe",
-                                     out_a, out_b, id_t, tau, slot)
-    if surv is None:
-        return None
-    return _gather_score_hits(e, surv.distinct(), tau,
-                              f"verify.{slot}", bc=bc)
-
-
-def _finish_pair_hits(hits: DataFrame, out_a: str, out_b: str,
-                      slot: str) -> DataFrame:
-    """Contract tail over exact (ida, idb, cos_raw) survivors: persist
-    the tiny set (the global sort's range-sampling pass re-executes its
-    child otherwise), JVM round, order."""
-    hits = managed_persist(hits, f"score_pairs.verify.{slot}.hits")
-    return (hits.select(out_a, out_b,
-                        F.round("cos_raw", 6).alias("cos_sim"))
-            .orderBy(out_a, out_b))
-
-
-@contract("sim_ann_lsh", oracle=_ANN_ORACLE)
-def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hyperplane-LSH similarity self-join at cosine ≥ 0.4 — the 100-TB
-    path for J4 (llm_ops.sim_join_threshold). Same output contract and the
-    exact all-pairs oracle; only same-(table, bucket) pairs are scored."""
-    e = load_table(spark, sf_dir, "embeddings")
-    # Persist the tiny (n·T)-row bucket table so the self-join's two
-    # sides read one computed copy — without it Spark plans the whole GEMM
-    # lineage twice (measured 2× the stage cost). At cluster scale this is
-    # a few GB across executors, the canonical build-side reuse.
-    # managed_persist bounds a long-lived session to one live cache here
-    # (each run unpersists the previous run's copy).
-    buckets = managed_persist(
-        cap_buckets(bucket_keys(spark, e), _ANN_BUCKET_CAP),
-        "sim_ann_lsh.buckets")
-    # r15: fused per-bucket GEMM candidates + threshold (see the fused
-    # section note) — the raw-pair exchange and its distinct are gone.
-    hits = _fused_verify_self(spark, e, buckets,
-                              ("table_id", "bucket_key"), "vec_id",
-                              "vec_a", "vec_b", 0.4, slot="lsh")
-    if hits is not None:
-        return _finish_pair_hits(hits, "vec_a", "vec_b", "lsh")
-    left = buckets.select(F.col("vec_id").alias("vec_a"),
-                          "table_id", "bucket_key")
-    right = buckets.select(F.col("vec_id").alias("vec_b"),
-                           "table_id", "bucket_key")
-    cand = _distinct_pairs(
-        left.join(right, ["table_id", "bucket_key"])
-        .where(F.col("vec_a") < F.col("vec_b"))
-        .select("vec_a", "vec_b"),
-        left, right, ("table_id", "bucket_key"), "vec_a", "vec_b")
-    return _verify_candidates(e, cand, slot="lsh")
-
-
-# --- multiprobe variant: fewer tables, one extra probe per table --------------
-
-_MP_TABLES = 24   # vs 64 base tables: 2.7x less GEMM work...
-_MP_SEED = 202    # independent hyperplane family
-_MP_NPROJ = _MP_TABLES * _ANN_BITS
-
-
-def bucket_keys_multiprobe(spark: SparkSession, e: DataFrame) -> DataFrame:
-    """vec_id → (table_id, bucket_key, probe_key): the base key plus the
-    key with the LOWEST-|margin| bit flipped — the bit most likely to
-    have landed on the wrong side of its hyperplane. The weakest bit is
-    chosen by lexicographic min over (|dot|, bit_pos), so ties are
-    deterministic under any partitioning (a bare min_by would pick the
-    first-encountered row — partition-order dependent). The sign/GEMM
-    stage is the shared ``_bucket_keys_np`` kernel under the multiprobe
-    family's own seed (w0 IS the stable-argsort weakest bit)."""
-    return _bucket_keys_np(spark, e, _MP_SEED, _MP_NPROJ).select(
-        "vec_id", "table_id", "bucket_key",
-        F.expr("bucket_key ^ shiftleft(1, w0)").alias("probe_key"))
-
-
-@contract("sim_ann_lsh_multiprobe", oracle=_ANN_ORACLE)
-def sim_ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multiprobe hyperplane-LSH similarity self-join at cosine ≥ 0.4 —
-    the memory/compute frontier of `sim_ann_lsh`: 24 tables instead of
-    64 (2.7× less GEMM, ~25% less candidate shuffle) recover the lost
-    recall by ALSO probing each vector's weakest-margin bit flip — the
-    bucket it would have landed in had its most borderline hyperplane
-    sign gone the other way (Lv et al., multi-probe LSH). Probe keys
-    live on ONE side of the self-join only (probe ⋈ base covers both
-    directions after the least/greatest normalization), so the index
-    size is unchanged — only the probe fan-out doubles. Same exact
-    all-pairs oracle as the base contract: green hash ⇒ recall 1 on
-    this corpus at 2.7× less INDEX work. Deterministic end-to-end:
-    quantized integer dots + lexicographic weakest-bit tiebreak.
-
-    When the knob pays — measured, not argued (ANN_CROSSOVER.json,
-    tools/ann_crossover.py): the table/probe trade shrinks the INDEX
-    stage only, and the probe fan-out GROWS the candidate-join input.
-    Index-bound pipelines (rare candidates: high thresholds, large
-    dims, small corpora — sf0.1 here: index = 84% of base wall time)
-    win 1.7× end-to-end; candidate-bound ones (dense corpora at low
-    thresholds — 20k vectors at 0.4: ~195M distinct candidates, join +
-    verify = 95% of wall) LOSE ~25% (259 s vs base 208 s at sf1).
-    Estimate the index share first; candidate cost is governed by B
-    (bucket occupancy), not by this knob."""
-    e = load_table(spark, sf_dir, "embeddings")
-    buckets = managed_persist(
-        cap_buckets(bucket_keys_multiprobe(spark, e), _ANN_BUCKET_CAP),
-        "sim_ann_lsh_multiprobe.buckets")
-    # probe side: base key AND flipped key; base side: base key only.
-    # The FLIP half gets its own cap pass: base-bucket capping (already
-    # applied to ``buckets``) bounds base-key rows per bucket, but a
-    # pathological corpus could still focus many vectors' FLIP keys on
-    # one hot key (cap·n candidates). Cap the flips SEPARATELY — never
-    # the union, which would also drop base rows that a hot flip key
-    # lands on and silently lose base-base pairs the base contract
-    # keeps — so every bucket's probe rows stay ≤ 2·cap and candidates
-    # ≤ 2·cap² per bucket. No-op on this corpus, like every cap here.
-    flips = cap_buckets(
-        buckets.select(F.col("vec_id").alias("vec_l"), "table_id",
-                       F.col("probe_key").alias("k")),
-        _ANN_BUCKET_CAP, keys=("table_id", "k"))
-    probes = (buckets.select(F.col("vec_id").alias("vec_l"), "table_id",
-                             F.col("bucket_key").alias("k"))
-              .union(flips))
-    base = buckets.select(F.col("vec_id").alias("vec_r"), "table_id",
-                          F.col("bucket_key").alias("k"))
-    # r15: fused per-bucket P×B GEMM (see the fused section note)
-    hits = _fused_verify_probe(spark, e, probes, base,
-                               ("table_id", "k"), "vec_l", "vec_r",
-                               "vec_a", "vec_b", 0.4, slot="mp1")
-    if hits is not None:
-        return _finish_pair_hits(hits, "vec_a", "vec_b", "mp1")
-    cand = _distinct_pairs(
-        probes.join(base, ["table_id", "k"])
-        .where(F.col("vec_l") != F.col("vec_r"))
-        .select(F.least("vec_l", "vec_r").alias("vec_a"),
-                F.greatest("vec_l", "vec_r").alias("vec_b")),
-        probes, base, ("table_id", "k"), "vec_l", "vec_r")
-    return _verify_candidates(e, cand, slot="mp1")
-
-
-# --- multiprobe-2 variant: the probe-count knob turned to 2 bits --------------
-
-_MP2_TABLES = 16  # vs 24 multiprobe-1 / 64 base
-_MP2_SEED = 303   # independent hyperplane family
-_MP2_NPROJ = _MP2_TABLES * _ANN_BITS
-
-
-def bucket_keys_multiprobe2(spark: SparkSession, e: DataFrame) -> DataFrame:
-    """vec_id → (table_id, bucket_key, probe1, probe2, probe12): the base
-    key plus the three perturbations of its TWO lowest-|margin| bits —
-    each single flip and the double flip, i.e. the first four entries of
-    Lv et al.'s success-probability-ordered probe sequence for a 4-bit
-    key. The two weakest bits come from sort_array over the per-table
-    (|dot|, bit_pos) structs — a full lexicographic sort of 4 elements,
-    deterministic under any partition/collection order (same discipline
-    as multiprobe-1's min-struct, extended to rank 2; the shared
-    ``_bucket_keys_np`` kernel's stable argsort realizes exactly that
-    order, w0/w1 = the two weakest bit positions)."""
-    return _bucket_keys_np(spark, e, _MP2_SEED, _MP2_NPROJ).select(
-        "vec_id", "table_id", "bucket_key",
-        F.expr("bucket_key ^ shiftleft(1, w0)").alias("probe1"),
-        F.expr("bucket_key ^ shiftleft(1, w1)").alias("probe2"),
-        F.expr("bucket_key ^ shiftleft(1, w0)"
-               " ^ shiftleft(1, w1)").alias("probe12"))
-
-
-@contract("sim_ann_lsh_multiprobe2", oracle=_ANN_ORACLE)
-def sim_ann_lsh_multiprobe2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """2-bit multiprobe hyperplane-LSH similarity self-join at cosine ≥
-    0.4 — the probe-count knob one notch further than multiprobe-1: 16
-    tables instead of 24/64 (1.5× / 4× less GEMM and index), each vector
-    probing its base bucket plus the three perturbations of its two
-    weakest-margin bits (4× probe fan-out, still on ONE join side, so
-    index size is unchanged).
-
-    Closed-form recall model behind the knob (hyperplane LSH, cosine
-    threshold c = 0.4 ⇒ per-bit agreement p = 1 − arccos(c)/π ≈ 0.631,
-    4-bit keys): a table hits when the key agrees on all 4 bits
-    (p⁴ ≈ .159), or differs exactly on a probed weak bit — nominally
-    2p³(1−p) ≈ .186 for the single flips and p²(1−p)² ≈ .054 for the
-    double, so per-table hit q ≈ .398 vs .25 (1-probe) and .159 (base),
-    and T tables miss with (1−q)^T: 16 tables ≈ 3e-4, between base-64
-    (2e-5) and 1-probe-24 (1e-3). The nominal flip terms UNDERSTATE the
-    true hit rate — disagreeing bits concentrate on the smallest
-    margins, which is exactly which bits get probed (Lv et al.'s
-    observation) — so the model is a sizing lower bound, and the exact
-    all-pairs oracle stays the empirical gate: green hash ⇒ recall 1 on
-    this corpus at 4× less GEMM than the base contract.
-
-    4× less GEMM is NOT 4× less work: the crossover is measured in
-    ANN_CROSSOVER.json (see multiprobe-1's docstring for the decision
-    rule). Index-bound regimes win 2.1× end-to-end (8.6 s vs 17.9 s at
-    sf0.1); candidate-bound ones lose ~27% (264 s vs 208 s at 20k
-    vectors, threshold 0.4) because the 4× probe fan-out feeds the
-    same-bucket join that already dominates.
-
-    Same capping discipline as multiprobe-1: the flip-key union gets its
-    own cap pass (never capped together with base rows), bounding every
-    bucket's probe rows at 2·cap and candidates at 2·cap² even on a
-    corpus that focuses many vectors' flips onto one hot key."""
-    e = load_table(spark, sf_dir, "embeddings")
-    buckets = managed_persist(
-        cap_buckets(bucket_keys_multiprobe2(spark, e), _ANN_BUCKET_CAP),
-        "sim_ann_lsh_multiprobe2.buckets")
-    flips = cap_buckets(
-        buckets.selectExpr(
-            "vec_id AS vec_l", "table_id",
-            "stack(3, probe1, probe2, probe12) AS k"),
-        _ANN_BUCKET_CAP, keys=("table_id", "k"))
-    probes = (buckets.select(F.col("vec_id").alias("vec_l"), "table_id",
-                             F.col("bucket_key").alias("k"))
-              .union(flips))
-    base = buckets.select(F.col("vec_id").alias("vec_r"), "table_id",
-                          F.col("bucket_key").alias("k"))
-    # r15: fused per-bucket P×B GEMM (see the fused section note)
-    hits = _fused_verify_probe(spark, e, probes, base,
-                               ("table_id", "k"), "vec_l", "vec_r",
-                               "vec_a", "vec_b", 0.4, slot="mp2")
-    if hits is not None:
-        return _finish_pair_hits(hits, "vec_a", "vec_b", "mp2")
-    cand = _distinct_pairs(
-        probes.join(base, ["table_id", "k"])
-        .where(F.col("vec_l") != F.col("vec_r"))
-        .select(F.least("vec_l", "vec_r").alias("vec_a"),
-                F.greatest("vec_l", "vec_r").alias("vec_b")),
-        probes, base, ("table_id", "k"), "vec_l", "vec_r")
-    return _verify_candidates(e, cand, slot="mp2")
-
-
-# --- parameterized probe family: the recall-experiment kernel ----------------
 
 
 def bucket_keys_probed(spark: SparkSession, e: DataFrame, *,
                        tables: int, probes: int,
                        seed: int = 707,
                        bits: int = _ANN_BITS) -> DataFrame:
-    """vec_id → (table_id, bucket_key, probe_keys array): the generic
-    (T, probe-depth) point of the family the three contract kernels fix
-    at (64, 0) / (24, 1) / (16, 3). ``probes`` ∈ {0, 1, 3}: base key
+    """vec_id → (table_id, bucket_key, probe_keys array): one
+    (T, probe-depth) point of the hyperplane family; the contracts fix
+    it at (64, 0) / (24, 1) / (16, 3). ``probes`` ∈ {0, 1, 3}: base key
     only, +weakest-bit flip, +both single flips and the double flip
-    (Lv et al.'s probe sequence for a ``bits``-bit key). Same
-    determinism discipline as the contract kernels: quantized integer
-    dots, lexicographic (|dot|, bit_pos) weak-bit ranking.
+    (Lv et al.'s success-probability-ordered probe sequence for a
+    ``bits``-bit key). Quantized integer dots; the weak bits are the
+    lexicographic (|dot|, bit_pos) ranking — ``_bucket_keys_np``'s
+    stable argsort — so the keys are deterministic under any
+    partitioning.
 
     tools/ann_recall.py sweeps this kernel over table counts where the
     closed-form model predicts recall << 1 and compares measured vs
@@ -964,70 +543,203 @@ def bucket_keys_probed(spark: SparkSession, e: DataFrame, *,
                           probe_expr.alias("probe_keys"))
 
 
-def probed_candidates(buckets: DataFrame) -> DataFrame:
-    """(vec_a < vec_b) candidate pairs from a ``bucket_keys_probed``
-    table: probe keys fan out on ONE join side (index size unchanged),
-    exactly the contract kernels' join shape."""
-    base = buckets.select(F.col("vec_id").alias("vec_r"), "table_id",
-                          F.col("bucket_key").alias("k"))
-    probes = (buckets.select(F.col("vec_id").alias("vec_l"), "table_id",
-                             F.col("bucket_key").alias("k"))
-              .union(buckets.select(
-                  F.col("vec_id").alias("vec_l"), "table_id",
-                  F.explode("probe_keys").alias("k"))))
-    return _distinct_pairs(
-        probes.join(base, ["table_id", "k"])
-        .where(F.col("vec_l") != F.col("vec_r"))
-        .select(F.least("vec_l", "vec_r").alias("vec_a"),
-                F.greatest("vec_l", "vec_r").alias("vec_b")),
-        probes, base, ("table_id", "k"), "vec_l", "vec_r")
+def ann_join(spark: SparkSession, e: DataFrame, *, tables: int,
+             probes: int, seed: int, tau: float,
+             out: tuple[str, str] = ("vec_a", "vec_b"), slot: str,
+             buckets: DataFrame | None = None) -> DataFrame:
+    """Exact ``(a, b, cos_raw)`` survivors (a < b, cosine ≥ ``tau``) of
+    the hyperplane-LSH similarity self-join over corpus ``e``
+    (vec_id, embedding); ``out`` names the two id columns.
+
+    Bucket keys come from ``bucket_keys_probed`` at (``tables``,
+    ``probes``, ``seed``), or from ``buckets`` — a persisted index's
+    (vec_id, table_id, bucket_key) table, base keys only, so
+    ``probes`` must be 0 with it. The capped bucket table is persisted
+    under ``slot`` so every side below reads one computed copy (without
+    it Spark plans the GEMM lineage once per side). Probe keys fan out
+    on ONE side (probe ⋈ base covers both directions after the
+    least/greatest normalization), so the index size is unchanged.
+
+    The gather decision is made once (one sizing job): gatherable
+    corpora take the fused per-bucket GEMM kernel, the rest the join
+    fallback; see the module docstring for both routes."""
+    from silvia_spark.functions.llm_ops import (_gather_broadcast,
+                                                _gather_score_hits,
+                                                _score_pairs_hits)
+
+    if buckets is None:
+        buckets = bucket_keys_probed(spark, e, tables=tables,
+                                     probes=probes, seed=seed)
+    elif probes:
+        raise ValueError("a persisted index holds base keys only; "
+                         "pass probes=0 with buckets=")
+    keys = ["table_id", "bucket_key"]
+    buckets = managed_persist(
+        cap_buckets(buckets.select("vec_id", *keys,
+                                   *(["probe_keys"] if probes else [])),
+                    _ANN_BUCKET_CAP),
+        f"{slot}.buckets")
+    base = buckets.select("vec_id", *keys)
+    side = base
+    if probes:
+        # The FLIP keys get their own cap pass: base-bucket capping
+        # bounds base-key rows per bucket, but a pathological corpus
+        # could still focus many vectors' flips on one hot key (cap·n
+        # candidates). Capping the union instead would also drop base
+        # rows a hot flip key lands on and silently lose base-base
+        # pairs, so every bucket's probe rows stay ≤ 2·cap and its
+        # candidates ≤ 2·cap². No-op on this corpus, like every cap.
+        side = base.union(cap_buckets(
+            buckets.select("vec_id", "table_id",
+                           F.explode("probe_keys").alias("bucket_key")),
+            _ANN_BUCKET_CAP))
+    a, b = out
+    vslot = f"verify.{slot}"
+    bc = _gather_broadcast(spark, e, vslot)
+    if bc is not None:
+        if probes:
+            tagged = (side.withColumn("p", F.lit(True))
+                      .union(base.withColumn("p", F.lit(False))))
+            grouped = tagged.groupBy(*keys).agg(
+                F.collect_list(F.when(F.col("p"), F.col("vec_id")))
+                .alias("pv"),
+                F.collect_list(F.when(~F.col("p"), F.col("vec_id")))
+                .alias("bv"))
+        else:
+            # rides the persisted table's hash partitioning (the
+            # cap_buckets window exchange): no new corpus-scale shuffle
+            grouped = base.groupBy(*keys).agg(
+                F.collect_list("vec_id").alias("vids"))
+        surv = _fused_candidate_hits(grouped, bc, a, b,
+                                     dict(buckets.dtypes)["vec_id"], tau)
+        return _gather_score_hits(e, surv.distinct(), tau, vslot, bc=bc)
+    left = side.withColumnRenamed("vec_id", "vec_l")
+    right = base.withColumnRenamed("vec_id", "vec_r")
+    pairs = left.join(right, keys)
+    if probes:
+        raw = (pairs.where(F.col("vec_l") != F.col("vec_r"))
+               .select(F.least("vec_l", "vec_r").alias(a),
+                       F.greatest("vec_l", "vec_r").alias(b)))
+    else:
+        raw = (pairs.where(F.col("vec_l") < F.col("vec_r"))
+               .select(F.col("vec_l").alias(a), F.col("vec_r").alias(b)))
+    cand = _distinct_pairs(raw, left, right, keys, "vec_l", "vec_r")
+    # Stage cut BEFORE the Python eval: persist the 16 B/row candidate
+    # PAIRS (DISK_ONLY) so the distinct's shuffle-reduce and the
+    # ArrowEvalPython row-queue never share one task's memory. Fused,
+    # the scalar eval's result-rejoin queue (it buffers the 1 KB
+    # embedding-attached input rows while Python computes) on top of
+    # the distinct's hash structures OOMed the 8 g executor at
+    # mp2-sf1's 195 M candidates (measured r13, twice).
+    cand = managed_persist(cand, f"{vslot}.pairs", level="DISK_ONLY")
+    ea = e.select(F.col("vec_id").alias(a), F.col("embedding").alias("ea"))
+    eb = e.select(F.col("vec_id").alias(b), F.col("embedding").alias("eb"))
+    return _score_pairs_hits(cand.join(ea, a).join(eb, b), a, b, tau,
+                             vslot)
+
+
+def _ann_pairs(spark: SparkSession, e: DataFrame, slot: str,
+               **kw) -> DataFrame:
+    """Contract tail over ``ann_join`` at cosine ≥ 0.4: persist the
+    tiny survivor set (the global sort's range-sampling pass
+    re-executes its child otherwise), JVM round, order."""
+    hits = managed_persist(ann_join(spark, e, tau=0.4, slot=slot, **kw),
+                           f"score_pairs.verify.{slot}.hits")
+    return (hits.select("vec_a", "vec_b",
+                        F.round("cos_raw", 6).alias("cos_sim"))
+            .orderBy("vec_a", "vec_b"))
+
+
+@contract("sim_ann_lsh", oracle=_ANN_ORACLE)
+def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Hyperplane-LSH similarity self-join at cosine ≥ 0.4 — the 100-TB
+    path for J4 (llm_ops.sim_join_threshold). Same output contract and the
+    exact all-pairs oracle; only same-(table, bucket) pairs are scored."""
+    e = load_table(spark, sf_dir, "embeddings")
+    return _ann_pairs(spark, e, "sim_ann_lsh", tables=_ANN_TABLES,
+                      probes=0, seed=_ANN_SEED)
+
+
+# --- multiprobe variants: fewer tables, probed weak-bit flips -----------------
+
+_MP_TABLES = 24   # vs 64 base tables: 2.7x less GEMM work...
+_MP_SEED = 202    # independent hyperplane family
+_MP_NPROJ = _MP_TABLES * _ANN_BITS
+_MP2_TABLES = 16  # vs 24 multiprobe-1 / 64 base
+_MP2_SEED = 303   # independent hyperplane family
+_MP2_NPROJ = _MP2_TABLES * _ANN_BITS
+
+
+@contract("sim_ann_lsh_multiprobe", oracle=_ANN_ORACLE)
+def sim_ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Multiprobe hyperplane-LSH similarity self-join at cosine ≥ 0.4:
+    24 tables instead of 64 (2.7× less GEMM) recover the lost recall by
+    ALSO probing each vector's weakest-margin bit flip — the bucket it
+    would have landed in had its most borderline hyperplane sign gone
+    the other way (Lv et al., multi-probe LSH). ``ann_join`` at
+    (24 tables, 1 probe, seed 202): the probe key rides ONE side of
+    the join, so the index size is unchanged and only the probe
+    fan-out doubles. Same exact all-pairs oracle as the base contract:
+    green hash ⇒ recall 1 on this corpus."""
+    e = load_table(spark, sf_dir, "embeddings")
+    return _ann_pairs(spark, e, "sim_ann_lsh_multiprobe",
+                      tables=_MP_TABLES, probes=1, seed=_MP_SEED)
+
+
+@contract("sim_ann_lsh_multiprobe2", oracle=_ANN_ORACLE)
+def sim_ann_lsh_multiprobe2(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """2-bit multiprobe hyperplane-LSH similarity self-join at cosine ≥
+    0.4 — the probe-count knob one notch further: ``ann_join`` at
+    (16 tables, 3 probes, seed 303), each vector probing its base
+    bucket plus the three perturbations of its two weakest-margin bits
+    (4× probe fan-out, on ONE join side, so the index size is
+    unchanged).
+
+    Closed-form recall model behind the knob (hyperplane LSH, cosine
+    threshold c = 0.4 ⇒ per-bit agreement p = 1 − arccos(c)/π ≈ 0.631,
+    4-bit keys): a table hits when the key agrees on all 4 bits
+    (p⁴ ≈ .159), or differs exactly on a probed weak bit — nominally
+    2p³(1−p) ≈ .186 for the single flips and p²(1−p)² ≈ .054 for the
+    double, so per-table hit q ≈ .398 vs .25 (1-probe) and .159 (base),
+    and T tables miss with (1−q)^T: 16 tables ≈ 3e-4, between base-64
+    (2e-5) and 1-probe-24 (1e-3). The nominal flip terms UNDERSTATE the
+    true hit rate — disagreeing bits concentrate on the smallest
+    margins, which is exactly which bits get probed (Lv et al.'s
+    observation) — so the model is a sizing lower bound, and the exact
+    all-pairs oracle stays the empirical gate: green hash ⇒ recall 1 on
+    this corpus at 4× less GEMM than the base contract."""
+    e = load_table(spark, sf_dir, "embeddings")
+    return _ann_pairs(spark, e, "sim_ann_lsh_multiprobe2",
+                      tables=_MP2_TABLES, probes=3, seed=_MP2_SEED)
 
 
 @contract("sim_ann_auto", oracle=_ANN_ORACLE)
 def sim_ann_auto(spark: SparkSession, sf_dir: str,
                  index_root: str | None = None) -> DataFrame:
-    """Chooser-ROUTED ANN join (r12, verdict item 7; index-aware r14,
-    item 7): probes the PERSISTED index first — ``index_root``
-    argument or ``$SILVIA_ANN_INDEX_ROOT`` — and when
-    ``ann_index_fresh`` says the bucket table covers exactly this
-    corpus, routes straight through ``sim_ann_lsh_indexed`` with NO
-    occupancy estimate at all. That is deliberately simpler than the
-    r13 verdict's sketch (estimate FROM the index, then choose): the
-    chooser exists to trade GEMM cost against candidate fan-out, and
-    a warm index makes the GEMM free — mp2's entire advantage is
-    GEMM reduction in index-bound regimes, so indexed-base dominates
-    BOTH variants whenever the index is warm (measured: the sf1 warm
-    indexed query beats both cold kernels, ANN_INDEX.json). Cold (no
-    index / stale / foreign params), the r12 rule stands: price
-    occupancy with ``estimate_ann_candidates_per_vec`` (a 2/64 GEMM
-    slice), dispatch mp2 in index-bound regimes and base tables in
-    candidate-bound ones (ANN_CROSSOVER.json / SCALE.md §ANN). Every
-    route ends in the same exact-cosine verify at the same threshold,
-    so recall is 1 and the hash is stable whichever path runs."""
+    """Index-aware ANN join: serves the PERSISTED index — ``index_root``
+    argument or ``$SILVIA_ANN_INDEX_ROOT`` — when ``ann_index_fresh``
+    says it covers exactly this corpus AND the corpus is past the
+    gather bound; every other case runs ``sim_ann_lsh``.
+
+    Why only past the bound (ANN_INDEX.json, regenerated after the r15
+    fused kernel): on a gatherable corpus the warm-index route measured
+    2× the whole compute path at sf1 (warm_query 8.0 s vs cold_base
+    3.9 s) — the map-only GEMM the index skips (~0.5 s) is cheaper than
+    reading the bucket table back from the manifest. Past the bound the
+    join fallback's GEMM + candidate distinct is still the expensive
+    side the index skips. Every route ends in the same exact verify, so
+    the output is identical whichever runs (oracle-proven; pinned in
+    tests/test_ann_index.py)."""
     import os as _os
 
     from silvia_spark.functions.llm_ops import _gather_feasible
 
     e = load_table(spark, sf_dir, "embeddings")
     index_root = index_root or _os.environ.get("SILVIA_ANN_INDEX_ROOT")
-    # r15 re-pricing (ANN_INDEX.json regenerated after the fused
-    # kernel): on a GATHERABLE corpus the warm-index route measured 2×
-    # the whole compute path at sf1 (warm_query 8.0 s vs cold_base
-    # 3.9 s) — the fused/map-only GEMM made the skipped index work
-    # (~0.5 s) cheaper than reading the bucket table back from the
-    # manifest. The warm index therefore routes ONLY past the gather
-    # bound, where the fallback pipeline's GEMM + JVM candidate
-    # distinct is still the expensive side the index skips. Every
-    # route ends in the same exact verify, so the output is identical
-    # whichever path runs (oracle-proven; pinned in
-    # tests/test_ann_index.py).
     if index_root and ann_index_fresh(e, index_root) \
             and not _gather_feasible(e):
         return sim_ann_lsh_indexed(spark, sf_dir, index_root)
-    est = estimate_ann_candidates_per_vec(spark, e)
-    name, _cfg = choose_ann_variant(est_candidates_per_vec=est)
-    fn = sim_ann_lsh_multiprobe2 if name == "mp2" else sim_ann_lsh
-    return fn(spark, sf_dir)
+    return sim_ann_lsh(spark, sf_dir)
 
 
 # --- ANN index persistence (r13, r12 verdict item 8) ---------------------------
@@ -1137,36 +849,18 @@ def sim_ann_lsh_indexed(spark: SparkSession, sf_dir: str,
                         index_root: str) -> DataFrame:
     """``sim_ann_lsh`` with the bucket table served from a persisted
     index when fresh: the query plan contains NO hyperplane GEMM (no
-    posexplode ⋈ sign table, no hash-aggregate over dot terms) — the
-    bucket self-join reads the manifest table and goes straight to
-    candidates + exact verify. Falls back to the query-time GEMM on a
-    stale/missing index, so the output contract is identical either
-    way (asserted in tests/test_ann_index.py)."""
+    numpy index kernel, no posexplode ⋈ sign table) — ``ann_join``
+    reads the manifest table and goes straight to candidates + exact
+    verify. Falls back to the query-time GEMM on a stale/missing
+    index, so the output contract is identical either way (asserted in
+    tests/test_ann_index.py)."""
     from silvia_spark.operators.manifest_table import read_snapshot
 
     e = load_table(spark, sf_dir, "embeddings")
-    if ann_index_fresh(e, index_root):
-        bk = read_snapshot(spark, index_root)
-    else:
-        bk = bucket_keys(spark, e)
-    buckets = managed_persist(
-        cap_buckets(bk, _ANN_BUCKET_CAP), "sim_ann_lsh_indexed.buckets")
-    # r15: fused per-bucket GEMM candidates + threshold
-    hits = _fused_verify_self(spark, e, buckets,
-                              ("table_id", "bucket_key"), "vec_id",
-                              "vec_a", "vec_b", 0.4, slot="indexed")
-    if hits is not None:
-        return _finish_pair_hits(hits, "vec_a", "vec_b", "indexed")
-    left = buckets.select(F.col("vec_id").alias("vec_a"),
-                          "table_id", "bucket_key")
-    right = buckets.select(F.col("vec_id").alias("vec_b"),
-                           "table_id", "bucket_key")
-    cand = _distinct_pairs(
-        left.join(right, ["table_id", "bucket_key"])
-        .where(F.col("vec_a") < F.col("vec_b"))
-        .select("vec_a", "vec_b"),
-        left, right, ("table_id", "bucket_key"), "vec_a", "vec_b")
-    return _verify_candidates(e, cand, slot="indexed")
+    bk = (read_snapshot(spark, index_root)
+          if ann_index_fresh(e, index_root) else None)
+    return _ann_pairs(spark, e, "sim_ann_lsh_indexed", tables=_ANN_TABLES,
+                      probes=0, seed=_ANN_SEED, buckets=bk)
 
 
 @contract("sim_ann_indexed", oracle=_ANN_ORACLE)

@@ -173,11 +173,19 @@ def score_pairs_threshold(joined, tau: float = 0.4,
       oracles stay green; numpy and the JVM agree on the >= compare
       for every non-NaN double, and the corpus has no zero-norm
       vectors to produce NaN (pytest-pinned in test_determinism)."""
+    return (_score_pairs_hits(joined, "vec_a", "vec_b", tau, slot)
+            .select("vec_a", "vec_b",
+                    F.round("cos_raw", 6).alias("cos_sim"))
+            .orderBy("vec_a", "vec_b"))
+
+
+def _score_pairs_hits(joined, pa: str, pb: str, tau: float, slot: str):
+    """The unrounded ``score_pairs_threshold`` survivors: (pa, pb,
+    cos_raw) with cos_raw >= tau, from (pa, ea, pb, eb) rows."""
     from silvia_spark.io import managed_persist
 
     scored = joined.select(
-        "vec_a", "vec_b",
-        cosine(F.col("ea"), F.col("eb")).alias("cos_raw"))
+        pa, pb, cosine(F.col("ea"), F.col("eb")).alias("cos_raw"))
     # DISK_ONLY, deliberately: the barrier is written once and read
     # once, so memory-caching it buys nothing — and cached blocks are
     # unevictable below storageFraction, which at mp2-sf1 (195 M
@@ -189,10 +197,7 @@ def score_pairs_threshold(joined, tau: float = 0.4,
     # and the session heap stays at its measured-good size).
     scored = managed_persist(scored, f"score_pairs.{slot}",
                              level="DISK_ONLY")
-    return (scored.where(F.col("cos_raw") >= tau)
-            .select("vec_a", "vec_b",
-                    F.round("cos_raw", 6).alias("cos_sim"))
-            .orderBy("vec_a", "vec_b"))
+    return scored.where(F.col("cos_raw") >= tau)
 
 
 # --- gather-in-kernel exact verify (r15) --------------------------------------

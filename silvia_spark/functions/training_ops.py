@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from silvia_spark.io import load_table, managed_persist
+from silvia_spark.io import load_table
 from silvia_spark.registry import contract
 
 # --- J20: embedding-cosine near-dup removal ----------------------------------
@@ -69,47 +69,16 @@ def dedup_docs_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast-able distinct dup-id set per billion docs (8 B/id) joined to
     the corpus — the shuffle carries ids, never vectors or text. Oracle is
     the exact all-pairs form, so green = recall 1 end-to-end."""
-    from silvia_spark.functions.llm_extras import (
-        _ANN_BUCKET_CAP, _distinct_pairs, _fused_verify_self,
-        bucket_keys, cap_buckets)
-    from silvia_spark.functions.llm_ops import cosine
+    from silvia_spark.functions.llm_extras import (_ANN_SEED, _ANN_TABLES,
+                                                   ann_join)
 
     e = load_table(spark, sf_dir, "embeddings")
-    buckets = managed_persist(
-        cap_buckets(bucket_keys(spark, e), _ANN_BUCKET_CAP),
-        "dedup_docs_embedding.buckets")
-    # r15: fused per-bucket GEMM candidates + threshold (llm_extras
-    # fused section) — the raw-pair exchange, its right-sized distinct
-    # and the embedding-shipping verify all collapse into the grouped
-    # bucket kernel + an exact id-gather rescore of the survivors.
-    hits = _fused_verify_self(spark, e, buckets,
-                              ("table_id", "bucket_key"), "vec_id",
-                              "va", "vb", _EMB_TAU,
-                              slot="dedup_docs_embedding")
-    if hits is not None:
-        dups = hits.select("vb").distinct()
-    else:
-        left = buckets.select(F.col("vec_id").alias("va"),
-                              "table_id", "bucket_key")
-        right = buckets.select(F.col("vec_id").alias("vb"),
-                               "table_id", "bucket_key")
-        # r14 fallback: right-sized packed-key dedup + scalar-kernel
-        # verify — the candidate distinct is this query's only stage
-        # whose shuffle grows quadratically with bucket occupancy.
-        cand = _distinct_pairs(
-            left.join(right, ["table_id", "bucket_key"])
-            .where(F.col("va") < F.col("vb"))
-            .select("va", "vb"),
-            left, right, ("table_id", "bucket_key"), "va", "vb")
-        a = e.select(F.col("vec_id").alias("va"),
-                     F.col("embedding").alias("ea"))
-        b = e.select(F.col("vec_id").alias("vb"),
-                     F.col("embedding").alias("eb"))
-        dups = (
-            cand.join(a, "va").join(b, "vb")
-            .where(cosine(F.col("ea"), F.col("eb")) >= _EMB_TAU)
-            .select("vb").distinct()
-        )
+    # The base LSH tables through the one ANN planner (fused per-bucket
+    # GEMM + exact rescore, or the join fallback past the gather bound):
+    # the exact (va, vb, cos_raw) pairs at cosine >= 0.95.
+    dups = ann_join(spark, e, tables=_ANN_TABLES, probes=0, seed=_ANN_SEED,
+                    tau=_EMB_TAU, out=("va", "vb"),
+                    slot="dedup_docs_embedding").select("vb").distinct()
     d = load_table(spark, sf_dir, "documents")
     # Broadcast the dup-id set: without the hint the left join plans SMJ
     # and shuffles DOCUMENTS by doc_id just to test membership in an

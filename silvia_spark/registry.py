@@ -53,13 +53,17 @@ _NEW_CONTRACTS_HERE = "__new_contracts_here__"
 _PRIORITY: tuple[str, ...] = (
     # ============ packing after r15 (evidence ledger: r09=11, r10=36,
     # r11=22, r12=40, r13=38, r14=42, r15=50; zero failures ever).
-    # Head: the two banded dedups whose plan changed after their r15
-    # evidence (MinHash signature kernel with exact band keys; the
-    # shared Jaccard verify lost its eager count). Then evidence
-    # oldest-first: 2 + 11 r09 + 36 r10 + 1 r11 fill the 50-slot window,
-    # so the oldest evidence after the next round is r11. ======
+    # Head: the contracts whose plan-building code changed after their
+    # r15 evidence — the two banded dedups (MinHash signature kernel
+    # with exact band keys; the shared Jaccard verify lost its eager
+    # count), then the six ANN consumers now built by the one planner
+    # (llm_extras.ann_join). Then evidence oldest-first: 8 + 11 r09 +
+    # 31 of the 36 r10 fill the 50-slot window, so the oldest evidence
+    # after the next round is r10. ======
     # -- plan changed after their newest evidence --
     "dedup_docs_minhash", "dedup_docs_simhash",
+    "sim_ann_lsh", "sim_ann_lsh_multiprobe", "sim_ann_lsh_multiprobe2",
+    "sim_ann_auto", "sim_ann_indexed", "dedup_docs_embedding",
     # -- new contracts registered mid-round slot in here --
     _NEW_CONTRACTS_HERE,
     # -- r09-era evidence --
@@ -133,9 +137,7 @@ _PRIORITY: tuple[str, ...] = (
     "stream_funnel_live", "stream_session_live", "stream_static_join_live",
     "stream_stream_join_live", "stream_transform_with_state",
     # -- r15-era evidence --
-    "sim_ann_lsh", "sim_ann_lsh_multiprobe", "sim_ann_lsh_multiprobe2",
-    "sim_ann_auto", "sim_ann_indexed", "sim_join_threshold",
-    "dedup_docs_embedding", "stream_session_30m", "stream_tumbling_live",
+    "sim_join_threshold", "stream_session_30m", "stream_tumbling_live",
     "stream_watermark_late", "text_lang_detect", "text_pack_sequences",
     "text_pii_scrub", "text_unicode_normalize", "window_gaps_islands",
     "window_ignore_nulls", "agg_approx_distinct", "agg_approx_percentile",

@@ -62,12 +62,15 @@ def test_probing_monotonically_buys_recall(results):
 
 def test_collision_join_equals_candidate_generator(spark):
     """The cheap truth-side collision join the measurement uses must
-    define the same recall as the REAL quadratic candidate generator
-    (probed_candidates) — proven by set equality on a small corpus."""
+    define the same recall as the REAL candidate generator — the ANN
+    planner (``ann_join``) at the same (tables, probes, seed), with tau
+    just below the planted band so its exact verify keeps every
+    colliding truth pair — proven by set equality on a small corpus."""
     from pyspark.sql import functions as F
 
-    from silvia_spark.functions.llm_extras import (bucket_keys_probed,
-                                                   probed_candidates)
+    from silvia_spark.functions.llm_extras import (ann_join,
+                                                   bucket_keys_probed)
+    from silvia_spark.io import clear_caches
 
     mat, truth = generate_corpus(n_pairs=120)
     e = spark.createDataFrame(
@@ -75,13 +78,15 @@ def test_collision_join_equals_candidate_generator(spark):
         "vec_id BIGINT, embedding ARRAY<DOUBLE>")
     truth_df = spark.createDataFrame(
         [(i, j) for i, j, _ in truth], "vec_a BIGINT, vec_b BIGINT")
-    buckets = bucket_keys_probed(spark, e, tables=4, probes=3).persist()
+    assert min(c for _, _, c in truth) >= 0.40
+    hits = ann_join(spark, e, tables=4, probes=3, seed=707, tau=0.39,
+                    slot="test.recall")
 
     via_candidates = set(
         (r.vec_a, r.vec_b) for r in
-        truth_df.join(probed_candidates(buckets),
-                      ["vec_a", "vec_b"], "left_semi").collect())
+        truth_df.join(hits, ["vec_a", "vec_b"], "left_semi").collect())
 
+    buckets = bucket_keys_probed(spark, e, tables=4, probes=3).persist()
     ba = buckets.select(F.col("vec_id").alias("vec_a"), "table_id",
                         F.col("bucket_key").alias("k_a"),
                         F.col("probe_keys").alias("pk_a"))
@@ -96,6 +101,7 @@ def test_collision_join_equals_candidate_generator(spark):
         truth_df.join(ba, "vec_a").join(bb, ["vec_b", "table_id"])
         .where(collide).select("vec_a", "vec_b").distinct().collect())
     buckets.unpersist()
+    clear_caches()
 
     assert via_candidates == via_collision
     assert via_candidates  # non-vacuous
@@ -112,64 +118,30 @@ def test_predicted_recall_closed_form_spotcheck():
     assert abs(one3 - expect) < 1e-12
 
 
-def test_choose_ann_variant_locks_measured_regimes():
-    """r10 verdict item 4: the prose decision rule (SCALE.md §ANN) as
-    code, locked against BOTH measured regimes. sf0.1 (ANN_CROSSOVER:
-    971 distinct candidates/vector, index 85% of base wall) is
-    index-bound → mp2 (measured 2.1× win); sf1 (BENCH_sf1_heavy: 9715
-    candidates/vector, index 5%) is candidate-bound → base (mp2
-    measured ~25% SLOWER there)."""
-    from silvia_spark.functions.llm_extras import choose_ann_variant
-
-    name, cfg = choose_ann_variant(est_candidates_per_vec=971)
-    assert (name, cfg) == ("mp2", {"tables": 16, "probes_per_table": 4})
-    name, cfg = choose_ann_variant(est_candidates_per_vec=9715)
-    assert (name, cfg) == ("base", {"tables": 64,
-                                    "probes_per_table": 1})
-    # the index-share form of the same rule
-    assert choose_ann_variant(index_share=0.85)[0] == "mp2"
-    assert choose_ann_variant(index_share=0.049)[0] == "base"
-    import pytest as _pytest
-    with _pytest.raises(ValueError, match="measured signal"):
-        choose_ann_variant()
-
-
-def test_estimate_candidates_tracks_measured_scale(spark):
-    """The occupancy sampler reproduces the measured scale law: the
-    estimate is within 2× of the closed-form n²·2^-B·T·ratio/n on the
-    near-uniform test corpus, and small corpora land index-bound (the
-    regime the sf0.1 measurement pins)."""
-    from silvia_spark.functions.llm_extras import (
-        _ANN_BITS, _ANN_DISTINCT_RATIO, _N_PROJ, choose_ann_variant,
-        estimate_ann_candidates_per_vec)
-    from silvia_spark.io import load_table
-    from tests.conftest import SF_SMALL
-
-    e = load_table(spark, SF_SMALL, "embeddings")
-    n = e.count()
-    est = estimate_ann_candidates_per_vec(spark, e)
-    tables = _N_PROJ // _ANN_BITS
-    uniform = (n * n / (2 ** _ANN_BITS) / 2) * tables \
-        * _ANN_DISTINCT_RATIO / n
-    assert 0 < est < 2 * uniform + 1, (est, uniform)
-    assert choose_ann_variant(est_candidates_per_vec=est)[0] == "mp2"
-
-
-def test_sim_ann_auto_routes_and_matches_pinned_variant(spark):
-    """J43: the routed contract must dispatch through the measured
-    rule and emit EXACTLY a pinned variant's output (recall-1 verify
-    makes all variants set-equal, so routing can never change the
-    hash)."""
-    from silvia_spark.functions.llm_extras import (
-        choose_ann_variant, estimate_ann_candidates_per_vec,
-        sim_ann_auto, sim_ann_lsh)
-    from silvia_spark.io import load_table
+def test_sim_ann_auto_routes_and_matches_pinned_variant(spark, monkeypatch):
+    """J43: with no index configured, the routed contract IS the base
+    contract: the same output and the same number of plan-build jobs
+    (the removed variant chooser spent extra build jobs sampling
+    bucket occupancy)."""
+    from silvia_spark.functions.llm_extras import sim_ann_auto, sim_ann_lsh
+    from silvia_spark.io import clear_caches
+    from tests.test_minhash_kernel import _jobs_in_group
 
     sf = "/root/testdata/sf0.01"
-    e = load_table(spark, sf, "embeddings")
-    est = estimate_ann_candidates_per_vec(spark, e)
-    name, cfg = choose_ann_variant(est_candidates_per_vec=est)
-    assert name in ("base", "mp2") and cfg["tables"] in (64, 16)
-    got = sorted(map(tuple, sim_ann_auto(spark, sf).collect()))
-    want = sorted(map(tuple, sim_ann_lsh(spark, sf).collect()))
-    assert got == want
+    monkeypatch.delenv("SILVIA_ANN_INDEX_ROOT", raising=False)
+    sim_ann_lsh(spark, sf)  # fills the per-process sign-matrix cache
+    sc = spark.sparkContext
+    got = {}
+    for name, fn in (("auto", sim_ann_auto), ("lsh", sim_ann_lsh)):
+        clear_caches()
+        group = f"ann-build-{name}"
+        sc.setJobGroup(group, group)
+        try:
+            df = fn(spark, sf)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        got[name] = (_jobs_in_group(spark, group),
+                     sorted(map(tuple, df.collect())))
+    assert got["auto"][1] == got["lsh"][1] and got["lsh"][1]
+    assert got["auto"][0] == got["lsh"][0], got["auto"][0]
+    clear_caches()

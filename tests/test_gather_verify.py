@@ -1,8 +1,9 @@
 """r15 gather/fused verify equivalence guards.
 
-The ANN verify family now has three shapes behind one contract:
-fused per-bucket GEMM (+ exact rescore), id-gather kernel, and the r14
-join + scalar-kernel fallback past the gather bound. The oracle parity
+The ANN verify family has three shapes behind one contract: fused
+per-bucket GEMM (+ exact rescore) and the join + scalar-kernel fallback
+past the gather bound, both planned by ``llm_extras.ann_join``, and the
+id-gather kernel of the all-pairs baseline. The oracle parity
 suite proves each against DuckDB; THESE tests pin that the shapes agree
 with each other and that the guard actually switches — so a future
 change cannot silently leave the fallback diverging (it only runs on
@@ -11,11 +12,18 @@ corpora too big for the test matrix otherwise).
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from silvia_spark.io import clear_caches, load_table
 
 SF = "/root/testdata/sf0.01"
+
+
+# Every consumer of the one ANN planner (llm_extras.ann_join).
+ANN_CONSUMERS = ["sim_ann_lsh", "sim_ann_lsh_multiprobe",
+                 "sim_ann_lsh_multiprobe2", "sim_ann_auto",
+                 "sim_ann_indexed", "dedup_docs_embedding"]
 
 
 def _rows(spark, name):
@@ -27,18 +35,40 @@ def _rows(spark, name):
                       registry.QUERIES[name](spark, SF).collect()))
 
 
-def test_fused_and_fallback_agree_self_join(spark, monkeypatch):
-    fused = _rows(spark, "sim_ann_lsh")
+@pytest.mark.parametrize("name", ANN_CONSUMERS)
+def test_fused_and_fallback_agree(spark, monkeypatch, name):
+    monkeypatch.delenv("SILVIA_ANN_INDEX_ROOT", raising=False)
+    fused = _rows(spark, name)
     monkeypatch.setenv("SILVIA_GATHER_MAX_BYTES", "1")
-    fallback = _rows(spark, "sim_ann_lsh")
+    fallback = _rows(spark, name)
     assert fused == fallback and len(fused) > 0
 
 
-def test_fused_and_fallback_agree_probe_join(spark, monkeypatch):
-    fused = _rows(spark, "sim_ann_lsh_multiprobe2")
-    monkeypatch.setenv("SILVIA_GATHER_MAX_BYTES", "1")
-    fallback = _rows(spark, "sim_ann_lsh_multiprobe2")
-    assert fused == fallback and len(fused) > 0
+@pytest.mark.parametrize("bound", [None, "1"], ids=["gather", "join"])
+@pytest.mark.parametrize("name", ANN_CONSUMERS)
+def test_one_sizing_decision_per_build(spark, monkeypatch, name, bound):
+    """ann_join decides gather vs join once: building any consumer's
+    plan runs exactly one gather-sizing job on either side of the
+    bound (the join fallback used to size the gather a second time)."""
+    from silvia_spark import registry
+    from silvia_spark.functions import llm_ops
+
+    monkeypatch.delenv("SILVIA_ANN_INDEX_ROOT", raising=False)
+    if bound is not None:
+        monkeypatch.setenv("SILVIA_GATHER_MAX_BYTES", bound)
+    registry.load_all_modules()
+    clear_caches()
+    calls = []
+    real = llm_ops._gather_feasible
+
+    def counted(e):
+        calls.append(e)
+        return real(e)
+
+    monkeypatch.setattr(llm_ops, "_gather_feasible", counted)
+    registry.QUERIES[name](spark, SF)
+    assert len(calls) == 1, (name, bound, len(calls))
+    clear_caches()
 
 
 def test_gather_and_fallback_agree_all_pairs(spark, monkeypatch):
@@ -46,13 +76,6 @@ def test_gather_and_fallback_agree_all_pairs(spark, monkeypatch):
     monkeypatch.setenv("SILVIA_GATHER_MAX_BYTES", "1")
     fallback = _rows(spark, "sim_join_threshold")
     assert gathered == fallback and len(gathered) > 0
-
-
-def test_fused_and_fallback_agree_dedup_accounting(spark, monkeypatch):
-    fused = _rows(spark, "dedup_docs_embedding")
-    monkeypatch.setenv("SILVIA_GATHER_MAX_BYTES", "1")
-    fallback = _rows(spark, "dedup_docs_embedding")
-    assert fused == fallback and len(fused) > 0
 
 
 def test_guard_actually_switches_shapes(spark, monkeypatch):
@@ -78,8 +101,6 @@ def test_guard_actually_switches_shapes(spark, monkeypatch):
 def test_gather_kernel_rejects_foreign_candidate_ids(spark):
     """The gather kernel must fail LOUDLY (not score a wrong row) when
     a candidate id is absent from the collected corpus."""
-    import pytest
-
     from silvia_spark.functions.llm_ops import _gather_score_hits
 
     e = load_table(spark, SF, "embeddings")

@@ -100,12 +100,14 @@ def predicted_recall(cosines, tables: int, probes: int) -> float:
 def measure(spark, mat, truth, configs=CONFIGS):
     """Recall per config. A truth pair is recalled iff it COLLIDES in
     some table (same bucket, or one side's probe key equals the other's
-    base key) — by construction of ``probed_candidates`` that is exactly
-    membership in the candidate set, so joining the 10⁴ truth pairs
-    against the bucket table (O(truth·T) rows) measures the same recall
-    as materializing the full quadratic candidate set, at ~1/1000 the
-    cost. (The full generator is exercised separately by
-    tests/test_ann_recall.py's consistency case.)"""
+    base key) — by construction of ``llm_extras.ann_join`` (probe keys
+    on one join side against base keys) that is exactly membership in
+    its candidate set, so joining the 10⁴ truth pairs against the
+    bucket table (O(truth·T) rows) measures the same recall as running
+    the planner over the full quadratic candidate set, at ~1/1000 the
+    cost. (tests/test_ann_recall.py's consistency case checks the two
+    agree: truth pairs semi-joined against ``ann_join`` at a tau just
+    below the planted band.)"""
     from pyspark.sql import functions as F
 
     from silvia_spark.functions.llm_extras import bucket_keys_probed

@@ -230,13 +230,14 @@ AUDITED = [
     ("sim_ann_lsh_multiprobe", ["MapInPandas _fused_gemm_gen",
                                 "MapInPandas _gather_cos_gen",
                                 "HashAggregate"],
-     "multiprobe LSH: sign bits + weak-bit margins from the map-only "
-     "numpy GEMM kernel (r14). r15: the probe ⋈ base candidate join, "
-     "its exchange and the packed distinct are FUSED into the "
-     "per-bucket P×B dgemm kernel (probe/base member lists grouped per "
-     "bucket); survivors exact-rescored by the id-gather kernel — "
-     "never an all-pairs product, nothing heavier than bucket rows "
-     "shuffles."),
+     "multiprobe LSH via llm_extras.ann_join (24 tables, 1 probe): "
+     "sign bits + weak-bit margins from the map-only numpy GEMM kernel; "
+     "explode(probe_keys) fans each vector to its weakest-bit flip on "
+     "the probe side only. The probe ⋈ base candidates + threshold run "
+     "in the per-bucket P×B dgemm kernel (probe/base member lists "
+     "grouped per bucket); survivors exact-rescored by the id-gather "
+     "kernel — never an all-pairs product, nothing heavier than bucket "
+     "rows shuffles."),
     ("scalar_variant", ["Project"],
      "VARIANT access is a pure codegen projection: one parse_json per "
      "row, typed variant_get path reads, zero shuffle."),
@@ -255,11 +256,11 @@ AUDITED = [
     ("sim_ann_lsh_multiprobe2", ["MapInPandas _fused_gemm_gen",
                                  "MapInPandas _gather_cos_gen",
                                  "HashAggregate"],
-     "16-table index via the shared map-only numpy GEMM kernel (r14); "
-     "stack() fans each vector to its 3 flip probes on the probe side "
-     "only; capped buckets. r15: candidates + threshold fused into the "
-     "per-bucket P×B dgemm kernel, survivors exact-rescored by the "
-     "id-gather kernel (see sim_ann_lsh)."),
+     "llm_extras.ann_join at 16 tables, 3 probes: the shared map-only "
+     "numpy GEMM kernel; explode(probe_keys) fans each vector to its 3 "
+     "flip probes on the probe side only; capped buckets. Candidates + "
+     "threshold in the per-bucket P×B dgemm kernel, survivors "
+     "exact-rescored by the id-gather kernel (see sim_ann_lsh)."),
     ("join_asof_nearest", ["Window", "HashJoin"],
      "nearest-direction as-of: bucket equi-join with the tolerance "
      "predicate bounding kept pairs, then the per-event arg-min window "
