@@ -192,8 +192,7 @@ def _round_half_up_1e9(X):
 
 
 def _bucket_keys_np(spark: SparkSession, e: DataFrame, seed: int,
-                    nproj: int, bits: int = _ANN_BITS,
-                    sample_proj: int | None = None) -> DataFrame:
+                    nproj: int, bits: int = _ANN_BITS) -> DataFrame:
     """vec_id → (table_id, bucket_key, w0, w1): the whole hyperplane
     index stage as ONE map-only Arrow/numpy pass (guide §4.2: hand whole
     batches to vectorized native code; §2.4: the explode ⋈ sign-table →
@@ -217,26 +216,14 @@ def _bucket_keys_np(spark: SparkSession, e: DataFrame, seed: int,
     Measured (sf1, 20 k × 64-dim, 64 tables): 18.8 s JVM chain → 0.9 s
     (see OPTIMIZATION_r14.md §10). w0/w1 are the two weakest bit
     positions; base callers drop them, probe callers fold them into
-    probe keys with the same JVM xor expressions as before.
-    ``sample_proj`` computes only the FIRST ``sample_proj`` projections
-    of the family — a slice of the same hyperplanes, bit-identical to
-    the full family's first tables, not a smaller family."""
+    probe keys with the same JVM xor expressions as before."""
     # r15 ADVICE hardening: bits < 2 would silently emit w1 == w0 where
     # the JVM reference's weak2[1] is NULL (a self-probe instead of a
     # null-propagating key); no caller uses bits < 2 — refuse loudly.
     if bits < 2:
         raise ValueError("_bucket_keys_np requires bits >= 2 (w1 is "
                          "the rank-2 weak bit; see ADVICE r14)")
-    S_full = _sign_matrix(spark, seed, nproj)
-    # `is not None`, not truthiness: sample_proj=0 must not silently
-    # select the full family (r15 ADVICE).
-    if sample_proj is not None:
-        if sample_proj <= 0 or sample_proj % bits:
-            raise ValueError("sample_proj must be a positive multiple "
-                             f"of bits={bits}, got {sample_proj}")
-        S = S_full[:, :sample_proj]
-    else:
-        S = S_full
+    S = _sign_matrix(spark, seed, nproj)
     tables = S.shape[1] // bits
     dim = S.shape[0]
 

@@ -32,17 +32,20 @@ contribute their existing entries to the new manifest by reference, and
 the pruned scan opens only touched partitions' files. Concurrency:
 APPENDS are multi-writer safe via optimistic version claims (append
 entries commute; the manifest's create-exclusive write is the CAS, lost
-claims rebase and retry — see commit_append); MERGES rebase on a lost
-race when FILE-LEVEL conflict detection proves the interposed commits
-touched none of the merge's rewrite set (r12 — Delta's read-set/
-write-set disjointness on the pruned file lists; overlapping merges
-and mid-merge schema/spec changes still raise); compaction commits
-stay single-writer because their keep-lists span the whole snapshot.
-Every committer verifies AFTER the pointer flip that the manifest
-committed under its claimed version is its own (``_claim_survived``):
-a claim usurped by a crash-recovery replace is therefore a
-rebase-and-retry for appenders and disjoint merges and an explicit
-error otherwise — never silent loss.
+claims rebase and retry — see commit_append). The row-level writers —
+merge, update and delete — share one commit tail (``_commit_rewrite``)
+and REBASE on a lost race when their read sets are disjoint:
+FILE-LEVEL conflict detection proves the interposed commits touched
+none of the rewrite set's (path, delete vector) pairs and changed
+nothing in the table signature (r12 — Delta's read-set/write-set
+disjointness on the pruned file lists; overlaps and mid-commit
+schema/spec changes raise ``"<op> conflict"``). Compaction, restore
+and metadata commits are single-writer: their segment lists bind to
+one parent, so a lost race raises. Every committer verifies AFTER the
+pointer flip that the manifest committed under its claimed version is
+its own (``_claim_survived``): a claim usurped by a crash-recovery
+replace is therefore a rebase for appenders and disjoint row-level
+writers and an explicit error otherwise — never silent loss.
 
 Filesystem portability: every protocol-relevant filesystem touch goes
 through the ``FS`` adapter (manifest_fs.py). POSIX gets O_EXCL claims,
@@ -62,6 +65,7 @@ import os
 import re
 import time
 import uuid
+from collections.abc import Sequence
 from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
@@ -453,19 +457,19 @@ def _claim_survived(root: str, version: int,
                     commit_id: str | None = None) -> bool:
     """Post-flip check that the manifest actually committed as
     ``version`` is OURS. The create-exclusive claim can be usurped
-    in one window: a single-writer commit (merge/compaction/re-applied
-    crash recovery) may replace an AHEAD-of-pointer manifest it presumes
-    crashed, between our claim and our flip. The usurper's snapshot is
-    complete and consistent — but it does not contain this commit's
-    batch, so reporting success would silently lose it. Every committer
-    therefore verifies after the flip: appenders rebase and retry on
-    False, merge/compaction raise. Identity is the doc's ``commit_id``
-    (uuid per commit attempt — O(1), no entry resolution) on the v2
-    path, or exact data-file path-set equality for v1 callers
-    (commit-unique file names make that precise too). Missing manifest
-    (committed then vacuumed inside the window) counts as not-survived —
-    for appenders the txn record makes the ensuing re-commit
-    idempotent."""
+    in one window: a non-append commit (row-level writer, compaction,
+    re-applied crash recovery) may replace an AHEAD-of-pointer manifest
+    it presumes crashed, between our claim and our flip. The usurper's
+    snapshot is complete and consistent — but it does not contain this
+    commit's batch, so reporting success would silently lose it. Every
+    committer therefore verifies after the flip: appenders and
+    row-level writers rebase on False, single-writer commits raise.
+    Identity is the doc's ``commit_id`` (uuid per commit attempt —
+    O(1), no entry resolution) on the v2 path, or exact data-file
+    path-set equality for v1 callers (commit-unique file names make
+    that precise too). Missing manifest (committed then vacuumed inside
+    the window) counts as not-survived — for appenders the txn record
+    makes the ensuing re-commit idempotent."""
     try:
         doc = _load_doc(root, version)
     except FileNotFoundError:
@@ -1141,12 +1145,13 @@ def _split_segments(root: str, doc: dict, touched: set[str],
     """(carried segment descriptors, resolved entries of the rest).
     A segment is carried by reference iff its partition set is disjoint
     from ``touched`` — the rewrite-only-what-changed primitive shared by
-    merge and compaction. v1 docs (inline ``files``) have nothing to
-    carry: everything resolves, and the commit's rewrite migrates the
-    table to the segmented format. With ``cur_pcol`` set (compaction),
-    segments stamped with an OLDER partition spec always resolve —
-    their partition values live in a different domain than ``touched``,
-    and compaction is the op that migrates them."""
+    the row-level writers (``_rewrite_sets``) and compaction. v1 docs
+    (inline ``files``) have nothing to carry: everything resolves, and
+    the commit's rewrite migrates the table to the segmented format.
+    With ``cur_pcol`` set (compaction), segments stamped with an OLDER
+    partition spec always resolve — their partition values live in a
+    different domain than ``touched``, and compaction is the op that
+    migrates them."""
     if "files" in doc:
         return [], doc["files"]
     carried: list[dict] = []
@@ -1360,7 +1365,9 @@ def restore_table(spark: SparkSession, path: str, version: int) -> int:
     restore. On a CDF-enabled table the restore records its row-level
     diff (current → target, O(changed files)) so the change feed and
     CDC streams see the restore as the delete+insert set it is.
-    Single-writer semantics like merge: a lost race raises."""
+    Single-writer, like compaction and metadata commits: its segment
+    list binds to one parent, so a lost race raises (only the
+    row-level writers rebase)."""
     root = _norm(path)
     doc = _load_doc(root)
     tgt = _load_doc(root, version)
@@ -1399,17 +1406,10 @@ def restore_table(spark: SparkSession, path: str, version: int) -> int:
             new_rows = (_read_entries(spark, root, tgt, new_side)
                         .select(*cols) if new_side
                         else _empty_like(spark, root, tgt).select(*cols))
-            cdf_df = (new_rows.exceptAll(old_rows)
-                      .withColumn("_change_type", F.lit("insert"))
-                      .unionByName(
-                          old_rows.exceptAll(new_rows)
-                          .withColumn("_change_type", F.lit("delete"))))
-            cdf_files = _write_change_files(
-                spark, root, _to_physical(cdf_df, tgt))
+            cdf_files = _write_change_files(spark, root, _to_physical(
+                _cdf_diff(old_rows, new_rows), tgt))
         nd["cdf"] = {"mode": "files", "files": cdf_files}
-    _write_doc(root, newv, nd)
-    if not (_flip_current(root, newv, commit_id=commit_id)
-            or _claim_survived(root, newv, commit_id=commit_id)):
+    if not _publish(root, newv, nd, commit_id):
         raise RuntimeError(
             f"restore lost v{newv} to a concurrent commit after its "
             "claim — the table advanced without it; re-run")
@@ -1568,27 +1568,216 @@ def read_snapshot(spark: SparkSession, path: str,
     return _read_entries(spark, root, m, entries)
 
 
+def _touched_ranges(src: DataFrame, doc: dict, part_col: str,
+                    key_cols: list[str]) -> tuple[set[str], dict]:
+    """The ONE driver pre-scan job of a row-level commit: the partitions
+    ``src`` (a change batch, delete keys, or the predicate's matching
+    rows) touches, plus per partition the [min, max] of every
+    ``key_cols`` column over its rows — O(touched partitions) rows.
+    Manifest entries store partition values as the (unescaped) Hive
+    dir-name STRING; a typed column (int/date day=1) would never match
+    it, so the touched set is canonicalized through Spark's own
+    cast-to-string — the rendering the writer uses for dir names — with
+    NULL mapped to Hive's default-partition marker."""
+    pt = doc.get("part_transform")
+    aggs = [a for k in key_cols
+            for a in (F.min(k).alias(f"__lo_{k}"),
+                      F.max(k).alias(f"__hi_{k}"))]
+    pexpr = (_transform_expr(pt) if pt
+             else F.col(part_col)).cast("string")
+    rows = (src.groupBy(pexpr.alias("__p")).agg(*aggs) if aggs else
+            src.select(pexpr.alias("__p")).distinct()).collect()
+    rng = {("__HIVE_DEFAULT_PARTITION__" if r["__p"] is None
+            else r["__p"]):
+           {k: (r[f"__lo_{k}"], r[f"__hi_{k}"]) for k in key_cols}
+           for r in rows}
+    return set(rng), rng
+
+
+def _rewrite_sets(root: str, doc: dict, touched: set[str], rng: dict
+                  ) -> tuple[list[dict], list[dict], list[dict]]:
+    """(carried segments, rewrite set, rehome set) of a row-level
+    commit against snapshot ``doc`` — a pure function of the manifest
+    and ``_touched_ranges``' output, so a commit that loses the version
+    race re-plans against the new head without rescanning anything.
+
+    Untouched SEGMENTS carry by reference — never read, never
+    rewritten: metadata cost is O(touched), the manifest-list shape
+    that keeps a 1-partition merge on a 10⁶-file table from rewriting
+    10⁶ entries. Resolved entries outside ``touched`` re-home into a
+    fresh segment (same data files). Inside a touched partition, a
+    file whose recorded [min, max] on an indexed key column is
+    disjoint from that partition's range cannot hold a row the commit
+    changes — it re-homes too (byte-identical path in the new
+    manifest) instead of entering the rewrite set: a 1-row update to a
+    hot 1 TB partition rewrites only the files that can contain its
+    key (r09 verdict item 2, Delta's stats-pruned copy-on-write).
+    Conservative exactly like prune_entries, which judges each entry
+    on its own: statless files and overlapping ranges stay in the
+    rewrite set; all-NULL keys prune nothing (their bound is None).
+    Equality semantics make disjoint-on-ANY-key sufficient: a row must
+    match EVERY key to be changed."""
+    carried, resolved = _split_segments(root, doc, touched)
+    cm = doc.get("col_map")
+    rewrite: list[dict] = []
+    rehome: list[dict] = []
+    for e in resolved:
+        if e["partition"] in touched:
+            pr = {_phys_name(cm, k): v
+                  for k, v in rng[e["partition"]].items()
+                  if v[0] is not None}  # stats key on physical names
+            if not pr or prune_entries([e], pr):
+                rewrite.append(e)
+                continue
+        rehome.append(e)
+    return carried, rewrite, rehome
+
+
+def _table_sig(doc: dict) -> str:
+    """Everything a row-level commit's staged output depends on besides
+    its rewrite set: schema/names, spec, constraints, CDF enablement,
+    stats config. An interposed commit changing ANY of these
+    invalidates the staged files — no rebase."""
+    return json.dumps(
+        {k: doc.get(k) for k in
+         ("schema", "col_map", "part_col", "part_transform",
+          "constraints", "cdf_enabled", "stats_cols")},
+        sort_keys=True)
+
+
+def _cdf_diff(old_rows: DataFrame, new_rows: DataFrame) -> DataFrame:
+    """Row-level change records between two row sets (Delta's
+    _change_data discipline): ``exceptAll`` both ways, so unchanged rows
+    cancel and an in-place change surfaces as its delete+insert pair.
+    Cost is one shuffle over the CHANGED files' rows, never the table."""
+    return (new_rows.exceptAll(old_rows)
+            .withColumn("_change_type", F.lit("insert"))
+            .unionByName(old_rows.exceptAll(new_rows)
+                         .withColumn("_change_type", F.lit("delete"))))
+
+
+def _publish(root: str, version: int, newdoc: dict, commit_id: str,
+             verify_paths: list[str] | None = None,
+             staged_epoch: int | None = None) -> bool:
+    """Claim ``version`` with ``newdoc``, flip the pointer, and report
+    whether the committed manifest is ours (flip proved it, or the
+    post-flip ``_claim_survived`` check found our commit_id). Raises
+    FileExistsError when the version is already taken. Single-writer
+    callers raise on False; ``_commit_rewrite`` rebases."""
+    _write_doc(root, version, newdoc, verify_paths=verify_paths,
+               staged_epoch=staged_epoch)
+    return (_flip_current(root, version, commit_id=commit_id)
+            or _claim_survived(root, version, commit_id=commit_id))
+
+
+def _commit_rewrite(root: str, doc: dict, op: str,
+                    plan: tuple[set[str], dict],
+                    sets: tuple[list[dict], list[dict], list[dict]],
+                    new_entries: list[dict], *, part_used: str,
+                    stats_cols: list[str], cdf_files: list[str],
+                    staged_epoch: int,
+                    repointed: Sequence[dict] = (),
+                    staged: Sequence[str] = ()) -> int:
+    """The commit tail shared by merge, update and delete. The new
+    manifest holds the carried segments by reference, ONE reused
+    segment (the rehome set plus ``repointed`` — existing files the
+    writer kept, e.g. delete's DV-updated and no-match files) and ONE
+    segment of ``new_entries``; ``staged`` names further staged files
+    (a DV sidecar) the claim must verify.
+
+    FILE-LEVEL conflict detection (r12, verdict item 6): a commit that
+    loses the version race reloads the head, re-plans its rewrite set
+    from the manifest (``_rewrite_sets`` over ``plan`` — no rescan),
+    and REBASES when (a) the rewrite set's (path, delete vector) pairs
+    are unchanged — the interposed commits touched disjoint files, so
+    the staged output and CDF records are still exact — and (b)
+    nothing in ``_table_sig`` changed and the table holds one partition
+    spec. Delta's read-set/write-set disjointness check, done on the
+    pruned file lists the manifest already carries. Anything else
+    raises ``"<op> conflict: …"``; the staged files stay adopted across
+    attempts (only the manifest reference is rebuilt, like
+    commit_append's optimistic retry)."""
+    carried, rewrite, rehome = sets
+    read_set = {(e["path"], e.get("dv")) for e in rewrite}
+    sig0 = _table_sig(doc)
+    commit_id = uuid.uuid4().hex
+    verify = sorted({e["path"] for e in new_entries}
+                    | set(cdf_files) | set(staged))
+    deadline = time.monotonic() + 30.0
+    while True:
+        segs = list(carried)
+        reused = rehome + list(repointed)
+        if reused:
+            segs.append(_write_segment(root, reused, reused=True))
+        if new_entries:
+            segs.append(_write_segment(root, new_entries))
+        segs = _coalesce_segments(root, segs)  # row-level-only workloads
+        #                  must respect the manifest-size bound too
+        version = doc["version"] + 1
+        newdoc = _make_doc(version, doc["version"], segs,
+                           txns=doc.get("txn"), commit_id=commit_id,
+                           schema=doc.get("schema"),
+                           stats_cols=stats_cols, op=op)
+        _carry_table_meta(newdoc, doc)
+        newdoc.setdefault("part_col", part_used)
+        if doc.get("cdf_enabled"):
+            newdoc["cdf"] = {"mode": "files", "files": cdf_files}
+        try:
+            if _publish(root, version, newdoc, commit_id,
+                        verify_paths=verify, staged_epoch=staged_epoch):
+                return version
+        except FileExistsError:
+            pass  # version claimed by a concurrent commit: rebase
+        if time.monotonic() >= deadline:
+            raise RuntimeError(
+                f"{op} lost v{version} to concurrent commits "
+                "repeatedly (30s) — quiesce writers or re-run")
+        newhead = _load_doc(root)
+        if newhead["version"] == doc["version"]:
+            # claimer still in flight (claimed-not-flipped): wait for
+            # its flip or its crash-reclaim instead of spinning
+            time.sleep(0.25)
+            continue
+        doc = newhead
+        if _mixed_specs(doc):
+            raise RuntimeError(
+                f"{op} conflict: a concurrent partition-spec change "
+                f"landed mid-{op} — compact, then re-run")
+        if _table_sig(doc) != sig0:
+            raise RuntimeError(
+                f"{op} conflict: a concurrent commit changed the "
+                f"table's schema/spec/constraints mid-{op} — re-run "
+                "against the new snapshot")
+        carried, rewrite, rehome = _rewrite_sets(root, doc, *plan)
+        if {(e["path"], e.get("dv")) for e in rewrite} != read_set:
+            raise RuntimeError(
+                f"{op} conflict: a concurrent commit touched files in "
+                f"this {op}'s rewrite set (overlapping key bands) — "
+                "re-run against the new snapshot")
+        # disjoint: rebase onto the new head with the SAME staged
+        # output; loop re-claims version+1
+
+
 def commit_merge(spark: SparkSession, path: str, changes: DataFrame,
                  keys: list[str], part_col: str) -> int:
     """merge_keyed's MERGE plan, committed atomically across ALL touched
     partitions via one manifest flip:
 
     (1) touched-partition list + per-partition key min/max from the
-        change batch (ONE tiny driver action);
+        change batch (ONE tiny driver action, ``_touched_ranges``);
     (2) current snapshot scanned PRUNED twice — to touched partitions
         (the manifest is the pruning index, untouched files are never
         opened), then FILE-granular inside them: when the table's
         per-file stats index covers a key column, files whose recorded
         [min, max] is disjoint from the partition's change-key range
-        are carried by reference (byte-identical paths in the new
-        manifest) instead of rewritten — a 1-row update to a hot
-        partition rewrites only the files that can contain its key,
-        Delta's stats-pruned copy-on-write;
+        are carried by reference instead of rewritten
+        (``_rewrite_sets``);
     (3) anti-join on change keys + union of the U/I payload;
     (4) staged write, files adopted under commit-unique names — all
         invisible until
     (5) the new manifest (untouched entries by reference + replacement
-        entries) is written and ``_current`` flips.
+        entries) is written and ``_current`` flips (``_commit_rewrite``:
+        a lost race rebases when the rewrite sets are disjoint).
 
     A reader can never observe a half-merged table: it resolves either
     the old manifest (every partition pre-merge) or the new one (every
@@ -1613,93 +1802,13 @@ def commit_merge(spark: SparkSession, path: str, changes: DataFrame,
             "pruning would compare values from two domains — run "
             "commit_compaction to migrate, then merge")
     part_used = _part_arg(doc, part_col, "merge")
-    pt = doc.get("part_transform")
-    commit_id = uuid.uuid4().hex
     stats_cols = _doc_stats_cols(root, doc)
-    # Key columns the per-file min/max index covers: used below to
-    # shrink the rewrite set INSIDE touched partitions (r09 verdict
-    # item 2 — without this a 1-row update to a hot 1 TB partition
-    # rewrites 1 TB; with it, only the files whose recorded key range
-    # can contain a change key rewrite).
+    # the key columns the per-file min/max index covers shrink the
+    # rewrite set INSIDE touched partitions
     key_cols = [k for k in keys if k != part_col and k in stats_cols]
-    # Manifest entries store partition values as the (unescaped) Hive
-    # dir-name STRING; a typed change column (int/date day=1) would never
-    # match it. Canonicalize the touched set through Spark's own
-    # cast-to-string — the same rendering the writer uses for dir names —
-    # with NULL mapped to Hive's default-partition marker. The SAME tiny
-    # driver agg also collects per-partition min/max of every indexed
-    # key column (one job, O(touched partitions) rows).
-    aggs = [a for k in key_cols
-            for a in (F.min(k).alias(f"__lo_{k}"),
-                      F.max(k).alias(f"__hi_{k}"))]
-    pexpr = (_transform_expr(pt) if pt
-             else F.col(part_col)).cast("string")
-    rng_rows = (changes.groupBy(pexpr.alias("__p"))
-                .agg(*aggs) if aggs else
-                changes.select(pexpr.alias("__p"))
-                .distinct()).collect()
-    touched = {"__HIVE_DEFAULT_PARTITION__" if r["__p"] is None
-               else r["__p"] for r in rng_rows}
-    rng = {("__HIVE_DEFAULT_PARTITION__" if r["__p"] is None
-            else r["__p"]):
-           {k: (r[f"__lo_{k}"], r[f"__hi_{k}"]) for k in key_cols}
-           for r in rng_rows}
-    # Untouched SEGMENTS carry into the new manifest by reference —
-    # never read, never rewritten: metadata cost is O(touched), the
-    # manifest-list shape that keeps a 1-partition merge on a 10⁶-file
-    # table from rewriting 10⁶ entries. Only segments whose partition
-    # set intersects the change batch are resolved; their untouched
-    # entries are re-homed into a fresh segment (same data files).
-    def _plan_sets(d: dict):
-        """(carried segments, rewrite set, rehome set) for this merge
-        against snapshot ``d`` — recomputable, so a merge that loses
-        the version race can REBASE onto the new head when its rewrite
-        set is untouched (file-level conflict detection below).
-
-        File-granular rewrite pruning: within a touched partition, a
-        file whose recorded [min, max] on an indexed KEY column is
-        disjoint from the change batch's key range IN THAT PARTITION
-        cannot contain any row the anti-join would remove — it is
-        carried by reference (byte-identical path in the new manifest)
-        instead of rewritten. Conservative exactly like prune_entries:
-        statless files and overlapping ranges rewrite; all-NULL change
-        keys prune nothing (their bound is None). Equality semantics
-        make disjoint-on-ANY-key sufficient: a row must match EVERY
-        key to be replaced."""
-        carried_, resolved = _split_segments(root, d, touched)
-        cur_ = [e for e in resolved if e["partition"] in touched]
-        reh_ = [e for e in resolved if e["partition"] not in touched]
-        if key_cols and cur_:
-            by_part: dict[str, list[dict]] = {}
-            for e in cur_:
-                by_part.setdefault(e["partition"], []).append(e)
-            cur_ = []
-            cm = d.get("col_map")
-            for p, es in by_part.items():
-                pr = {_phys_name(cm, k): v
-                      for k, v in rng.get(p, {}).items()
-                      if v[0] is not None}  # stats key on phys names
-                need = prune_entries(es, pr) if pr else es
-                need_paths = {e["path"] for e in need}
-                cur_.extend(need)
-                reh_.extend(e for e in es
-                            if e["path"] not in need_paths)
-        return carried_, cur_, reh_
-
-    def _merge_sig(d: dict) -> str:
-        """Everything the staged merge output's validity depends on
-        besides the rewrite set: schema/names, spec, constraints, CDF
-        enablement, stats config. An interposed commit changing ANY of
-        these invalidates the staged frames — no rebase."""
-        return json.dumps(
-            {k: d.get(k) for k in
-             ("schema", "col_map", "part_col", "part_transform",
-              "constraints", "cdf_enabled", "stats_cols")},
-            sort_keys=True)
-
-    carried, cur_entries, rehome = _plan_sets(doc)
-    read_set = {(e["path"], e.get("dv")) for e in cur_entries}
-    sig0 = _merge_sig(doc)
+    plan = _touched_ranges(changes, doc, part_col, key_cols)
+    sets = _rewrite_sets(root, doc, *plan)
+    rewrite = sets[1]
 
     merged = changes.where(F.col("op") != "D").drop("op")
     # CHECK constraints: only the change payload needs validation (the
@@ -1707,108 +1816,33 @@ def commit_merge(spark: SparkSession, path: str, changes: DataFrame,
     # violation leaves nothing on disk
     _enforce_constraints(merged, doc, "merge change batch")
     cur = None
-    if cur_entries:
+    if rewrite:
         # DV-applied rewrite scan: a raw read of a file carrying a
         # delete vector would resurrect its tombstoned rows into the
         # rewritten files
-        cur = _read_entries(spark, root, doc, cur_entries)
+        cur = _read_entries(spark, root, doc, rewrite)
         kept = cur.join(changes.select(*keys), keys, "left_anti")
         merged = kept.unionByName(merged)
     epoch0 = _vacuum_epoch(root)  # BEFORE staging: _write_doc skips
     #                               the per-file verify when unchanged
     cdf_files: list[str] = []
     if doc.get("cdf_enabled"):
-        # Row-level change records, written AT COMMIT TIME (Delta's
-        # _change_data discipline): old = the rewritten files' live
-        # rows, new = the merge output — exceptAll both ways, so
-        # re-homed unchanged rows cancel and an upsert surfaces as its
-        # delete+insert pair. Cost is one extra shuffle over the
-        # CHANGED files' rows (the same data the merge itself stages),
-        # never the table — this is what makes the downstream feed
-        # O(changed rows) to read instead of a per-consumer table diff.
+        # written AT COMMIT TIME: old = the rewritten files' live rows,
+        # new = the merge output — re-homed unchanged rows cancel and
+        # an upsert surfaces as its delete+insert pair, so the
+        # downstream feed is O(changed rows) to read instead of a
+        # per-consumer table diff
         cols = merged.columns
         old_rows = (cur.select(*cols) if cur is not None
                     else _empty_like(spark, root, doc).select(*cols))
-        new_rows = merged.select(*cols)
-        cdf_df = (new_rows.exceptAll(old_rows)
-                  .withColumn("_change_type", F.lit("insert"))
-                  .unionByName(
-                      old_rows.exceptAll(new_rows)
-                      .withColumn("_change_type", F.lit("delete"))))
-        cdf_files = _write_change_files(
-            spark, root, _to_physical(cdf_df, doc))
+        cdf_files = _write_change_files(spark, root, _to_physical(
+            _cdf_diff(old_rows, merged.select(*cols)), doc))
     new_entries = _stage_write(
         _derive_for_stage(_to_physical(merged, doc), doc), root,
         part_used, stats_cols=stats_cols)
-    # Commit with FILE-LEVEL conflict detection (r12, verdict item 6):
-    # a merge that loses the version race no longer raises
-    # unconditionally — it reloads the new head, re-plans its rewrite
-    # set against it, and REBASES automatically when (a) the rewrite
-    # set (paths + delete vectors) is byte-identical — the interposed
-    # commits touched disjoint files, so the staged anti-join output
-    # and CDF records are still exact — and (b) nothing in _merge_sig
-    # changed. Delta's read-set/write-set disjointness check, done on
-    # the pruned file lists the manifest already carries. Overlapping
-    # merges still raise; the staged files stay adopted across
-    # attempts (only the manifest reference is rebuilt, like
-    # commit_append's optimistic retry).
-    deadline = time.monotonic() + 30.0
-    while True:
-        segs = list(carried)
-        if rehome:
-            segs.append(_write_segment(root, rehome, reused=True))
-        if new_entries:
-            segs.append(_write_segment(root, new_entries))
-        segs = _coalesce_segments(root, segs)  # merge-only workloads
-        #                  must respect the manifest-size bound too
-        version = doc["version"] + 1
-        newdoc = _make_doc(version, doc["version"], segs,
-                           txns=doc.get("txn"), commit_id=commit_id,
-                           schema=doc.get("schema"),
-                           stats_cols=stats_cols, op="merge")
-        _carry_table_meta(newdoc, doc)
-        newdoc.setdefault("part_col", part_used)
-        if doc.get("cdf_enabled"):
-            newdoc["cdf"] = {"mode": "files", "files": cdf_files}
-        try:
-            _write_doc(root, version, newdoc,
-                       verify_paths=[e["path"] for e in new_entries]
-                       + cdf_files,
-                       staged_epoch=epoch0)
-            if (_flip_current(root, version, commit_id=commit_id)
-                    or _claim_survived(root, version,
-                                       commit_id=commit_id)):
-                return version
-        except FileExistsError:
-            pass  # version claimed by a concurrent commit: rebase
-        if time.monotonic() >= deadline:
-            raise RuntimeError(
-                f"merge lost v{version} to concurrent commits "
-                "repeatedly (30s) — quiesce writers or re-run")
-        newhead = _load_doc(root)
-        if newhead["version"] == doc["version"]:
-            # claimer still in flight (claimed-not-flipped): wait for
-            # its flip or its crash-reclaim instead of spinning
-            time.sleep(0.25)
-            continue
-        doc = newhead
-        if _mixed_specs(doc):
-            raise RuntimeError(
-                "merge conflict: a concurrent partition-spec change "
-                "landed mid-merge — compact, then re-run")
-        if _merge_sig(doc) != sig0:
-            raise RuntimeError(
-                "merge conflict: a concurrent commit changed the "
-                "table's schema/spec/constraints mid-merge — re-run "
-                "against the new snapshot")
-        carried, cur2, rehome = _plan_sets(doc)
-        if {(e["path"], e.get("dv")) for e in cur2} != read_set:
-            raise RuntimeError(
-                "merge conflict: a concurrent commit touched files in "
-                "this merge's rewrite set (overlapping key bands) — "
-                "re-run against the new snapshot")
-        # disjoint: rebase onto the new head with the SAME staged
-        # output; loop re-claims version+1
+    return _commit_rewrite(root, doc, "merge", plan, sets, new_entries,
+                           part_used=part_used, stats_cols=stats_cols,
+                           cdf_files=cdf_files, staged_epoch=epoch0)
 
 
 def commit_update(spark: SparkSession, path: str,
@@ -1829,8 +1863,8 @@ def commit_update(spark: SparkSession, path: str,
     directories. Constraints validate the UPDATED rows only; CDF
     records the delete+insert pair per actually-changed row (a no-op
     assignment cancels in the exceptAll, exactly like merge). The
-    commit tail — claim, flip, file-level conflict rebase — matches
-    commit_merge's."""
+    commit tail is commit_merge's ``_commit_rewrite``: a lost race
+    rebases when the rewrite sets are disjoint and raises otherwise."""
     root = _norm(path)
     doc = _load_doc(root)
     if _mixed_specs(doc):
@@ -1845,8 +1879,8 @@ def commit_update(spark: SparkSession, path: str,
     pt = doc.get("part_transform")
     if not assigns:
         raise ValueError("UPDATE needs at least one assignment")
-    sch = {f.name: f.dataType
-           for f in read_snapshot(spark, root).schema.fields}
+    snap = read_snapshot(spark, root)
+    sch = {f.name: f.dataType for f in snap.schema.fields}
     for c in assigns:
         if c not in sch:
             raise ValueError(f"SET targets unknown column {c!r} "
@@ -1862,66 +1896,20 @@ def commit_update(spark: SparkSession, path: str,
     # _part_arg expects the transform SOURCE for hidden-spec tables
     part_used = _part_arg(doc, pt["source"] if pt else part_col,
                           "update")
-    commit_id = uuid.uuid4().hex
     stats_cols = _doc_stats_cols(root, doc)
     key_cols = list(stats_cols)
     cond = F.expr(where) if where is not None else F.lit(True)
-    snap = read_snapshot(spark, root)
-    aggs = [a for k in key_cols
-            for a in (F.min(k).alias(f"__lo_{k}"),
-                      F.max(k).alias(f"__hi_{k}"))]
-    pexpr = (_transform_expr(pt) if pt
-             else F.col(part_col)).cast("string")
-    hit_src = snap.where(cond)
-    rng_rows = (hit_src.groupBy(pexpr.alias("__p")).agg(*aggs)
-                if aggs else
-                hit_src.select(pexpr.alias("__p")).distinct()).collect()
-    if not rng_rows:
+    touched, rng = _touched_ranges(snap.where(cond), doc, part_col,
+                                   key_cols)
+    if not touched:
         return doc["version"]  # nothing matches: no-op, no commit
-    touched = {"__HIVE_DEFAULT_PARTITION__" if r["__p"] is None
-               else r["__p"] for r in rng_rows}
-    rng = {("__HIVE_DEFAULT_PARTITION__" if r["__p"] is None
-            else r["__p"]):
-           {k: (r[f"__lo_{k}"], r[f"__hi_{k}"]) for k in key_cols}
-           for r in rng_rows}
-
-    def _plan_sets(d: dict):
-        # same shape as commit_merge's: (carried segments, rewrite
-        # set, rehome set), with file-granular hit-range pruning
-        carried_, resolved = _split_segments(root, d, touched)
-        cur_ = [e for e in resolved if e["partition"] in touched]
-        reh_ = [e for e in resolved if e["partition"] not in touched]
-        if key_cols and cur_:
-            by_part: dict[str, list[dict]] = {}
-            for e in cur_:
-                by_part.setdefault(e["partition"], []).append(e)
-            cur_ = []
-            cm = d.get("col_map")
-            for p, es in by_part.items():
-                pr = {_phys_name(cm, k): v
-                      for k, v in rng.get(p, {}).items()
-                      if v[0] is not None}
-                need = prune_entries(es, pr) if pr else es
-                need_paths = {e["path"] for e in need}
-                cur_.extend(need)
-                reh_.extend(e for e in es
-                            if e["path"] not in need_paths)
-        return carried_, cur_, reh_
-
-    def _sig(d: dict) -> str:
-        return json.dumps(
-            {k: d.get(k) for k in
-             ("schema", "col_map", "part_col", "part_transform",
-              "constraints", "cdf_enabled", "stats_cols")},
-            sort_keys=True)
-
-    carried, cur_entries, rehome = _plan_sets(doc)
-    read_set = {(e["path"], e.get("dv")) for e in cur_entries}
-    sig0 = _sig(doc)
-    if not cur_entries:
+    plan = (touched, rng)
+    sets = _rewrite_sets(root, doc, *plan)
+    rewrite = sets[1]
+    if not rewrite:
         return doc["version"]  # pruning proved no file can match
 
-    cur = (_read_entries(spark, root, doc, cur_entries)
+    cur = (_read_entries(spark, root, doc, rewrite)
            .withColumn("__hit", cond))
     merged = cur.select(
         *[(F.when(F.col("__hit"),
@@ -1935,71 +1923,16 @@ def commit_update(spark: SparkSession, path: str,
     cdf_files: list[str] = []
     if doc.get("cdf_enabled"):
         cols = snap.columns
-        old_rows = cur.where(F.col("__hit")).select(*cols)
-        new_rows = merged.where(F.col("__hit")).select(*cols)
-        cdf_df = (new_rows.exceptAll(old_rows)
-                  .withColumn("_change_type", F.lit("insert"))
-                  .unionByName(
-                      old_rows.exceptAll(new_rows)
-                      .withColumn("_change_type", F.lit("delete"))))
-        cdf_files = _write_change_files(
-            spark, root, _to_physical(cdf_df, doc))
+        cdf_files = _write_change_files(spark, root, _to_physical(
+            _cdf_diff(cur.where(F.col("__hit")).select(*cols),
+                      merged.where(F.col("__hit")).select(*cols)), doc))
     new_entries = _stage_write(
         _derive_for_stage(_to_physical(merged.drop("__hit"), doc),
                           doc),
         root, part_used, stats_cols=stats_cols)
-    deadline = time.monotonic() + 30.0
-    while True:
-        segs = list(carried)
-        if rehome:
-            segs.append(_write_segment(root, rehome, reused=True))
-        if new_entries:
-            segs.append(_write_segment(root, new_entries))
-        segs = _coalesce_segments(root, segs)
-        version = doc["version"] + 1
-        newdoc = _make_doc(version, doc["version"], segs,
-                           txns=doc.get("txn"), commit_id=commit_id,
-                           schema=doc.get("schema"),
-                           stats_cols=stats_cols, op="update")
-        _carry_table_meta(newdoc, doc)
-        newdoc.setdefault("part_col", part_used)
-        if doc.get("cdf_enabled"):
-            newdoc["cdf"] = {"mode": "files", "files": cdf_files}
-        try:
-            _write_doc(root, version, newdoc,
-                       verify_paths=[e["path"] for e in new_entries]
-                       + cdf_files,
-                       staged_epoch=epoch0)
-            if (_flip_current(root, version, commit_id=commit_id)
-                    or _claim_survived(root, version,
-                                       commit_id=commit_id)):
-                return version
-        except FileExistsError:
-            pass  # version claimed by a concurrent commit: rebase
-        if time.monotonic() >= deadline:
-            raise RuntimeError(
-                f"update lost v{version} to concurrent commits "
-                "repeatedly (30s) — quiesce writers or re-run")
-        newhead = _load_doc(root)
-        if newhead["version"] == doc["version"]:
-            time.sleep(0.25)
-            continue
-        doc = newhead
-        if _mixed_specs(doc):
-            raise RuntimeError(
-                "update conflict: a concurrent partition-spec change "
-                "landed mid-update — compact, then re-run")
-        if _sig(doc) != sig0:
-            raise RuntimeError(
-                "update conflict: a concurrent commit changed the "
-                "table's schema/spec/constraints mid-update — re-run "
-                "against the new snapshot")
-        carried, cur2, rehome = _plan_sets(doc)
-        if {(e["path"], e.get("dv")) for e in cur2} != read_set:
-            raise RuntimeError(
-                "update conflict: a concurrent commit touched files "
-                "in this update's rewrite set — re-run against the "
-                "new snapshot")
+    return _commit_rewrite(root, doc, "update", plan, sets, new_entries,
+                           part_used=part_used, stats_cols=stats_cols,
+                           cdf_files=cdf_files, staged_epoch=epoch0)
 
 
 def _write_dv(spark: SparkSession, root: str, dv_union: DataFrame) -> str:
@@ -2102,8 +2035,12 @@ def commit_delete(spark: SparkSession, path: str,
     ignored); ``key_cols`` must include ``part_col`` — same invariant
     and same semantics as commit_merge's anti-join (NULL keys match
     nothing). Files whose stats index excludes the key range are
-    untouched (L18's pruning applies before any scan). Single-writer
-    like merge/compaction: a lost race raises, never silent.
+    untouched (L18's pruning applies before any scan). The commit tail
+    is commit_merge's ``_commit_rewrite``: a delete's staged output
+    (its DV sidecar and rewritten dense files) depends only on its
+    candidate files' (path, delete vector) pairs and the table
+    signature, so a lost race rebases when a concurrent commit left
+    those untouched and raises ``delete conflict`` otherwise.
 
     PREDICATE mode (r14 — ``DELETE FROM ... WHERE`` through
     sources/sql_dml.py): pass ``where`` (a SQL boolean expression over
@@ -2147,46 +2084,18 @@ def commit_delete(spark: SparkSession, path: str,
             part_col = pt["source"]  # _part_arg names the SOURCE
         key_cols = []
     part_used = _part_arg(doc, part_col, "delete")
-    commit_id = uuid.uuid4().hex
     stats_cols = _doc_stats_cols(root, doc)
     if where is not None:
         # Predicate mode: range columns are the WHOLE stats index —
         # min/max over the matching rows per partition, from one
         # DV-applied snapshot pre-scan (parquet pushdown applies).
-        key_cols = [k for k in stats_cols]
+        key_cols = list(stats_cols)
         rng_src = read_snapshot(spark, root).where(F.expr(where))
     else:
         rng_src = keys
-    aggs = [a for k in key_cols
-            for a in (F.min(k).alias(f"__lo_{k}"),
-                      F.max(k).alias(f"__hi_{k}"))]
-    pexpr = (_transform_expr(pt) if pt
-             else F.col(part_col)).cast("string")
-    rng_rows = (rng_src.groupBy(pexpr.alias("__p"))
-                .agg(*aggs) if aggs else
-                rng_src.select(pexpr.alias("__p"))
-                .distinct()).collect()
-    touched = {"__HIVE_DEFAULT_PARTITION__" if r["__p"] is None
-               else r["__p"] for r in rng_rows}
-    rng = {("__HIVE_DEFAULT_PARTITION__" if r["__p"] is None
-            else r["__p"]):
-           {k: (r[f"__lo_{k}"], r[f"__hi_{k}"]) for k in key_cols}
-           for r in rng_rows}
-    carried, resolved = _split_segments(root, doc, touched)
-    rehome = [e for e in resolved if e["partition"] not in touched]
-    cands: list[dict] = []
-    cm = doc.get("col_map")
-    for e in resolved:
-        if e["partition"] not in touched:
-            continue
-        pr = {_phys_name(cm, k): v
-              for k, v in rng.get(e["partition"], {}).items()
-              if v[0] is not None}  # stats key on physical names
-        if pr and not prune_entries([e], pr):
-            rehome.append(e)  # stats prove no key can live here
-        else:
-            cands.append(e)
-    version = doc["version"] + 1
+    plan = _touched_ranges(rng_src, doc, part_col, key_cols)
+    sets = _rewrite_sets(root, doc, *plan)
+    cands = sets[1]
     if not cands:
         return doc["version"]  # nothing can match: no-op, no commit
     epoch0 = _vacuum_epoch(root)
@@ -2220,12 +2129,13 @@ def commit_delete(spark: SparkSession, path: str,
         counts = {r["path"]: r["cnt"] for r in
                   hits.groupBy("path").agg(
                       F.count(F.lit(1)).alias("cnt")).collect()}
+        repointed: list[dict] = []  # kept entries, maybe re-pointed
         sparse: list[dict] = []
         dense: list[dict] = []
         for e in cands:
             n = counts.get(e["path"], 0)
             if n == 0:
-                rehome.append(e)  # scanned, nothing matched: unchanged
+                repointed.append(e)  # scanned, nothing matched: unchanged
             elif (e.get("dv_rows", 0) + n
                   >= dv_max_frac * max(e.get("rows", 0), 1)):
                 dense.append(e)
@@ -2248,7 +2158,7 @@ def commit_delete(spark: SparkSession, path: str,
                 .withColumn("_change_type", F.lit("delete")))
 
         new_entries: list[dict] = []
-        sparse_updated: list[dict] = []
+        staged: list[str] = []
         if sparse:
             spaths = [e["path"] for e in sparse]
             dv_union = hits.where(F.col("path").isin(spaths))
@@ -2259,13 +2169,14 @@ def commit_delete(spark: SparkSession, path: str,
                     .where(F.col("path").isin(
                         [e["path"] for e in carry_dv])))
             dv_name = _write_dv(spark, root, dv_union)
+            staged.append(os.path.join(_DELETES, dv_name))
             for e in sparse:
                 ne = dict(e)
                 ne["dv"] = dv_name
                 ne.pop("dv_base", None)  # the unioned vector is OURS
                 #   now (a cloned entry's source vector was folded in)
                 ne["dv_rows"] = e.get("dv_rows", 0) + counts[e["path"]]
-                sparse_updated.append(ne)
+                repointed.append(ne)
         if dense:
             # crossover: rewrite through the copy-on-write path —
             # the shared DV-applied read minus the delete keys, staged
@@ -2283,33 +2194,10 @@ def commit_delete(spark: SparkSession, path: str,
                 part_used, stats_cols=stats_cols)
     finally:
         matched.unpersist()
-
-    segs = list(carried)
-    reused = rehome + sparse_updated
-    if reused:
-        segs.append(_write_segment(root, reused, reused=True))
-    if new_entries:
-        segs.append(_write_segment(root, new_entries))
-    segs = _coalesce_segments(root, segs)
-    newdoc = _make_doc(version, doc["version"], segs,
-                       txns=doc.get("txn"), commit_id=commit_id,
-                       schema=doc.get("schema"), stats_cols=stats_cols,
-                       op="delete")
-    _carry_table_meta(newdoc, doc)
-    newdoc.setdefault("part_col", part_used)
-    if doc.get("cdf_enabled"):
-        newdoc["cdf"] = {"mode": "files", "files": cdf_files}
-    verify = [e["path"] for e in new_entries] + cdf_files
-    verify += [os.path.join(_DELETES, e["dv"]) for e in sparse_updated]
-    _write_doc(root, version, newdoc, verify_paths=sorted(set(verify)),
-               staged_epoch=epoch0)
-    if not (_flip_current(root, version, commit_id=commit_id)
-            or _claim_survived(root, version, commit_id=commit_id)):
-        raise RuntimeError(
-            f"delete lost v{version} to a concurrent commit after its "
-            f"claim — the table advanced without it; re-run against "
-            f"the new snapshot")
-    return version
+    return _commit_rewrite(root, doc, "delete", plan, sets, new_entries,
+                           part_used=part_used, stats_cols=stats_cols,
+                           cdf_files=cdf_files, staged_epoch=epoch0,
+                           repointed=repointed, staged=staged)
 
 
 def _commit_metadata(root: str, mutate) -> int:
@@ -2318,7 +2206,7 @@ def _commit_metadata(root: str, mutate) -> int:
     O(segment count) metadata — with ``mutate(newdoc)`` applied to the
     schema/col_map fields (it validates against the doc it actually
     commits, so a racing writer cannot stale the check). Single-writer
-    semantics like merge/compaction: a lost race raises."""
+    like compaction and restore: a lost race raises."""
     doc = _load_doc(root)
     commit_id = uuid.uuid4().hex
     if "files" in doc:
@@ -2336,9 +2224,7 @@ def _commit_metadata(root: str, mutate) -> int:
     mutate(newdoc)
     if newdoc.get("cdf_enabled"):
         newdoc["cdf"] = {"mode": "none"}  # metadata: no row changed
-    _write_doc(root, version, newdoc)
-    if not (_flip_current(root, version, commit_id=commit_id)
-            or _claim_survived(root, version, commit_id=commit_id)):
+    if not _publish(root, version, newdoc, commit_id):
         raise MetadataCommitRaced(
             f"metadata commit lost v{version} to a concurrent commit "
             "after its claim — re-apply against the new snapshot")
@@ -2807,9 +2693,10 @@ def commit_append(spark: SparkSession, path: str, batch: DataFrame,
     adopted and stay valid — only the manifest reference is rebuilt).
     Every commit verifies its claim survived the flip
     (``_claim_survived``), so a claim usurped by a crash-recovery
-    replace rebases too. MERGEs rebase a lost race when file-level
-    conflict detection proves disjointness (commit_merge); compaction
-    stays single-writer (its keep-list spans the whole snapshot), so a
+    replace rebases too. The row-level writers (merge, update, delete)
+    rebase a lost race when their read sets are disjoint
+    (``_commit_rewrite``); compaction, restore and metadata commits
+    are single-writer (their segment lists bind to one parent), so a
     lost race there is an explicit error, never silent corruption."""
     root = _norm(path)
     staged = None
@@ -3081,7 +2968,6 @@ def read_changes(spark: SparkSession, path: str, since: int,
     dv_grown = [(by_since[p], e) for p, e in by_to.items()
                 if p in by_since and e.get("dv") != by_since[p].get("dv")
                 and e.get("dv")]
-    ctype = F.lit("insert")
     ins = (_read_entries(spark, root, m_to, added) if added
            else _empty_like(spark, root, m_to))
     # removed files read under TO's schema/mapping but with THEIR OWN
@@ -3090,10 +2976,7 @@ def read_changes(spark: SparkSession, path: str, since: int,
     dele = (_read_entries(spark, root, m_to, removed) if removed
             else _empty_like(spark, root, m_to))
     # re-homed unchanged rows appear on both sides — cancel them
-    inserts = ins.exceptAll(dele).withColumn("_change_type", ctype)
-    deletes = dele.exceptAll(ins).withColumn("_change_type",
-                                             F.lit("delete"))
-    out = inserts.unionByName(deletes)
+    out = _cdf_diff(dele, ins)
     if dv_grown:
         old_dv = _dv_frame(spark, root, [o for o, _ in dv_grown])
         new_dv = _dv_frame(spark, root, [n for _, n in dv_grown])
@@ -3323,11 +3206,9 @@ def commit_compaction(spark: SparkSession, path: str, part_col: str,
     if m.get("cdf_enabled"):
         newdoc["cdf"] = {"mode": "none"}  # compaction re-homes bytes,
         #                                   no logical row changes
-    _write_doc(root, version, newdoc,
-               verify_paths=[e["path"] for e in new_entries],
-               staged_epoch=epoch0)
-    if not (_flip_current(root, version, commit_id=commit_id)
-            or _claim_survived(root, version, commit_id=commit_id)):
+    if not _publish(root, version, newdoc, commit_id,
+                    verify_paths=[e["path"] for e in new_entries],
+                    staged_epoch=epoch0):
         raise RuntimeError(
             f"compaction lost v{version} to a concurrent commit after "
             f"its claim — the table advanced without it; re-run")

@@ -51,19 +51,32 @@ def contract(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryF
 _NEW_CONTRACTS_HERE = "__new_contracts_here__"
 
 _PRIORITY: tuple[str, ...] = (
-    # ============ packing after r15 (evidence ledger: r09=11, r10=36,
-    # r11=22, r12=40, r13=38, r14=42, r15=50; zero failures ever).
+    # ============ packing after the row-level commit refactor
+    # (evidence ledger: r09=11, r10=36, r11=22, r12=40, r13=38, r14=42,
+    # r15=50; zero failures ever).
     # Head: the contracts whose plan-building code changed after their
     # r15 evidence — the two banded dedups (MinHash signature kernel
     # with exact band keys; the shared Jaccard verify lost its eager
-    # count), then the six ANN consumers now built by the one planner
-    # (llm_extras.ann_join). Then evidence oldest-first: 8 + 11 r09 +
-    # 31 of the 36 r10 fill the 50-slot window, so the oldest evidence
-    # after the next round is r10. ======
+    # count), the six ANN consumers now built by the one planner
+    # (llm_extras.ann_join), then the 20 manifest/SQL/stream contracts
+    # whose call graph reaches the one row-level commit path
+    # (_touched_ranges/_rewrite_sets/_commit_rewrite, _publish for
+    # compaction/restore/metadata commits, _cdf_diff in the row-level
+    # change reads). Then evidence oldest-first: 28 + 11 r09 + 11 of
+    # the 36 r10 fill the 50-slot window, so the oldest evidence after
+    # the next round is r10. ======
     # -- plan changed after their newest evidence --
     "dedup_docs_minhash", "dedup_docs_simhash",
     "sim_ann_lsh", "sim_ann_lsh_multiprobe", "sim_ann_lsh_multiprobe2",
     "sim_ann_auto", "sim_ann_indexed", "dedup_docs_embedding",
+    "sink_table_manifest_commit", "scan_manifest_changes",
+    "sink_merge_pruned", "scan_changes_row_level", "sink_delete_dv",
+    "scan_time_travel_ts", "scan_sql_time_travel", "sink_restore_version",
+    "scan_table_clone", "sink_compact_clustered", "sink_sql_merge",
+    "sink_sql_update", "sink_sql_delete", "sink_sql_optimize",
+    "stream_changes_cdf", "stream_replicate_table",
+    "scan_manifest_renamed", "scan_manifest_schema_evolution",
+    "scan_partition_evolved", "sink_append_constrained",
     # -- new contracts registered mid-round slot in here --
     _NEW_CONTRACTS_HERE,
     # -- r09-era evidence --
@@ -100,35 +113,28 @@ _PRIORITY: tuple[str, ...] = (
     "q16_supplier_part_counts", "q17_small_quantity", "q18_large_orders",
     "q20_dominant_suppliers", "q2_min_cost_supplier", "q6_forecast_revenue",
     "q9_product_profit", "scalar_array", "scalar_cast", "scalar_conditional",
-    "scalar_date", "scan_changes_row_level", "scan_manifest_pruned",
-    "scan_manifest_renamed", "scan_manifest_schema_evolution",
-    "scan_manifest_widened", "scan_manifest_zorder", "scan_partition_evolved",
-    "scan_partition_hidden_days", "scan_sql_time_travel",
-    "sink_compact_clustered", "sink_merge_pruned", "sink_restore_version",
-    "sink_table_manifest_commit", "stream_manifest_admission",
-    "stream_manifest_sink", "stream_manifest_source",
-    "stream_replicate_table", "window_percent_rank", "window_range_frame",
+    "scalar_date", "scan_manifest_pruned", "scan_manifest_widened",
+    "scan_manifest_zorder", "scan_partition_hidden_days",
+    "stream_manifest_admission", "stream_manifest_sink",
+    "stream_manifest_source", "window_percent_rank", "window_range_frame",
     # -- r13-era evidence --
     "agg_mode_frequent", "agg_time_gapfill", "etl_events_enriched",
     "multimodal_frame_sample", "multimodal_join", "q10_returned_items",
     "q13_order_distribution", "q14_promo_revenue", "q19_disjunctive",
     "q21_waiting_orders", "scalar_hash", "scalar_json", "scalar_map",
     "scalar_math", "scalar_regexp", "scalar_string", "scan_catalog_attached",
-    "scan_manifest_changes", "scan_parquet", "scan_schema_evolution",
-    "scan_table_clone", "scan_time_travel_ts", "set_except", "set_intersect",
+    "scan_parquet", "scan_schema_evolution", "set_except", "set_intersect",
     "set_union_all", "set_union_distinct", "sink_compaction_small_files",
     "sink_jdbc_postgres", "sink_merge_scd2", "sink_parquet_partitioned",
     "sink_python_datasource", "sort_multikey_nulls", "source_csv_tsv",
-    "source_json_lines", "stream_changes_cdf", "stream_kafka_shim_live",
-    "subquery_scalar", "topk_limit",
+    "source_json_lines", "stream_kafka_shim_live", "subquery_scalar",
+    "topk_limit",
     # -- r14-era evidence --
     "sink_sql_insert", "source_delta_interop", "source_iceberg_interop",
-    "sink_append_constrained", "sink_delete_dv", "dedup_cluster_cc",
-    "dedup_near_keep_best", "curation_pipeline", "text_ngram_jaccard",
-    "text_tfidf", "text_unigram_logprob", "q15_top_supplier",
-    "q11_important_parts", "stream_stateful_funnel", "sim_ann_ivf_kmeans",
-    "sink_sql_merge", "sink_sql_update", "sink_sql_delete",
-    "sink_sql_optimize", "sink_sql_ctas", "sink_sql_insert_overwrite",
+    "dedup_cluster_cc", "dedup_near_keep_best", "curation_pipeline",
+    "text_ngram_jaccard", "text_tfidf", "text_unigram_logprob",
+    "q15_top_supplier", "q11_important_parts", "stream_stateful_funnel",
+    "sim_ann_ivf_kmeans", "sink_sql_ctas", "sink_sql_insert_overwrite",
     "q22_dormant_customers", "q4_order_priority", "q5_local_supplier",
     "q7_volume_shipping", "q8_market_share", "sample_stratified",
     "scan_dpp_join", "scan_schema_enforce", "sim_ann_ivf", "sim_centroids",
@@ -143,13 +149,12 @@ _PRIORITY: tuple[str, ...] = (
     "window_ignore_nulls", "agg_approx_distinct", "agg_approx_percentile",
     "agg_bitwise", "agg_count_distinct", "agg_cube", "agg_grouping_sets",
     "agg_having", "agg_histogram_width", "agg_pricing_summary", "agg_rollup",
-    "agg_stats", "data_mix_sample", "doc_chunk_windows",
-    "embed_quantize_int8", "generator_outer_pos", "join_5way_star",
-    "join_asof", "join_bloom_pruned", "join_broadcast", "join_cross",
-    "join_full_outer", "join_inner_equi", "join_left_anti", "join_left_outer",
-    "join_left_semi", "join_self", "join_theta_range",
-    "q12_shipmode_priority", "q3_shipping_priority", "sample_reservoir_group",
-    "set_except_all", "set_intersect_all",
+    "agg_stats", "data_mix_sample", "doc_chunk_windows", "embed_quantize_int8",
+    "generator_outer_pos", "join_5way_star", "join_asof", "join_bloom_pruned",
+    "join_broadcast", "join_cross", "join_full_outer", "join_inner_equi",
+    "join_left_anti", "join_left_outer", "join_left_semi", "join_self",
+    "join_theta_range", "q12_shipmode_priority", "q3_shipping_priority",
+    "sample_reservoir_group", "set_except_all", "set_intersect_all",
 )
 
 

@@ -154,15 +154,6 @@ def test_bits_below_two_refused(spark):
         lx._bucket_keys_np(spark, e, lx._ANN_SEED, 8, bits=1)
 
 
-def test_sample_proj_zero_refused_not_full_family(spark):
-    """r15 ADVICE: sample_proj=0 was falsy and silently computed the
-    FULL projection family; it must be an error."""
-    e = load_table(spark, SF, "embeddings")
-    with pytest.raises(ValueError, match="sample_proj"):
-        lx._bucket_keys_np(spark, e, lx._ANN_SEED, lx._N_PROJ,
-                           sample_proj=0)
-
-
 def test_vec_id_type_preserved_by_kernel(spark):
     """r15 ADVICE: the replaced JVM aggregate preserved the input's
     vec_id type; the kernel schema must derive it, not hardcode

@@ -1463,12 +1463,59 @@ def test_delete_zero_hits_is_a_noop(spark, tmp_path):
 from pyspark.sql import Row  # noqa: E402  (concurrency tests below)
 
 
+# The row-level writers under race: each takes row k=1 in partition
+# "a" — merge/update set v = 101.0, the deletes remove the row. All
+# four share one commit tail, so all four must rebase when disjoint
+# and raise when not.
+def _set_k1_merge(spark, root):
+    return mt.commit_merge(spark, root, spark.createDataFrame(
+        [Row(k=1, part="a", v=101.0, op="U")]), ["k", "part"], "part")
+
+
+def _set_k1_update(spark, root):
+    return mt.commit_update(spark, root, {"v": "101.0"}, where="k = 1")
+
+
+def _drop_k1_by_keys(spark, root):
+    return mt.commit_delete(spark, root, spark.createDataFrame(
+        [Row(k=1, part="a")]), ["k", "part"], "part")
+
+
+def _drop_k1_by_predicate(spark, root):
+    return mt.commit_delete(spark, root, where="k = 1")
+
+
+ROW_WRITERS = {
+    "merge": ("merge", _set_k1_merge, {(1, 101.0)}),
+    "update": ("update", _set_k1_update, {(1, 101.0)}),
+    "delete_keys": ("delete", _drop_k1_by_keys, set()),
+    "delete_where": ("delete", _drop_k1_by_predicate, set()),
+}
+
+
+def _race_on(monkeypatch, op, competitor):
+    """Run ``competitor()`` once, right before the first claim of an
+    ``op`` commit — it wins the version the writer planned against."""
+    orig = mt._write_doc
+    fired = {"n": 0}
+
+    def racy(root_, version, doc, **kw):
+        if doc.get("op") == op and fired["n"] == 0:
+            fired["n"] = 1
+            competitor()
+        return orig(root_, version, doc, **kw)
+
+    monkeypatch.setattr(mt, "_write_doc", racy)
+
+
+@pytest.mark.parametrize("writer", list(ROW_WRITERS))
 def test_disjoint_partition_merges_auto_rebase(spark, tmp_path,
-                                               monkeypatch):
-    """r12 (verdict item 6): two merges on DISJOINT partitions no
-    longer serialize through manual retries — the loser re-plans
-    against the new head, finds its rewrite set untouched, and
-    rebases automatically."""
+                                               monkeypatch, writer):
+    """r12 (verdict item 6): two row-level commits on DISJOINT
+    partitions no longer serialize through manual retries — the loser
+    re-plans against the new head, finds its rewrite set untouched, and
+    rebases automatically. Holds for every row-level writer."""
+    op, write, want = ROW_WRITERS[writer]
     root = os.path.join(str(tmp_path), "tbl")
     mt.create_table(spark.createDataFrame(
         [Row(k=i, part=("a" if i % 2 else "b"), v=float(i))
@@ -1477,23 +1524,15 @@ def test_disjoint_partition_merges_auto_rebase(spark, tmp_path,
     v0 = mt.current_version(root)
     chg_b = spark.createDataFrame(
         [Row(k=2, part="b", v=202.0, op="U")])
-    orig = mt._write_doc
-    fired = {"n": 0}
-
-    def racy(root_, version, doc, **kw):
-        if doc.get("op") == "merge" and fired["n"] == 0:
-            fired["n"] = 1
-            # a competing merge on the OTHER partition lands first
-            mt.commit_merge(spark, root, chg_b, ["k", "part"], "part")
-        return orig(root_, version, doc, **kw)
-
-    monkeypatch.setattr(mt, "_write_doc", racy)
-    v = mt.commit_merge(spark, root, spark.createDataFrame(
-        [Row(k=1, part="a", v=101.0, op="U")]), ["k", "part"], "part")
+    # a competing merge on the OTHER partition lands first
+    _race_on(monkeypatch, op, lambda: mt.commit_merge(
+        spark, root, chg_b, ["k", "part"], "part"))
+    v = write(spark, root)
     assert v == v0 + 2, "loser must rebase to the next version"
     got = {(r["k"], r["v"]) for r in mt.read_snapshot(spark, root)
            .where("k <= 2").collect()}
-    assert got == {(1, 101.0), (2, 202.0)}, "both merges must land"
+    assert got == want | {(2, 202.0)}, "both commits must land"
+    assert mt.read_snapshot(spark, root).count() == (10 if want else 9)
 
 
 def test_disjoint_file_band_merges_auto_rebase(spark, tmp_path,
@@ -1530,12 +1569,15 @@ def test_disjoint_file_band_merges_auto_rebase(spark, tmp_path,
     assert mt.read_snapshot(spark, root).count() == 20
 
 
-def test_overlapping_merges_still_raise(spark, tmp_path, monkeypatch):
+@pytest.mark.parametrize("writer", list(ROW_WRITERS))
+def test_overlapping_merges_still_raise(spark, tmp_path, monkeypatch,
+                                        writer):
     """Rewrite sets that intersect are a REAL conflict: the loser's
-    staged anti-join is stale, so it must refuse, not rebase. The data
-    is coalesced to ONE file per partition so both merges' keys land
+    staged output is stale, so it must refuse, not rebase. The data
+    is coalesced to ONE file per partition so both commits' keys land
     in the same file — with per-key files they would be legitimately
     disjoint and rebase (the previous test)."""
+    op, write, _want = ROW_WRITERS[writer]
     root = os.path.join(str(tmp_path), "tbl")
     mt.create_table(spark.createDataFrame(
         [Row(k=i, part=("a" if i % 2 else "b"), v=float(i))
@@ -1543,43 +1585,27 @@ def test_overlapping_merges_still_raise(spark, tmp_path, monkeypatch):
         root, "part", stats_cols=["k"])
     chg_other = spark.createDataFrame(
         [Row(k=3, part="a", v=303.0, op="U")])  # same partition "a"
-    orig = mt._write_doc
-    fired = {"n": 0}
-
-    def racy(root_, version, doc, **kw):
-        if doc.get("op") == "merge" and fired["n"] == 0:
-            fired["n"] = 1
-            mt.commit_merge(spark, root, chg_other, ["k", "part"], "part")
-        return orig(root_, version, doc, **kw)
-
-    monkeypatch.setattr(mt, "_write_doc", racy)
-    with pytest.raises(RuntimeError, match="overlapping|rewrite set"):
-        mt.commit_merge(spark, root, spark.createDataFrame(
-            [Row(k=1, part="a", v=101.0, op="U")]),
-            ["k", "part"], "part")
-    # the competing merge's result is intact
+    _race_on(monkeypatch, op, lambda: mt.commit_merge(
+        spark, root, chg_other, ["k", "part"], "part"))
+    with pytest.raises(RuntimeError,
+                       match=f"{op} conflict: .*rewrite set"):
+        write(spark, root)
+    # the competing merge's result is intact, the loser left no trace
     assert {(r["k"], r["v"]) for r in mt.read_snapshot(spark, root)
-            .where("k = 3").collect()} == {(3, 303.0)}
+            .where("k IN (1, 3)").collect()} == {(1, 1.0), (3, 303.0)}
 
 
+@pytest.mark.parametrize("writer", list(ROW_WRITERS))
 def test_concurrent_schema_change_refuses_rebase(spark, tmp_path,
-                                                 monkeypatch):
+                                                 monkeypatch, writer):
+    op, write, _want = ROW_WRITERS[writer]
     root = os.path.join(str(tmp_path), "tbl")
     mt.create_table(spark.createDataFrame(
         [Row(k=i, part=("a" if i % 2 else "b"), v=float(i))
          for i in range(1, 11)]).select("k", "v", "part"), root,
         "part", stats_cols=["k"])
-    orig = mt._write_doc
-    fired = {"n": 0}
-
-    def racy(root_, version, doc, **kw):
-        if doc.get("op") == "merge" and fired["n"] == 0:
-            fired["n"] = 1
-            mt.rename_column(root, "v", "value")
-        return orig(root_, version, doc, **kw)
-
-    monkeypatch.setattr(mt, "_write_doc", racy)
-    with pytest.raises(RuntimeError, match="schema/spec/constraints"):
-        mt.commit_merge(spark, root, spark.createDataFrame(
-            [Row(k=1, part="a", v=101.0, op="U")]),
-            ["k", "part"], "part")
+    _race_on(monkeypatch, op,
+             lambda: mt.rename_column(root, "v", "value"))
+    with pytest.raises(RuntimeError,
+                       match=f"{op} conflict: .*schema/spec/constraints"):
+        write(spark, root)

@@ -420,3 +420,54 @@ def test_optimize_and_vacuum_sql(spark, tmp_path):
     v2 = optimize_sql(spark, f"OPTIMIZE `{root}` ZORDER BY (k, v)")
     assert v2 == current_version(root)
     assert _rows(spark, root) == before
+
+
+# --- one pre-scan per commit ---------------------------------------------
+
+
+@pytest.mark.parametrize("rebase", [False, True],
+                         ids=["direct", "rebased"])
+@pytest.mark.parametrize("stmt", ["merge", "update", "delete"])
+def test_one_prescan_job_per_dml_commit(spark, tmp_path, monkeypatch,
+                                        stmt, rebase):
+    """Every SQL DML commit runs exactly ONE touched-range pre-scan
+    (``_touched_ranges``), and a commit that loses the version race
+    re-plans from the manifest alone — it never rescans."""
+    from silvia_spark.operators import manifest_table as mt
+
+    root = _mk(spark, tmp_path, n=10)
+    calls = {"n": 0}
+    real_ranges = mt._touched_ranges
+
+    def counted(*a, **kw):
+        calls["n"] += 1
+        return real_ranges(*a, **kw)
+
+    monkeypatch.setattr(mt, "_touched_ranges", counted)
+    if rebase:
+        real_write = mt._write_doc
+        fired = {"n": 0}
+
+        def racy(root_, version, doc, **kw):
+            if doc.get("op") == stmt and not fired["n"]:
+                fired["n"] = 1
+                # a disjoint append (new partition) wins the version
+                mt.commit_append(spark, root, spark.createDataFrame(
+                    [Row(k=99, v=9.0, part="z")]), "part")
+            return real_write(root_, version, doc, **kw)
+
+        monkeypatch.setattr(mt, "_write_doc", racy)
+    spark.createDataFrame([Row(k=1, nv=100.0)]) \
+        .createOrReplaceTempView("msrc1")
+    sql = {"merge": f"MERGE INTO `{root}` AS t USING msrc1 AS s "
+                    "ON t.k = s.k WHEN MATCHED THEN UPDATE SET v = s.nv",
+           "update": f"UPDATE `{root}` SET v = 100.0 WHERE k = 1",
+           "delete": f"DELETE FROM `{root}` WHERE k = 1"}[stmt]
+    run = {"merge": merge_into_sql, "update": update_sql,
+           "delete": delete_sql}[stmt]
+    assert run(spark, sql) == 2 + rebase
+    assert calls["n"] == 1
+    assert load_manifest(root)["op"] == stmt
+    got = {r.k: r.v for r in read_snapshot(spark, root).collect()}
+    assert got.get(1) == (None if stmt == "delete" else 100.0)
+    assert (99 in got) == rebase
