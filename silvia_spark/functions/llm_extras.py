@@ -335,7 +335,8 @@ ORDER BY vec_a, vec_b
 # headroom inside a shared-heap task slot; the floor is the session's
 # default parallelism (never fewer tasks than cores — keeps the
 # local bench plan at the stock width), the ceiling bounds scheduler
-# load at any corpus size.
+# load at any corpus size. One caller: ann_join's join fallback (past the
+# gather bound).
 _PAIR_ROWS_PER_PARTITION = 3_000_000
 _MAX_PAIR_PARTITIONS = 65_536
 

@@ -476,18 +476,17 @@ def _hashed_shingles(hash_fn):
 
 def _verify_jaccard_pairs(d: DataFrame, cand: DataFrame,
                           slot: str) -> DataFrame:
-    """Exact 3-shingle-Jaccard verify of banded candidate pairs, shared
-    by the MinHash and SimHash dedups: restrict the corpus to the
-    CANDIDATE doc_ids (broadcast semi-join — guide §3.2: reduce the big
-    side before it is processed; candidates are banding-selected, so
-    the id set is orders of magnitude smaller than the corpus at any
-    scale), shingle only those docs ONCE into a persisted slot both
-    join sides read, and score |A∩B| / |A∪B| ≥ 0.8. Before r14 both
-    dedups re-derived the FULL corpus shingle table per join side —
-    two more tokenize+shingle passes over every document (measured:
-    the whole verify tail drops 1.7 s → 0.4 s at sf1). Pair set and
-    jaccard values are unchanged: the main join only ever touched
-    candidate ids."""
+    """Exact 3-shingle-Jaccard verify of the MinHash dedup's banded
+    candidate pairs: restrict the corpus to the CANDIDATE doc_ids
+    (broadcast semi-join — guide §3.2: reduce the big side before it is
+    processed; candidates are banding-selected, so the id set is orders
+    of magnitude smaller than the corpus at any scale), shingle only
+    those docs ONCE into a persisted slot both join sides read, and
+    score |A∩B| / |A∪B| ≥ 0.8. Before r14 the dedup re-derived the FULL
+    corpus shingle table per join side — two more tokenize+shingle
+    passes over every document (measured: the whole verify tail drops
+    1.7 s → 0.4 s at sf1). Pair set and jaccard values are unchanged:
+    the main join only ever touched candidate ids."""
     from silvia_spark.io import managed_persist
 
     d = d.select("doc_id", F.split(F.lower("text"), " ").alias("w"))

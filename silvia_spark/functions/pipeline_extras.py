@@ -4,8 +4,8 @@ plumbing, text analysis).
 
 Contracts here:
 
-- ``dedup_docs_simhash`` — SimHash near-dup candidates + exact-Jaccard
-  verify (the other classic dedup family next to MinHash-LSH J2).
+- ``dedup_docs_simhash`` — exact-Jaccard pairs filtered by a shared
+  SimHash band (the other classic dedup family next to MinHash-LSH J2).
 - ``sim_ann_ivf``       — IVF-style pruned top-k (coarse quantizer =
   per-label centroids, nprobe lists probed) vs J3's exact oracle.
 - ``text_fingerprint``  — rolling-hash (Rabin-Karp) document fingerprint,
@@ -35,48 +35,18 @@ from silvia_spark.registry import contract
 
 # --- SimHash near-dup dedup ---------------------------------------------------
 
-# Band geometry trades candidate volume against recall: P(band match) ≈
+# Band geometry sets the band filter's recall: P(band match) ≈
 # (1 - f)^bits for per-bit flip probability f, which GROWS as feature sets
 # shrink (each differing feature perturbs every bit's ±1 sum). This corpus
 # has ~10² shingle features per doc (tiny shared vocabulary), so narrow
 # 4-bit bands are needed for recall ≈ 1; real corpora (10³–10⁴ features)
-# run 16-bit bands with far fewer candidates. See SCALE.md §ANN.
-_SH_BANDS = 16
+# run 16-bit bands. The band filter runs over the exact pairs only, so
+# the geometry prices no work (SCALE.md §ANN). 64 bits = 16 bands of
+# _SH_BAND_BITS.
 _SH_BAND_BITS = 4
 
-# Occupancy guard (r15, r14 verdict item 5): the 16 × 4-bit geometry has
-# only 2⁴ key values per band, so candidate volume is STRUCTURALLY
-# O(n²/2^bits·bands) — a 500 k-doc corpus funnels ~31 k docs per bucket
-# (under the degenerate-bucket cap) and silently explodes into a
-# ~10⁹-pair candidate stream. Price the pair mass from the persisted
-# band table (one tiny job, the _distinct_pairs sizing pattern) and
-# REFUSE above the bound with a pointer to the guaranteed-sub-quadratic
-# MinHash banding. Override via SILVIA_SIMHASH_MAX_PAIR_MASS for
-# corpora where the quadratic cost is an accepted trade.
-_SIMHASH_MAX_PAIR_MASS = 200_000_000
-
-
-def _simhash_pair_mass_guard(bands: DataFrame) -> None:
-    import os
-
-    bound = int(os.environ.get("SILVIA_SIMHASH_MAX_PAIR_MASS",
-                               _SIMHASH_MAX_PAIR_MASS))
-    mass = (bands.groupBy("band_id", "band_key")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .agg(F.sum(F.col("c") * (F.col("c") - 1) / 2).alias("m"))
-            .collect()[0]["m"] or 0)
-    if mass > bound:
-        raise ValueError(
-            f"dedup_docs_simhash: banded candidate mass ~{int(mass):,} "
-            f"pairs exceeds the {bound:,} guard — the "
-            f"{_SH_BANDS}x{_SH_BAND_BITS}-bit band geometry is "
-            "quadratic on this corpus (see the geometry note above). "
-            "Use dedup_docs_minhash (same contract, sub-quadratic "
-            "banding) or raise SILVIA_SIMHASH_MAX_PAIR_MASS to accept "
-            "the cost.")
-
 # Oracle: the exact all-pairs shingle-Jaccard join (same as J2) — a green
-# hash proves the banded-SimHash candidate stage had recall 1 here.
+# hash proves the SimHash band filter had recall 1 here.
 _SIMHASH_ORACLE = """
 WITH s AS (
   SELECT doc_id,
@@ -97,21 +67,29 @@ ORDER BY doc_a, doc_b
 
 @contract("dedup_docs_simhash", oracle=_SIMHASH_ORACLE)
 def dedup_docs_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup pairs via 64-bit SimHash banding, verified by exact
-    3-shingle Jaccard ≥ 0.8.
+    """Near-dup pairs with exact 3-shingle Jaccard ≥ 0.8 that share a
+    64-bit SimHash band bucket.
 
-    SimHash: per distinct 3-shingle (the same features the verify stage
-    measures), xxhash64; per bit position j, sum ±1 by the shingle hash's
-    bit j; sign of the sum is fingerprint bit j. All codegen (explode →
+    SimHash: per distinct 3-shingle (the features the Jaccard measures),
+    xxhash64; per bit position j, sum ±1 by the shingle hash's bit j;
+    sign of the sum is fingerprint bit j. All codegen (explode →
     HashAggregate), no interpreted lambdas. Banding: the 64 bits pack
-    into 16 × 4-bit band keys; near-dup docs agree on ≥1 band
-    with overwhelming probability (geometry note above), so candidates =
-    same (band, key) — one small shuffle, no all-pairs stage.
-    Verification is the same exact-Jaccard kernel as J2, so false
-    candidates never reach the output. At 100 TB the per-band bucket
-    cap/salting guard of SCALE.md §ANN applies identically."""
-    from silvia_spark.functions.llm_ops import (_hashed_shingles, _shingles,
-                                                _verify_jaccard_pairs)
+    into 16 × 4-bit band keys, capped by ``cap_buckets`` (the
+    degenerate-bucket guard of sim_ann_lsh; a no-op on this corpus).
+
+    The output is {pairs sharing a capped (band_id, band_key) bucket} ∩
+    {J ≥ 0.8}, computed exact-first: ``jaccard_pairs`` (the J21
+    inverted-index kernel) yields the J ≥ 0.8 pairs, and the band check
+    is a left-semi filter over pairs ⋈ bands(doc_a) ⋈ bands(doc_b) on
+    (band_id, band_key) — |result| × 16 rows, so the banded candidate
+    set is never built (filter-then-refine with an exact local index).
+    The bound is ``jaccard_pairs``' default ``df_cap``: the same
+    stop-shingle cap, with the same disclosed one-sided error, that
+    text_ngram_jaccard and dedup_cluster_cc run under. dedup_docs_minhash
+    is the guaranteed sub-quadratic path with no cap error."""
+    from silvia_spark.functions.llm_extras import _ANN_BUCKET_CAP, cap_buckets
+    from silvia_spark.functions.llm_ops import _hashed_shingles, _shingles
+    from silvia_spark.functions.training_ops import jaccard_pairs
 
     docs = load_table(spark, sf_dir, "documents")
     d = docs.select(
@@ -129,41 +107,25 @@ def dedup_docs_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum(F.when(F.expr("(shiftright(h, j) & 1) = 1"), 1)
                    .otherwise(-1)).alias("s"))
     )
-    bands = (
+    bands = cap_buckets(
         bits.select(
             "doc_id",
             F.expr(f"j div {_SH_BAND_BITS}").alias("band_id"),
             F.expr(f"CASE WHEN s >= 0 THEN shiftleft(1, pmod(j, "
                    f"{_SH_BAND_BITS})) ELSE 0 END").alias("bv"))
         .groupBy("doc_id", "band_id")
-        .agg(F.sum("bv").alias("band_key"))
+        .agg(F.sum("bv").alias("band_key")),
+        _ANN_BUCKET_CAP, keys=("band_id", "band_key"))
+    pairs = jaccard_pairs(docs.select("doc_id", "text"), 0.8)
+    ba = bands.select(F.col("doc_id").alias("doc_a"), "band_id", "band_key")
+    bb = bands.select(F.col("doc_id").alias("doc_b"), "band_id", "band_key")
+    return (
+        pairs.join(ba, "doc_a")
+        .join(bb, ["doc_b", "band_id", "band_key"], "leftsemi")
+        .select("doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard"))
+        .distinct()
+        .orderBy("doc_a", "doc_b")
     )
-    # Computed once, read by both self-join sides; managed_persist frees the
-    # previous run's copy so long-lived sessions hold one cache, not N.
-    # cap_buckets: same degenerate-bucket guard as sim_ann_lsh (a band bucket
-    # of s docs is s² candidates); the cap never triggers on this corpus.
-    from silvia_spark.functions.llm_extras import (_ANN_BUCKET_CAP,
-                                                   _distinct_pairs,
-                                                   cap_buckets)
-
-    bands = managed_persist(
-        cap_buckets(bands, _ANN_BUCKET_CAP, keys=("band_id", "band_key")),
-        "dedup_docs_simhash.bands")
-    # r15: refuse silently-quadratic corpora BEFORE the self-join runs
-    # (prices the persisted band table; no-op on this corpus).
-    _simhash_pair_mass_guard(bands)
-    left = bands.select(F.col("doc_id").alias("doc_a"), "band_id", "band_key")
-    right = bands.select(F.col("doc_id").alias("doc_b"), "band_id", "band_key")
-    # r14: right-sized packed-key dedup — llm_extras._distinct_pairs
-    # sizing note; the band table above is the persisted pricing input.
-    cand = _distinct_pairs(
-        left.join(right, ["band_id", "band_key"])
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b"),
-        left, right, ("band_id", "band_key"), "doc_a", "doc_b")
-    # r14 §11: candidate-pruned exact verify shared with
-    # dedup_docs_minhash (was: two more full-corpus shingle passes).
-    return _verify_jaccard_pairs(docs, cand, "dedup_docs_simhash")
 
 
 # --- IVF-pruned top-k ---------------------------------------------------------

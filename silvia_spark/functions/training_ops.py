@@ -7,9 +7,10 @@ needs beyond the J1–J19 dedup/similarity/text family:
   pair listing): LSH-bucketed candidates, exact verify, smallest-id-canonical
   keep rule, per-lang kept/dropped accounting against document metadata.
 - J21 ``text_ngram_jaccard`` — EXACT n-gram Jaccard similarity join via an
-  inverted-index equi-join (shuffle keyed on shingle), the third distinct
-  algorithm for the same near-dup contract (J2 = banded MinHash, J13 =
-  SimHash) — all three hash-check against the same exact all-pairs oracle.
+  inverted-index equi-join (shuffle keyed on shingle), the exact kernel
+  for the same near-dup contract as J2 (banded MinHash) and J13 (SimHash,
+  which runs this kernel and keeps the pairs sharing a band) — all three
+  hash-check against the same exact all-pairs oracle.
 - J22 ``text_pack_sequences`` — context-window packing: documents packed
   into 2048-token bins per language shard via a windowed running sum; the
   sequence-assembly step of a pretraining data loader.
@@ -240,9 +241,9 @@ def text_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT 3-word-shingle Jaccard ≥ 0.8 pairs via the inverted-index
     equi-join kernel (``jaccard_pairs``).
 
-    vs J2 (MinHash) / J13 (SimHash): no signatures, no probabilistic
-    recall argument — exactness by construction, at the cost of a shuffle
-    keyed on raw shingles. 100 TB: cost is Σ df(s)² over shingles, fine on
+    vs J2 (MinHash): no signatures, no probabilistic recall argument —
+    exactness by construction, at the cost of a shuffle keyed on raw
+    shingles. 100 TB: cost is Σ df(s)² over shingles, fine on
     natural text where df is near-1; the kernel's df_cap (stop-shingle
     removal, default 10⁵) bounds boilerplate-heavy corpora at cap·Σdf with
     disclosed one-sided recall loss — J2 is the guaranteed sub-quadratic

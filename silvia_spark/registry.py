@@ -51,13 +51,14 @@ def contract(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryF
 _NEW_CONTRACTS_HERE = "__new_contracts_here__"
 
 _PRIORITY: tuple[str, ...] = (
-    # ============ packing after the row-level commit refactor
+    # ============ packing after the SimHash exact-kernel rewrite
     # (evidence ledger: r09=11, r10=36, r11=22, r12=40, r13=38, r14=42,
     # r15=50; zero failures ever).
     # Head: the contracts whose plan-building code changed after their
-    # r15 evidence — the two banded dedups (MinHash signature kernel
-    # with exact band keys; the shared Jaccard verify lost its eager
-    # count), the six ANN consumers now built by the one planner
+    # r15 evidence — SimHash first (now jaccard_pairs filtered by
+    # shared bands: no candidate self-join, no verify), then MinHash
+    # (signature kernel with exact band keys; its Jaccard verify lost
+    # its eager count), the six ANN consumers now built by the one planner
     # (llm_extras.ann_join), then the 20 manifest/SQL/stream contracts
     # whose call graph reaches the one row-level commit path
     # (_touched_ranges/_rewrite_sets/_commit_rewrite, _publish for
@@ -66,7 +67,7 @@ _PRIORITY: tuple[str, ...] = (
     # the 36 r10 fill the 50-slot window, so the oldest evidence after
     # the next round is r10. ======
     # -- plan changed after their newest evidence --
-    "dedup_docs_minhash", "dedup_docs_simhash",
+    "dedup_docs_simhash", "dedup_docs_minhash",
     "sim_ann_lsh", "sim_ann_lsh_multiprobe", "sim_ann_lsh_multiprobe2",
     "sim_ann_auto", "sim_ann_indexed", "dedup_docs_embedding",
     "sink_table_manifest_commit", "scan_manifest_changes",

@@ -8,10 +8,11 @@ exact pair of minima. These tests pin:
 - that the band key is exact (it decodes back to both minima);
 - the kernel's edge cases (empty shingle sets, null lists, empty and
   sliced Arrow batches);
-- that building the plan starts no Spark job;
-- that the shared Jaccard verify's broadcast reads the persisted
-  candidate slot through a materialized AQE cache stage (the guard that
-  replaced the eager count against cold-run broadcast timeouts).
+- that building the plan starts no Spark job (also for
+  ``dedup_docs_simhash``, which has no candidate stage to size);
+- that the Jaccard verify's broadcast reads the persisted candidate
+  slot through a materialized AQE cache stage (the guard that replaced
+  the eager count against cold-run broadcast timeouts).
 """
 
 from __future__ import annotations
@@ -147,20 +148,31 @@ def _jobs_in_group(spark, group):
     return len(tracker.getJobIdsForGroup(group))
 
 
-def test_minhash_plan_build_starts_no_job(spark):
+def _assert_plan_build_starts_no_job(spark, name):
     from silvia_spark import registry
 
     registry.load_all_modules()
     clear_caches()
     sc = spark.sparkContext
-    sc.setJobGroup("minhash-build", "minhash-build")
+    group = f"{name}-build"
+    sc.setJobGroup(group, group)
     try:
-        df = registry.QUERIES["dedup_docs_minhash"](spark, SF_SMALL)
+        df = registry.QUERIES[name](spark, SF_SMALL)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert _jobs_in_group(spark, "minhash-build") == 0
+    assert _jobs_in_group(spark, group) == 0
     assert df.count() > 0
     clear_caches()
+
+
+def test_minhash_plan_build_starts_no_job(spark):
+    _assert_plan_build_starts_no_job(spark, "dedup_docs_minhash")
+
+
+def test_simhash_plan_build_starts_no_job(spark):
+    """SimHash filters the exact Jaccard kernel's pairs by shared bands:
+    it has no candidate stage to size at plan build."""
+    _assert_plan_build_starts_no_job(spark, "dedup_docs_simhash")
 
 
 def _walk(node, above=()):
@@ -193,30 +205,28 @@ def test_verify_broadcast_reads_materialized_candidate_stage(spark):
     from silvia_spark import registry
 
     registry.load_all_modules()
-    for name in ("dedup_docs_minhash", "dedup_docs_simhash"):
-        clear_caches()
-        df = registry.QUERIES[name](spark, SF_SMALL)
-        df.collect()
-        root = df._jdf.queryExecution().executedPlan()
-        assert root.getClass().getSimpleName() == "AdaptiveSparkPlanExec"
-        assert root.isFinalPlan()
-        under_broadcast = 0
-        for node, above in _walk(root):
-            if (node.getClass().getSimpleName() != "InMemoryTableScanExec"
-                    or _names(node.relation().output())
-                    != ["doc_a", "doc_b"]):
-                continue
-            kinds = [a.getClass().getSimpleName() for a in above]
-            if "BroadcastQueryStageExec" not in kinds:
-                continue
-            under_broadcast += 1
-            last_bc = len(kinds) - 1 - kinds[::-1].index(
-                "BroadcastQueryStageExec")
-            stages = [a for a in above[last_bc + 1:]
-                      if a.getClass().getSimpleName()
-                      == "TableCacheQueryStageExec"]
-            assert stages, f"{name}: broadcast reads the candidate slot " \
-                           "without a cache query stage"
-            assert all(s.isMaterialized() for s in stages)
-        assert under_broadcast > 0, f"{name}: no broadcast of the slot"
+    clear_caches()
+    df = registry.QUERIES["dedup_docs_minhash"](spark, SF_SMALL)
+    df.collect()
+    root = df._jdf.queryExecution().executedPlan()
+    assert root.getClass().getSimpleName() == "AdaptiveSparkPlanExec"
+    assert root.isFinalPlan()
+    under_broadcast = 0
+    for node, above in _walk(root):
+        if (node.getClass().getSimpleName() != "InMemoryTableScanExec"
+                or _names(node.relation().output()) != ["doc_a", "doc_b"]):
+            continue
+        kinds = [a.getClass().getSimpleName() for a in above]
+        if "BroadcastQueryStageExec" not in kinds:
+            continue
+        under_broadcast += 1
+        last_bc = len(kinds) - 1 - kinds[::-1].index(
+            "BroadcastQueryStageExec")
+        stages = [a for a in above[last_bc + 1:]
+                  if a.getClass().getSimpleName()
+                  == "TableCacheQueryStageExec"]
+        assert stages, \
+            "broadcast reads the candidate slot without a cache query stage"
+        assert all(s.isMaterialized() for s in stages)
+    assert under_broadcast > 0, "no broadcast of the slot"
     clear_caches()

@@ -306,31 +306,34 @@ def test_ip_geo_one_row_per_event_no_fanout(spark):
     assert "hashpartitioning(event_id" not in plan, plan
 
 
-# --- dedup_docs_simhash occupancy guard (r15) ----------------------------------
+# --- dedup_docs_simhash bound ---------------------------------------------------
 
-def test_simhash_pair_mass_guard_refuses_quadratic_corpus(spark,
-                                                          monkeypatch):
-    """The 16x4-bit band geometry is structurally quadratic on large
-    corpora (r14 verdict item 5): the engine must refuse with a pointer
-    to the sub-quadratic MinHash banding instead of silently generating
-    an O(n²/256) candidate stream. Forced here by lowering the bound
-    under the corpus's true mass."""
-    import pytest
+def test_simhash_pairs_come_from_capped_jaccard_kernel(spark, monkeypatch):
+    """SimHash's only super-linear stage is the inverted-index kernel, so
+    its bound is ``jaccard_pairs``' default stop-shingle cap: the contract
+    must take its pairs from ``jaccard_pairs`` at tau 0.8 with the
+    default ``df_cap`` (not ``None``), and every output pair must be one
+    of them."""
+    import inspect
 
     from silvia_spark import registry
+    from silvia_spark.functions import training_ops
 
     registry.load_all_modules()
-    monkeypatch.setenv("SILVIA_SIMHASH_MAX_PAIR_MASS", "10")
-    with pytest.raises(ValueError, match="dedup_docs_minhash"):
-        registry.QUERIES["dedup_docs_simhash"](spark, SF_SMALL)
+    real = training_ops.jaccard_pairs
+    calls = []
 
+    def spy(*args, **kwargs):
+        bound = inspect.signature(real).bind(*args, **kwargs)
+        bound.apply_defaults()
+        calls.append(bound.arguments)
+        return real(*args, **kwargs)
 
-def test_simhash_pair_mass_guard_noop_at_contract_scale(spark):
-    """Default bound: plan builds (the guard's sizing job passes) and
-    the contract output is unchanged — values are covered by the parity
-    suite; this pins that the guard itself does not fire."""
-    from silvia_spark import registry
-
-    registry.load_all_modules()
-    df = registry.QUERIES["dedup_docs_simhash"](spark, SF_SMALL)
-    assert df.count() >= 0  # builds and executes under the default bound
+    monkeypatch.setattr(training_ops, "jaccard_pairs", spy)
+    out = registry.QUERIES["dedup_docs_simhash"](spark, SF_SMALL).collect()
+    assert len(calls) == 1
+    assert calls[0]["tau"] == 0.8
+    assert training_ops._JACCARD_DF_CAP is not None
+    assert calls[0]["df_cap"] == training_ops._JACCARD_DF_CAP
+    pairs = {(r.doc_a, r.doc_b) for r in real(calls[0]["docs"], 0.8).collect()}
+    assert out and {(r.doc_a, r.doc_b) for r in out} <= pairs
