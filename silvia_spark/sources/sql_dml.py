@@ -11,12 +11,15 @@ code runs. So the DML verbs land as documented TEXT entry points:
     update_sql(spark,     "UPDATE t SET v = v + 1 WHERE k < 10")
     delete_sql(spark,     "DELETE FROM t WHERE k < 10")
 
-Each parses the standard statement form and routes into the manifest
-layer's existing commit machinery — ``commit_merge``'s stats-pruned
-file-granular copy-on-write for MERGE/UPDATE, ``commit_delete``'s
-merge-on-read deletion vectors for DELETE — so SQL DML gets the exact
-same semantics the Python API has: atomic single-flip commits, CHECK
-constraints, CDF records, conflict detection, time travel.
+Each parses the standard statement form and commits through the
+manifest layer's one row-level commit tail (``_touched_ranges`` →
+``_rewrite_sets`` → ``_commit_rewrite``) — MERGE
+as a two-phase stats-pruned copy-on-write over its touched files
+(see ``merge_into_sql``), UPDATE through ``commit_update``, DELETE
+through ``commit_delete``'s merge-on-read deletion vectors — so SQL
+DML gets the exact same semantics the Python API has: atomic
+single-flip commits, CHECK constraints, CDF records, conflict
+detection, time travel.
 
 Scope (loud refusals, never silent drift):
 
@@ -24,28 +27,36 @@ Scope (loud refusals, never silent drift):
   target and a source column (the file-granular rewrite plan prunes
   on key ranges; a non-equi ON has no key ranges to prune with).
 - Assignments may not target the partition column or an ON key
-  column: the committed anti-join removes replaced rows BY KEY, so a
-  key- or partition-moving update would leave the old row behind.
-  (Delta rewrites whole files and can move rows; this engine's
-  keyed-merge plan cannot — refused, not approximated.)
+  column, and without the partition column in ON a MERGE may not
+  change rows whose partition value is NULL. Both limits come from
+  the keyed change-batch plan the Python ``commit_merge`` uses (its
+  anti-join removes replaced rows by key, and NULL never
+  equi-matches); SQL MERGE keeps them so both entry points accept
+  the same changes — refused, not approximated.
 - A target row matched by MORE than one source row raises (the SQL
   standard's nondeterministic-MERGE error). Enforced two-stage so the
-  common case costs one aggregation over the SOURCE only; the target
-  is consulted just when a duplicate source key actually exists.
+  common case costs one aggregation over the SOURCE only; the
+  touched files are consulted just when a duplicate source key
+  actually exists.
 - Keyword scanning is paren/quote-aware but not a full SQL grammar:
   a bare CASE WHEN inside a merge condition must be parenthesized
   (otherwise its WHEN/THEN would read as clause boundaries).
 
-100 TB posture: the matched set is one shuffle join on the ON keys,
-the not-matched sets are anti-joins on the same keys, and everything
-downstream is commit_merge/commit_delete's pruned rewrite — cost is
-O(source + touched files), never O(table).
+100 TB posture: when ON pins the partition column, MERGE finds its
+touched files from the source keys alone and makes ONE pass over
+them — a left-outer join with the source — so cost is
+O(source + touched files), never O(table). ON without the partition
+column adds one key-only scan of the target (a semi-join with the
+source keys); a BY SOURCE clause can change any row, so it rewrites
+every file. No join is hinted: Spark (with AQE) broadcasts a source
+it can size as small and shuffle-joins a large one.
 """
 
 from __future__ import annotations
 
 import os
 import re
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -395,6 +406,17 @@ def _equi_keys(on_sql: str, tq: str, sq: str, tcols: list[str],
 
 # --- MERGE execution -------------------------------------------------------------
 
+def _clause_index(clauses, first: int = 1):
+    """Per-row index of the first applicable WHEN clause, counted from
+    ``first``; NULL when none applies (the SQL standard's clause
+    order)."""
+    e = None
+    for i, (cond, _act, _p) in enumerate(clauses, first):
+        c = F.expr(cond) if cond else F.lit(True)
+        e = F.when(c, F.lit(i)) if e is None else e.when(c, F.lit(i))
+    return e if e is not None else F.lit(None).cast("int")
+
+
 def merge_into_sql(spark: SparkSession, sql: str,
                    path: str | None = None,
                    catalog: str | None = None) -> int:
@@ -402,25 +424,51 @@ def merge_into_sql(spark: SparkSession, sql: str,
     return the committed version. See the module docstring for the
     supported form and the scope refusals; semantics follow the SQL
     standard (first applicable WHEN clause wins per row, a target row
-    matched by multiple source rows raises), and the commit is
-    ``commit_merge``'s — atomic, stats-pruned, CDF-recorded."""
-    from silvia_spark.operators.manifest_table import (_load_doc,
-                                                       commit_merge,
-                                                       read_snapshot)
+    matched by multiple source rows raises).
+
+    Two phases over one manifest doc, committed through the row-level
+    tail ``commit_merge`` and ``commit_update`` share
+    (``_touched_ranges`` → ``_rewrite_sets`` → ``_read_entries`` →
+    ``_stage_and_commit``: atomic, stats-pruned, CDF-recorded,
+    rebased on a disjoint lost race):
+
+    1. Touched files, chosen from the statement alone. ON pins the
+       partition column and no BY SOURCE clause: the source's key
+       columns ARE the touched partitions and key ranges (one job over
+       the source; the target is not scanned before the rewrite read).
+       ON without the partition column: a key-only semi-join of the
+       target with the source keys; the partitions and key ranges the
+       insert clauses make of the source join the conflict read set
+       (the not-matched decision read them) but not the rewrite set.
+       A BY SOURCE clause: every file.
+    2. One pass over the rewrite set: a left-outer join with the
+       source (carrying a match marker) gives every row its
+       clause index — MATCHED clauses where the marker is set, BY
+       SOURCE clauses where it is not. Deleted rows drop, updated rows
+       take their assignments, every other row passes through as it
+       is. NOT MATCHED inserts are the source rows anti-joined with the
+       rewrite set's matching keys. Files outside the rewrite set —
+       including those of a partition whose only change is an insert —
+       carry by reference."""
+    from silvia_spark.operators.manifest_table import (
+        _doc_stats_cols, _empty_like, _enforce_constraints, _load_doc,
+        _norm, _read_entries, _refuse_mixed_specs, _resolve,
+        _rewrite_sets, _stage_and_commit, _touched_ranges)
 
     spec = parse_merge(sql)
-    root = path or resolve_table_root(spec.target, catalog)
+    root = _norm(path or resolve_table_root(spec.target, catalog))
     doc = _load_doc(root)
-    part_col = doc.get("part_col")
+    part_used = part_col = doc.get("part_col")  # the directory column
     if not part_col:
         raise ValueError(
             "table records no partition column (pre-r08 layout): "
             "commit once via commit_append to migrate")
+    _refuse_mixed_specs(doc, "merge")
     pt = doc.get("part_transform")
     if pt:
         # under a hidden transform the logical schema carries the
-        # SOURCE column; commit_merge expects it as the partition
-        # argument and derives the directory value itself
+        # SOURCE column; the touched set and the staged write derive
+        # the directory value from it
         part_col = pt["source"]
 
     tq = spec.target_alias or _unquote_ident(spec.target).split(".")[-1]
@@ -433,10 +481,10 @@ def merge_into_sql(spark: SparkSession, sql: str,
         raise ValueError(f"target and source share the name {tq!r} — "
                          "alias one of them")
 
-    tgt0 = read_snapshot(spark, root)
+    empty = _empty_like(spark, root, doc)  # the schema, no file read
     src0 = _source_df(spark, spec.source, sq)
-    tcols, scols = list(tgt0.columns), list(src0.columns)
-    schema = {f.name: f.dataType for f in tgt0.schema.fields}
+    tcols, scols = list(empty.columns), list(src0.columns)
+    schema = {f.name: f.dataType for f in empty.schema.fields}
     key_pairs = _equi_keys(spec.on_sql, tq, sq, tcols, scols)
     tkeys = [t for t, _ in key_pairs]
     skeys = [s for _, s in key_pairs]
@@ -449,19 +497,23 @@ def merge_into_sql(spark: SparkSession, sql: str,
                              f"columns {scols}")
     merge_keys = tkeys + ([part_col] if part_col not in tkeys else [])
 
+    def _normalize_assigns(payload):
+        if payload == "*":
+            return {c: f"{sq}.{c}" for c in tcols
+                    if c in scols and c not in tkeys}
+        return payload
+
     # assignment scope checks (see module docstring)
     for cond, act, payload in spec.matched + spec.by_source:
         if act != "update":
             continue
-        assigns = (payload if isinstance(payload, dict)
-                   else {c: f"{sq}.{c}" for c in tcols
-                         if c in scols and c not in tkeys})
+        assigns = _normalize_assigns(payload)
         if payload == "*" and part_col not in tkeys \
                 and part_col in scols:
             raise NotImplementedError(
                 f"UPDATE SET * would assign the partition column "
-                f"{part_col!r} from the source: the keyed merge plan "
-                "cannot move rows between partitions — add "
+                f"{part_col!r} from the source: the keyed merge form "
+                "does not move rows between partitions — add "
                 f"{part_col!r} to ON, or assign columns explicitly")
         for c in assigns:
             if c not in schema:
@@ -469,19 +521,17 @@ def merge_into_sql(spark: SparkSession, sql: str,
             if isinstance(payload, dict) and c in merge_keys:
                 raise NotImplementedError(
                     f"UPDATE SET may not assign {c!r}: it is a merge "
-                    "key (ON key or partition column) — the committed "
-                    "anti-join removes replaced rows by key, so a "
-                    "key-moving update would resurrect the old row")
+                    "key (ON key or partition column) — the keyed "
+                    "merge form (commit_merge's anti-join removes "
+                    "replaced rows by key) does not move rows to "
+                    "another key")
 
-    tgt = tgt0.alias(tq)
-    src = src0.alias(sq)
-
-    def _out_cols(mc_col, upd_assigns, default_side=tq):
+    def _out_cols(mc_col, upd_assigns):
         """Post-merge value per table column: chained per-update-clause
-        CASE over the clause index, defaulting to the kept row."""
+        CASE over the clause index, defaulting to the row as it is."""
         outs = []
         for c in tcols:
-            e = F.col(f"{default_side}.{c}")
+            e = F.col(f"{tq}.{c}")
             for i, assigns in upd_assigns:
                 if c in assigns:
                     e = F.when(mc_col == i,
@@ -489,111 +539,14 @@ def merge_into_sql(spark: SparkSession, sql: str,
             outs.append(e.cast(schema[c]).alias(c))
         return outs
 
-    def _clause_index(clauses):
-        e = None
-        for i, (cond, _act, _p) in enumerate(clauses, 1):
-            c = F.expr(cond) if cond else F.lit(True)
-            e = F.when(c, F.lit(i)) if e is None else e.when(c, F.lit(i))
-        return e if e is not None else F.lit(None).cast("int")
+    ins_clauses = [(cond_, "insert", p) for cond_, p in spec.not_matched]
 
-    def _normalize_assigns(act, payload):
-        if act != "update":
-            return None
-        if payload == "*":
-            return {c: f"{sq}.{c}" for c in tcols
-                    if c in scols and c not in tkeys}
-        return payload
-
-    from pyspark.sql import Window
-
-    changes_parts: list[DataFrame] = []
-
-    def _group_outputs(rows, clauses, side_qual, tag):
-        """Shared matched / by-source engine: evaluate the clause
-        chain per row, find CHANGED key groups with one window pass,
-        re-emit every surviving row of a changed group as 'U' and a
-        'D' marker per deleted row. Rows of untouched groups never
-        enter the change batch — their files carry by reference."""
-        mc = _clause_index(clauses)
-        w = Window.partitionBy(
-            *[F.col(f"{side_qual}.{k}") for k in merge_keys])
-        rows = rows.withColumn("__mc", mc).withColumn(
-            "__touched",
-            F.max(F.when(F.col("__mc").isNotNull(), 1)
-                  .otherwise(0)).over(w))
-        rows = rows.where(F.col("__touched") == 1)
-        del_idx = [i for i, (_c, a, _p) in enumerate(clauses, 1)
-                   if a == "delete"]
-        upd_assigns = [(i, _normalize_assigns(a, p))
-                       for i, (_c, a, p) in enumerate(clauses, 1)
-                       if a == "update"]
-        is_del = (F.col("__mc").isin(del_idx) if del_idx
-                  else F.lit(False))
-        keep = rows.where(F.col("__mc").isNull() | ~is_del)
-        u = keep.select(*_out_cols(F.col("__mc"), upd_assigns,
-                                   default_side=side_qual),
-                        F.lit("U").alias("op"))
-        changes_parts.append(u)
-        if del_idx:
-            d = (rows.where(is_del)
-                 .select(*[(F.col(f"{side_qual}.{c}")
-                            .cast(schema[c]) if c in merge_keys
-                            else F.lit(None).cast(schema[c])).alias(c)
-                           for c in tcols],
-                         F.lit("D").alias("op")))
-            changes_parts.append(d)
-
-    on_expr = F.expr(spec.on_sql)
-    if spec.matched:
-        # SQL-standard nondeterminism guard: a duplicate source key
-        # tuple multi-matches every target row carrying it. Two-stage
-        # so the common case (unique source keys) costs one agg over
-        # the SOURCE only — the target is scanned for the precise
-        # check only when a duplicate actually exists (Delta's rule:
-        # duplicates that match no target row are legal).
-        src_dups = (src0.groupBy(*skeys).count()
-                    .where(F.col("count") > 1).limit(1).count())
-        if src_dups:
-            hit = (src0.groupBy(*skeys)
-                   .agg(F.count(F.lit(1)).alias("__n"))
-                   .where(F.col("__n") > 1)
-                   .join(tgt0.select(
-                       *[F.col(k).alias(sk) for k, sk
-                         in zip(tkeys, skeys)]).distinct(),
-                       skeys, "left_semi").limit(1).count())
-            if hit:
-                raise ValueError(
-                    "MERGE: a target row matches more than one "
-                    "source row — the SQL standard makes this merge "
-                    "nondeterministic; deduplicate the source on the "
-                    "ON keys first")
-        pairs = tgt.join(src, on_expr, "inner")
-        _group_outputs(pairs, spec.matched, tq, "matched")
-
-    if spec.by_source:
-        skv = (src0.select(*[F.col(s).alias(f"__sk{i}")
-                             for i, s in enumerate(skeys)])
-               .distinct())
-        cond = None
-        for i, t in enumerate(tkeys):
-            c = F.col(f"{tq}.{t}") == F.col(f"__sk{i}")
-            cond = c if cond is None else cond & c
-        nms = tgt.join(skv, cond, "left_anti")
-        _group_outputs(nms, spec.by_source, tq, "by_source")
-
-    if spec.not_matched:
-        tkv = (tgt0.select(*[F.col(t).alias(f"__tk{i}")
-                             for i, t in enumerate(tkeys)])
-               .distinct())
-        cond = None
-        for i, s in enumerate(skeys):
-            c = F.col(f"{sq}.{s}") == F.col(f"__tk{i}")
-            cond = c if cond is None else cond & c
-        nm = src.join(tkv, cond, "left_anti")
-        ins_clauses = [(cond_, "insert", p)
-                       for cond_, p in spec.not_matched]
-        mc = _clause_index(ins_clauses)
-        nm = nm.withColumn("__mc", mc).where(F.col("__mc").isNotNull())
+    def _inserted(rows):
+        """Source ``rows`` through the NOT MATCHED INSERT clauses: each
+        row takes its first applicable clause's values, rows no clause
+        applies to drop."""
+        rows = rows.withColumn("__mc", _clause_index(ins_clauses)) \
+            .where(F.col("__mc").isNotNull())
         outs = []
         for c in tcols:
             e = F.lit(None).cast(schema[c])
@@ -612,26 +565,131 @@ def merge_into_sql(spark: SparkSession, sql: str,
                         continue
                 e = F.when(F.col("__mc") == i, v).otherwise(e)
             outs.append(e.cast(schema[c]).alias(c))
-        changes_parts.append(nm.select(*outs, F.lit("I").alias("op")))
+        return rows.select(*outs)
 
-    changes = changes_parts[0]
-    for p in changes_parts[1:]:
-        changes = changes.unionByName(p)
+    on_expr = F.expr(spec.on_sql)
+    src_keys = src0.select(*skeys)
+    stats_cols = _doc_stats_cols(root, doc)
+    # the key columns the per-file min/max index covers shrink the
+    # rewrite set INSIDE touched partitions
+    key_cols = [k for k in tkeys if k != part_col and k in stats_cols]
 
-    if part_col not in tkeys:
-        # the anti-join removes replaced rows by merge_keys (which
-        # include part_col): a NULL partition value never equi-matches,
-        # so a changed group holding one would leave its old rows
-        # behind — refuse rather than duplicate
-        bad = changes.where(F.col(part_col).isNull()
-                            & (F.col("op") != "I")).limit(1).count()
-        if bad:
+    # phase 1: the touched partitions and key ranges
+    read_plan = None  # the conflict read set, when wider than plan
+    if spec.by_source:
+        touched = {e["partition"] for e in _resolve(root, doc)}
+        plan = (touched, {p: {} for p in touched})
+    elif part_col in tkeys:
+        plan = _touched_ranges(
+            src0.select(*[F.col(s).cast(schema[t]).alias(t)
+                          for t, s in key_pairs]),
+            doc, part_col, key_cols)
+    else:
+        # rewrite: the partitions and key ranges of the target rows a
+        # source key matches. Read only: those of the rows the insert
+        # clauses make of EVERY source row (a superset of the
+        # inserts) — the not-matched decision read there, so a
+        # concurrent commit adding files in that range must conflict
+        pk = list(dict.fromkeys(tkeys + [part_col]))
+        entries = _resolve(root, doc)
+        scans = ([_read_entries(spark, root, doc, entries)
+                  .select(*pk).alias(tq)
+                  .join(src_keys.alias(sq), on_expr, "left_semi")
+                  .select(*pk, F.lit(False).alias("__ro"))]
+                 if entries else [])
+        if ins_clauses:
+            scans.append(_inserted(src0.alias(sq))
+                         .select(*pk, F.lit(True).alias("__ro")))
+        plan = (set(), {})
+        if scans:
+            plan = _touched_ranges(reduce(DataFrame.unionByName, scans),
+                                   doc, part_col, key_cols,
+                                   read_only="__ro")
+            read_plan = (set(plan[1]), plan[1])
+    sets = _rewrite_sets(root, doc, *plan)
+    rewrite = sets[1]
+    cur = _read_entries(spark, root, doc, rewrite) if rewrite else None
+
+    if spec.matched and cur is not None:
+        # SQL-standard nondeterminism guard: a duplicate source key
+        # tuple multi-matches every target row carrying it. Two-stage
+        # so the common case (unique source keys) costs one agg over
+        # the SOURCE only; only an actual duplicate is checked against
+        # the rewrite set, which holds every row the source can match
+        # (Delta's rule: duplicates that match no target row are legal)
+        dups = (src0.groupBy(*skeys)
+                .agg(F.count(F.lit(1)).alias("__n"))
+                .where(F.col("__n") > 1))
+        if dups.limit(1).count() and (
+                dups.alias(sq)
+                .join(cur.select(*tkeys).alias(tq), on_expr, "left_semi")
+                .limit(1).count()):
+            raise ValueError(
+                "MERGE: a target row matches more than one "
+                "source row — the SQL standard makes this merge "
+                "nondeterministic; deduplicate the source on the "
+                "ON keys first")
+
+    # phase 2: one pass over the rewrite set
+    clauses = spec.matched + spec.by_source
+    out = written = None
+    if cur is not None:
+        # without MATCHED clauses the marker needs the keys only — and
+        # distinct keys keep a duplicate source key from duplicating
+        # the target row it matches
+        rhs = (src0 if spec.matched else src_keys.distinct()) \
+            .withColumn("__m", F.lit(True))
+        rows = (cur.alias(tq)
+                .join(rhs.alias(sq), on_expr, "left_outer")
+                .withColumn("__mc", F.when(
+                    F.col("__m"), _clause_index(spec.matched))
+                    .otherwise(_clause_index(
+                        spec.by_source, len(spec.matched) + 1))))
+        if part_col not in tkeys and any(
+                e["partition"] == "__HIVE_DEFAULT_PARTITION__"
+                for e in rewrite) and (
+                rows.where(F.col("__mc").isNotNull()
+                           & F.col(f"{tq}.{part_col}").isNull())
+                .limit(1).count()):
+            # kept scope (module docstring): the single pass itself
+            # would rewrite a NULL-partition row correctly
             raise NotImplementedError(
                 f"MERGE touching rows with NULL {part_col!r} needs "
-                "the partition column in ON (NULL keys never match "
-                "the remove-side anti-join)")
+                "the partition column in ON")
+        del_idx = [i for i, (_c, a, _p) in enumerate(clauses, 1)
+                   if a == "delete"]
+        upd_assigns = [(i, _normalize_assigns(p))
+                       for i, (_c, a, p) in enumerate(clauses, 1)
+                       if a == "update"]
+        is_del = (F.col("__mc").isin(del_idx) if del_idx
+                  else F.lit(False))
+        kept = rows.where(F.col("__mc").isNull() | ~is_del) \
+            .select(*_out_cols(F.col("__mc"), upd_assigns), "__mc")
+        out = kept.drop("__mc")
+        if upd_assigns:
+            written = kept.where(F.col("__mc").isNotNull()).drop("__mc")
 
-    return commit_merge(spark, root, changes, merge_keys, part_col)
+    if ins_clauses:
+        nm = src0.alias(sq)
+        if cur is not None:
+            hit = (cur.select(*tkeys).alias(tq)
+                   .join(src_keys.alias(sq), on_expr, "left_semi"))
+            nm = nm.join(hit.alias(tq), on_expr, "left_anti")
+        ins = _inserted(nm)
+        out = ins if out is None else out.unionByName(ins)
+        written = ins if written is None else written.unionByName(ins)
+
+    # CHECK constraints: only updated and inserted rows need validation
+    # (the kept rows passed when they were written); BEFORE staging so
+    # a violation leaves nothing on disk
+    if written is not None:
+        _enforce_constraints(written, doc, "merge's updated and "
+                                           "inserted rows")
+    out = empty if out is None else out.select(*tcols)
+    # CDF: old = the rewritten files' live rows, new = the merge output
+    return _stage_and_commit(spark, root, doc, "merge", plan, sets, out,
+                             cur, out, part_used=part_used,
+                             stats_cols=stats_cols, read_plan=read_plan)
 
 
 # --- UPDATE / DELETE ------------------------------------------------------------

@@ -1465,11 +1465,41 @@ from pyspark.sql import Row  # noqa: E402  (concurrency tests below)
 
 # The row-level writers under race: each takes row k=1 in partition
 # "a" — merge/update set v = 101.0, the deletes remove the row. All
-# four share one commit tail, so all four must rebase when disjoint
-# and raise when not.
+# share one commit tail, so all must rebase when disjoint and raise
+# when not.
 def _set_k1_merge(spark, root):
     return mt.commit_merge(spark, root, spark.createDataFrame(
         [Row(k=1, part="a", v=101.0, op="U")]), ["k", "part"], "part")
+
+
+def _set_k1_merge_sql(spark, root):
+    from silvia_spark.sources.sql_dml import merge_into_sql
+
+    spark.createDataFrame([Row(k=1, part="a", v=101.0)]) \
+        .createOrReplaceTempView("race_merge_src")
+    return merge_into_sql(spark, f"""
+        MERGE INTO `{root}` AS t USING race_merge_src AS s
+        ON t.k = s.k AND t.part = s.part
+        WHEN MATCHED THEN UPDATE SET v = s.v""")
+
+
+def _upsert_sql_unpinned(spark, root, rows):
+    """SQL MERGE whose ON omits the partition column, with an INSERT
+    clause: touched files come from a key semi-join of the table."""
+    from silvia_spark.sources.sql_dml import merge_into_sql
+
+    spark.createDataFrame(rows).select("k", "v", "part") \
+        .createOrReplaceTempView("race_upsert_src")
+    return merge_into_sql(spark, f"""
+        MERGE INTO `{root}` AS t USING race_upsert_src AS s
+        ON t.k = s.k
+        WHEN MATCHED THEN UPDATE SET v = s.v
+        WHEN NOT MATCHED THEN INSERT *""")
+
+
+def _set_k1_upsert_sql(spark, root):
+    return _upsert_sql_unpinned(spark, root,
+                                [Row(k=1, part="a", v=101.0)])
 
 
 def _set_k1_update(spark, root):
@@ -1487,6 +1517,8 @@ def _drop_k1_by_predicate(spark, root):
 
 ROW_WRITERS = {
     "merge": ("merge", _set_k1_merge, {(1, 101.0)}),
+    "merge_sql": ("merge", _set_k1_merge_sql, {(1, 101.0)}),
+    "upsert_sql_unpinned": ("merge", _set_k1_upsert_sql, {(1, 101.0)}),
     "update": ("update", _set_k1_update, {(1, 101.0)}),
     "delete_keys": ("delete", _drop_k1_by_keys, set()),
     "delete_where": ("delete", _drop_k1_by_predicate, set()),
@@ -1593,6 +1625,35 @@ def test_overlapping_merges_still_raise(spark, tmp_path, monkeypatch,
     # the competing merge's result is intact, the loser left no trace
     assert {(r["k"], r["v"]) for r in mt.read_snapshot(spark, root)
             .where("k IN (1, 3)").collect()} == {(1, 1.0), (3, 303.0)}
+
+
+@pytest.mark.parametrize("winner_k,conflict", [(12, True), (14, False)])
+def test_unpinned_merge_insert_reads_its_key_range(spark, tmp_path,
+                                                    monkeypatch, winner_k,
+                                                    conflict):
+    """An unpinned SQL MERGE decides NOT MATCHED by reading the key
+    range its inserts land in, though it rewrites no file there. A
+    concurrent commit that adds a file in that range (the same k=12
+    insert) must make it refuse — rebasing would land k=12 twice — and
+    one outside the range (k=14) lets it rebase."""
+    root = os.path.join(str(tmp_path), "tbl")
+    mt.create_table(spark.createDataFrame(
+        [Row(k=i, part=("a" if i % 2 else "b"), v=float(i))
+         for i in range(1, 11)]).coalesce(1).select("k", "v", "part"),
+        root, "part", stats_cols=["k"])
+    _race_on(monkeypatch, "merge", lambda: _upsert_sql_unpinned(
+        spark, root, [Row(k=winner_k, part="b", v=1.0)]))
+    write = lambda: _upsert_sql_unpinned(  # noqa: E731
+        spark, root, [Row(k=12, part="b", v=2.0)])
+    if conflict:
+        with pytest.raises(RuntimeError,
+                           match="merge conflict: .*rewrite set"):
+            write()
+    else:
+        write()
+    got = sorted((r["k"], r["v"]) for r in mt.read_snapshot(spark, root)
+                 .where("k > 10").collect())
+    assert got == ([(12, 1.0)] if conflict else [(12, 2.0), (14, 1.0)])
 
 
 @pytest.mark.parametrize("writer", list(ROW_WRITERS))

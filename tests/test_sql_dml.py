@@ -1,8 +1,10 @@
 """SQL MERGE/UPDATE/DELETE text entry points (r14 — r13 verdict #1
 and #9): statement parsing, standard-SQL clause semantics (first
 applicable WHEN wins, multi-match raises, NULL predicates keep),
-routing into commit_merge / commit_update / commit_delete, and parity
-of constraints/CDF/time-travel with the Python commit paths."""
+MERGE's two phases (touched files from the statement, one rewrite
+pass) and UPDATE/DELETE's routing into commit_update / commit_delete,
+and parity of constraints/CDF/time-travel with the Python commit
+paths."""
 
 from __future__ import annotations
 
@@ -471,3 +473,215 @@ def test_one_prescan_job_per_dml_commit(spark, tmp_path, monkeypatch,
     got = {r.k: r.v for r in read_snapshot(spark, root).collect()}
     assert got.get(1) == (None if stmt == "delete" else 100.0)
     assert (99 in got) == rebase
+
+
+# --- MERGE: two phases, one pass over the touched files -----------------
+
+
+def _etl_shaped(spark, tmp_path, n=400):
+    """A lake table built by ten appends (partitioned by event_type)
+    and a U/D/I change batch read from parquet, as silvia's own
+    stream → lake job merges it. A parquet source has a size Spark
+    can plan with; a source of unknown size (an RDD-backed frame) is
+    joined by shuffle, which adds jobs."""
+    from silvia_spark.operators.manifest_table import commit_append
+
+    types = ["click", "view", "error", "purchase", "signup"]
+    root = os.path.join(str(tmp_path), "lake")
+    step = n // 10
+    for b in range(10):
+        commit_append(spark, root, spark.createDataFrame(
+            [(i, i * 7 % 100, types[i % 5], float(i % 97))
+             for i in range(b * step, (b + 1) * step)],
+            "event_id BIGINT, user_id BIGINT, event_type STRING, "
+            "value DOUBLE"), "event_type")
+    changes = os.path.join(str(tmp_path), "changes.parquet")
+    spark.createDataFrame(
+        [(i, types[i % 5], 1000.0 + i, "U") for i in range(0, n, 10)]
+        + [(i, types[i % 5], 0.0, "D") for i in range(5, n, 20)]
+        + [(10_000_000 + i, types[i % 5], 1.0, "I") for i in range(10)],
+        "event_id BIGINT, event_type STRING, value DOUBLE, op STRING") \
+        .write.parquet(changes)
+    spark.read.parquet(changes).createOrReplaceTempView("etl_changes")
+    return root, f"""
+        MERGE INTO `{root}` AS t USING etl_changes AS s
+        ON t.event_id = s.event_id AND t.event_type = s.event_type
+        WHEN MATCHED AND s.op = 'D' THEN DELETE
+        WHEN MATCHED AND s.op = 'U' THEN UPDATE SET value = s.value
+        WHEN NOT MATCHED AND s.op = 'I' THEN INSERT
+          (event_id, user_id, event_type, value)
+          VALUES (s.event_id, 0, s.event_type, s.value)"""
+
+
+def _check_etl_merged(spark, root, n=400):
+    got = {r.event_id: r.value for r in
+           read_snapshot(spark, root).collect()}
+    assert len(got) == n - n // 20 + 10
+    assert all(got[i] == 1000.0 + i for i in range(0, n, 10))
+    assert not any(i in got for i in range(5, n, 20))
+    assert got[10_000_003] == 1.0 and got[7] == 7.0
+
+
+def test_etl_shaped_merge_runs_at_most_12_jobs(spark, tmp_path):
+    """The stream → lake job's MERGE (ON pins the partition column) is
+    one source pre-scan, the source-only duplicate check and one
+    rewrite pass: at most 12 Spark jobs where the change-batch window
+    plan ran 20."""
+    from tests.test_minhash_kernel import _jobs_in_group
+
+    root, sql = _etl_shaped(spark, tmp_path)
+    sc = spark.sparkContext
+    group = "etl-shaped-merge"
+    sc.setJobGroup(group, group)
+    try:
+        merge_into_sql(spark, sql)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = _jobs_in_group(spark, group)
+    assert jobs <= 12, f"MERGE ran {jobs} Spark jobs"
+    _check_etl_merged(spark, root)
+
+
+def test_pinned_partition_merge_reads_target_once(spark, tmp_path,
+                                                  monkeypatch):
+    """ON pins the partition column, no BY SOURCE clause: the touched
+    set comes from the source's keys, so the target is read exactly
+    once — the rewrite set — and never as a whole snapshot."""
+    from silvia_spark.operators import manifest_table as mt
+
+    root, sql = _etl_shaped(spark, tmp_path)
+    calls = {"read_entries": 0, "read_snapshot": 0, "prescan_files": []}
+    real_entries, real_ranges = mt._read_entries, mt._touched_ranges
+
+    def entries(*a, **kw):
+        calls["read_entries"] += 1
+        return real_entries(*a, **kw)
+
+    def snapshot(*a, **kw):
+        calls["read_snapshot"] += 1
+        raise AssertionError("MERGE read the whole snapshot")
+
+    def ranges(src, *a, **kw):
+        calls["prescan_files"] += src.inputFiles()
+        return real_ranges(src, *a, **kw)
+
+    monkeypatch.setattr(mt, "_read_entries", entries)
+    monkeypatch.setattr(mt, "read_snapshot", snapshot)
+    monkeypatch.setattr(mt, "_touched_ranges", ranges)
+    merge_into_sql(spark, sql)
+    assert calls["read_entries"] == 1 and calls["read_snapshot"] == 0
+    assert not [f for f in calls["prescan_files"] if root in f], (
+        "the pre-scan read target files")
+    monkeypatch.undo()
+    _check_etl_merged(spark, root)
+
+
+def test_merge_leaves_join_strategy_to_spark(spark, tmp_path,
+                                             monkeypatch):
+    """No MERGE join carries a broadcast hint: with broadcasting
+    turned off (a source too large to collect on the driver), the
+    rewrite plan shuffle-joins the source instead of broadcasting it."""
+    from silvia_spark.operators import manifest_table as mt
+
+    root, sql = _etl_shaped(spark, tmp_path)
+    plans = []
+    real = mt._stage_and_commit
+
+    def spy(spark_, root_, doc, op, plan, sets, out, *a, **kw):
+        plans.append(out._jdf.queryExecution().executedPlan().toString())
+        return real(spark_, root_, doc, op, plan, sets, out, *a, **kw)
+
+    monkeypatch.setattr(mt, "_stage_and_commit", spy)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        merge_into_sql(spark, sql)
+    finally:
+        spark.conf.set(key, old)
+    assert len(plans) == 1 and "Join" in plans[0]
+    assert "Broadcast" not in plans[0], plans[0]
+    monkeypatch.undo()
+    _check_etl_merged(spark, root)
+
+
+def _two_partitions(spark, tmp_path):
+    """k 1..5 in partition a, k 11/13/15 in b; one file per partition,
+    k stats-indexed."""
+    root = os.path.join(str(tmp_path), "tbl")
+    df = spark.createDataFrame(
+        [Row(k=k, v=float(k), part="a") for k in range(1, 6)]
+        + [Row(k=k, v=float(k), part="b") for k in (11, 13, 15)])
+    create_table(df.coalesce(1).select("k", "v", "part"), root, "part",
+                 stats_cols=["k"])
+    return root
+
+
+def _files_of(root, part):
+    return {e["path"] for e in load_manifest(root)["files"]
+            if e["partition"] == part}
+
+
+def test_unpinned_merge_carries_insert_only_partition(spark, tmp_path):
+    """ON without the partition column: the touched set is the target
+    rows that match a source key. Partition b's only change is an
+    INSERT whose key (12) lies inside b's file range, so its file
+    carries by reference instead of being rewritten."""
+    root = _two_partitions(spark, tmp_path)
+    a0, b0 = _files_of(root, "a"), _files_of(root, "b")
+    spark.createDataFrame([Row(k=1, nv=100.0, p="a"),
+                           Row(k=12, nv=7.0, p="b")]) \
+        .createOrReplaceTempView("mins")
+    merge_into_sql(spark, f"""
+        MERGE INTO `{root}` AS t USING mins AS s ON t.k = s.k
+        WHEN MATCHED THEN UPDATE SET v = s.nv
+        WHEN NOT MATCHED THEN INSERT (k, v, part)
+             VALUES (s.k, s.nv, s.p)""")
+    b1 = _files_of(root, "b")
+    assert b0 < b1 and len(b1) == 2, "b's existing file was rewritten"
+    assert not a0 & _files_of(root, "a"), "a's file was not rewritten"
+    got = _rows(spark, root)
+    assert (1, 100.0, "a") in got and (12, 7.0, "b") in got
+    assert len(got) == 9
+
+
+def test_by_source_merge_rewrites_every_file(spark, tmp_path,
+                                             monkeypatch):
+    """A BY SOURCE clause can change any row the source does not
+    match, so phase 1 takes every file from the manifest and runs no
+    pre-scan job."""
+    from silvia_spark.operators import manifest_table as mt
+
+    root = _two_partitions(spark, tmp_path)
+    before = {e["path"] for e in load_manifest(root)["files"]}
+    monkeypatch.setattr(mt, "_touched_ranges", lambda *a, **kw: (
+        pytest.fail("BY SOURCE MERGE ran a pre-scan")))
+    spark.createDataFrame([Row(k=1), Row(k=13)]) \
+        .createOrReplaceTempView("mbs2")
+    merge_into_sql(spark, f"""
+        MERGE INTO `{root}` AS t USING mbs2 AS s ON t.k = s.k
+        WHEN NOT MATCHED BY SOURCE AND t.k > 4 THEN DELETE""")
+    after = {e["path"] for e in load_manifest(root)["files"]}
+    assert not before & after
+    assert [k for k, _v, _p in _rows(spark, root)] == [1, 2, 3, 4, 13]
+
+
+def test_merge_refuses_null_partition_rows_without_part_in_on(
+        spark, tmp_path):
+    root = os.path.join(str(tmp_path), "tbl")
+    create_table(spark.createDataFrame(
+        [Row(k=1, part=None, v=1.0), Row(k=2, part="a", v=2.0)])
+        .select("k", "v", "part"), root, "part")
+    spark.createDataFrame([Row(k=1, nv=9.0), Row(k=2, nv=9.0)]) \
+        .createOrReplaceTempView("mnull")
+    v0 = current_version(root)
+    with pytest.raises(NotImplementedError, match="NULL 'part'"):
+        merge_into_sql(spark, f"""
+            MERGE INTO `{root}` AS t USING mnull AS s ON t.k = s.k
+            WHEN MATCHED THEN UPDATE SET v = s.nv""")
+    assert current_version(root) == v0
+    # a statement that leaves the NULL-partition row alone commits
+    merge_into_sql(spark, f"""
+        MERGE INTO `{root}` AS t USING mnull AS s ON t.k = s.k
+        WHEN MATCHED AND t.k = 2 THEN UPDATE SET v = s.nv""")
+    assert _rows(spark, root) == [(1, 1.0, None), (2, 9.0, "a")]
