@@ -92,7 +92,6 @@ def _make_cos_arrow():
 # Created lazily: pandas_udf() needs an active SparkSession, and this module
 # imports at registry load, before any session exists.
 _COS_ARROW = None
-_COS_ARROW_ND = None
 
 
 def cosine(a, b):
@@ -105,34 +104,6 @@ def cosine(a, b):
     if _COS_ARROW is None:
         _COS_ARROW = _make_cos_arrow()
     return _COS_ARROW(a, b)
-
-
-def cosine_once(a, b):
-    """``cosine`` marked ``asNondeterministic()`` — for the
-    project-then-threshold shape (``.select(cos.alias(c)).where(c >=
-    τ)``): Catalyst pushes the filter through the projection by
-    SUBSTITUTING the UDF into the predicate, so the Arrow kernel ran
-    once in the Filter and again in the Project — every surviving pair
-    paid the cosine twice (r10 verdict blemish, two ArrowEvalPython
-    nodes in the sim_ann_lsh plan). The marker only disables that
-    duplicating rewrite; the kernel itself is pure, so values are
-    unchanged — verified by the family's exact all-pairs oracles.
-    Plain ``.where(cosine(...) >= τ)`` filters need no marker (single
-    evaluation already).
-
-    SCALE CAVEAT (measured, r11): the nondeterministic marker also
-    pins the expression's evaluation barrier in ways that blew the
-    executor heap on the candidate-dense sf1 multiprobe regime (195 M
-    pairs; the r10 double-eval plan survived the same input). The
-    verify tails therefore moved to ``score_pairs_threshold`` — a
-    mapInPandas pass that thresholds INSIDE the kernel: one Arrow
-    crossing, streaming batches, no Catalyst predicate to duplicate
-    and no marker side effects. Kept for the top-k shapes where no
-    threshold filter follows the projection."""
-    global _COS_ARROW_ND
-    if _COS_ARROW_ND is None:
-        _COS_ARROW_ND = _make_cos_arrow().asNondeterministic()
-    return _COS_ARROW_ND(a, b)
 
 
 def score_pairs_threshold(joined, tau: float = 0.4,
@@ -444,11 +415,13 @@ ORDER BY doc_a, doc_b
 """
 
 
-def _shingles(df: DataFrame) -> DataFrame:
+def _shingles(df: DataFrame, keys=("doc_id",)) -> DataFrame:
+    """``keys`` plus ``sh``, the distinct 3-word shingles of the word
+    array ``w``."""
     # Guarded against <3-word docs: sequence(0, n) with n < 0 is DESCENDING
     # (never empty) in Spark, which would fabricate out-of-range shingles.
     return df.select(
-        "doc_id",
+        *keys,
         F.array_distinct(F.expr(
             "if(size(w) >= 3,"
             " transform(sequence(0, size(w)-3),"
@@ -472,49 +445,6 @@ def _hashed_shingles(hash_fn):
     elements."""
     return F.flatten(F.transform(
         F.array("sh"), lambda a: F.transform(a, hash_fn)))
-
-
-def _verify_jaccard_pairs(d: DataFrame, cand: DataFrame,
-                          slot: str) -> DataFrame:
-    """Exact 3-shingle-Jaccard verify of the MinHash dedup's banded
-    candidate pairs: restrict the corpus to the CANDIDATE doc_ids
-    (broadcast semi-join — guide §3.2: reduce the big side before it is
-    processed; candidates are banding-selected, so the id set is orders
-    of magnitude smaller than the corpus at any scale), shingle only
-    those docs ONCE into a persisted slot both join sides read, and
-    score |A∩B| / |A∪B| ≥ 0.8. Before r14 the dedup re-derived the FULL
-    corpus shingle table per join side — two more tokenize+shingle
-    passes over every document (measured: the whole verify tail drops
-    1.7 s → 0.4 s at sf1). Pair set and jaccard values are unchanged:
-    the main join only ever touched candidate ids."""
-    from silvia_spark.io import managed_persist
-
-    d = d.select("doc_id", F.split(F.lower("text"), " ").alias("w"))
-    # A cold run's broadcast below stays within broadcastTimeout with no
-    # action at plan build: AQE plans the persisted slot as its own
-    # TableCacheQueryStage, materialized before the BroadcastQueryStage
-    # above it, so the broadcast job reads the cache instead of running
-    # the banded-candidate subtree (tests/test_minhash_kernel.py).
-    cand = managed_persist(cand, f"{slot}.cand")
-    ids = (cand.select(F.col("doc_a").alias("doc_id"))
-           .union(cand.select(F.col("doc_b").alias("doc_id")))
-           .distinct())
-    shc = managed_persist(
-        _shingles(d.join(F.broadcast(ids), "doc_id", "leftsemi")),
-        f"{slot}.cand_shingles")
-    sa = shc.select(F.col("doc_id").alias("doc_a"),
-                    F.col("sh").alias("sh_a"))
-    sb = shc.select(F.col("doc_id").alias("doc_b"),
-                    F.col("sh").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
-    return (
-        cand.join(sa, "doc_a").join(sb, "doc_b")
-        .select("doc_a", "doc_b", (inter / union).alias("j"))
-        .where(F.col("j") >= 0.8)
-        .select("doc_a", "doc_b", F.round("j", 6).alias("jaccard"))
-        .orderBy("doc_a", "doc_b")
-    )
 
 
 def _minhash_bands_gen(batches):
@@ -565,16 +495,20 @@ def dedup_docs_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     pmod(xxhash64(shingle), 2³¹-1); ONE mapInArrow kernel
     (``_minhash_bands_gen``) emits 32 exact band keys per doc; the
     within-bucket pairs of each (band_id, band_key) are deduplicated
-    and exact-Jaccard verified. The signature is one map-only pass and
-    the plan build runs no Spark job. The oracle is the exact all-pairs
+    and exact-Jaccard verified in one pass: each pair explodes into its
+    two doc ids, joins the documents once, re-shingles them and groups
+    back to one scored row (filter-then-refine, the refine once per
+    candidate pair). Nothing is cached and no broadcast is forced, so
+    the signature kernel runs once, inside the candidate plan. The
+    signature is one map-only pass and the plan build runs no Spark
+    job. The oracle is the exact all-pairs
     query, so the hash check also proves LSH recall = 1 on this corpus
     (planted pairs are all ≥0.8; 32×2 banding detects jaccard 0.8 with
     p ≈ 1-5e-15).
     """
     docs = load_table(spark, sf_dir, "documents")
-    sh = _shingles(docs.select(
-        "doc_id", F.split(F.lower("text"), " ").alias("w")))
-    h = sh.select("doc_id", _hashed_shingles(
+    words = docs.select("doc_id", F.split(F.lower("text"), " ").alias("w"))
+    h = _shingles(words).select("doc_id", _hashed_shingles(
         lambda s: F.pmod(F.xxhash64(s), F.lit(_MH_PRIME))).alias("h"))
     bands = h.mapInArrow(
         _minhash_bands_gen,
@@ -584,9 +518,23 @@ def dedup_docs_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
             .where(F.size("ids") > 1)
             .select(F.expr(_BUCKET_PAIRS))
             .distinct())
-    # r14 §11: candidate-pruned exact verify (was: two more FULL-corpus
-    # tokenize+shingle passes, one per join side).
-    return _verify_jaccard_pairs(docs, cand, "dedup_docs_minhash")
+    # exact verify, one pass: each pair joins its two docs (no hint: AQE
+    # broadcasts or shuffles), shingles them and scores |A∩B| / |A∪B|
+    # (both sizes are symmetric, so the order of the two sets is moot)
+    pair_sh = (_shingles(
+        cand.select("doc_a", "doc_b",
+                    F.explode(F.array("doc_a", "doc_b")).alias("doc_id"))
+        .join(words, "doc_id"), ("doc_a", "doc_b"))
+        .groupBy("doc_a", "doc_b").agg(F.collect_list("sh").alias("s")))
+    a, b = F.col("s")[0], F.col("s")[1]
+    inter = F.size(F.array_intersect(a, b)).cast("double")
+    union = F.size(F.array_union(a, b)).cast("double")
+    return (
+        pair_sh.select("doc_a", "doc_b", (inter / union).alias("j"))
+        .where(F.col("j") >= 0.8)
+        .select("doc_a", "doc_b", F.round("j", 6).alias("jaccard"))
+        .orderBy("doc_a", "doc_b")
+    )
 
 
 # --- J3: brute-force cosine top-k --------------------------------------------

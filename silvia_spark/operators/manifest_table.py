@@ -65,7 +65,7 @@ import os
 import re
 import time
 import uuid
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
@@ -1569,8 +1569,9 @@ def read_snapshot(spark: SparkSession, path: str,
 
 
 def _touched_ranges(src: DataFrame, doc: dict, part_col: str,
-                    key_cols: list[str], read_only: str | None = None
-                    ) -> tuple[set[str], dict]:
+                    key_cols: list[str], read_only: str | None = None,
+                    unique: list[str] | None = None
+                    ) -> tuple[set[str], dict, bool]:
     """The ONE driver pre-scan job of a row-level commit: the partitions
     ``src`` (a change batch, delete keys, or the predicate's matching
     rows) touches, plus per partition the [min, max] of every
@@ -1587,13 +1588,23 @@ def _touched_ranges(src: DataFrame, doc: dict, part_col: str,
     ``(set(rng), rng)`` — but a partition none of whose rows is a write
     stays out of ``touched``, so its files carry by reference. A
     partition holding both kinds keeps one range over all its rows
-    (conservative: it can only widen the rewrite set)."""
+    (conservative: it can only widen the rewrite set).
+
+    The third value, a MERGE's duplicate-key probe, is True when some
+    partition holds more written rows than distinct ``unique`` tuples
+    (one holding NULLs counts too); False without ``unique``."""
     pt = doc.get("part_transform")
     aggs = [a for k in key_cols
             for a in (F.min(k).alias(f"__lo_{k}"),
                       F.max(k).alias(f"__hi_{k}"))]
     if read_only is not None:
         aggs.append(F.min(read_only).alias("__ro"))
+    if unique:
+        tup = F.struct(*unique)
+        if read_only is not None:
+            tup = F.when(~F.col(read_only), tup)  # NULL: not counted
+        aggs += [F.count(tup).alias("__n"),
+                 F.countDistinct(tup).alias("__nd")]
     pexpr = (_transform_expr(pt) if pt
              else F.col(part_col)).cast("string")
     rows = (src.groupBy(pexpr.alias("__p")).agg(*aggs) if aggs else
@@ -1605,8 +1616,8 @@ def _touched_ranges(src: DataFrame, doc: dict, part_col: str,
 
     rng = {pkey(r): {k: (r[f"__lo_{k}"], r[f"__hi_{k}"])
                      for k in key_cols} for r in rows}
-    return {pkey(r) for r in rows
-            if read_only is None or not r["__ro"]}, rng
+    return ({pkey(r) for r in rows if read_only is None or not r["__ro"]},
+            rng, bool(unique) and any(r["__n"] > r["__nd"] for r in rows))
 
 
 def _rewrite_sets(root: str, doc: dict, touched: set[str], rng: dict
@@ -1693,7 +1704,8 @@ def _commit_rewrite(root: str, doc: dict, op: str,
                     staged_epoch: int,
                     repointed: Sequence[dict] = (),
                     staged: Sequence[str] = (),
-                    read_plan: tuple[set[str], dict] | None = None
+                    read_plan: Callable[[dict], tuple[set[str], dict]]
+                    | None = None
                     ) -> int:
     """The commit tail shared by merge, update and delete. The new
     manifest holds the carried segments by reference, ONE reused
@@ -1711,18 +1723,19 @@ def _commit_rewrite(root: str, doc: dict, op: str,
     nothing in ``_table_sig`` changed and the table holds one partition
     spec. Delta's read-set/write-set disjointness check, done on the
     pruned file lists the manifest already carries. ``read_plan``
-    (default ``plan``) is a wider plan whose rewrite set is the read
-    set in (a) — a MERGE's not-matched decision reads partitions it
-    does not rewrite; it covers ``plan``'s partitions with the same
-    ranges, so its set unchanged implies ``plan``'s is. Anything else
-    raises ``"<op> conflict: …"``; the staged files stay adopted across
+    (default: ``plan`` itself) maps a snapshot to a wider plan whose
+    rewrite set is the read set in (a) — a MERGE's not-matched decision
+    reads partitions it does not rewrite, including ones a concurrent
+    commit creates; it covers ``plan``'s partitions with ranges at
+    least as wide, so its set unchanged implies ``plan``'s is. Anything
+    else raises ``"<op> conflict: …"``; the staged files stay adopted across
     attempts (only the manifest reference is rebuilt, like
     commit_append's optimistic retry)."""
     carried, rewrite, rehome = sets
 
     def read_set(doc_, rewrite_):
         if read_plan is not None:
-            rewrite_ = _rewrite_sets(root, doc_, *read_plan)[1]
+            rewrite_ = _rewrite_sets(root, doc_, *read_plan(doc_))[1]
         return {(e["path"], e.get("dv")) for e in rewrite_}
 
     read0 = read_set(doc, rewrite)
@@ -1791,7 +1804,8 @@ def _stage_and_commit(spark: SparkSession, root: str, doc: dict, op: str,
                       out: DataFrame, old_rows: DataFrame | None,
                       new_rows: DataFrame, *, part_used: str,
                       stats_cols: list[str],
-                      read_plan: tuple[set[str], dict] | None = None
+                      read_plan: Callable[[dict], tuple[set[str], dict]]
+                      | None = None
                       ) -> int:
     """Stage ``out`` — the rewrite set's replacement rows plus any new
     ones — and commit it through ``_commit_rewrite``: the tail of
@@ -1832,6 +1846,12 @@ def _refuse_mixed_specs(doc: dict, op: str) -> None:
             f"commit_compaction to migrate, then {op}")
 
 
+_MULTI_MATCH = (
+    "MERGE: a target row matches more than one source row — the SQL "
+    "standard makes this merge nondeterministic; deduplicate the source "
+    "on the merge keys first")
+
+
 def commit_merge(spark: SparkSession, path: str, changes: DataFrame,
                  keys: list[str], part_col: str) -> int:
     """merge_keyed's MERGE plan, committed atomically across ALL touched
@@ -1852,6 +1872,11 @@ def commit_merge(spark: SparkSession, path: str, changes: DataFrame,
     (5) the new manifest (untouched entries by reference + replacement
         entries) is written and ``_current`` flips (``_commit_rewrite``:
         a lost race rebases when the rewrite sets are disjoint).
+
+    A batch with more written (U/I) rows for a key than the table
+    holds of it raises ``_MULTI_MATCH`` before staging, as SQL MERGE
+    does; only a batch the pre-scan's probe sees repeat a key pays that
+    check against the rewrite set.
 
     A reader can never observe a half-merged table: it resolves either
     the old manifest (every partition pre-merge) or the new one (every
@@ -1875,7 +1900,9 @@ def commit_merge(spark: SparkSession, path: str, changes: DataFrame,
     # the key columns the per-file min/max index covers shrink the
     # rewrite set INSIDE touched partitions
     key_cols = [k for k in keys if k != part_col and k in stats_cols]
-    plan = _touched_ranges(changes, doc, part_col, key_cols)
+    touched, rng, dup = _touched_ranges(changes, doc, part_col, key_cols,
+                                        unique=keys)
+    plan = (touched, rng)
     sets = _rewrite_sets(root, doc, *plan)
     rewrite = sets[1]
 
@@ -1890,6 +1917,14 @@ def commit_merge(spark: SparkSession, path: str, changes: DataFrame,
         # delete vector would resurrect its tombstoned rows into the
         # rewritten files
         cur = _read_entries(spark, root, doc, rewrite)
+        if dup:
+            # a table holding a key n times may take n rows for it
+            n = F.count(F.lit(1))
+            grown = (merged.groupBy(*keys).agg(n.alias("__c"))
+                     .join(cur.groupBy(*keys).agg(n.alias("__t")), keys)
+                     .where(F.col("__c") > F.col("__t")))
+            if grown.limit(1).count():
+                raise ValueError(_MULTI_MATCH)
         kept = cur.join(changes.select(*keys), keys, "left_anti")
         merged = kept.unionByName(merged)
     # CDF: old = the rewritten files' live rows, new = the merge output
@@ -1949,8 +1984,8 @@ def commit_update(spark: SparkSession, path: str,
     stats_cols = _doc_stats_cols(root, doc)
     key_cols = list(stats_cols)
     cond = F.expr(where) if where is not None else F.lit(True)
-    touched, rng = _touched_ranges(snap.where(cond), doc, part_col,
-                                   key_cols)
+    touched, rng, _ = _touched_ranges(snap.where(cond), doc, part_col,
+                                      key_cols)
     if not touched:
         return doc["version"]  # nothing matches: no-op, no commit
     plan = (touched, rng)
@@ -1984,7 +2019,8 @@ def _write_dv(spark: SparkSession, root: str, dv_union: DataFrame) -> str:
     token = uuid.uuid4().hex[:12]
     dv_name = f"dv-{token}.parquet"
     stage = os.path.join(root, f".stage-{token}")
-    dv_union.repartition(1).write.mode("overwrite").parquet(stage)
+    # one output file needs one task, not a shuffle
+    dv_union.coalesce(1).write.mode("overwrite").parquet(stage)
     FS.makedirs(os.path.join(root, _DELETES))
     part = [f for f in sorted(FS.listdir(stage))
             if f.endswith(".parquet")][0]
@@ -2129,7 +2165,7 @@ def commit_delete(spark: SparkSession, path: str,
         rng_src = read_snapshot(spark, root).where(F.expr(where))
     else:
         rng_src = keys
-    plan = _touched_ranges(rng_src, doc, part_col, key_cols)
+    plan = _touched_ranges(rng_src, doc, part_col, key_cols)[:2]
     sets = _rewrite_sets(root, doc, *plan)
     cands = sets[1]
     if not cands:

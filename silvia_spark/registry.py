@@ -51,33 +51,32 @@ def contract(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryF
 _NEW_CONTRACTS_HERE = "__new_contracts_here__"
 
 _PRIORITY: tuple[str, ...] = (
-    # ============ packing after the two-phase SQL MERGE rewrite
+    # ============ packing after the one-pass MinHash verify
     # (evidence ledger: r09=11, r10=36, r11=22, r12=40, r13=38, r14=42,
     # r15=50; zero failures ever).
     # Head: the contracts whose plan-building code changed after their
-    # r15 evidence — sink_sql_merge first (the only contract whose call
-    # graph reaches merge_into_sql: touched files from the statement,
-    # one outer-join rewrite pass, no change-batch window), then the 13
-    # whose call graph reaches the row-level helpers this rewrite
-    # changed (_touched_ranges' read-only rows, _commit_rewrite's read
-    # plan, _stage_and_commit now under commit_merge/commit_update,
-    # _refuse_mixed_specs under commit_delete), then SimHash (now
-    # jaccard_pairs filtered by shared bands: no candidate self-join,
-    # no verify), then MinHash (signature kernel with exact band keys;
-    # its Jaccard verify lost its eager count), the six ANN consumers
-    # now built by the one planner (llm_extras.ann_join), then the rest
-    # of the 20 manifest/SQL/stream contracts whose call graph reaches
-    # the one row-level commit path (_publish for compaction/restore/
+    # r15 evidence — dedup_docs_minhash first (its Jaccard verify is
+    # now one join of the candidate pairs with the documents: no
+    # cached slots, no id pass, no broadcast hint), then the 14 whose
+    # call graph reaches the changed MERGE/DELETE code (merge_into_sql's
+    # duplicate-key probe and conflict read set, commit_merge's
+    # duplicate-key refusal, the probe in _touched_ranges, the read-plan
+    # callback of _commit_rewrite, _write_dv's coalesce), then SimHash
+    # (jaccard_pairs filtered by shared bands), the six ANN consumers
+    # built by the one planner (llm_extras.ann_join), then the rest of
+    # the 20 manifest/SQL/stream contracts whose call graph reaches the
+    # one row-level commit path (_publish for compaction/restore/
     # metadata commits). Then evidence oldest-first: 28 + 11 r09 + 11
     # of the 36 r10 fill the 50-slot window, so the oldest evidence
     # after the next round is r10. ======
     # -- plan changed after their newest evidence --
+    "dedup_docs_minhash",
     "sink_sql_merge", "sink_table_manifest_commit", "scan_manifest_changes",
     "sink_merge_pruned", "scan_changes_row_level", "sink_delete_dv",
     "scan_time_travel_ts", "scan_sql_time_travel", "sink_restore_version",
     "scan_table_clone", "sink_sql_update", "sink_sql_delete",
     "stream_changes_cdf", "stream_replicate_table",
-    "dedup_docs_simhash", "dedup_docs_minhash",
+    "dedup_docs_simhash",
     "sim_ann_lsh", "sim_ann_lsh_multiprobe", "sim_ann_lsh_multiprobe2",
     "sim_ann_auto", "sim_ann_indexed", "dedup_docs_embedding",
     "sink_compact_clustered", "sink_sql_optimize",

@@ -35,9 +35,10 @@ Scope (loud refusals, never silent drift):
   the same changes — refused, not approximated.
 - A target row matched by MORE than one source row raises (the SQL
   standard's nondeterministic-MERGE error). Enforced two-stage so the
-  common case costs one aggregation over the SOURCE only; the
-  touched files are consulted just when a duplicate source key
-  actually exists.
+  common case costs no job of its own: the phase-1 pre-scan probes
+  for a repeated key in the same aggregation, and the touched files
+  are consulted just when it finds one (a BY SOURCE merge, which has
+  no pre-scan, always consults them).
 - Keyword scanning is paren/quote-aware but not a full SQL grammar:
   a bare CASE WHEN inside a merge condition must be parenthesized
   (otherwise its WHEN/THEN would read as clause boundaries).
@@ -436,11 +437,11 @@ def merge_into_sql(spark: SparkSession, sql: str,
        partition column and no BY SOURCE clause: the source's key
        columns ARE the touched partitions and key ranges (one job over
        the source; the target is not scanned before the rewrite read).
-       ON without the partition column: a key-only semi-join of the
-       target with the source keys; the partitions and key ranges the
-       insert clauses make of the source join the conflict read set
-       (the not-matched decision read them) but not the rewrite set.
-       A BY SOURCE clause: every file.
+       ON without the partition column: a key-only join of the
+       target with the source keys; with INSERT clauses the conflict
+       read set is every partition over the hull of the plan's and
+       the inserts' key ranges (the not-matched decision looked
+       everywhere). A BY SOURCE clause: every file.
     2. One pass over the rewrite set: a left-outer join with the
        source (carrying a match marker) gives every row its
        clause index — MATCHED clauses where the marker is set, BY
@@ -451,8 +452,8 @@ def merge_into_sql(spark: SparkSession, sql: str,
        including those of a partition whose only change is an insert —
        carry by reference."""
     from silvia_spark.operators.manifest_table import (
-        _doc_stats_cols, _empty_like, _enforce_constraints, _load_doc,
-        _norm, _read_entries, _refuse_mixed_specs, _resolve,
+        _MULTI_MATCH, _doc_stats_cols, _empty_like, _enforce_constraints,
+        _load_doc, _norm, _read_entries, _refuse_mixed_specs, _resolve,
         _rewrite_sets, _stage_and_commit, _touched_ranges)
 
     spec = parse_merge(sql)
@@ -574,61 +575,70 @@ def merge_into_sql(spark: SparkSession, sql: str,
     # rewrite set INSIDE touched partitions
     key_cols = [k for k in tkeys if k != part_col and k in stats_cols]
 
-    # phase 1: the touched partitions and key ranges
+    # phase 1: the touched partitions and key ranges, and (with MATCHED
+    # clauses) the duplicate-key probe in the same job
     read_plan = None  # the conflict read set, when wider than plan
     if spec.by_source:
         touched = {e["partition"] for e in _resolve(root, doc)}
-        plan = (touched, {p: {} for p in touched})
+        plan, dup = (touched, {p: {} for p in touched}), True
     elif part_col in tkeys:
-        plan = _touched_ranges(
+        *plan, dup = _touched_ranges(
             src0.select(*[F.col(s).cast(schema[t]).alias(t)
                           for t, s in key_pairs]),
-            doc, part_col, key_cols)
+            doc, part_col, key_cols,
+            unique=tkeys if spec.matched else None)
     else:
         # rewrite: the partitions and key ranges of the target rows a
-        # source key matches. Read only: those of the rows the insert
-        # clauses make of EVERY source row (a superset of the
-        # inserts) — the not-matched decision read there, so a
-        # concurrent commit adding files in that range must conflict
+        # source key matches — one row per match, so a target row two
+        # source rows match shows as a repeated key to the probe. Read
+        # only: those of the rows the insert clauses make of EVERY
+        # source row (a superset of the inserts)
         pk = list(dict.fromkeys(tkeys + [part_col]))
         entries = _resolve(root, doc)
         scans = ([_read_entries(spark, root, doc, entries)
                   .select(*pk).alias(tq)
-                  .join(src_keys.alias(sq), on_expr, "left_semi")
-                  .select(*pk, F.lit(False).alias("__ro"))]
+                  .join(src_keys.alias(sq), on_expr)
+                  .select(*[F.col(f"{tq}.{c}") for c in pk],
+                          F.lit(False).alias("__ro"))]
                  if entries else [])
         if ins_clauses:
             scans.append(_inserted(src0.alias(sq))
                          .select(*pk, F.lit(True).alias("__ro")))
-        plan = (set(), {})
+        plan, dup = (set(), {}), False
         if scans:
-            plan = _touched_ranges(reduce(DataFrame.unionByName, scans),
-                                   doc, part_col, key_cols,
-                                   read_only="__ro")
-            read_plan = (set(plan[1]), plan[1])
+            *plan, dup = _touched_ranges(
+                reduce(DataFrame.unionByName, scans), doc, part_col,
+                key_cols, read_only="__ro",
+                unique=pk if spec.matched else None)
+        if ins_clauses and plan[1]:
+            # a concurrent insert of the same key into any partition,
+            # one it creates too, must conflict
+            hull = {}
+            for k in key_cols:
+                rs = [r[k] for r in plan[1].values() if r[k][0] is not None]
+                hull[k] = ((min(lo for lo, _ in rs), max(hi for _, hi in rs))
+                           if rs else (None, None))
+
+            def read_plan(d):
+                parts = {e["partition"] for e in _resolve(root, d)}
+                return parts, {p: hull for p in parts | set(plan[1])}
     sets = _rewrite_sets(root, doc, *plan)
     rewrite = sets[1]
     cur = _read_entries(spark, root, doc, rewrite) if rewrite else None
 
-    if spec.matched and cur is not None:
+    if spec.matched and cur is not None and dup:
         # SQL-standard nondeterminism guard: a duplicate source key
-        # tuple multi-matches every target row carrying it. Two-stage
-        # so the common case (unique source keys) costs one agg over
-        # the SOURCE only; only an actual duplicate is checked against
-        # the rewrite set, which holds every row the source can match
+        # tuple multi-matches every target row carrying it. Only a
+        # repeated key the phase-1 probe saw is checked against the
+        # rewrite set, which holds every row the source can match
         # (Delta's rule: duplicates that match no target row are legal)
         dups = (src0.groupBy(*skeys)
                 .agg(F.count(F.lit(1)).alias("__n"))
                 .where(F.col("__n") > 1))
-        if dups.limit(1).count() and (
-                dups.alias(sq)
+        if (dups.alias(sq)
                 .join(cur.select(*tkeys).alias(tq), on_expr, "left_semi")
                 .limit(1).count()):
-            raise ValueError(
-                "MERGE: a target row matches more than one "
-                "source row — the SQL standard makes this merge "
-                "nondeterministic; deduplicate the source on the "
-                "ON keys first")
+            raise ValueError(_MULTI_MATCH)
 
     # phase 2: one pass over the rewrite set
     clauses = spec.matched + spec.by_source

@@ -1227,6 +1227,37 @@ def test_one_row_delete_rewrites_zero_files(spark, tmp_path):
     assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
 
 
+def test_dv_sidecar_write_runs_one_job(spark, tmp_path, monkeypatch):
+    """A sparse delete writes its delete-vector sidecar as one file in
+    one Spark job: its rows come from the delete's persisted match
+    set, so the single output task needs no shuffle."""
+    from tests.test_minhash_kernel import _jobs_in_group
+
+    root = str(tmp_path / "t")
+    mt.create_table(spark.createDataFrame(
+        [(i, "p1" if i < 60 else "p2", float(i)) for i in range(100)],
+        "k BIGINT, part STRING, v DOUBLE").repartitionByRange(4, "k"),
+        root, "part", stats_cols=["k"])
+    real, sc = mt._write_dv, spark.sparkContext
+
+    def grouped(*a, **kw):
+        sc.setJobGroup("dv-sidecar", "dv-sidecar")
+        try:
+            return real(*a, **kw)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    monkeypatch.setattr(mt, "_write_dv", grouped)
+    keys = spark.createDataFrame([(41, "p1"), (42, "p1"), (77, "p2")],
+                                 "k BIGINT, part STRING")
+    mt.commit_delete(spark, root, keys, ["k", "part"], "part")
+    assert _jobs_in_group(spark, "dv-sidecar") == 1
+    assert len({e["dv"] for e in mt.load_manifest(root)["files"]
+                if e.get("dv")}) == 1
+    assert sorted(r.k for r in mt.read_snapshot(spark, root).collect()) \
+        == sorted(set(range(100)) - {41, 42, 77})
+
+
 def test_delete_requires_part_col_in_keys(spark, tmp_path):
     root = str(tmp_path / "t")
     mt.create_table(_base(spark), root, "part")
@@ -1654,6 +1685,55 @@ def test_unpinned_merge_insert_reads_its_key_range(spark, tmp_path,
     got = sorted((r["k"], r["v"]) for r in mt.read_snapshot(spark, root)
                  .where("k > 10").collect())
     assert got == ([(12, 1.0)] if conflict else [(12, 2.0), (14, 1.0)])
+
+
+@pytest.mark.parametrize("winner_part", ["a", "c"])
+def test_unpinned_merge_inserts_conflict_across_partitions(
+        spark, tmp_path, monkeypatch, winner_part):
+    """An unpinned SQL MERGE decides NOT MATCHED by looking in every
+    partition. A concurrent insert of the same new key into ANOTHER
+    partition — an existing one or one it creates — must make it
+    refuse: rebasing would land k=12 twice."""
+    root = os.path.join(str(tmp_path), "tbl")
+    mt.create_table(spark.createDataFrame(
+        [Row(k=i, part=("a" if i % 2 else "b"), v=float(i))
+         for i in range(1, 11)]).coalesce(1).select("k", "v", "part"),
+        root, "part", stats_cols=["k"])
+    _race_on(monkeypatch, "merge", lambda: _upsert_sql_unpinned(
+        spark, root, [Row(k=12, part=winner_part, v=1.0)]))
+    with pytest.raises(RuntimeError, match="merge conflict"):
+        _upsert_sql_unpinned(spark, root, [Row(k=12, part="b", v=2.0)])
+    got = [(r["k"], r["v"], r["part"]) for r in
+           mt.read_snapshot(spark, root).where("k = 12").collect()]
+    assert got == [(12, 1.0, winner_part)]
+
+
+def test_commit_merge_refuses_a_key_it_would_duplicate(spark, tmp_path):
+    """Two written change rows for a key the table holds once would
+    leave both in the table: commit_merge refuses, as SQL MERGE does,
+    and commits nothing. A key the table already holds twice may take
+    two rows (a 1:1 rewrite), and repeated keys the table does not
+    hold insert as they are."""
+    root = os.path.join(str(tmp_path), "tbl")
+    mt.create_table(spark.createDataFrame(
+        [Row(k=1, part="a", v=1.0), Row(k=2, part="a", v=2.0),
+         Row(k=2, part="a", v=3.0)]).select("k", "v", "part"),
+        root, "part", stats_cols=["k"])
+    v0 = mt.current_version(root)
+    chg = spark.createDataFrame(
+        [Row(k=1, part="a", v=10.0, op="U"),
+         Row(k=1, part="a", v=20.0, op="U")])
+    with pytest.raises(ValueError, match="more than one source row"):
+        mt.commit_merge(spark, root, chg, ["k", "part"], "part")
+    assert mt.current_version(root) == v0
+    mt.commit_merge(spark, root, spark.createDataFrame(
+        [Row(k=2, part="a", v=20.0, op="U"),
+         Row(k=2, part="a", v=30.0, op="U"),
+         Row(k=9, part="a", v=9.0, op="I"),
+         Row(k=9, part="a", v=9.5, op="I")]), ["k", "part"], "part")
+    assert sorted((r["k"], r["v"]) for r in
+                  mt.read_snapshot(spark, root).collect()) == [
+        (1, 1.0), (2, 20.0), (2, 30.0), (9, 9.0), (9, 9.5)]
 
 
 @pytest.mark.parametrize("writer", list(ROW_WRITERS))

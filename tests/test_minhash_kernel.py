@@ -10,9 +10,10 @@ exact pair of minima. These tests pin:
   sliced Arrow batches);
 - that building the plan starts no Spark job (also for
   ``dedup_docs_simhash``, which has no candidate stage to size);
-- that the Jaccard verify's broadcast reads the persisted candidate
-  slot through a materialized AQE cache stage (the guard that replaced
-  the eager count against cold-run broadcast timeouts).
+- that the one-pass Jaccard verify runs the kernel once: its final
+  plan holds one kernel node, no broadcast job re-runs it (a cold
+  broadcast of the kernel's subtree could outlast
+  ``spark.sql.broadcastTimeout``), and the action runs at most 7 jobs.
 """
 
 from __future__ import annotations
@@ -193,40 +194,53 @@ def _walk(node, above=()):
         yield from _walk(k, above + (node,))
 
 
-def _names(seq):
-    return [seq.apply(i).name() for i in range(seq.size())]
+def _kinds(nodes):
+    return [n.getClass().getSimpleName() for n in nodes]
 
 
-def test_verify_broadcast_reads_materialized_candidate_stage(spark):
-    """On cold caches, every broadcast that reads the candidate slot
-    reads it through a TableCacheQueryStage materialized before the
-    BroadcastQueryStage above it, so the broadcast job never executes
-    the banded-candidate subtree under spark.sql.broadcastTimeout."""
+def _cold_minhash(spark):
     from silvia_spark import registry
 
     registry.load_all_modules()
     clear_caches()
-    df = registry.QUERIES["dedup_docs_minhash"](spark, SF_SMALL)
-    df.collect()
+    return registry.QUERIES["dedup_docs_minhash"](spark, SF_SMALL)
+
+
+def test_verify_plan_runs_the_kernel_once(spark):
+    """On cold caches the final plan holds ONE mapInArrow kernel node,
+    nothing is read from a cache, and a broadcast above the kernel
+    reads it only through a materialized query stage: the broadcast
+    job never executes the kernel's subtree itself."""
+    df = _cold_minhash(spark)
+    df.toArrow()
     root = df._jdf.queryExecution().executedPlan()
     assert root.getClass().getSimpleName() == "AdaptiveSparkPlanExec"
     assert root.isFinalPlan()
-    under_broadcast = 0
-    for node, above in _walk(root):
-        if (node.getClass().getSimpleName() != "InMemoryTableScanExec"
-                or _names(node.relation().output()) != ["doc_a", "doc_b"]):
-            continue
-        kinds = [a.getClass().getSimpleName() for a in above]
-        if "BroadcastQueryStageExec" not in kinds:
-            continue
-        under_broadcast += 1
-        last_bc = len(kinds) - 1 - kinds[::-1].index(
-            "BroadcastQueryStageExec")
-        stages = [a for a in above[last_bc + 1:]
-                  if a.getClass().getSimpleName()
-                  == "TableCacheQueryStageExec"]
-        assert stages, \
-            "broadcast reads the candidate slot without a cache query stage"
-        assert all(s.isMaterialized() for s in stages)
-    assert under_broadcast > 0, "no broadcast of the slot"
-    clear_caches()
+    nodes = list(_walk(root))
+    assert "InMemoryTableScanExec" not in _kinds(n for n, _ in nodes)
+    kernels = [(n, above) for n, above in nodes
+               if "MapInArrow" in n.getClass().getSimpleName()]
+    assert len(kernels) == 1, _kinds(n for n, _ in kernels)
+    _node, above = kernels[0]
+    kinds = _kinds(above)
+    bcs = [i for i, k in enumerate(kinds) if k.startswith("Broadcast")]
+    if bcs:
+        stages = [a for a, k in zip(above[bcs[-1] + 1:], kinds[bcs[-1] + 1:])
+                  if k.endswith("QueryStageExec")]
+        assert stages and all(s.isMaterialized() for s in stages), kinds
+
+
+def test_minhash_action_runs_at_most_7_jobs(spark):
+    """The fresh-plan action of the one-pass verify: the candidate
+    stages, the document join and the pair grouping, at most 7 Spark
+    jobs (the cached two-slot verify ran 14 at sf1)."""
+    df = _cold_minhash(spark)
+    sc = spark.sparkContext
+    group = "minhash-action"
+    sc.setJobGroup(group, group)
+    try:
+        assert df.toArrow().num_rows > 0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = _jobs_in_group(spark, group)
+    assert jobs <= 7, f"the verify ran {jobs} Spark jobs"
