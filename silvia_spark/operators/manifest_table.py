@@ -917,11 +917,11 @@ def _anti_dv(scan: DataFrame, dv: DataFrame) -> DataFrame:
     """Drop tombstoned rows: broadcast anti-join on (file, position).
     The DV set is small by the write-side crossover rule (a file whose
     tombstones exceed ``dv_max_frac`` of its rows is rewritten instead),
-    so this adds zero shuffle to the scan."""
+    so this adds zero shuffle to the scan. The position tags stay."""
     return scan.join(
         F.broadcast(dv),
         (scan["__rel"] == dv["path"]) & (scan["__idx"] == dv["row_index"]),
-        "left_anti").drop("__rel", "__idx")
+        "left_anti")
 
 
 def _entry_spec(e: dict) -> str:
@@ -933,18 +933,22 @@ def _entry_spec(e: dict) -> str:
 
 
 def _read_entries(spark: SparkSession, root: str, m: dict,
-                  entries: list[dict]) -> DataFrame:
+                  entries: list[dict], pos: bool = False) -> DataFrame:
     """Snapshot-semantics read of a specific entry list: files carrying
     a delete vector anti-join their tombstones (merge-on-read); clean
     files stream through the plain reader untouched. Every read path
-    that resolves entries — read_snapshot, read_changes, and the
-    REWRITE scans inside merge/compaction (a rewrite that read raw
-    would resurrect deleted rows into the new files) — goes through
-    here. Entries are additionally grouped by PARTITION SPEC (the dir
-    column their path encodes): after set_partition_column, old-spec
-    files recover their old column from the directory name while the
-    new column reads as file data, and vice versa — each group is one
-    plain parquet scan, the union is by name."""
+    that resolves entries — read_snapshot, read_changes, the REWRITE
+    scans inside merge/compaction (a rewrite that read raw would
+    resurrect deleted rows into the new files) and the tombstone scan
+    of commit_delete — goes through here. Entries are additionally
+    grouped by PARTITION SPEC (the dir column their path encodes):
+    after set_partition_column, old-spec files recover their old column
+    from the directory name while the new column reads as file data,
+    and vice versa — each group is one plain parquet scan, the union is
+    by name. ``pos=True`` keeps every row's entry-relative file path
+    and in-file position as ``__rel``/``__idx`` (the positional scan a
+    delete vector is written from); without it a clean-only read's
+    plan carries no position columns at all."""
     parts = []
     for pred in (lambda e: not e.get("dv"), lambda e: e.get("dv")):
         by_spec: dict[tuple, list[dict]] = {}
@@ -972,14 +976,17 @@ def _read_entries(spark: SparkSession, root: str, m: dict,
                 # per spec group, since a mixed-spec read recovers it
                 # in some groups only
                 scan = scan.drop(spec)
+            if pos or es[0].get("dv"):
+                scan = _with_pos(scan)
             if es[0].get("dv"):
-                scan = _anti_dv(_with_pos(scan),
-                                _dv_frame(spark, root, es))
+                scan = _anti_dv(scan, _dv_frame(spark, root, es))
+                if not pos:
+                    scan = scan.drop("__rel", "__idx")
             parts.append(scan)
     df = parts[0]
     for p in parts[1:]:
         df = df.unionByName(p)
-    return _to_logical(df, m)
+    return _to_logical(df, m, keep=("__rel", "__idx") if pos else ())
 
 
 # --- column mapping (rename/drop evolution, Delta's name-mapping mode) -------
@@ -1164,6 +1171,16 @@ def _split_segments(root: str, doc: dict, touched: set[str],
         else:
             carried.append(s)
     return carried, resolved
+
+
+def _doc_segments(root: str, doc: dict) -> list[dict]:
+    """The segment descriptors a new manifest carries from ``doc`` by
+    reference. A v1 doc (inline ``files``) migrates here: its entries
+    become one reused segment, written once."""
+    if "files" in doc:
+        return ([_write_segment(root, doc["files"], reused=True)]
+                if doc["files"] else [])
+    return list(doc.get("segments", ()))
 
 
 # manifest-doc size bound: a commit that would push the segment count
@@ -1374,11 +1391,7 @@ def restore_table(spark: SparkSession, path: str, version: int) -> int:
     if tgt["version"] == doc["version"]:
         return doc["version"]  # restoring to HEAD: no-op
     commit_id = uuid.uuid4().hex
-    if "files" in tgt:
-        segs = ([_write_segment(root, tgt["files"], reused=True)]
-                if tgt["files"] else [])
-    else:
-        segs = list(tgt.get("segments", ()))
+    segs = _doc_segments(root, tgt)
     newv = doc["version"] + 1
     nd = _make_doc(newv, doc["version"], segs, txns=doc.get("txn"),
                    commit_id=commit_id, schema=tgt.get("schema"),
@@ -2172,26 +2185,9 @@ def commit_delete(spark: SparkSession, path: str,
         return doc["version"]  # nothing can match: no-op, no commit
     epoch0 = _vacuum_epoch(root)
 
-    by_base: dict[str, list[dict]] = {}
-    for e in cands:
-        by_base.setdefault(e.get("base", root), []).append(e)
-    scans = []
-    for base, es in by_base.items():
-        s = _with_pos(_reader(spark, base, doc).parquet(
-            *[_entry_path(root, e) for e in es]))
-        if pt and pt["col"] in s.columns:
-            s = s.drop(pt["col"])  # the hidden dir column never flows
-            #                        into tombstone/CDF records
-        scans.append(s)
-    scan = scans[0]
-    for s in scans[1:]:
-        scan = scan.unionByName(s)
-    scan = _to_logical(scan, doc, keep=("__rel", "__idx"))
-    old_dv = _dv_frame(spark, root, cands)
-    live = scan if old_dv is None else scan.join(
-        F.broadcast(old_dv),
-        (scan["__rel"] == old_dv["path"])
-        & (scan["__idx"] == old_dv["row_index"]), "left_anti")
+    # the live rows of the candidate files, each tagged with its
+    # (file, position) — the tombstone coordinates a vector records
+    live = _read_entries(spark, root, doc, cands, pos=True)
     matched = (live.where(F.expr(where)) if where is not None
                else live.join(keys.select(*key_cols).distinct(),
                               key_cols, "left_semi")).persist()
@@ -2281,11 +2277,7 @@ def _commit_metadata(root: str, mutate) -> int:
     like compaction and restore: a lost race raises."""
     doc = _load_doc(root)
     commit_id = uuid.uuid4().hex
-    if "files" in doc:
-        segs = ([_write_segment(root, doc["files"], reused=True)]
-                if doc["files"] else [])
-    else:
-        segs = list(doc.get("segments", ()))
+    segs = _doc_segments(root, doc)
     version = doc["version"] + 1
     newdoc = _make_doc(version, doc["version"], segs,
                        txns=doc.get("txn"), commit_id=commit_id,
@@ -2911,15 +2903,9 @@ def commit_append(spark: SparkSession, path: str, batch: DataFrame,
             # rewrite the (tiny) segment from the already-adopted entries
             staged_seg = _write_segment(root, staged)
         # parent metadata carries by reference: segment DESCRIPTORS are
-        # copied, entry lists never touched. A v1-format parent (inline
-        # files) migrates here: its entries become one segment, once.
-        if "files" in doc:
-            parent_segs = ([_write_segment(root, doc["files"],
-                                           reused=True)]
-                           if doc["files"] else [])
-        else:
-            parent_segs = list(doc.get("segments", ()))
-        segments = parent_segs + ([staged_seg] if staged_seg else [])
+        # copied, entry lists never touched
+        segments = (_doc_segments(root, doc)
+                    + ([staged_seg] if staged_seg else []))
         segments = _coalesce_segments(root, segments)
         version = doc["version"] + 1
         newdoc = _make_doc(version, doc["version"], segments, txns=txns,
@@ -3057,21 +3043,11 @@ def read_changes(spark: SparkSession, path: str, since: int,
         if old_dv is not None:
             fresh = fresh.exceptAll(
                 old_dv.where(F.col("path").isin(grown_paths)))
-        gb: dict[str, list[dict]] = {}
-        for _, n in dv_grown:
-            gb.setdefault(n.get("base", root), []).append(n)
-        ptf = m_to.get("part_transform")
-        gscans = []
-        for base, es in gb.items():
-            s = _with_pos(_reader(spark, base, m_to).parquet(
-                *[_entry_path(root, e) for e in es]))
-            if ptf and ptf["col"] in s.columns:
-                s = s.drop(ptf["col"])  # hidden dir column
-            gscans.append(s)
-        scan = gscans[0]
-        for s in gscans[1:]:
-            scan = scan.unionByName(s)
-        scan = _to_logical(scan, m_to, keep=("__rel", "__idx"))
+        # the RAW positional scan (vectors not applied: the rows sought
+        # are exactly the ones `to`'s vector tombstones)
+        scan = _read_entries(spark, root, m_to,
+                             [dict(n, dv=None) for _, n in dv_grown],
+                             pos=True)
         hit = scan.join(
             F.broadcast(fresh),
             (scan["__rel"] == fresh["path"])
@@ -3104,6 +3080,49 @@ def _cdf_align(df: DataFrame, fields: list) -> DataFrame:
         "_change_type")
 
 
+def _change_versions(root: str, since: int, to: int):
+    """The ONE change-feed walk over versions ``(since, to]`` — behind
+    ``read_change_feed``, the CDC stream and the batch ``changesSince``
+    reader. Loads each manifest once and yields ``(v, doc, entries,
+    files)`` per version that changed rows: an append's added entries
+    (the diff against v-1, reusing the previous doc; the full entry
+    list at v1) with ``files=[]``, or a merge/delete version's
+    ``_changes/`` record paths with ``entries=[]``. Compaction and
+    metadata versions (mode ``none``) yield nothing. A version without
+    a record refuses (the feed starts at enablement); a manifest the
+    walk needs that vacuum retired raises FileNotFoundError naming it
+    and the retention knob."""
+    def load(v: int, role: str = "") -> dict:
+        try:
+            return _load_doc(root, v)
+        except FileNotFoundError as e:
+            raise FileNotFoundError(
+                f"the change feed over ({since}, {to}] needs manifest "
+                f"v{v}{role}, and it is gone (vacuumed?): widen "
+                "keep_versions over the longest consumer lag, or start "
+                "the feed at a retained version") from e
+
+    prev: dict | None = None
+    for v in range(since + 1, to + 1):
+        d = load(v)
+        cdf = d.get("cdf")
+        if cdf is None:
+            raise ValueError(
+                f"version {v} carries no change record (committed "
+                "before enable_cdf?): the row-level feed starts at "
+                "enablement — use read_changes for file-granular "
+                "diffs of older windows")
+        if cdf["mode"] == "append":
+            base = prev if prev is not None else (
+                load(v - 1, f" as the diff base for v{v}")
+                if v > 1 else None)
+            yield v, d, (_diff_entries(root, base, d) if base is not None
+                         else _resolve(root, d)), []
+        elif cdf["mode"] == "files":
+            yield v, d, [], cdf["files"]
+        prev = d
+
+
 def read_change_feed(spark: SparkSession, path: str, since: int,
                      to: int | None = None) -> DataFrame:
     """Row-level change feed between two versions (Delta CDF's
@@ -3116,14 +3135,19 @@ def read_change_feed(spark: SparkSession, path: str, since: int,
     version diff (their added files are the insert set, read with
     their as-of-commit delete vectors), merge/delete commits read
     their ``_changes/`` sidecars, compaction/metadata versions
-    contribute nothing. Cost: O(changed rows in the window) — no
-    joins, no table scan, which is the property that makes CDC
-    consumable at 100 TB. Every version in the window must carry a
-    record (committed after ``enable_cdf``/``create_table(cdf=True)``);
-    a window reaching behind enablement refuses, exactly like Delta.
-    All versions deliver under ``to``'s schema and column mapping
-    (physical names are stable across renames; pre-evolution records
-    NULL-fill / upcast)."""
+    contribute nothing — the walk ``_change_versions`` shares with the
+    CDC stream and the batch ``changesSince`` reader. Cost: O(changed
+    rows in the window) — no joins, no table scan, which is the
+    property that makes CDC consumable at 100 TB. Every version in the
+    window must carry a record (committed after ``enable_cdf``/
+    ``create_table(cdf=True)``); a window reaching behind enablement
+    refuses with ValueError, exactly like Delta. A window whose
+    manifests (or whose first append's diff base, the ``since``
+    manifest) vacuum retired raises FileNotFoundError naming the
+    missing manifest: widen ``vacuum``'s ``keep_versions`` over the
+    longest consumer lag. All versions deliver under ``to``'s schema
+    and column mapping (physical names are stable across renames;
+    pre-evolution records NULL-fill / upcast)."""
     root = _norm(path)
     m_to = _load_doc(root, to)
     to_v = m_to["version"]
@@ -3131,36 +3155,18 @@ def read_change_feed(spark: SparkSession, path: str, since: int,
         raise ValueError(f"since={since} is ahead of to={to_v}")
     fields = _cdf_fields(m_to)
     outs: list[DataFrame] = []
-    prev: dict | None = None
-    for v in range(since + 1, to_v + 1):
-        d = m_to if v == to_v else _load_doc(root, v)
-        cdf = d.get("cdf")
-        if cdf is None:
-            raise ValueError(
-                f"version {v} carries no change record (committed "
-                "before enable_cdf?): the row-level feed starts at "
-                "enablement — use read_changes for file-granular "
-                "diffs of older windows")
-        if cdf["mode"] == "append":
-            base = prev if (prev is not None
-                            and prev["version"] == v - 1) else (
-                _load_doc(root, v - 1) if v > 1 else None)
-            entries = (_diff_entries(root, base, d) if base is not None
-                       else _resolve(root, d))
-            if entries:
-                outs.append(_cdf_align(
-                    _read_entries(spark, root, m_to, entries)
-                    .withColumn("_change_type", F.lit("insert")),
-                    fields).withColumn("_commit_version",
-                                       F.lit(v).cast("bigint")))
-        elif cdf["mode"] == "files" and cdf["files"]:
-            raw = spark.read.parquet(
-                *[os.path.join(root, p) for p in cdf["files"]])
-            outs.append(_cdf_align(
-                _to_logical(raw, m_to, keep=("_change_type",)),
-                fields).withColumn("_commit_version",
-                                   F.lit(v).cast("bigint")))
-        prev = d
+    for v, _, entries, files in _change_versions(root, since, to_v):
+        if entries:
+            df = (_read_entries(spark, root, m_to, entries)
+                  .withColumn("_change_type", F.lit("insert")))
+        elif files:
+            df = _to_logical(spark.read.parquet(
+                *[os.path.join(root, p) for p in files]),
+                m_to, keep=("_change_type",))
+        else:
+            continue
+        outs.append(_cdf_align(df, fields).withColumn(
+            "_commit_version", F.lit(v).cast("bigint")))
     if not outs:
         from pyspark.sql.types import (LongType, StringType, StructField,
                                        StructType)

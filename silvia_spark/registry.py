@@ -51,37 +51,36 @@ def contract(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryF
 _NEW_CONTRACTS_HERE = "__new_contracts_here__"
 
 _PRIORITY: tuple[str, ...] = (
-    # ============ packing after the one-pass MinHash verify
-    # (evidence ledger: r09=11, r10=36, r11=22, r12=40, r13=38, r14=42,
-    # r15=50; zero failures ever).
+    # ============ packing after the shared change-feed walk and
+    # positional entry scan (evidence ledger: r09=11, r10=36, r11=22,
+    # r12=40, r13=38, r14=42, r15=50; zero failures ever).
     # Head: the contracts whose plan-building code changed after their
-    # r15 evidence — dedup_docs_minhash first (its Jaccard verify is
-    # now one join of the candidate pairs with the documents: no
-    # cached slots, no id pass, no broadcast hint), then the 14 whose
-    # call graph reaches the changed MERGE/DELETE code (merge_into_sql's
-    # duplicate-key probe and conflict read set, commit_merge's
-    # duplicate-key refusal, the probe in _touched_ranges, the read-plan
-    # callback of _commit_rewrite, _write_dv's coalesce), then SimHash
-    # (jaccard_pairs filtered by shared bands), the six ANN consumers
-    # built by the one planner (llm_extras.ann_join), then the rest of
-    # the 20 manifest/SQL/stream contracts whose call graph reaches the
-    # one row-level commit path (_publish for compaction/restore/
-    # metadata commits). Then evidence oldest-first: 28 + 11 r09 + 11
-    # of the 36 r10 fill the 50-slot window, so the oldest evidence
-    # after the next round is r10. ======
+    # newest evidence — first the ten whose call graph reaches the
+    # rewritten manifest reads (the change-feed walk behind
+    # read_change_feed, the CDC stream and changesSince; the positional
+    # scan of commit_delete and read_changes(row_level=True); the
+    # segment carry of restore, metadata commits and SQL INSERT), then
+    # the other manifest/SQL/stream contracts reaching commit_append's
+    # segment carry or _read_entries, then the still-unchecked
+    # contracts of the previous rounds (the one-pass MinHash verify,
+    # SimHash, the six ANN consumers of llm_extras.ann_join). Then
+    # evidence oldest-first: 34 + 11 r09 + 5 of the 36 r10 fill the
+    # 50-slot window. ======
     # -- plan changed after their newest evidence --
-    "dedup_docs_minhash",
+    "stream_changes_cdf", "stream_replicate_table", "scan_changes_row_level",
+    "sink_delete_dv", "sink_sql_delete", "sink_restore_version",
+    "scan_table_clone", "scan_manifest_renamed", "sink_sql_insert",
+    "sink_sql_insert_overwrite",
     "sink_sql_merge", "sink_table_manifest_commit", "scan_manifest_changes",
-    "sink_merge_pruned", "scan_changes_row_level", "sink_delete_dv",
-    "scan_time_travel_ts", "scan_sql_time_travel", "sink_restore_version",
-    "scan_table_clone", "sink_sql_update", "sink_sql_delete",
-    "stream_changes_cdf", "stream_replicate_table",
-    "dedup_docs_simhash",
+    "scan_sql_time_travel", "sink_merge_pruned", "scan_time_travel_ts",
+    "sink_sql_update", "sink_sql_ctas", "sink_compact_clustered",
+    "sink_sql_optimize", "scan_manifest_schema_evolution",
+    "scan_partition_evolved", "sink_append_constrained",
+    "stream_manifest_source", "stream_manifest_sink",
+    "stream_manifest_admission",
+    "dedup_docs_minhash", "dedup_docs_simhash",
     "sim_ann_lsh", "sim_ann_lsh_multiprobe", "sim_ann_lsh_multiprobe2",
     "sim_ann_auto", "sim_ann_indexed", "dedup_docs_embedding",
-    "sink_compact_clustered", "sink_sql_optimize",
-    "scan_manifest_renamed", "scan_manifest_schema_evolution",
-    "scan_partition_evolved", "sink_append_constrained",
     # -- new contracts registered mid-round slot in here --
     _NEW_CONTRACTS_HERE,
     # -- r09-era evidence --
@@ -120,8 +119,7 @@ _PRIORITY: tuple[str, ...] = (
     "q9_product_profit", "scalar_array", "scalar_cast", "scalar_conditional",
     "scalar_date", "scan_manifest_pruned", "scan_manifest_widened",
     "scan_manifest_zorder", "scan_partition_hidden_days",
-    "stream_manifest_admission", "stream_manifest_sink",
-    "stream_manifest_source", "window_percent_rank", "window_range_frame",
+    "window_percent_rank", "window_range_frame",
     # -- r13-era evidence --
     "agg_mode_frequent", "agg_time_gapfill", "etl_events_enriched",
     "multimodal_frame_sample", "multimodal_join", "q10_returned_items",
@@ -135,12 +133,11 @@ _PRIORITY: tuple[str, ...] = (
     "source_json_lines", "stream_kafka_shim_live", "subquery_scalar",
     "topk_limit",
     # -- r14-era evidence --
-    "sink_sql_insert", "source_delta_interop", "source_iceberg_interop",
+    "source_delta_interop", "source_iceberg_interop",
     "dedup_cluster_cc", "dedup_near_keep_best", "curation_pipeline",
     "text_ngram_jaccard", "text_tfidf", "text_unigram_logprob",
     "q15_top_supplier", "q11_important_parts", "stream_stateful_funnel",
-    "sim_ann_ivf_kmeans", "sink_sql_ctas", "sink_sql_insert_overwrite",
-    "q22_dormant_customers", "q4_order_priority", "q5_local_supplier",
+    "sim_ann_ivf_kmeans", "q22_dormant_customers", "q4_order_priority", "q5_local_supplier",
     "q7_volume_shipping", "q8_market_share", "sample_stratified",
     "scan_dpp_join", "scan_schema_enforce", "sim_ann_ivf", "sim_centroids",
     "sim_topk_cosine", "sink_partition_overwrite", "source_orc",

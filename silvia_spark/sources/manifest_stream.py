@@ -20,6 +20,13 @@ executor-parallel with no driver data movement; rows are delivered as
 Arrow RecordBatches (no per-row Python objects); partition-column
 values come from the manifest entries (never re-parsed from paths).
 
+Change feed (the stream's ``changeFeed`` option, the batch reader's
+``changesSince``): both plan through ``_cdf_slices`` over
+manifest_table's ``_change_versions`` — the one per-version walk
+``read_change_feed`` also replays — so the three deliver the same rows
+and fail alike: a pre-enablement version refuses with ValueError, a
+vacuum-retired manifest raises FileNotFoundError naming it.
+
 Admission control (``maxFilesPerTrigger`` / ``maxBytesPerTrigger``,
 Delta's options): with a limit set, offsets gain an intra-version file
 ``index`` and each micro-batch admits at most N files / B bytes — a
@@ -163,6 +170,30 @@ def _slice(root: str, e: dict) -> _FileSlice:
         e["path"])
     s.pcol = e["path"].split("=", 1)[0]
     return s
+
+
+def _cdf_slices(root: str, since: int, to: int,
+                guard=None) -> list[InputPartition]:
+    """changeFeed input partitions for versions since+1..to, shared by
+    the CDC stream and the batch ``changesSince`` reader: the per-version
+    walk is ``_change_versions``; appended entries become 'insert'
+    slices, merge/delete versions their ``_changes/`` record files.
+    ``guard(v, doc)`` runs on each delivering version first."""
+    from silvia_spark.operators.manifest_table import _change_versions
+
+    out: list[InputPartition] = []
+    for v, d, entries, files in _change_versions(root, since, to):
+        if guard is not None:
+            guard(v, d)
+        for e in entries:
+            s = _slice(root, e)
+            s.ctype, s.ver = "insert", v
+            out.append(s)
+        for p in files:
+            s = _FileSlice(os.path.join(root, p), None)
+            s.is_cdf, s.ver = True, v
+            out.append(s)
+    return out
 
 
 class ManifestStreamReader(DataSourceStreamReader):
@@ -606,7 +637,10 @@ class ManifestStreamReader(DataSourceStreamReader):
         # refreshes it before any new planning
         self._lease_write(sv)
         if self.cdf:
-            return self._cdf_partitions(sv, ev)
+            # changeFeed: the shared change-feed walk, each delivering
+            # version guarded for representability — a pure function of
+            # the immutable manifests, so replays re-plan identically
+            return _cdf_slices(self.root, sv, ev, self._guard_schema)
         if "index" in start or "index" in end:
             # limited-mode offsets: walk per-version file lists from
             # (sv, si) exclusive to (ev, ei) inclusive — a pure function
@@ -664,71 +698,6 @@ class ManifestStreamReader(DataSourceStreamReader):
             entries = _diff_entries(self.root,
                                     _load_doc(self.root, sv), m_to)
         return [_slice(self.root, e) for e in entries]
-
-    def _cdf_partitions(self, sv: int, ev: int) -> list[InputPartition]:
-        """changeFeed planning: one pass over the window's manifests,
-        each version contributing its own change slices. A pure
-        function of the immutable manifests (append diffs + recorded
-        change files), so replayed ranges re-plan identically —
-        exactly-once rides on the checkpointed version offsets like
-        the plain stream."""
-        from silvia_spark.operators.manifest_table import (_diff_entries,
-                                                           _load_doc,
-                                                           _resolve)
-
-        if ev <= sv:
-            return []
-        out: list[InputPartition] = []
-        prev: dict | None = None
-        for v in range(sv + 1, ev + 1):
-            try:
-                d = _load_doc(self.root, v)
-            except FileNotFoundError as e:
-                raise RuntimeError(
-                    f"changeFeed stream needs manifest v{v}, which is "
-                    "gone (vacuumed?): widen keep_versions over the "
-                    "longest consumer lag, or restart the stream at a "
-                    "retained startingVersion") from e
-            self._guard_schema(v, d)
-            cdf = d.get("cdf")
-            if cdf is None:
-                raise RuntimeError(
-                    f"version {v} carries no change record (committed "
-                    "before enable_cdf?): start the changeFeed stream "
-                    "at or after the enablement version")
-            if cdf["mode"] == "append":
-                if prev is not None and prev["version"] == v - 1:
-                    base = prev
-                elif v > 1:
-                    try:
-                        base = _load_doc(self.root, v - 1)
-                    except FileNotFoundError as e:
-                        # same vacuum diagnostic as the window load
-                        # above — the first append diff's BASE
-                        # manifest can be the vacuumed one
-                        raise RuntimeError(
-                            f"changeFeed stream needs manifest "
-                            f"v{v - 1} as the diff base for v{v}, "
-                            "and it is gone (vacuumed?): widen "
-                            "keep_versions over the longest consumer "
-                            "lag, or restart the stream at a retained "
-                            "startingVersion") from e
-                else:
-                    base = None
-                entries = (_diff_entries(self.root, base, d)
-                           if base is not None else
-                           _resolve(self.root, d))
-                for e in entries:
-                    s = _slice(self.root, e)
-                    s.ctype, s.ver = "insert", v
-                    out.append(s)
-            elif cdf["mode"] == "files":
-                for p in cdf["files"]:
-                    s = _FileSlice(os.path.join(self.root, p), None)
-                    s.is_cdf, s.ver = True, v
-                    out.append(s)
-            prev = d
-        return out
 
     def read(self, partition: _FileSlice):
         return _read_slice(self.schema, self.phys_of, self.part_col,
@@ -866,7 +835,9 @@ class ManifestBatchReader(DataSourceReader):
       ``version_at``).
     - ``changesSince=N``: the row-level change feed for versions
       N+1..head as one batch frame (+ ``_change_type`` /
-      ``_commit_version`` columns) — the batch twin of the CDC stream.
+      ``_commit_version`` columns) — the batch twin of the CDC stream,
+      planned through the same change-feed walk (``_cdf_slices``); an
+      empty window plans one empty slice.
 
     Planning is driver-side METADATA only (O(pruned entries) manifest
     reads, never a file listing); one InputPartition per data file
@@ -944,8 +915,11 @@ class ManifestBatchReader(DataSourceReader):
             _load_doc, _pruned_entries)
 
         if self.changes_since is not None:
-            return _change_slices(self.root, int(self.changes_since),
-                                  self.version)
+            # the API requires >= 1 partition: an empty window plans one
+            # empty slice, a valid empty frame
+            return (_cdf_slices(self.root, int(self.changes_since),
+                                self.version)
+                    or [_FileSlice("", None)])
         m = _load_doc(self.root, self.version)
         entries, _, _ = _pruned_entries(self.root, m,
                                         self._prune or None)
@@ -989,65 +963,6 @@ def _resolve_version(root: str, options: dict) -> int:
     if cur is None:
         raise FileNotFoundError(f"no committed snapshot under {root}")
     return cur
-
-
-def _change_slices(root: str, since: int, to: int) -> list[InputPartition]:
-    """Batch changeFeed planning for versions since+1..to — the same
-    per-version walk as the CDC stream's _cdf_partitions (append diffs
-    as insert slices, merge/delete versions via their commit-time
-    _changes/ records), without the streaming reader's offset state."""
-    from silvia_spark.operators.manifest_table import (_diff_entries,
-                                                       _load_doc,
-                                                       _resolve)
-
-    if to <= since:
-        return [_FileSlice("", None)]
-    out: list[InputPartition] = []
-    prev: dict | None = None
-    for v in range(since + 1, to + 1):
-        try:
-            d = _load_doc(root, v)
-        except FileNotFoundError as e:
-            raise RuntimeError(
-                f"changesSince={since} needs manifest v{v}, which is "
-                "gone (vacuumed?): widen keep_versions or raise the "
-                "starting version") from e
-        cdf = d.get("cdf")
-        if cdf is None:
-            raise RuntimeError(
-                f"version {v} carries no change record (committed "
-                "before enable_cdf?): start changesSince at or after "
-                "the enablement version")
-        if cdf["mode"] == "append":
-            if prev is not None and prev["version"] == v - 1:
-                base = prev
-            elif v > 1:
-                try:
-                    base = _load_doc(root, v - 1)
-                except FileNotFoundError as e:
-                    # the first append diff needs the SINCE manifest
-                    # as its base — same vacuum diagnostic as the
-                    # guarded load above, not a bare FileNotFoundError
-                    raise RuntimeError(
-                        f"changesSince={since} needs manifest "
-                        f"v{v - 1} as the diff base for v{v}, and it "
-                        "is gone (vacuumed?): widen keep_versions or "
-                        "raise the starting version") from e
-            else:
-                base = None
-            entries = (_diff_entries(root, base, d)
-                       if base is not None else _resolve(root, d))
-            for e in entries:
-                sl = _slice(root, e)
-                sl.ctype, sl.ver = "insert", v
-                out.append(sl)
-        elif cdf["mode"] == "files":
-            for p in cdf["files"]:
-                sl = _FileSlice(os.path.join(root, p), None)
-                sl.is_cdf, sl.ver = True, v
-                out.append(sl)
-        prev = d
-    return out or [_FileSlice("", None)]
 
 
 class _InsertCommit(WriterCommitMessage):
@@ -1300,20 +1215,14 @@ class ManifestInsertWriter(DataSourceArrowWriter):
                     "reconstructed now; re-run via commit_merge")
             seg = (mt._write_segment(root, entries)
                    if entries else None)
-            if self.overwrite:
-                # truncate-overwrite: the new manifest references the
-                # INSERT's files ONLY; every prior entry stays
-                # referenced by the parent manifest, so time travel
-                # serves the replaced state until vacuum. An empty
-                # INSERT OVERWRITE legitimately truncates to an empty
-                # snapshot (read_snapshot serves a typed empty frame).
-                parent: list = []
-            elif "files" in doc:
-                parent = ([mt._write_segment(root, doc["files"],
-                                             reused=True)]
-                          if doc["files"] else [])
-            else:
-                parent = list(doc.get("segments", ()))
+            # truncate-overwrite: the new manifest references the
+            # INSERT's files ONLY; every prior entry stays referenced by
+            # the parent manifest, so time travel serves the replaced
+            # state until vacuum. An empty INSERT OVERWRITE legitimately
+            # truncates to an empty snapshot (read_snapshot serves a
+            # typed empty frame).
+            parent = ([] if self.overwrite
+                      else mt._doc_segments(root, doc))
             segments = mt._coalesce_segments(
                 root, parent + ([seg] if seg else []))
             version = doc["version"] + 1

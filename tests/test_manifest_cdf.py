@@ -251,3 +251,46 @@ def test_net_changes_collapses_in_window_churn(spark):
     net = {(r["k"], r["op"], r["v"]) for r in
            net_changes(spark.createDataFrame(rows), ["k"]).collect()}
     assert net == {(1, "U", 9.0), (2, "D", 2.0), (3, "U", 4.0)}
+
+
+def _vacuumed_appends(spark, tmp_path):
+    """cdf on at v1, three appends (v2..v4), vacuum keeping v3, v4."""
+    root = _mk(spark, tmp_path)
+    for i in range(3):
+        commit_append(spark, root, spark.createDataFrame(
+            [Row(k=40 + i, v=1.0, part="a")]), "part")
+    vacuum(root, keep_versions=2)
+    return root
+
+
+def test_feed_names_vacuumed_diff_base(spark, tmp_path):
+    """The window (2, 4] survives but its first append's diff base, v2,
+    is gone: the feed names the base and the retention knob instead of
+    failing on the bare manifest path."""
+    root = _vacuumed_appends(spark, tmp_path)
+    with pytest.raises(FileNotFoundError,
+                       match=r"v2 as the diff base for v3, and it is gone "
+                             r"\(vacuumed\?\): widen keep_versions"):
+        read_change_feed(spark, root, since=2)
+    assert {r["k"] for r in read_change_feed(spark, root, 3).collect()} \
+        == {42}
+
+
+def test_every_walk_names_vacuumed_window_manifest(spark, tmp_path):
+    """A manifest INSIDE the window is gone: the batch feed, the batch
+    ``changesSince`` reader and the CDC stream's planning all raise the
+    one diagnostic naming it."""
+    from silvia_spark.sources.manifest_stream import (ManifestStreamReader,
+                                                      _table_schema,
+                                                      read_table)
+
+    root = _vacuumed_appends(spark, tmp_path)
+    msg = r"needs manifest v2, and it is gone \(vacuumed\?\): widen"
+    with pytest.raises(FileNotFoundError, match=msg):
+        read_change_feed(spark, root, since=1)
+    with pytest.raises(Exception, match=msg):
+        read_table(spark, root, changes_since=1).collect()
+    reader = ManifestStreamReader(_table_schema(root),
+                                  {"path": root, "changefeed": "true"})
+    with pytest.raises(FileNotFoundError, match=msg):
+        reader.partitions({"version": 1}, {"version": 4})

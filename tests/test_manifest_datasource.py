@@ -155,6 +155,32 @@ def test_changes_since_matches_read_changes(spark, tmp_path):
                   for r in want.collect()) == \
         sorted((r["k"], r["_change_type"], r["_commit_version"])
                for r in got.collect())
+    # one window over every kind of version — create, append, DV
+    # delete, SQL MERGE update, compaction, rename: the batch feed, the
+    # batch changesSince reader and the drained CDC stream agree
+    from silvia_spark.sources.manifest_stream import read_stream_changes
+    from silvia_spark.sources.sql_dml import merge_into_sql
+    from tests.test_manifest_cdf import _drain
+
+    spark.createDataFrame([Row(k=2, part="b", v=99.0)]) \
+        .createOrReplaceTempView("ds_cdf_src")
+    merge_into_sql(spark, f"""
+        MERGE INTO `{root}` AS t USING ds_cdf_src AS s
+        ON t.k = s.k AND t.part = s.part
+        WHEN MATCHED THEN UPDATE SET v = s.v""")
+    mt.commit_compaction(spark, root, "part")
+    mt.rename_column(root, "v", "val")
+
+    def bag(rows):
+        return sorted((r["_commit_version"], r["_change_type"], r["k"],
+                       r["val"]) for r in rows)
+
+    feed = bag(mt.read_change_feed(spark, root, since=0).collect())
+    assert (4, "delete", 2, 2.0) in feed and (4, "insert", 2, 99.0) in feed
+    assert len(feed) == 10 + 1 + 1 + 2
+    assert bag(read_table(spark, root, changes_since=0).collect()) == feed
+    assert bag(_drain(spark, read_stream_changes(spark, root),
+                      str(tmp_path / "ckpt"))) == feed
     # empty window = valid empty frame, schema intact
     head = mt.current_version(root)
     empty = read_table(spark, root, changes_since=head)

@@ -542,6 +542,32 @@ def test_etl_shaped_merge_runs_at_most_8_jobs(spark, tmp_path):
     _check_etl_merged(spark, root)
 
 
+def test_etl_shaped_delete_runs_at_most_8_jobs(spark, tmp_path):
+    """The lake job's predicate DELETE (sparse hits: merge-on-read
+    delete vectors) is one DV-applied pre-scan for the touched ranges
+    and one positional scan of the candidate files: at most 8 Spark
+    jobs, the count the by-base tombstone scan ran before it moved
+    into the shared entry scan."""
+    from tests.test_minhash_kernel import _jobs_in_group
+
+    root, _ = _etl_shaped(spark, tmp_path)
+    sc = spark.sparkContext
+    group = "etl-shaped-delete"
+    sc.setJobGroup(group, group)
+    try:
+        delete_sql(spark, f"""
+            DELETE FROM `{root}`
+            WHERE event_type = 'view' AND value > 91""")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = _jobs_in_group(spark, group)
+    assert jobs <= 8, f"DELETE ran {jobs} Spark jobs"
+    assert load_manifest(root)["op"] == "delete"
+    gone = {i for i in range(400) if i % 5 == 1 and i % 97 > 91}
+    got = {r.event_id for r in read_snapshot(spark, root).collect()}
+    assert gone and not gone & got and len(got) == 400 - len(gone)
+
+
 def test_pinned_partition_merge_reads_target_once(spark, tmp_path,
                                                   monkeypatch):
     """ON pins the partition column, no BY SOURCE clause: the touched
