@@ -545,9 +545,8 @@ def test_etl_shaped_merge_runs_at_most_8_jobs(spark, tmp_path):
 def test_etl_shaped_delete_runs_at_most_8_jobs(spark, tmp_path):
     """The lake job's predicate DELETE (sparse hits: merge-on-read
     delete vectors) is one DV-applied pre-scan for the touched ranges
-    and one positional scan of the candidate files: at most 8 Spark
-    jobs, the count the by-base tombstone scan ran before it moved
-    into the shared entry scan."""
+    and one positional scan of the candidate files through the shared
+    entry scan: at most 8 Spark jobs."""
     from tests.test_minhash_kernel import _jobs_in_group
 
     root, _ = _etl_shaped(spark, tmp_path)
