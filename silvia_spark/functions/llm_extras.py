@@ -1,7 +1,7 @@
 """ANN scale paths for the similarity operators — SURVEY.md §2.J addendum.
 
-``sim_join_threshold`` (llm_ops.py, J4) is the exact all-pairs baseline: a
-cross join that is quadratic in the corpus and cannot run at 100 TB. This
+``sim_join_threshold`` (llm_ops.py, J4) is the exact all-pairs baseline:
+quadratic in the corpus, it cannot run at 100 TB. This
 module holds the scale-shaped path: ONE planner, ``ann_join``, behind
 every hyperplane-LSH consumer — ``sim_ann_lsh``, the two multiprobe
 contracts, the index-served ``sim_ann_indexed``, ``sim_ann_auto`` and
@@ -22,18 +22,19 @@ seed, tau) point of it:
    adds the flips of each key's weakest-margin bits as probe keys
    (multi-probe LSH, Lv et al.); a persisted index can supply the base
    keys instead (``buckets=``).
-2. Gather decision, made ONCE: one tiny sizing job decides whether the
-   corpus matrix fits the per-task gather bound
-   (``llm_ops._gather_broadcast``).
-3. Gatherable corpora: fused per-bucket GEMM candidates — each bucket's
-   pair cosines as one dense block (bucket self-join, a < b, for
-   ``probes`` = 0; probe ⋈ base otherwise), only threshold survivors
-   leave the kernel, a tiny distinct, then the exact einsum rescore.
-4. Past the bound: the join fallback — same-bucket equi-join, the
-   right-sized ``_distinct_pairs``, an embedding join and the scalar
-   kernel's persisted single-eval score (``llm_ops``). Both routes end
-   in the same exact verify, so false positives cost compute but never
-   correctness.
+2. Members carry their vectors: the capped bucket rows join the corpus
+   ``(vec_id, embedding)`` and group per bucket (per (bucket, side)
+   with probes), one row per bucket holding its members' vectors.
+3. One exact kernel, ``fused_cosine_hits``: per bucket, a dgemm over
+   the unit rows picks the candidate pairs (bucket self-join, a < b,
+   for ``probes`` = 0; probe ⋈ base otherwise) and the same pass
+   rescores them with the exact einsum formula, so only threshold
+   survivors leave the kernel; a tiny distinct folds pairs found in
+   several buckets. The same kernel serves ``sim_join_threshold``
+   over a grid of id blocks (``all_pairs``). No corpus matrix is
+   collected or broadcast, so one route serves every corpus size:
+   one bucket row is at most ``_ANN_BUCKET_CAP`` × dim × 8 B. False
+   positives of the banding cost compute but never correctness.
 
 Recall: a pair at cosine *c* collides in one table with p = (1 - θ/π)^B,
 θ = arccos(c). At the contract threshold 0.4 (θ ≈ 66.4°, per-bit p ≈ 0.631)
@@ -125,8 +126,7 @@ def _quantized_dots(spark: SparkSession, e: DataFrame, seed: int,
     bucket producers below moved to ``_bucket_keys_np`` (one numpy GEMM
     per Arrow batch, same quantization, bit-identical outputs pinned in
     tests/test_ann_numpy_kernel.py). Kept as the reference
-    implementation the equality test compares against, and as the
-    fallback shape documented in the module docstring."""
+    implementation the equality test compares against."""
     hyper = _sign_table(spark, seed, nproj)
     ev = e.select("vec_id", F.posexplode("embedding").alias("pos", "x"))
     return (
@@ -138,9 +138,8 @@ def _quantized_dots(spark: SparkSession, e: DataFrame, seed: int,
 
 
 # Rademacher matrices are pure functions of (seed, nproj) — constants,
-# not data — so the collected form is memoized per process. The one
-# tiny job that fills a slot is the same collect-at-build pattern as
-# the _distinct_pairs sizing job.
+# not data — so the collected form is memoized per process. One tiny
+# job fills a slot.
 _SIGN_CACHE: dict = {}
 
 
@@ -197,7 +196,7 @@ def _bucket_keys_np(spark: SparkSession, e: DataFrame, seed: int,
     index stage as ONE map-only Arrow/numpy pass (guide §4.2: hand whole
     batches to vectorized native code; §2.4: the explode ⋈ sign-table →
     two-exchange aggregate chain is gone outright — nothing shuffles
-    until the bucket self-join).
+    until the bucket grouping).
 
     Semantics are bit-identical to the ``_quantized_dots`` JVM chain,
     by construction (pinned in tests/test_ann_numpy_kernel.py):
@@ -318,182 +317,6 @@ ORDER BY vec_a, vec_b
 """
 
 
-# Candidate-dedup sizing (guide §2.2/§2.5): the family's `.distinct()`
-# runs over the RAW same-bucket pair stream — ~800 M 16-byte rows at
-# sf1 base — and at the session's default shuffle width each reducer
-# hash-aggregates ~25 M rows in one shared-heap task: measured
-# page-allocation stalls + spill, 111 s of the 157 s query. Fix: size
-# the dedup exchange from the occupancy mass the join is ABOUT to
-# produce (Σ|probe_bucket|·|base_bucket| over the persisted bucket
-# table — one tiny job, an upper bound within 2× of the raw stream,
-# which is all partition sizing needs), and pack the (vec_a, vec_b)
-# pair into ONE long when the measured id range allows — half the
-# hashed bytes, a codegen long comparator. Measured at sf1 (194.3 M
-# distinct of 800 M raw, min of 2, identical counts): 111 s stock →
-# 67 s packed → 50 s right-sized → 43 s both (2.6×). 3 M packed rows
-# ≈ 24 MB raw per reducer leaves the hash-aggregate's structures
-# headroom inside a shared-heap task slot; the floor is the session's
-# default parallelism (never fewer tasks than cores — keeps the
-# local bench plan at the stock width), the ceiling bounds scheduler
-# load at any corpus size. One caller: ann_join's join fallback (past the
-# gather bound).
-_PAIR_ROWS_PER_PARTITION = 3_000_000
-_MAX_PAIR_PARTITIONS = 65_536
-
-
-def _distinct_pairs(cand_raw: DataFrame, left: DataFrame,
-                    right: DataFrame, keys: tuple,
-                    lid: str, rid: str) -> DataFrame:
-    """Distinct (vec_a, vec_b) over a raw same-bucket pair stream with
-    the dedup exchange right-sized from the join's own inputs (see the
-    sizing note above). ``left``/``right`` are the two join sides
-    (normally slices of one persisted bucket table — the sizing job is
-    a group-count over the cache, not a recompute), ``keys`` the join
-    key, ``lid``/``rid`` their vector-id columns. The pair is packed
-    into one long iff every id that can reach ``cand_raw`` lies in
-    [0, 2³¹) — measured in the same sizing job (ids on keys with no
-    match on the other side never reach the join, so the joined bound
-    covers exactly the reachable ids); the pack is a bijection there,
-    so counts and values are unchanged (asserted at sf1: 194 304 941
-    pairs both ways). ``cand_raw`` must be exactly the two pair
-    columns, (a, b) order; output schema matches it exactly."""
-    import math
-
-    pa, pb = cand_raw.columns
-    keys = list(keys)
-    lc = left.groupBy(*keys).agg(F.count(F.lit(1)).alias("cl"),
-                                 F.min(lid).alias("lmin"),
-                                 F.max(lid).alias("lmax"))
-    rc = right.groupBy(*keys).agg(F.count(F.lit(1)).alias("cr"),
-                                  F.min(rid).alias("rmin"),
-                                  F.max(rid).alias("rmax"))
-    row = (lc.join(rc, keys)
-           .agg(F.sum(F.col("cl") * F.col("cr")).alias("mass"),
-                F.least(F.min("lmin"), F.min("rmin")).alias("lo"),
-                F.greatest(F.max("lmax"), F.max("rmax")).alias("hi"))
-           .collect()[0])
-    mass = int(row["mass"] or 0)
-    spark = cand_raw.sparkSession
-    nparts = max(spark.sparkContext.defaultParallelism,
-                 min(_MAX_PAIR_PARTITIONS,
-                     math.ceil(mass / _PAIR_ROWS_PER_PARTITION)))
-    dt = dict(cand_raw.dtypes)
-    if row["lo"] is not None and int(row["lo"]) >= 0 \
-            and int(row["hi"]) < (1 << 31):
-        pk = (F.col(pa).cast("long") * F.lit(1 << 32)
-              + F.col(pb).cast("long"))
-        return (cand_raw.select(pk.alias("pk"))
-                .repartition(nparts, "pk")
-                .distinct()
-                .select(F.shiftright("pk", 32).cast(dt[pa]).alias(pa),
-                        F.col("pk").bitwiseAND(F.lit((1 << 32) - 1))
-                        .cast(dt[pb]).alias(pb)))
-    return (cand_raw
-            .repartition(nparts, pa, pb)
-            .distinct())
-
-
-# --- fused per-bucket GEMM candidates + threshold (r15) ------------------------
-# The candidate stage used to materialize the raw same-bucket pair
-# stream (~800 M 16-byte rows at sf1) into a right-sized packed-key
-# distinct exchange, then verify the ~194 M distinct pairs. When the
-# corpus matrix is per-task-loadable (the same gather bound as the
-# verify kernel), ALL of that collapses into one mapInPandas kernel
-# over the GROUPED bucket table: per bucket, gather the members' unit
-# rows from the broadcast matrix and take the whole bucket's pair
-# cosines as ONE dense dgemm block (guide §4.2 — hand whole batches to
-# native code; §2.4 — the 800 M-row exchange and its distinct hash
-# aggregate are gone outright; §2.3 — nothing heavier than the n·T
-# bucket rows ever shuffles). Only pairs passing the threshold leave
-# the kernel — a banding-selected handful — which a tiny distinct
-# dedups before the EXACT einsum rescore emits the contract values.
-#
-# Selection correctness: dgemm and the einsum row-dot may differ in the
-# last ulps (~1e-14 on unit vectors), so the kernel thresholds at
-# tau − _FUSED_EPS — a deliberate SUPERSET — and the exact rescore
-# (bit-identical to the scalar kernel, see llm_ops._gather_score_hits)
-# applies the real `>= tau`. A pair the exact kernel accepts cannot be
-# missed: that would need |dgemm − einsum| > 1e-9, six orders above the
-# worst-case float64 bound for 64-term unit dots. NaN (zero-norm) rows
-# propagate NaN through the dgemm and are KEPT, matching Spark's
-# NaN-is-largest `>=` semantics in every fallback shape.
-#
-# Work accounting: the dgemm prices Σ|bucket|² pairs (the RAW mass,
-# ~4× the distinct count) — but at BLAS density that is seconds where
-# the distinct's exchange was tens of seconds (measured below); the
-# duplicate-pair work the distinct used to save is cheaper to redo
-# than to dedup. Buckets are capped upstream (cap_buckets), so one
-# block is at most cap² comparisons, chunked to _FUSED_CHUNK elements.
-
-_FUSED_EPS = 1e-9
-_FUSED_CHUNK = 4_000_000  # max f64 elements per GEMM block (~32 MB)
-
-
-def _fused_candidate_hits(grouped: DataFrame, bc, out_a: str, out_b: str,
-                          id_t: str, tau: float) -> DataFrame:
-    """Survivor pairs of a grouped bucket table, scored against the
-    broadcast corpus matrix ``bc``. ``grouped`` carries either `vids`
-    (bucket self-join: emits a < b) or `pv` + `bv` member lists (probe
-    ⋈ base: emits least/greatest of l ≠ r). Pairs are
-    dgemm-thresholded at tau − _FUSED_EPS (superset; see the section
-    note) and may repeat across buckets — the caller dedups, then
-    exact-rescores."""
-    thr = float(tau) - _FUSED_EPS
-    self_join = "vids" in grouped.columns
-
-    def _fused_gemm_gen(batches):
-        import numpy as np
-        import pandas as pd
-
-        ids, M, norms = bc.value
-        with np.errstate(invalid="ignore", divide="ignore"):
-            Mn = M / norms[:, None]  # unit rows; NaN rows for zero-norm
-        hi = len(ids) - 1
-
-        def rows_of(v):
-            idx = np.minimum(np.searchsorted(ids, v), hi)
-            if not np.array_equal(ids[idx], v):
-                raise ValueError(
-                    "fused verify: bucket member id not present in the "
-                    "corpus the matrix was collected from")
-            return Mn[idx]
-
-        for pdf in batches:
-            acc_a: list = []
-            acc_b: list = []
-            sides = (zip(pdf["vids"], pdf["vids"]) if self_join
-                     else zip(pdf["pv"], pdf["bv"]))
-            for a_ids, b_ids in sides:
-                va = np.sort(np.asarray(a_ids, dtype=np.int64))
-                vb = (va if self_join
-                      else np.sort(np.asarray(b_ids, dtype=np.int64)))
-                p, s = va.shape[0], vb.shape[0]
-                if p == 0 or s == 0:
-                    continue
-                P = rows_of(va)
-                B = P if self_join else rows_of(vb)
-                step = max(1, _FUSED_CHUNK // s)
-                for i0 in range(0, p, step):
-                    with np.errstate(invalid="ignore"):
-                        G = P[i0:i0 + step] @ B.T
-                    ii, jj = np.nonzero((G >= thr) | np.isnan(G))
-                    lv = va[ii + i0]
-                    rv = vb[jj]
-                    # self: strict upper triangle (ids are unique in a
-                    # bucket); probe: every l ≠ r, normalized below
-                    m = lv < rv if self_join else lv != rv
-                    if m.any():
-                        lv, rv = lv[m], rv[m]
-                        acc_a.append(np.minimum(lv, rv))
-                        acc_b.append(np.maximum(lv, rv))
-            if acc_a:
-                yield pd.DataFrame({out_a: np.concatenate(acc_a),
-                                    out_b: np.concatenate(acc_b)})
-
-    return grouped.mapInPandas(_fused_gemm_gen,
-                               f"{out_a} {id_t}, {out_b} {id_t}")
-
-
 def bucket_keys_probed(spark: SparkSession, e: DataFrame, *,
                        tables: int, probes: int,
                        seed: int = 707,
@@ -531,6 +354,137 @@ def bucket_keys_probed(spark: SparkSession, e: DataFrame, *,
                           probe_expr.alias("probe_keys"))
 
 
+# --- the exact-cosine kernel: fused per-block GEMM + rescore -----------------
+# Every threshold similarity join ends here: the six LSH consumers (one
+# row per capped bucket) and the all-pairs baseline (one row per block
+# pair of an id grid). Each row carries its members' (vec_id, embedding)
+# lists, so the kernel needs no corpus matrix: it takes the block's pair
+# cosines as ONE dense dgemm over unit rows (guide §4.2 — hand whole
+# batches to native code) and scores the survivors in the same pass, so
+# only threshold hits leave the kernel.
+#
+# Selection correctness: dgemm and the einsum row-dot may differ in the
+# last ulps (~1e-14 on unit vectors), so the dgemm thresholds at
+# tau − _FUSED_EPS — a deliberate SUPERSET — and the exact formula
+# (einsum("ij,ij->i") of the raw float64 rows over the product of
+# sqrt(einsum) norms) applies the real `>= tau`. A pair the exact
+# formula accepts cannot be missed: that would need |dgemm − einsum| >
+# 1e-9, six orders above the worst-case float64 bound for 64-term unit
+# dots. NaN (zero-norm) rows propagate NaN and are KEPT, Spark's
+# NaN-is-largest `>=`. A pair's value depends only on its two rows, so
+# a pair found in several buckets repeats bit-identically and the
+# caller's distinct() folds it.
+#
+# Work accounting: the dgemm prices Σ|bucket|² pairs (the RAW mass, ~4×
+# the distinct count) — at BLAS density that is seconds where the raw
+# pair stream's distinct exchange was tens of seconds; duplicate-pair
+# work is cheaper to redo than to dedup. Memory: buckets are capped
+# upstream (cap_buckets), so one row holds at most cap × dim × 8 B of
+# float64 vectors, and the dgemm runs in blocks of _FUSED_CHUNK elements.
+
+_FUSED_EPS = 1e-9
+_FUSED_CHUNK = 4_000_000  # max f64 elements per GEMM block (~32 MB)
+
+
+def fused_cosine_hits(grouped: DataFrame, out: tuple[str, str], id_t: str,
+                      tau: float) -> DataFrame:
+    """Exact ``(a, b, cos_raw)`` hits (a < b, cos_raw ≥ ``tau`` or NaN)
+    of a table of member blocks. Column ``p`` holds one side's members
+    as ``(vec_id, embedding)`` structs; a row whose ``b`` is NULL (or a
+    frame without ``b``) scores ``p`` against itself (pairs a < b),
+    otherwise ``p`` ⋈ ``b`` (every l ≠ r, as least/greatest). A pair may
+    repeat across rows: the caller dedups. A block holding the same
+    (vec_id, embedding) twice raises ValueError naming the id — the
+    corpus repeats that row, and the caller's distinct would fold its
+    copies' pairs where the oracle keeps them."""
+    thr = float(tau) - _FUSED_EPS
+    tau = float(tau)
+    a, b = out
+    sides = ["p", "b"] if "b" in grouped.columns else ["p"]
+
+    def _fused_gemm_gen(batches):
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        def members(col):
+            """Flat ids, float64 rows and per-row offsets of a member
+            list column (NULL lists hold no members)."""
+            lens = pc.fill_null(pc.list_value_length(col), 0).to_numpy()
+            off = np.concatenate(([0], np.cumsum(lens)))
+            vid, vecs = col.flatten().flatten()
+            vid = vid.to_numpy(zero_copy_only=False)
+            dims = pc.list_value_length(vecs).to_numpy(zero_copy_only=False)
+            dim = int(dims[0]) if len(dims) else 0
+            if (dims != dim).any():
+                raise ValueError("fused cosine: embeddings of unequal "
+                                 "length in one batch")
+            X = (vecs.flatten().to_numpy(zero_copy_only=False)
+                 .astype(np.float64).reshape(len(vid), dim))
+            return vid, X, off
+
+        def no_repeats(vid, X):
+            s = np.sort(vid)
+            for v in np.unique(s[1:][s[1:] == s[:-1]]):
+                rows = X[vid == v]
+                if len({r.tobytes() for r in rows}) < len(rows):
+                    raise ValueError(
+                        f"vec_id {v} repeats an identical (vec_id, "
+                        "embedding) row: deduplicate the corpus first")
+
+        def hits(lv, L, rv, R, self_block):
+            ln = np.sqrt(np.einsum("ij,ij->i", L, L))
+            rn = ln if self_block else np.sqrt(np.einsum("ij,ij->i", R, R))
+            with np.errstate(invalid="ignore", divide="ignore"):
+                LU = L / ln[:, None]  # unit rows; NaN rows for zero-norm
+                RU = LU if self_block else R / rn[:, None]
+            step = max(1, _FUSED_CHUNK // max(1, len(rv)))
+            for i0 in range(0, len(lv), step):
+                with np.errstate(invalid="ignore"):
+                    G = LU[i0:i0 + step] @ RU.T
+                ii, jj = np.nonzero((G >= thr) | np.isnan(G))
+                ii += i0
+                m = lv[ii] < rv[jj] if self_block else lv[ii] != rv[jj]
+                ii, jj = ii[m], jj[m]
+                num = np.einsum("ij,ij->i", L[ii], R[jj])
+                with np.errstate(invalid="ignore", divide="ignore"):
+                    cos = num / (ln[ii] * rn[jj])
+                k = (cos >= tau) | np.isnan(cos)
+                x, y = lv[ii[k]], rv[jj[k]]
+                yield np.minimum(x, y), np.maximum(x, y), cos[k]
+
+        for batch in batches:
+            cols = [members(batch.column(c)) for c in sides]
+            null_b = (pc.is_null(batch.column("b")).to_numpy(
+                zero_copy_only=False) if len(sides) == 2 else None)
+            acc = []
+            for r in range(batch.num_rows):
+                blocks = [(vid[off[r]:off[r + 1]], X[off[r]:off[r + 1]])
+                          for vid, X, off in cols]
+                self_block = null_b is None or null_b[r]
+                for vid, X in blocks[:1 if self_block else 2]:
+                    no_repeats(vid, X)
+                (lv, L), (rv, R) = blocks[0], blocks[0 if self_block else 1]
+                if len(lv) and len(rv):
+                    acc.extend(hits(lv, L, rv, R, self_block))
+            if acc:
+                x, y, c = (np.concatenate(z) for z in zip(*acc))
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(x), pa.array(y), pa.array(c)],
+                    names=[a, b, "cos_raw"])
+
+    return grouped.select(*sides).mapInArrow(
+        _fused_gemm_gen, f"{a} {id_t}, {b} {id_t}, cos_raw double")
+
+
+def _vectors(e: DataFrame) -> DataFrame:
+    """The corpus rows a cosine can be taken of: NULL and empty
+    embeddings have no cosine in the oracle, so they pair with
+    nothing."""
+    return (e.select("vec_id", "embedding")
+            .where(F.size("embedding") > 0))
+
+
 def ann_join(spark: SparkSession, e: DataFrame, *, tables: int,
              probes: int, seed: int, tau: float,
              out: tuple[str, str] = ("vec_a", "vec_b"), slot: str,
@@ -548,13 +502,11 @@ def ann_join(spark: SparkSession, e: DataFrame, *, tables: int,
     on ONE side (probe ⋈ base covers both directions after the
     least/greatest normalization), so the index size is unchanged.
 
-    The gather decision is made once (one sizing job): gatherable
-    corpora take the fused per-bucket GEMM kernel, the rest the join
-    fallback; see the module docstring for both routes."""
-    from silvia_spark.functions.llm_ops import (_gather_broadcast,
-                                                _gather_score_hits,
-                                                _score_pairs_hits)
-
+    Each distinct (member, bucket[, side]) row joins its vector, the
+    rows group per bucket, and ``fused_cosine_hits`` scores every
+    bucket in one pass; see the module docstring. A ``vec_id`` that
+    repeats with different vectors hands each of its buckets all of
+    its rows, which the kernel scores row by row, as the oracle does."""
     if buckets is None:
         buckets = bucket_keys_probed(spark, e, tables=tables,
                                      probes=probes, seed=seed)
@@ -568,7 +520,7 @@ def ann_join(spark: SparkSession, e: DataFrame, *, tables: int,
                     _ANN_BUCKET_CAP),
         f"{slot}.buckets")
     base = buckets.select("vec_id", *keys)
-    side = base
+    mem = F.struct("vec_id", "embedding")
     if probes:
         # The FLIP keys get their own cap pass: base-bucket capping
         # bounds base-key rows per bucket, but a pathological corpus
@@ -581,61 +533,65 @@ def ann_join(spark: SparkSession, e: DataFrame, *, tables: int,
             buckets.select("vec_id", "table_id",
                            F.explode("probe_keys").alias("bucket_key")),
             _ANN_BUCKET_CAP))
-    a, b = out
-    vslot = f"verify.{slot}"
-    bc = _gather_broadcast(spark, e, vslot)
-    if bc is not None:
-        if probes:
-            tagged = (side.withColumn("p", F.lit(True))
-                      .union(base.withColumn("p", F.lit(False))))
-            grouped = tagged.groupBy(*keys).agg(
-                F.collect_list(F.when(F.col("p"), F.col("vec_id")))
-                .alias("pv"),
-                F.collect_list(F.when(~F.col("p"), F.col("vec_id")))
-                .alias("bv"))
-        else:
-            # rides the persisted table's hash partitioning (the
-            # cap_buckets window exchange): no new corpus-scale shuffle
-            grouped = base.groupBy(*keys).agg(
-                F.collect_list("vec_id").alias("vids"))
-        surv = _fused_candidate_hits(grouped, bc, a, b,
-                                     dict(buckets.dtypes)["vec_id"], tau)
-        return _gather_score_hits(e, surv.distinct(), tau, vslot, bc=bc)
-    left = side.withColumnRenamed("vec_id", "vec_l")
-    right = base.withColumnRenamed("vec_id", "vec_r")
-    pairs = left.join(right, keys)
-    if probes:
-        raw = (pairs.where(F.col("vec_l") != F.col("vec_r"))
-               .select(F.least("vec_l", "vec_r").alias(a),
-                       F.greatest("vec_l", "vec_r").alias(b)))
+        tagged = (side.withColumn("p", F.lit(True))
+                  .union(base.withColumn("p", F.lit(False))))
+        p = F.col("p")
+        grouped = (tagged.distinct()
+                   .join(_vectors(e), "vec_id")
+                   .groupBy(*keys)
+                   .agg(F.collect_list(F.when(p, mem)).alias("p"),
+                        F.collect_list(F.when(~p, mem)).alias("b")))
     else:
-        raw = (pairs.where(F.col("vec_l") < F.col("vec_r"))
-               .select(F.col("vec_l").alias(a), F.col("vec_r").alias(b)))
-    cand = _distinct_pairs(raw, left, right, keys, "vec_l", "vec_r")
-    # Stage cut BEFORE the Python eval: persist the 16 B/row candidate
-    # PAIRS (DISK_ONLY) so the distinct's shuffle-reduce and the
-    # ArrowEvalPython row-queue never share one task's memory. Fused,
-    # the scalar eval's result-rejoin queue (it buffers the 1 KB
-    # embedding-attached input rows while Python computes) on top of
-    # the distinct's hash structures OOMed the 8 g executor at
-    # mp2-sf1's 195 M candidates (measured r13, twice).
-    cand = managed_persist(cand, f"{vslot}.pairs", level="DISK_ONLY")
-    ea = e.select(F.col("vec_id").alias(a), F.col("embedding").alias("ea"))
-    eb = e.select(F.col("vec_id").alias(b), F.col("embedding").alias("eb"))
-    return _score_pairs_hits(cand.join(ea, a).join(eb, b), a, b, tau,
-                             vslot)
+        grouped = (base.distinct().join(_vectors(e), "vec_id")
+                   .groupBy(*keys).agg(F.collect_list(mem).alias("p")))
+    return fused_cosine_hits(grouped, out, dict(buckets.dtypes)["vec_id"],
+                             tau).distinct()
+
+
+def all_pairs(spark: SparkSession, e: DataFrame, *, tau: float,
+              out: tuple[str, str] = ("vec_a", "vec_b")) -> DataFrame:
+    """Exact ``(a, b, cos_raw)`` for EVERY pair a < b at cosine ≥
+    ``tau`` — the quadratic baseline on the LSH family's kernel. The
+    corpus splits into K id blocks by ``pmod(vec_id, K)``, K the
+    session's default parallelism; each vector joins the K block pairs
+    it belongs to, and one row per pair i ≤ j carries both member lists
+    (i = j: the block against itself), so each pair is scored once.
+    Shuffle is K·n·dim; the work is the n²/2 dots."""
+    k = spark.sparkContext.defaultParallelism
+    blk = F.pmod(F.col("vec_id"), F.lit(k))
+    j = F.col("j")
+    v = _vectors(e).select(
+        "vec_id", "embedding", blk.alias("blk"),
+        F.explode(F.sequence(F.lit(0), F.lit(k - 1))).alias("j"))
+    lo, hi = F.col("lo"), F.col("hi")
+    rb = F.col("rb")
+    grid = (v.select(F.least("blk", j).alias("lo"),
+                     F.greatest("blk", j).alias("hi"),
+                     (F.col("blk") > j).alias("rb"),
+                     F.struct("vec_id", "embedding").alias("m"))
+            # explicit width: AQE would coalesce the small block shuffle
+            # into one task and serialize the whole product
+            .repartition(k * (k + 1) // 2, "lo", "hi")
+            .groupBy("lo", "hi")
+            .agg(F.collect_list(F.when(~rb, F.col("m"))).alias("p"),
+                 F.when(lo == hi, F.lit(None))
+                 .otherwise(F.collect_list(F.when(rb, F.col("m"))))
+                 .alias("b")))
+    return fused_cosine_hits(grid, out, dict(e.dtypes)["vec_id"], tau)
+
+
+def rounded_pairs(hits: DataFrame) -> DataFrame:
+    """Contract tail over ``(a, b, cos_raw)`` hits: JVM round to 6 dp,
+    order."""
+    a, b = hits.columns[:2]
+    return (hits.select(a, b, F.round("cos_raw", 6).alias("cos_sim"))
+            .orderBy(a, b))
 
 
 def _ann_pairs(spark: SparkSession, e: DataFrame, slot: str,
                **kw) -> DataFrame:
-    """Contract tail over ``ann_join`` at cosine ≥ 0.4: persist the
-    tiny survivor set (the global sort's range-sampling pass
-    re-executes its child otherwise), JVM round, order."""
-    hits = managed_persist(ann_join(spark, e, tau=0.4, slot=slot, **kw),
-                           f"score_pairs.verify.{slot}.hits")
-    return (hits.select("vec_a", "vec_b",
-                        F.round("cos_raw", 6).alias("cos_sim"))
-            .orderBy("vec_a", "vec_b"))
+    """``ann_join`` at cosine ≥ 0.4 through the contract tail."""
+    return rounded_pairs(ann_join(spark, e, tau=0.4, slot=slot, **kw))
 
 
 @contract("sim_ann_lsh", oracle=_ANN_ORACLE)
@@ -702,31 +658,14 @@ def sim_ann_lsh_multiprobe2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @contract("sim_ann_auto", oracle=_ANN_ORACLE)
-def sim_ann_auto(spark: SparkSession, sf_dir: str,
-                 index_root: str | None = None) -> DataFrame:
-    """Index-aware ANN join: serves the PERSISTED index — ``index_root``
-    argument or ``$SILVIA_ANN_INDEX_ROOT`` — when ``ann_index_fresh``
-    says it covers exactly this corpus AND the corpus is past the
-    gather bound; every other case runs ``sim_ann_lsh``.
-
-    Why only past the bound (ANN_INDEX.json, regenerated after the r15
-    fused kernel): on a gatherable corpus the warm-index route measured
-    2× the whole compute path at sf1 (warm_query 8.0 s vs cold_base
-    3.9 s) — the map-only GEMM the index skips (~0.5 s) is cheaper than
-    reading the bucket table back from the manifest. Past the bound the
-    join fallback's GEMM + candidate distinct is still the expensive
-    side the index skips. Every route ends in the same exact verify, so
-    the output is identical whichever runs (oracle-proven; pinned in
-    tests/test_ann_index.py)."""
-    import os as _os
-
-    from silvia_spark.functions.llm_ops import _gather_feasible
-
-    e = load_table(spark, sf_dir, "embeddings")
-    index_root = index_root or _os.environ.get("SILVIA_ANN_INDEX_ROOT")
-    if index_root and ann_index_fresh(e, index_root) \
-            and not _gather_feasible(e):
-        return sim_ann_lsh_indexed(spark, sf_dir, index_root)
+def sim_ann_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The routed ANN contract: it runs ``sim_ann_lsh``. Its index
+    route (a fresh persisted index, taken only past the gather bound)
+    went with the bound: reading the bucket table back measured slower
+    than computing it (ANN_INDEX.json, 20 k vectors: warm index 8.14 s
+    against 4.80 s compute), and the one fused route now serves every
+    corpus size. ``sim_ann_indexed`` and ``sim_ann_lsh_indexed`` still
+    serve a persisted index."""
     return sim_ann_lsh(spark, sf_dir)
 
 

@@ -1,10 +1,13 @@
 """LLM-data-pipeline operators — SURVEY.md §2.J (J1–J10).
 
 Design rules for this family:
-- Per-row cosine SCORING (top-k, threshold verify) runs in an Arrow-batched
-  numpy kernel (``cosine``): zip_with/aggregate higher-order functions are
-  evaluated per-element in Catalyst's interpreter (measured 11× DuckDB at
-  sf0.1), while one einsum per Arrow batch amortizes the Python boundary to
+- Threshold similarity joins (J4 and the LSH family) score in ONE exact
+  kernel, ``llm_extras.fused_cosine_hits``: per block of vectors, a dgemm
+  picks the candidates and an einsum rescores them. Per-row scoring of
+  given pairs has an Arrow-batched numpy kernel (``cosine``, exported by
+  ``api``): zip_with/aggregate higher-order functions are evaluated
+  per-element in Catalyst's interpreter (measured 11× DuckDB at sf0.1),
+  while one einsum per Arrow batch amortizes the Python boundary to
   ~µs/row. The expression form survives as ``cosine_expr`` for paths where
   the COMPARISON of two near-equal cosines drives control flow (IVF probe
   argmax, k-means assignment) — there the DuckDB oracle replicates the same
@@ -15,23 +18,20 @@ Design rules for this family:
   pairs — instead of ml's memory-heavy model broadcast, and AQE handles
   skewed buckets. At 100 TB only band-bucket grouping and the
   verified-candidate join shuffle; no all-pairs stage exists anywhere.
-- Exact all-pairs forms (J4's cross join) are correctness baselines at test
+- Exact all-pairs forms (J4's block grid) are correctness baselines at test
   scale; scale paths are the LSH/blocked variants (see llm_extras).
 """
 
 from __future__ import annotations
 
-import os
 import random
-import threading
 
 import pandas as pd  # module-level: pandas_udf resolves 'pd.Series' hints here
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from silvia_spark.io import (load_table, load_tables,
-                             register_cache_cleaner)
+from silvia_spark.io import load_table, load_tables
 from silvia_spark.registry import contract
 
 # --- shared vector kernels ----------------------------------------------------
@@ -95,258 +95,16 @@ _COS_ARROW = None
 
 
 def cosine(a, b):
-    """Arrow-batched numpy cosine — the default scoring kernel (J3/J4 top-k
-    and threshold verify, LSH/embedding-dedup verify stages). One Python
-    round-trip per Arrow batch (~10⁴ rows), one fused GEMM-like einsum per
-    batch; plans show an ArrowEvalPython stage (asserted in PLANS.md), and
-    the per-row cost is numpy's, not the Catalyst interpreter's."""
+    """Arrow-batched numpy cosine of two vector columns, row by row
+    (exported by ``api``; the threshold joins score in ``llm_extras``'
+    fused kernel instead, with the same einsum formula). One Python
+    round-trip per Arrow batch (~10⁴ rows), one einsum per batch, an
+    ArrowEvalPython stage in the plan: the per-row cost is numpy's, not
+    the Catalyst interpreter's."""
     global _COS_ARROW
     if _COS_ARROW is None:
         _COS_ARROW = _make_cos_arrow()
     return _COS_ARROW(a, b)
-
-
-def score_pairs_threshold(joined, tau: float = 0.4,
-                          slot: str = "score_pairs"):
-    """Exact-cosine verify tail shared by the LSH family and the
-    quadratic baseline: score (vec_a, ea, vec_b, eb) pairs with the
-    scalar Arrow ``cosine`` UDF, persist the scored
-    (vec_a, vec_b, cos_raw) frame, and filter JVM-side over the cache.
-
-    This is the r13 SINGLE-EVAL shape, chosen by measurement at sf1's
-    195 M candidates (ANN_VERIFY_KERNEL.json): 43 s vs 145–150 s for
-    the r11–r12 mapInPandas kernel (3.4×) and 102 s for the naive
-    scalar-UDF + Filter shape (whose plan Catalyst rewrites into TWO
-    ArrowEvalPython nodes by substituting the UDF into the pushed
-    predicate — the r10 blemish). Why each property holds:
-
-    - ONE Python crossing, structurally: predicate pushdown stops at
-      the ``InMemoryRelation`` barrier — the UDF runs once while the
-      cache fills, the threshold Filter scans cached batches (with
-      batch-level min/max pruning on cos_raw for free). No
-      ``asNondeterministic`` marker (the r11 executor-heap hazard).
-    - The scalar ArrowEvalPython ships ONLY (ea, eb) to Python and a
-      double back, pipelined — measured ~2× the throughput of the
-      mapInPandas node's full-batch restructuring even before the
-      double-eval fix (the kernel study's central finding). A
-      pass-through mapInArrow threshold stage was measured as the
-      alternative barrier and REJECTED: chaining a second Python
-      stage cost more than the whole shipping kernel (176 s).
-    - Cache payload is (long, long, double) — ~24 B/row raw, columnar
-      compressed, MEMORY_AND_DISK via managed_persist (one live slot
-      per ``slot``; bench/parity reps clear_caches() between runs so
-      timings stay honest). At 10⁹ candidates that is ~24 GB across
-      the cluster for the duration of the query — linear in the
-      candidate count the join already materializes into the distinct
-      shuffle, and freed at the next run of the slot.
-    - Values are bit-identical to every previous kernel (same einsum,
-      same JVM F.round after), so the family's exact all-pairs
-      oracles stay green; numpy and the JVM agree on the >= compare
-      for every non-NaN double, and the corpus has no zero-norm
-      vectors to produce NaN (pytest-pinned in test_determinism)."""
-    return (_score_pairs_hits(joined, "vec_a", "vec_b", tau, slot)
-            .select("vec_a", "vec_b",
-                    F.round("cos_raw", 6).alias("cos_sim"))
-            .orderBy("vec_a", "vec_b"))
-
-
-def _score_pairs_hits(joined, pa: str, pb: str, tau: float, slot: str):
-    """The unrounded ``score_pairs_threshold`` survivors: (pa, pb,
-    cos_raw) with cos_raw >= tau, from (pa, ea, pb, eb) rows."""
-    from silvia_spark.io import managed_persist
-
-    scored = joined.select(
-        pa, pb, cosine(F.col("ea"), F.col("eb")).alias("cos_raw"))
-    # DISK_ONLY, deliberately: the barrier is written once and read
-    # once, so memory-caching it buys nothing — and cached blocks are
-    # unevictable below storageFraction, which at mp2-sf1 (195 M
-    # candidates × 32 concurrent tasks of probe-join/distinct in the
-    # SAME stage pipeline) squeezed the execution pool and OOMed the
-    # executor (measured r13; raising the heap instead made the
-    # shuffle-heavy generation 2.5× SLOWER — 531 s → 1337 s GEN at
-    # 48 g, a G1 large-heap effect — so the barrier stays off-heap
-    # and the session heap stays at its measured-good size).
-    scored = managed_persist(scored, f"score_pairs.{slot}",
-                             level="DISK_ONLY")
-    return scored.where(F.col("cos_raw") >= tau)
-
-
-# --- gather-in-kernel exact verify (r15) --------------------------------------
-# The r14 verify tail joined the embeddings onto each candidate pair and
-# shipped (ea, eb) through the scalar Arrow kernel: at sf1's 194 M
-# candidates that is ~100 GB JVM→Python where the bare ids are ~3 GB and
-# the WHOLE embedding table is ~10 MB. r15 (guide §8.4 "move big rows
-# once", §4.1 "control how many columns cross", §4.5 heavyweight init):
-# ship ONLY the id pair across the Arrow boundary, load the embedding
-# matrix once per task from a hand-built broadcast, and numpy-row-gather
-# + einsum inside the kernel — the same float64 rows and the same
-# per-row reduction as the scalar kernel, so cos_raw is bit-identical
-# (pinned in tests/test_determinism.py). Thresholding happens INSIDE the
-# kernel, so only survivors (a banding-selected handful) ever leave it —
-# no 194 M-row scored barrier to persist.
-#
-# Scale guard: the matrix must be per-task-loadable. Corpora whose
-# (n_vecs × dim × 8 B) exceeds SILVIA_GATHER_MAX_BYTES (default 256 MB —
-# comfortably inside one Python worker's share of executor overhead
-# memory; 100 TB corpora with ~10⁹ vectors exceed it and take the join)
-# fall back to the r14 join + scalar-kernel shape, which is correct at
-# any scale, just transfer-bound.
-
-_GATHER_MAX_BYTES = 256 * 1024 * 1024
-_GATHER_BCS: dict[str, object] = {}
-_GATHER_BCS_LOCK = threading.Lock()
-
-
-def _gather_bound() -> int:
-    return int(os.environ.get("SILVIA_GATHER_MAX_BYTES",
-                              _GATHER_MAX_BYTES))
-
-
-def _clear_gather_bcs() -> None:
-    with _GATHER_BCS_LOCK:
-        bcs = [_GATHER_BCS.pop(k) for k in list(_GATHER_BCS)]
-    for bc in bcs:
-        try:
-            bc.destroy()
-        except Exception:
-            pass  # session already stopped — nothing to free
-
-
-register_cache_cleaner(_clear_gather_bcs)
-
-
-def _gather_feasible(e: DataFrame) -> bool:
-    """True iff the corpus can serve the gather/fused kernels: fixed
-    positive dims, no null embeddings, matrix under the per-task byte
-    bound. One tiny agg job (the collect-at-build sizing pattern)."""
-    row = e.agg(F.count(F.lit(1)).alias("n"),
-                F.count("embedding").alias("nn"),
-                F.min(F.size("embedding")).alias("dlo"),
-                F.max(F.size("embedding")).alias("dhi")).collect()[0]
-    n = int(row["n"] or 0)
-    if (n == 0 or row["nn"] != n or row["dlo"] is None
-            or row["dlo"] != row["dhi"] or int(row["dlo"]) <= 0):
-        return False
-    return n * int(row["dhi"]) * 8 <= _gather_bound()
-
-
-def _collect_embeddings(e: DataFrame):
-    """(ids, M, norms) numpy triple for the gather kernel, or None when
-    the corpus cannot be gathered: over the per-task byte bound, ragged
-    or zero dims, null embeddings (rows the matrix could not represent),
-    non-integral ids, or duplicate ids (the kernel's searchsorted would
-    score one arbitrary row of the duplicates; the join path scores
-    every row, as the oracle does). One tiny agg job prices the
-    decision before anything is collected; the duplicate check reads
-    the ids already collected and sorted here, so it costs no job."""
-    import numpy as np
-
-    if not _gather_feasible(e):
-        return None
-    tbl = e.select("vec_id", "embedding").toArrow()
-    try:
-        ids = np.asarray(tbl.column("vec_id").to_pylist(), dtype=np.int64)
-        M = np.asarray(tbl.column("embedding").to_pylist(),
-                       dtype=np.float64)
-    except (TypeError, ValueError, OverflowError):
-        return None  # non-integral ids / malformed vectors: join path
-    order = np.argsort(ids, kind="stable")
-    ids = ids[order]
-    if (ids[1:] == ids[:-1]).any():
-        return None
-    M = np.ascontiguousarray(M[order])
-    norms = np.sqrt(np.einsum("ij,ij->i", M, M))
-    return ids, M, norms
-
-
-def _gather_broadcast(spark: SparkSession, e: DataFrame, slot: str):
-    """Broadcast the corpus matrix, one live broadcast per slot (the
-    managed_persist discipline: replacing a slot frees the previous
-    run's executor copies; clear_caches() destroys them all)."""
-    data = _collect_embeddings(e)
-    if data is None:
-        return None
-    bc = spark.sparkContext.broadcast(data)
-    with _GATHER_BCS_LOCK:
-        prev = _GATHER_BCS.get(slot)
-        _GATHER_BCS[slot] = bc
-    if prev is not None:
-        try:
-            prev.unpersist()
-        except Exception:
-            pass
-    return bc
-
-
-def _gather_score_hits(e: DataFrame, cand: DataFrame, tau: float,
-                       slot: str, bc=None):
-    """Threshold survivors (ida, idb, cos_raw) of an ID-ONLY candidate
-    frame, scored by gather-in-kernel — or None when the corpus exceeds
-    the gather bound (callers fall back to the join form). cand must be
-    exactly the two id columns. cos_raw is bit-identical to the scalar
-    ``cosine`` kernel: same float64 rows, the same einsum row-dot for
-    the numerator, and per-vector norms from the identical einsum+sqrt
-    (a row's reduction does not depend on which batch carries it), so
-    num/den reproduces ``_np_cos`` exactly. NaN pairs (zero-norm) are
-    KEPT, replicating Spark's NaN-is-largest semantics in the JVM
-    ``cos_raw >= tau`` filter the fallback path applies. Pass ``bc``
-    (a `_gather_broadcast` handle) to share one collected matrix with
-    an upstream kernel of the same query."""
-    spark = cand.sparkSession
-    if bc is None:
-        bc = _gather_broadcast(spark, e, slot)
-    if bc is None:
-        return None
-    pa, pb = cand.columns
-    dt = dict(cand.dtypes)
-    tau = float(tau)
-
-    def _gather_cos_gen(batches):
-        import numpy as np
-
-        ids, M, norms = bc.value
-        hi = len(ids) - 1
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            va = pdf[pa].to_numpy()
-            vb = pdf[pb].to_numpy()
-            ia = np.minimum(np.searchsorted(ids, va), hi)
-            ib = np.minimum(np.searchsorted(ids, vb), hi)
-            if not (np.array_equal(ids[ia], va)
-                    and np.array_equal(ids[ib], vb)):
-                raise ValueError(
-                    "gather verify: candidate id not present in the "
-                    "corpus the matrix was collected from")
-            num = np.einsum("ij,ij->i", M[ia], M[ib])
-            with np.errstate(invalid="ignore", divide="ignore"):
-                cos = num / (norms[ia] * norms[ib])
-            keep = (cos >= tau) | np.isnan(cos)
-            yield pd.DataFrame({pa: va[keep], pb: vb[keep],
-                                "cos_raw": cos[keep]})
-
-    return cand.mapInPandas(
-        _gather_cos_gen,
-        f"{pa} {dt[pa]}, {pb} {dt[pb]}, cos_raw double")
-
-
-def verify_pairs_gather(e: DataFrame, cand: DataFrame, tau: float = 0.4,
-                        slot: str = "gather"):
-    """Finished contract verify tail over the gather kernel: threshold
-    inside the kernel, persist the (tiny) survivor set, JVM round +
-    global order. None when the corpus exceeds the gather bound. The
-    survivor persist exists for the orderBy: a global sort's
-    range-sampling pass re-executes its child — here the entire
-    candidate join — unless a materialization barrier sits between."""
-    from silvia_spark.io import managed_persist
-
-    hits = _gather_score_hits(e, cand, tau, slot)
-    if hits is None:
-        return None
-    pa, pb = cand.columns
-    hits = managed_persist(hits, f"score_pairs.{slot}.hits")
-    return (hits.select(pa, pb, F.round("cos_raw", 6).alias("cos_sim"))
-            .orderBy(pa, pb))
 
 
 _SQL_COS = """
@@ -609,30 +367,15 @@ def sim_join_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All pairs with cosine ≥ 0.4 (corpus max ≈ 0.51 — 0.95 would be
     vacuous). Exact quadratic form as the correctness baseline; at scale
     this becomes hyperplane-LSH bucketing (llm_extras.sim_ann_lsh) so only
-    same-bucket pairs are scored. The scorer is the Arrow-batched numpy
-    kernel: 2M pairs × 64 dims at sf0.1 run in 56 ms vs 91 ms for the
-    interpreted expression fold and 6.5 s for DuckDB's list_sum — per-pair
-    work is where vectorization pays, and the pair volume amortizes the
-    Python stage's fixed cost across parallel tasks."""
+    same-bucket pairs are scored. Served by the one exact-cosine kernel
+    of the LSH family (``llm_extras.fused_cosine_hits``) over a grid of
+    id blocks (``llm_extras.all_pairs``): one row per block pair, each
+    carrying its members' vectors, so the all-pairs product is a handful
+    of dense dgemm blocks and no pair row is ever materialized."""
+    from silvia_spark.functions.llm_extras import all_pairs, rounded_pairs
+
     e = load_table(spark, sf_dir, "embeddings")
-    # r15 gather-in-kernel verify: the all-pairs product is built over
-    # BARE IDS (16 B/pair instead of ~530 B with both vectors attached)
-    # and scored by broadcast-matrix row-gather — only ids cross the
-    # Python boundary (see verify_pairs_gather).
-    cand = (e.select(F.col("vec_id").alias("vec_a"))
-            .crossJoin(e.select(F.col("vec_id").alias("vec_b")))
-            .where(F.col("vec_a") < F.col("vec_b")))
-    out = verify_pairs_gather(e, cand, slot="sim_join_threshold")
-    if out is not None:
-        return out
-    # over the gather bound: the r13 join + scalar-kernel shape —
-    # scalar-UDF score into a persist barrier, JVM threshold over the
-    # cache, one Python crossing structurally (see score_pairs_threshold)
-    a = e.select(F.col("vec_id").alias("vec_a"), F.col("embedding").alias("ea"))
-    b = e.select(F.col("vec_id").alias("vec_b"), F.col("embedding").alias("eb"))
-    return score_pairs_threshold(
-        a.crossJoin(b).where(F.col("vec_a") < F.col("vec_b")),
-        slot="sim_join_threshold")
+    return rounded_pairs(all_pairs(spark, e, tau=0.4))
 
 
 # --- J5: per-label centroids + intra-label coherence -------------------------

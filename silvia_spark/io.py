@@ -134,14 +134,8 @@ _LIVE_CACHES: dict[str, DataFrame] = {}
 _LIVE_CACHES_LOCK = threading.Lock()
 
 
-def managed_persist(df: DataFrame, slot: str,
-                    level: str | None = None) -> DataFrame:
-    """persist (MEMORY_AND_DISK by default; pass ``level="DISK_ONLY"``
-    for write-once-read-once barrier frames whose cached blocks must
-    not compete with execution memory — the r13 verify cache's lesson:
-    unevictable storage below storageFraction squeezed the execution
-    pool under a 195 M-candidate join pipeline and OOMed the executor)
-    with at most one live cache per slot.
+def managed_persist(df: DataFrame, slot: str) -> DataFrame:
+    """persist (MEMORY_AND_DISK) with at most one live cache per slot.
     Lock-guarded: concurrent contract runs (e.g. a threaded driver) must
     not interleave the pop/insert and leak an unpersisted cache.
 
@@ -172,8 +166,7 @@ def managed_persist(df: DataFrame, slot: str,
                     return prev
             except Exception:
                 pass  # Connect session / stopped session: fall through
-        out = df.persist(StorageLevel.DISK_ONLY if level == "DISK_ONLY"
-                         else StorageLevel.MEMORY_AND_DISK)
+        out = df.persist(StorageLevel.MEMORY_AND_DISK)
         _LIVE_CACHES[slot] = out
     if prev is not None:
         try:
@@ -181,18 +174,6 @@ def managed_persist(df: DataFrame, slot: str,
         except Exception:
             pass  # session already stopped — nothing to free
     return out
-
-
-# Modules that hold non-DataFrame cached state tied to query runs (e.g.
-# the gather-verify embedding broadcasts in llm_ops) register a cleaner
-# so clear_caches() stays the ONE lifecycle entry point the bench/parity
-# harnesses call between reps — no cached artifact survives it.
-_EXTRA_CLEANERS: list = []
-
-
-def register_cache_cleaner(fn) -> None:
-    """Register a zero-arg callable invoked by every clear_caches()."""
-    _EXTRA_CLEANERS.append(fn)
 
 
 def clear_caches() -> None:
@@ -207,8 +188,3 @@ def clear_caches() -> None:
             df.unpersist()
         except Exception:
             pass  # session already stopped — nothing to free
-    for fn in list(_EXTRA_CLEANERS):
-        try:
-            fn()
-        except Exception:
-            pass  # a cleaner must never break cache clearing

@@ -2981,8 +2981,9 @@ def read_changes(spark: SparkSession, path: str, since: int,
     all-column shuffle over the changed files' rows — unsuitable only
     for map-typed columns (not comparable in EXCEPT)."""
     root = _norm(path)
-    m_to = _load_doc(root, to)
-    m_since = _load_doc(root, since)
+    window = f"read_changes over ({since}, {'head' if to is None else to}]"
+    m_to = _window_doc(root, to, window)
+    m_since = _window_doc(root, since, window)
     if not row_level:
         new_entries = _diff_entries(root, m_since, m_to)
         if not new_entries:
@@ -3080,6 +3081,23 @@ def _cdf_align(df: DataFrame, fields: list) -> DataFrame:
         "_change_type")
 
 
+def _window_doc(root: str, v: int | None, window: str,
+                role: str = "") -> dict:
+    """``_load_doc`` for a reader that walks the versions of ``window``
+    (the change feed, ``read_changes``, a manifest stream batch): a
+    manifest vacuum retired raises FileNotFoundError naming it, its
+    ``role`` in the walk, and the retention knob."""
+    if v is None:
+        return _load_doc(root)
+    try:
+        return _load_doc(root, v)
+    except FileNotFoundError as e:
+        raise FileNotFoundError(
+            f"{window} needs manifest v{v}{role}, and it is gone "
+            "(vacuumed?): widen keep_versions over the longest consumer "
+            "lag, or start the feed at a retained version") from e
+
+
 def _change_versions(root: str, since: int, to: int):
     """The ONE change-feed walk over versions ``(since, to]`` — behind
     ``read_change_feed``, the CDC stream and the batch ``changesSince``
@@ -3092,19 +3110,10 @@ def _change_versions(root: str, since: int, to: int):
     a record refuses (the feed starts at enablement); a manifest the
     walk needs that vacuum retired raises FileNotFoundError naming it
     and the retention knob."""
-    def load(v: int, role: str = "") -> dict:
-        try:
-            return _load_doc(root, v)
-        except FileNotFoundError as e:
-            raise FileNotFoundError(
-                f"the change feed over ({since}, {to}] needs manifest "
-                f"v{v}{role}, and it is gone (vacuumed?): widen "
-                "keep_versions over the longest consumer lag, or start "
-                "the feed at a retained version") from e
-
+    window = f"the change feed over ({since}, {to}]"
     prev: dict | None = None
     for v in range(since + 1, to + 1):
-        d = load(v)
+        d = _window_doc(root, v, window)
         cdf = d.get("cdf")
         if cdf is None:
             raise ValueError(
@@ -3114,7 +3123,8 @@ def _change_versions(root: str, since: int, to: int):
                 "diffs of older windows")
         if cdf["mode"] == "append":
             base = prev if prev is not None else (
-                load(v - 1, f" as the diff base for v{v}")
+                _window_doc(root, v - 1, window,
+                            f" as the diff base for v{v}")
                 if v > 1 else None)
             yield v, d, (_diff_entries(root, base, d) if base is not None
                          else _resolve(root, d)), []

@@ -51,22 +51,23 @@ def contract(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryF
 _NEW_CONTRACTS_HERE = "__new_contracts_here__"
 
 _PRIORITY: tuple[str, ...] = (
-    # ============ packing after the shared change-feed walk and
-    # positional entry scan (evidence ledger: r09=11, r10=36, r11=22,
-    # r12=40, r13=38, r14=42, r15=50; zero failures ever).
+    # ============ packing after the one exact-cosine route (evidence
+    # ledger: r09=11, r10=36, r11=22, r12=40, r13=38, r14=42, r15=50;
+    # zero failures ever).
     # Head: the contracts whose plan-building code changed after their
-    # newest evidence — first the ten whose call graph reaches the
-    # rewritten manifest reads (the change-feed walk behind
-    # read_change_feed, the CDC stream and changesSince; the positional
-    # scan of commit_delete and read_changes(row_level=True); the
-    # segment carry of restore, metadata commits and SQL INSERT), then
-    # the other manifest/SQL/stream contracts reaching commit_append's
-    # segment carry or _read_entries, then the still-unchecked
-    # contracts of the previous rounds (the one-pass MinHash verify,
-    # SimHash, the six ANN consumers of llm_extras.ann_join). Then
-    # evidence oldest-first: 34 + 11 r09 + 5 of the 36 r10 fill the
-    # 50-slot window. ======
+    # newest evidence — first the seven whose plans the one exact-cosine
+    # route rewrote (the six consumers of llm_extras.ann_join, whose
+    # bucket members now carry their vectors into the fused kernel, and
+    # sim_join_threshold, now that kernel over a grid of id blocks),
+    # then the manifest/SQL/stream contracts reaching the shared
+    # change-feed walk, the positional entry scan or commit_append's
+    # segment carry, then the still-unchecked one-pass MinHash verify
+    # and SimHash. Then evidence oldest-first: 35 + 11 r09 + 4 of the
+    # 36 r10 fill the 50-slot window. ======
     # -- plan changed after their newest evidence --
+    "sim_ann_lsh", "sim_ann_lsh_multiprobe", "sim_ann_lsh_multiprobe2",
+    "sim_ann_auto", "sim_ann_indexed", "dedup_docs_embedding",
+    "sim_join_threshold",
     "stream_changes_cdf", "stream_replicate_table", "scan_changes_row_level",
     "sink_delete_dv", "sink_sql_delete", "sink_restore_version",
     "scan_table_clone", "scan_manifest_renamed", "sink_sql_insert",
@@ -79,8 +80,6 @@ _PRIORITY: tuple[str, ...] = (
     "stream_manifest_source", "stream_manifest_sink",
     "stream_manifest_admission",
     "dedup_docs_minhash", "dedup_docs_simhash",
-    "sim_ann_lsh", "sim_ann_lsh_multiprobe", "sim_ann_lsh_multiprobe2",
-    "sim_ann_auto", "sim_ann_indexed", "dedup_docs_embedding",
     # -- new contracts registered mid-round slot in here --
     _NEW_CONTRACTS_HERE,
     # -- r09-era evidence --
@@ -145,7 +144,7 @@ _PRIORITY: tuple[str, ...] = (
     "stream_funnel_live", "stream_session_live", "stream_static_join_live",
     "stream_stream_join_live", "stream_transform_with_state",
     # -- r15-era evidence --
-    "sim_join_threshold", "stream_session_30m", "stream_tumbling_live",
+    "stream_session_30m", "stream_tumbling_live",
     "stream_watermark_late", "text_lang_detect", "text_pack_sequences",
     "text_pii_scrub", "text_unicode_normalize", "window_gaps_islands",
     "window_ignore_nulls", "agg_approx_distinct", "agg_approx_percentile",

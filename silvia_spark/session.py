@@ -124,11 +124,10 @@ def get_session(app_name: str = "silvia_spark", master: str | None = None,
         # MEASURED-good size for this box (r13): raising it to 48g
         # made the shuffle-heavy JVM-only ANN generation 2.5× slower
         # (531 s → 1337 s for the mp2-sf1 GEMM/join/distinct — a G1
-        # large-heap effect), while the r13 verify-cache OOM that
-        # motivated a bigger heap was the CACHE's fault, fixed at the
-        # source instead (the verify barrier persists DISK_ONLY, so
-        # cached blocks never compete with execution memory —
-        # llm_ops.score_pairs_threshold). Override per-run with
+        # large-heap effect). The r13 verify-cache OOM that motivated a
+        # bigger heap came from a 195 M-row scored-pair cache; the exact
+        # cosine kernel now thresholds in place, so no scored pair is
+        # cached (llm_extras.fused_cosine_hits). Override per-run with
         # SPARK_DRIVER_MEMORY.
         .config("spark.driver.memory",
                 os.environ.get("SPARK_DRIVER_MEMORY", "8g"))

@@ -358,8 +358,8 @@ class ManifestStreamReader(DataSourceStreamReader):
         creation commit IS its own snapshot); else the file-granular
         diff from v-1 (read_changes' set)."""
         from silvia_spark.operators.manifest_table import (_diff_entries,
-                                                           _load_doc,
-                                                           _resolve)
+                                                           _resolve,
+                                                           _window_doc)
 
         snap = self._snap or 0
         if v <= self.start_version or v < snap:
@@ -367,13 +367,15 @@ class ManifestStreamReader(DataSourceStreamReader):
         got = self._fl_cache.get((snap, v))
         if got is not None:
             return got
-        m_to = _load_doc(self.root, v)
+        window = f"the stream's file list of v{v}"
+        m_to = _window_doc(self.root, v, window)
         self._guard_schema(v, m_to)
         if v == snap or v == 1:
             fl = _resolve(self.root, m_to)
         else:
-            fl = _diff_entries(self.root, _load_doc(self.root, v - 1),
-                               m_to)
+            fl = _diff_entries(self.root, _window_doc(
+                self.root, v - 1, window, f" as the diff base for v{v}"),
+                m_to)
         if len(self._fl_cache) > 16:
             self._fl_cache.clear()  # bound driver memory; recompute is
             #                         cheap (O(changed) per version)
@@ -625,8 +627,8 @@ class ManifestStreamReader(DataSourceStreamReader):
 
     def partitions(self, start: dict, end: dict) -> list[InputPartition]:
         from silvia_spark.operators.manifest_table import (_diff_entries,
-                                                           _load_doc,
-                                                           _resolve)
+                                                           _resolve,
+                                                           _window_doc)
 
         sv, ev = int(start["version"]), int(end["version"])
         _trace(f"partitions start={start} end={end}")
@@ -689,14 +691,15 @@ class ManifestStreamReader(DataSourceStreamReader):
             return [_slice(self.root, e) for e in entries]
         if ev <= sv:
             return []
-        m_to = _load_doc(self.root, ev)
+        window = f"the stream batch over ({sv}, {ev}]"
+        m_to = _window_doc(self.root, ev, window)
         self._guard_schema(ev, m_to)  # representability guard — the
         #                               full rationale sits on the method
         if sv == 0:
             entries = _resolve(self.root, m_to)
         else:
             entries = _diff_entries(self.root,
-                                    _load_doc(self.root, sv), m_to)
+                                    _window_doc(self.root, sv, window), m_to)
         return [_slice(self.root, e) for e in entries]
 
     def read(self, partition: _FileSlice):

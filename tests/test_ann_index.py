@@ -77,47 +77,26 @@ def test_incremental_index_appends_delta_only(spark, tmp_path):
         _pairs(sim_ann_lsh(spark, SF))
 
 
-def test_auto_routes_by_gather_feasibility(spark, tmp_path,
-                                           monkeypatch):
-    """r15 re-pricing (ANN_INDEX.json after the fused kernel): on a
-    GATHERABLE corpus the compute path beats the warm-index readback
-    (sf1: 3.9 s vs 8.0 s), so sim_ann_auto takes compute even with a
-    fresh index; PAST the gather bound the warm index still skips the
-    GEMM feeding the heavy fallback pipeline and is routed to, with no
-    hyperplane GEMM anywhere in the plan. Output identical on every
-    route."""
-    from silvia_spark.functions.llm_extras import sim_ann_auto
-
-    idx = os.path.join(str(tmp_path), "ann_idx")
-    e = load_table(spark, SF, "embeddings")
-    cold = _pairs(sim_ann_auto(spark, SF))
-    persist_ann_index(spark, e, idx)
-    monkeypatch.setenv("SILVIA_ANN_INDEX_ROOT", idx)
-    # gatherable corpus: compute route (the fused kernel), index unread
-    warm_df = sim_ann_auto(spark, SF)
-    plan = warm_df._jdf.queryExecution().executedPlan().toString()
-    assert "_fused_gemm_gen" in plan, (
-        "gatherable corpus must take the fused compute route")
-    assert _pairs(warm_df) == cold
-    # past the gather bound: the warm index is the route — no
-    # hyperplane GEMM (neither the numpy kernel nor the JVM form)
-    monkeypatch.setenv("SILVIA_GATHER_MAX_BYTES", "1")
+def test_auto_computes_and_ignores_index_root(spark, tmp_path,
+                                             monkeypatch):
+    """sim_ann_auto has no index route: the index readback measured
+    slower than computing the buckets (ANN_INDEX.json), so even with a
+    fresh index named by SILVIA_ANN_INDEX_ROOT it plans the hyperplane
+    GEMM and the fused kernel, with the same pairs as the index-served
+    contract."""
+    from silvia_spark.functions.llm_extras import (sim_ann_auto,
+                                                   sim_ann_indexed)
     from silvia_spark.io import clear_caches
 
+    idx = os.path.join(str(tmp_path), "ann_idx")
+    persist_ann_index(spark, load_table(spark, SF, "embeddings"), idx)
+    monkeypatch.setenv("SILVIA_ANN_INDEX_ROOT", idx)
     clear_caches()
-    idx_df = sim_ann_auto(spark, SF)
-    plan2 = idx_df._jdf.queryExecution().executedPlan().toString()
-    assert "posexplode" not in plan2 and "xxhash64" not in plan2 \
-        and "_ann_gemm_gen" not in plan2 \
-        and "_fused_gemm_gen" not in plan2, (
-        "past the bound, warm sim_ann_auto must serve the index with "
-        "no hyperplane GEMM")
-    assert _pairs(idx_df) == cold
-    monkeypatch.delenv("SILVIA_GATHER_MAX_BYTES")
+    df = sim_ann_auto(spark, SF)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "_ann_gemm_gen" in plan and "_fused_gemm_gen" in plan
+    assert _pairs(df) == _pairs(sim_ann_indexed(spark, SF))
     clear_caches()
-    # the registered contract row serves the same pairs
-    from silvia_spark.functions.llm_extras import sim_ann_indexed
-    assert _pairs(sim_ann_indexed(spark, SF)) == cold
 
 
 def test_index_built_over_empty_corpus_then_grown(spark, tmp_path):

@@ -1,123 +1,137 @@
-"""r15 gather/fused verify equivalence guards.
+"""The one exact-cosine route.
 
-The ANN verify family has three shapes behind one contract: fused
-per-bucket GEMM (+ exact rescore) and the join + scalar-kernel fallback
-past the gather bound, both planned by ``llm_extras.ann_join``, and the
-id-gather kernel of the all-pairs baseline. The oracle parity
-suite proves each against DuckDB; THESE tests pin that the shapes agree
-with each other and that the guard actually switches — so a future
-change cannot silently leave the fallback diverging (it only runs on
-corpora too big for the test matrix otherwise).
+Every threshold similarity join — the six consumers of
+``llm_extras.ann_join`` and the all-pairs baseline ``sim_join_threshold``
+— scores in ``llm_extras.fused_cosine_hits``, fed with rows that carry
+their members' vectors. These tests pin its raw ``(a, b, cos_raw)``
+triples bit for bit against a driver-side numpy reference using the same
+einsum formula, that the retired gather bound no longer changes the
+plan, the plan-build job counts, and the corpus shapes the oracle scores
+row by row: duplicate ids, repeated rows and NULL embeddings.
 """
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from silvia_spark.io import clear_caches, load_table
 
 SF = "/root/testdata/sf0.01"
 
+# Every consumer of the one ANN planner, as its (tables, probes, seed,
+# tau, out) point of llm_extras.ann_join.
+ANN_CONSUMERS = {
+    "sim_ann_lsh": dict(tables=64, probes=0, seed=101),
+    "sim_ann_lsh_multiprobe": dict(tables=24, probes=1, seed=202),
+    "sim_ann_lsh_multiprobe2": dict(tables=16, probes=3, seed=303),
+    "sim_ann_auto": dict(tables=64, probes=0, seed=101),
+    "sim_ann_indexed": dict(tables=64, probes=0, seed=101),
+    "dedup_docs_embedding": dict(tables=64, probes=0, seed=101, tau=0.95,
+                                 out=("va", "vb")),
+}
 
-# Every consumer of the one ANN planner (llm_extras.ann_join).
-ANN_CONSUMERS = ["sim_ann_lsh", "sim_ann_lsh_multiprobe",
-                 "sim_ann_lsh_multiprobe2", "sim_ann_auto",
-                 "sim_ann_indexed", "dedup_docs_embedding"]
+# Spark jobs that BUILDING each consumer's plan runs (sign matrices
+# already memoized). The retired gather route ran three more in each:
+# the gather-sizing agg and the corpus-matrix collect.
+BUILD_JOBS = {"sim_ann_lsh": 0, "sim_ann_lsh_multiprobe": 0,
+              "sim_ann_lsh_multiprobe2": 0, "sim_ann_auto": 0,
+              "sim_ann_indexed": 7, "dedup_docs_embedding": 0,
+              "sim_join_threshold": 0}
 
 
-def _rows(spark, name):
+def _triples(rows):
+    return sorted((int(r[0]), int(r[1]), float(r[2]).hex()) for r in rows)
+
+
+def _reference(spark, sf_dir, tau):
+    """All pairs a < b with cosine >= tau, driver-side: einsum row-dots
+    of the raw float64 rows over the product of sqrt(einsum) norms."""
+    tbl = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", "embedding").toArrow()
+    ids = np.asarray(tbl.column("vec_id").to_pylist(), dtype=np.int64)
+    M = np.asarray(tbl.column("embedding").to_pylist(), dtype=np.float64)
+    norms = np.sqrt(np.einsum("ij,ij->i", M, M))
+    ia, ib = np.triu_indices(len(ids), 1)
+    keep = ids[ia] != ids[ib]
+    ia, ib = ia[keep], ib[keep]
+    cos = np.einsum("ij,ij->i", M[ia], M[ib]) / (norms[ia] * norms[ib])
+    hit = cos >= tau
+    a, b = ids[ia][hit], ids[ib][hit]
+    return _triples(zip(np.minimum(a, b), np.maximum(a, b), cos[hit]))
+
+
+@pytest.mark.parametrize("name", [*ANN_CONSUMERS, "sim_join_threshold"])
+def test_raw_triples_match_numpy_reference(spark, tmp_path, name):
+    """Bit identity: the kernel's raw triples equal the numpy all-pairs
+    reference (every ANN consumer has recall 1 on this corpus, which
+    the oracle parity suite proves independently)."""
+    from silvia_spark.functions.llm_extras import (all_pairs, ann_join,
+                                                   persist_ann_index)
+    from silvia_spark.operators.manifest_table import read_snapshot
+
+    e = load_table(spark, SF, "embeddings")
+    clear_caches()
+    if name == "sim_join_threshold":
+        tau, hits = 0.4, all_pairs(spark, e, tau=0.4)
+    else:
+        kw = dict(ANN_CONSUMERS[name])
+        tau = kw.pop("tau", 0.4)
+        if name == "sim_ann_indexed":
+            idx = str(tmp_path / "ann_idx")
+            persist_ann_index(spark, e, idx)
+            kw["buckets"] = read_snapshot(spark, idx)
+        hits = ann_join(spark, e, tau=tau, slot=f"test.{name}", **kw)
+    got = _triples(hits.collect())
+    clear_caches()
+    assert got == _reference(spark, SF, tau), name
+    assert got or tau == 0.95  # no sf0.01 pair reaches dedup's 0.95
+
+
+def test_gather_bound_knob_is_not_read(spark, monkeypatch, tmp_path):
+    """The retired gather bound switches nothing: under
+    SILVIA_GATHER_MAX_BYTES=1 the plan still scores in the fused
+    kernel, with no id-gather rescore and no scalar cosine UDF."""
     from silvia_spark import registry
 
     registry.load_all_modules()
-    clear_caches()
-    return sorted(map(tuple,
-                      registry.QUERIES[name](spark, SF).collect()))
-
-
-@pytest.mark.parametrize("name", ANN_CONSUMERS)
-def test_fused_and_fallback_agree(spark, monkeypatch, name):
-    monkeypatch.delenv("SILVIA_ANN_INDEX_ROOT", raising=False)
-    fused = _rows(spark, name)
     monkeypatch.setenv("SILVIA_GATHER_MAX_BYTES", "1")
-    fallback = _rows(spark, name)
-    assert fused == fallback and len(fused) > 0
-
-
-@pytest.mark.parametrize("bound", [None, "1"], ids=["gather", "join"])
-@pytest.mark.parametrize("name", ANN_CONSUMERS)
-def test_one_sizing_decision_per_build(spark, monkeypatch, name, bound):
-    """ann_join decides gather vs join once: building any consumer's
-    plan runs exactly one gather-sizing job on either side of the
-    bound (the join fallback used to size the gather a second time)."""
-    from silvia_spark import registry
-    from silvia_spark.functions import llm_ops
-
-    monkeypatch.delenv("SILVIA_ANN_INDEX_ROOT", raising=False)
-    if bound is not None:
-        monkeypatch.setenv("SILVIA_GATHER_MAX_BYTES", bound)
-    registry.load_all_modules()
-    clear_caches()
-    calls = []
-    real = llm_ops._gather_feasible
-
-    def counted(e):
-        calls.append(e)
-        return real(e)
-
-    monkeypatch.setattr(llm_ops, "_gather_feasible", counted)
-    registry.QUERIES[name](spark, SF)
-    assert len(calls) == 1, (name, bound, len(calls))
-    clear_caches()
-
-
-def test_gather_and_fallback_agree_all_pairs(spark, monkeypatch):
-    gathered = _rows(spark, "sim_join_threshold")
-    monkeypatch.setenv("SILVIA_GATHER_MAX_BYTES", "1")
-    fallback = _rows(spark, "sim_join_threshold")
-    assert gathered == fallback and len(gathered) > 0
-
-
-def test_guard_actually_switches_shapes(spark, monkeypatch):
-    """The bound must really select the shape: under the default the
-    plan carries the fused + gather kernels and NO scalar cosine; at
-    bound 1 the scalar-kernel fallback (ArrowEvalPython) returns."""
-    from silvia_spark import registry
-
-    registry.load_all_modules()
     clear_caches()
     df = registry.QUERIES["sim_ann_lsh"](spark, SF)
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "_fused_gemm_gen" in plan and "_gather_cos_gen" in plan
-    assert "ArrowEvalPython [_cos_arrow" not in plan
-    monkeypatch.setenv("SILVIA_GATHER_MAX_BYTES", "1")
-    clear_caches()
-    df2 = registry.QUERIES["sim_ann_lsh"](spark, SF)
-    plan2 = df2._jdf.queryExecution().executedPlan().toString()
-    assert "_fused_gemm_gen" not in plan2
-    assert "ArrowEvalPython" in plan2 or "_cos_arrow" in plan2
-
-
-def test_gather_kernel_rejects_foreign_candidate_ids(spark):
-    """The gather kernel must fail LOUDLY (not score a wrong row) when
-    a candidate id is absent from the collected corpus."""
-    from silvia_spark.functions.llm_ops import _gather_score_hits
-
-    e = load_table(spark, SF, "embeddings")
-    bogus = spark.createDataFrame(
-        [(10**12, 10**12 + 1)], "vec_a bigint, vec_b bigint")
-    hits = _gather_score_hits(e, bogus, 0.4, slot="test.foreign")
-    with pytest.raises(Exception, match="not present in the corpus"):
-        hits.collect()
+    assert "_fused_gemm_gen" in plan
+    assert "_gather_cos_gen" not in plan and "ArrowEvalPython" not in plan
     clear_caches()
 
 
-def _corpus_with_duplicate_vec_id(tmp_path):
-    """sf0.01 with one extra embeddings row that reuses vec_id 5 for
-    vec_id 7's vector. The other tables are symlinks."""
+@pytest.mark.parametrize("name", list(BUILD_JOBS))
+def test_build_jobs_pinned(spark, name):
+    """Building a consumer's plan runs no sizing job and collects no
+    corpus matrix: no job at all, save sim_ann_indexed's index
+    persist and freshness checks."""
+    from silvia_spark import registry
+    from tests.test_minhash_kernel import _jobs_in_group
+
+    registry.load_all_modules()
+    clear_caches()
+    registry.QUERIES[name](spark, SF)  # memoize sign matrices, warm index
+    clear_caches()
+    sc = spark.sparkContext
+    group = f"one-route-build-{name}"
+    sc.setJobGroup(group, group)
+    try:
+        registry.QUERIES[name](spark, SF)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert _jobs_in_group(spark, group) == BUILD_JOBS[name]
+    clear_caches()
+
+
+def _corpus(tmp_path, edit):
+    """sf0.01 with its embeddings table rewritten by ``edit`` (a
+    pyarrow Table -> Table function); the other tables are symlinks."""
     import os
 
-    import pyarrow as pa
     import pyarrow.parquet as pq
 
     from silvia_spark.schemas import TABLE_NAMES
@@ -126,28 +140,86 @@ def _corpus_with_duplicate_vec_id(tmp_path):
         if t != "embeddings":
             os.symlink(f"{SF}/{t}.parquet", tmp_path / f"{t}.parquet")
     emb = pq.read_table(f"{SF}/embeddings.parquet").replace_schema_metadata()
-    extra = emb.filter(pa.compute.equal(emb["vec_id"], 7))
-    extra = extra.set_column(0, "vec_id",
-                             pa.array([5], emb.schema.field("vec_id").type))
-    pq.write_table(pa.concat_tables([emb, extra]),
-                   tmp_path / "embeddings.parquet")
+    pq.write_table(edit(emb), tmp_path / "embeddings.parquet")
     return str(tmp_path)
 
 
-def test_duplicate_vec_ids_take_join_path(spark, tmp_path):
-    """The gather kernel searchsorts into sorted ids, so a duplicate id
-    would score one arbitrary row of its duplicates. A corpus with a
-    duplicate vec_id must take the join path and match the DuckDB
-    oracle; the clean corpus keeps the gather path."""
+def _row_of(emb, vid):
+    import pyarrow as pa
+
+    return emb.filter(pa.compute.equal(emb["vec_id"], vid))
+
+
+def _with_vec_id(rows, vid):
+    import pyarrow as pa
+
+    return rows.set_column(0, "vec_id",
+                           pa.array([vid] * rows.num_rows,
+                                    rows.schema.field("vec_id").type))
+
+
+def _rows(spark, name, sf_dir):
     from silvia_spark import registry
-    from tests.parity import check
 
     registry.load_all_modules()
-    dup = _corpus_with_duplicate_vec_id(tmp_path)
-    for sf_dir, gathered in ((SF, True), (dup, False)):
-        clear_caches()
-        df = registry.QUERIES["sim_join_threshold"](spark, sf_dir)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert ("_gather_cos_gen" in plan) == gathered, sf_dir
-        assert check("sim_join_threshold", spark, sf_dir, verbose=False)
+    clear_caches()
+    return sorted(map(tuple, registry.QUERIES[name](spark, sf_dir).collect()))
+
+
+def test_duplicate_vec_ids_scored_row_by_row(spark, tmp_path):
+    """A vec_id repeated with a different vector (5 reused for vec_id
+    7's vector) is scored row by row, as the oracle scores it: the
+    all-pairs baseline matches DuckDB and the LSH join returns the same
+    pairs."""
+    import pyarrow as pa
+
+    from tests.parity import check
+
+    dup = _corpus(tmp_path, lambda emb: pa.concat_tables(
+        [emb, _with_vec_id(_row_of(emb, 7), 5)]))
+    assert check("sim_join_threshold", spark, dup, verbose=False)
+    rows = _rows(spark, "sim_join_threshold", dup)
+    assert rows == _rows(spark, "sim_ann_lsh", dup)
+    assert len([r for r in rows if 5 in r[:2]]) > \
+        len([r for r in _rows(spark, "sim_join_threshold", SF)
+             if 5 in r[:2]])
+    clear_caches()
+
+
+@pytest.mark.parametrize("name", ["sim_join_threshold", "sim_ann_lsh"])
+def test_repeated_identical_row_raises(spark, tmp_path, name):
+    """A repeated identical (vec_id, embedding) row would lose its
+    copy's pairs to the caller's distinct, so the kernel refuses it,
+    naming the id."""
+    import pyarrow as pa
+
+    from silvia_spark import registry
+
+    rep = _corpus(tmp_path, lambda emb: pa.concat_tables(
+        [emb, _row_of(emb, 7)]))
+    registry.load_all_modules()
+    clear_caches()
+    with pytest.raises(Exception, match="vec_id 7 repeats an identical"):
+        registry.QUERIES[name](spark, rep).collect()
+    clear_caches()
+
+
+def test_null_embedding_pairs_with_nothing(spark, tmp_path):
+    """A NULL embedding has no cosine in the oracle, so it pairs with
+    nothing; the all-pairs baseline matches DuckDB."""
+    import pyarrow as pa
+
+    from tests.parity import check
+
+    def null_seven(emb):
+        col = emb["embedding"]
+        vals = [None if i == 7 else v for i, v in
+                zip(emb["vec_id"].to_pylist(), col.to_pylist())]
+        return emb.set_column(emb.schema.get_field_index("embedding"),
+                              "embedding", pa.array(vals, col.type))
+
+    nul = _corpus(tmp_path, null_seven)
+    assert check("sim_join_threshold", spark, nul, verbose=False)
+    rows = _rows(spark, "sim_join_threshold", nul)
+    assert rows and not [r for r in rows if 7 in r[:2]]
     clear_caches()

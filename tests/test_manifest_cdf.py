@@ -17,8 +17,8 @@ from pyspark.sql import functions as F
 from silvia_spark.operators.manifest_table import (
     _CHANGES, FS, commit_append, commit_compaction, commit_delete,
     commit_merge, create_table, current_version, enable_cdf,
-    load_manifest, read_change_feed, read_snapshot, rename_column,
-    vacuum)
+    load_manifest, read_change_feed, read_changes, read_snapshot,
+    rename_column, vacuum)
 from silvia_spark.sources.manifest_stream import (read_stream_changes,
                                                   read_stream_table)
 
@@ -274,6 +274,40 @@ def test_feed_names_vacuumed_diff_base(spark, tmp_path):
         read_change_feed(spark, root, since=2)
     assert {r["k"] for r in read_change_feed(spark, root, 3).collect()} \
         == {42}
+
+
+def test_read_changes_names_vacuumed_since(spark, tmp_path):
+    """The file-granular feed diffs against ``since``'s manifest: when
+    vacuum retired it, the error names it and the retention knob."""
+    root = _vacuumed_appends(spark, tmp_path)
+    with pytest.raises(FileNotFoundError,
+                       match=r"read_changes over \(2, head\] needs manifest "
+                             r"v2, and it is gone \(vacuumed\?\): widen "
+                             r"keep_versions"):
+        read_changes(spark, root, since=2)
+    assert {r["k"] for r in read_changes(spark, root, 3).collect()} \
+        == {42}
+
+
+def test_plain_stream_names_vacuumed_manifest(spark, tmp_path):
+    """A plain (file-granular) manifest stream plans a batch as the
+    diff against its start version, and a limited stream each version
+    against its parent: both name a vacuumed manifest."""
+    from silvia_spark.sources.manifest_stream import (ManifestStreamReader,
+                                                      _table_schema)
+
+    root = _vacuumed_appends(spark, tmp_path)
+    reader = ManifestStreamReader(_table_schema(root), {"path": root})
+    with pytest.raises(FileNotFoundError,
+                       match=r"batch over \(2, 4\] needs manifest v2, and "
+                             r"it is gone \(vacuumed\?\): widen"):
+        reader.partitions({"version": 2}, {"version": 4})
+    assert len(reader.partitions({"version": 3}, {"version": 4})) == 1
+    limited = ManifestStreamReader(_table_schema(root),
+                                   {"path": root, "maxfilespertrigger": "1"})
+    with pytest.raises(FileNotFoundError,
+                       match=r"needs manifest v2 as the diff base for v3"):
+        limited._fl(3)
 
 
 def test_every_walk_names_vacuumed_window_manifest(spark, tmp_path):

@@ -36,8 +36,13 @@ _BIG_TABLES = {"lineitem", "orders", "events", "documents", "embeddings"}
 _MULTI_SCAN_OK = {
     "sim_topk_cosine": "query-vector point read (pushed vec_id=0, 1 row) "
                        "+ the corpus scan",
-    "sim_join_threshold": "genuine all-pairs self-join (the test-scale "
-                          "exact baseline the ANN family verifies against)",
+    # the carried vectors: the bucket rows join the corpus (vec_id,
+    # embedding), a second read in place of the driver-side matrix
+    # collect the retired gather route ran at plan build
+    **dict.fromkeys(
+        ("sim_ann_lsh", "sim_ann_lsh_multiprobe", "sim_ann_lsh_multiprobe2"),
+        "embeddings is read once for the bucket keys (persisted) and once "
+        "for the members' vectors the fused kernel scores"),
     "text_contamination": "train and eval sides are DISJOINT filtered "
                           "subsets — each scan reads only its slice",
     "join_or_keys_union": "one filtered scan per OR-disjunct (each with "
@@ -83,10 +88,9 @@ def test_plan_exhibits_required_operators(spark, name, required):
     # filter pushdown substitutes a deterministic UDF into the
     # threshold predicate, scoring every surviving pair twice (r10
     # verdict — two ArrowEvalPython[_cos_arrow] nodes in the LSH verify
-    # tail). The verify tails now threshold INSIDE a mapInPandas kernel
-    # (score_pairs_threshold — no Filter-over-UDF exists to duplicate,
-    # and no asNondeterministic barrier, whose executor-heap blowup the
-    # sf1 candidate-dense regime measured in r11); remaining
+    # tail). The threshold joins now threshold INSIDE the fused
+    # mapInArrow kernel (llm_extras.fused_cosine_hits — no
+    # Filter-over-UDF exists to duplicate); remaining
     # ArrowEvalPython[_cos_arrow] sites are top-k/aggregate shapes with
     # no following threshold filter, single-eval by construction.
     final = plan.split("== Initial Plan ==")[0]
@@ -94,4 +98,4 @@ def test_plan_exhibits_required_operators(spark, name, required):
     assert cos_nodes <= 1, (
         f"{name}: the Arrow cosine kernel appears {cos_nodes}× in the "
         "final plan — a pushed-down threshold duplicated the UDF; "
-        "score through score_pairs_threshold (llm_ops)")
+        "threshold inside a kernel (llm_extras.fused_cosine_hits)")

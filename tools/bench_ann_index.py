@@ -9,8 +9,6 @@ corpus BENCH_sf1_heavy uses (20k vectors, 32-file layout):
   amortizes across every query;
 - ``warm_query_sec``: sim_ann_lsh_indexed end-to-end with the index
   fresh — the plan contains NO hyperplane GEMM;
-- ``auto_warm_sec``: the chooser route (sim_ann_auto with
-  SILVIA_ANN_INDEX_ROOT set) — warm detection + the indexed query;
 - ``cold_base_sec``: sim_ann_lsh in the same session (the r12-r13
   reference kernel), so the GEMM+bucket time the index actually skips
   is (cold_base − warm_query) under identical load;
@@ -61,7 +59,6 @@ def _time(fn, reps=REPS, warmup=1):
 def main() -> None:
     from silvia_spark.functions.llm_extras import (ann_index_fresh,
                                                    persist_ann_index,
-                                                   sim_ann_auto,
                                                    sim_ann_lsh,
                                                    sim_ann_lsh_indexed)
     from silvia_spark.io import load_table
@@ -107,12 +104,6 @@ def main() -> None:
 
     out["warm_query_sec"] = _time(
         lambda: sim_ann_lsh_indexed(spark, DATA_DIR, IDX_DIR).count())
-    os.environ["SILVIA_ANN_INDEX_ROOT"] = IDX_DIR
-    try:
-        out["auto_warm_sec"] = _time(
-            lambda: sim_ann_auto(spark, DATA_DIR).count())
-    finally:
-        del os.environ["SILVIA_ANN_INDEX_ROOT"]
     out["cold_base_sec"] = _time(
         lambda: sim_ann_lsh(spark, DATA_DIR).count())
     out["gemm_time_skipped_sec"] = round(

@@ -52,20 +52,18 @@ AUDITED = [
     ("etl_events_enriched", ["WindowGroupLimit", "BroadcastHashJoin"],
      "the full ETL composite: dedup exchange pre-truncated map-side, "
      "dimension enrich is a broadcast hash lookup, rollup partial-aggs."),
-    ("sim_ann_lsh", ["MapInPandas _fused_gemm_gen",
-                     "MapInPandas _gather_cos_gen", "HashAggregate"],
+    ("sim_ann_lsh", ["MapInArrow _fused_gemm_gen", "HashAggregate"],
      "sign projections run as ONE map-only numpy GEMM per Arrow batch "
      "(r14 kernel swap, bit-identical to the retained JVM reference). "
-     "r15: candidate generation + threshold are FUSED into a per-bucket "
-     "dgemm kernel over the grouped bucket table (_fused_gemm_gen) — "
-     "the raw-pair self-join, its 800M-row exchange and the packed "
-     "distinct are gone; the groupBy rides the persisted bucket "
-     "table's window partitioning. Survivors (a banding-selected "
-     "handful, thresholded at tau-1e-9 superset) are deduped tiny and "
-     "exactly rescored by the id-gather einsum kernel "
-     "(_gather_cos_gen) — only ids ever cross the Python boundary. "
-     "Gather-bound corpora fall back to the r14 join + right-sized "
-     "packed distinct + scalar-kernel verify."),
+     "The capped bucket rows join the corpus (vec_id, embedding) — the "
+     "second read of embeddings, a broadcast build side — and group per "
+     "bucket with no new exchange (the distinct and the groupBy ride "
+     "the persisted bucket table's window partitioning). ONE kernel "
+     "(_fused_gemm_gen) takes each bucket's pair cosines as a dgemm, "
+     "thresholded at tau-1e-9 (superset), and rescores the survivors "
+     "with the exact einsum formula in the same pass; a tiny distinct "
+     "folds pairs found in several buckets. No corpus matrix is "
+     "collected or broadcast, so one route serves every corpus size."),
     ("sim_topk_cosine", ["HashAggregate", "BroadcastHashJoin",
                          "TakeOrderedAndProject"],
      "r04 kernel swap: corpus-vs-query scoring is GEMM-by-join — "
@@ -74,16 +72,14 @@ AUDITED = [
      "whole-stage-codegen JVM arithmetic (no interpreted zip_with/"
      "aggregate HOFs, no Python stage at all); top-k stays "
      "TakeOrderedAndProject."),
-    ("sim_join_threshold", ["MapInPandas _gather_cos_gen",
-                            "InMemoryTableScan"],
-     "r15 gather-in-kernel verify: the all-pairs product is built over "
-     "BARE IDS (16 B/pair, not ~530 B with both vectors attached) and "
-     "scored by ONE mapInPandas kernel that row-gathers vectors from a "
-     "broadcast matrix and thresholds inside — only ids cross the "
-     "Python boundary, only survivors leave the kernel. The tiny "
-     "survivor persist (InMemoryTableScan) keeps the global sort's "
-     "range-sampling pass from re-executing the product. Gather-bound "
-     "corpora fall back to the r13 scalar-kernel + persist shape."),
+    ("sim_join_threshold", ["MapInArrow _fused_gemm_gen",
+                            "REPARTITION_BY_NUM"],
+     "the LSH family's exact kernel (_fused_gemm_gen) over a grid of id "
+     "blocks: pmod(vec_id, K) splits the corpus, each vector joins the "
+     "K block pairs it belongs to, and one row per pair carries both "
+     "member lists — no pair row is ever materialized, only survivors "
+     "leave the kernel. The grid shuffle has an explicit width "
+     "(REPARTITION_BY_NUM), which AQE does not coalesce into one task."),
     ("text_ngram_jaccard", ["HashAggregate", "SortMergeJoin"],
      "inverted-index EQUI-join on shingle (plus the r04 document-frequency "
      "cap aggregate) — candidate pairs sort-merge-join on the shingle key "
@@ -227,17 +223,15 @@ AUDITED = [
     ("embed_norm_stats", ["HashAggregate"],
      "norm profile: zero-shuffle scan + label-keyed partial aggregate — "
      "the exchange carries label-cardinality rows, not vectors."),
-    ("sim_ann_lsh_multiprobe", ["MapInPandas _fused_gemm_gen",
-                                "MapInPandas _gather_cos_gen",
+    ("sim_ann_lsh_multiprobe", ["MapInArrow _fused_gemm_gen",
                                 "HashAggregate"],
      "multiprobe LSH via llm_extras.ann_join (24 tables, 1 probe): "
      "sign bits + weak-bit margins from the map-only numpy GEMM kernel; "
      "explode(probe_keys) fans each vector to its weakest-bit flip on "
-     "the probe side only. The probe ⋈ base candidates + threshold run "
-     "in the per-bucket P×B dgemm kernel (probe/base member lists "
-     "grouped per bucket); survivors exact-rescored by the id-gather "
-     "kernel — never an all-pairs product, nothing heavier than bucket "
-     "rows shuffles."),
+     "the probe side only. Distinct (member, bucket, side) rows join "
+     "their vectors and group per bucket into probe/base member lists; "
+     "the per-bucket P×B dgemm kernel thresholds and exactly rescores "
+     "in one pass — never an all-pairs product."),
     ("scalar_variant", ["Project"],
      "VARIANT access is a pure codegen projection: one parse_json per "
      "row, typed variant_get path reads, zero shuffle."),
@@ -253,14 +247,13 @@ AUDITED = [
      "URL canonicalizer is pure codegen (parse_url + higher-order "
      "filter + sort_array — no Python eval node); one exchange for the "
      "canonical-key groupBy plus the output sort."),
-    ("sim_ann_lsh_multiprobe2", ["MapInPandas _fused_gemm_gen",
-                                 "MapInPandas _gather_cos_gen",
+    ("sim_ann_lsh_multiprobe2", ["MapInArrow _fused_gemm_gen",
                                  "HashAggregate"],
      "llm_extras.ann_join at 16 tables, 3 probes: the shared map-only "
      "numpy GEMM kernel; explode(probe_keys) fans each vector to its 3 "
-     "flip probes on the probe side only; capped buckets. Candidates + "
-     "threshold in the per-bucket P×B dgemm kernel, survivors "
-     "exact-rescored by the id-gather kernel (see sim_ann_lsh)."),
+     "flip probes on the probe side only; capped buckets. Members carry "
+     "their vectors into the per-bucket P×B dgemm kernel, which "
+     "thresholds and exactly rescores in one pass (see sim_ann_lsh)."),
     ("join_asof_nearest", ["Window", "HashJoin"],
      "nearest-direction as-of: bucket equi-join with the tolerance "
      "predicate bounding kept pairs, then the per-event arg-min window "
