@@ -386,7 +386,7 @@ _FUSED_EPS = 1e-9
 _FUSED_CHUNK = 4_000_000  # max f64 elements per GEMM block (~32 MB)
 
 
-def fused_cosine_hits(grouped: DataFrame, out: tuple[str, str], id_t: str,
+def fused_cosine_hits(grouped: DataFrame, out: tuple[str, str],
                       tau: float) -> DataFrame:
     """Exact ``(a, b, cos_raw)`` hits (a < b, cos_raw ≥ ``tau`` or NaN)
     of a table of member blocks. Column ``p`` holds one side's members
@@ -401,6 +401,8 @@ def fused_cosine_hits(grouped: DataFrame, out: tuple[str, str], id_t: str,
     tau = float(tau)
     a, b = out
     sides = ["p", "b"] if "b" in grouped.columns else ["p"]
+    id_t = (grouped.schema["p"].dataType.elementType["vec_id"].dataType
+            .simpleString())
 
     def _fused_gemm_gen(batches):
         import numpy as np
@@ -544,14 +546,13 @@ def ann_join(spark: SparkSession, e: DataFrame, *, tables: int,
     else:
         grouped = (base.distinct().join(_vectors(e), "vec_id")
                    .groupBy(*keys).agg(F.collect_list(mem).alias("p")))
-    return fused_cosine_hits(grouped, out, dict(buckets.dtypes)["vec_id"],
-                             tau).distinct()
+    return fused_cosine_hits(grouped, out, tau).distinct()
 
 
-def all_pairs(spark: SparkSession, e: DataFrame, *, tau: float,
-              out: tuple[str, str] = ("vec_a", "vec_b")) -> DataFrame:
-    """Exact ``(a, b, cos_raw)`` for EVERY pair a < b at cosine ≥
-    ``tau`` — the quadratic baseline on the LSH family's kernel. The
+def all_pairs(spark: SparkSession, e: DataFrame, *,
+              tau: float) -> DataFrame:
+    """Exact ``(vec_a, vec_b, cos_raw)`` for EVERY pair a < b at cosine
+    ≥ ``tau`` — the quadratic baseline on the LSH family's kernel. The
     corpus splits into K id blocks by ``pmod(vec_id, K)``, K the
     session's default parallelism; each vector joins the K block pairs
     it belongs to, and one row per pair i ≤ j carries both member lists
@@ -577,7 +578,7 @@ def all_pairs(spark: SparkSession, e: DataFrame, *, tau: float,
                  F.when(lo == hi, F.lit(None))
                  .otherwise(F.collect_list(F.when(rb, F.col("m"))))
                  .alias("b")))
-    return fused_cosine_hits(grid, out, dict(e.dtypes)["vec_id"], tau)
+    return fused_cosine_hits(grid, ("vec_a", "vec_b"), tau)
 
 
 def rounded_pairs(hits: DataFrame) -> DataFrame:
