@@ -30,22 +30,23 @@ partition's small files through the same commit path). A MERGE's cost is
 still proportional to touched partitions only: untouched partitions
 contribute their existing entries to the new manifest by reference, and
 the pruned scan opens only touched partitions' files. Concurrency:
-APPENDS are multi-writer safe via optimistic version claims (append
-entries commute; the manifest's create-exclusive write is the CAS, lost
-claims rebase and retry — see commit_append). The row-level writers —
-merge, update and delete — share one commit tail (``_commit_rewrite``)
-and REBASE on a lost race when their read sets are disjoint:
-FILE-LEVEL conflict detection proves the interposed commits touched
-none of the rewrite set's (path, delete vector) pairs and changed
-nothing in the table signature (r12 — Delta's read-set/write-set
-disjointness on the pruned file lists; overlaps and mid-commit
-schema/spec changes raise ``"<op> conflict"``). Compaction, restore
-and metadata commits are single-writer: their segment lists bind to
-one parent, so a lost race raises. Every committer verifies AFTER the
-pointer flip that the manifest committed under its claimed version is
-its own (``_claim_survived``): a claim usurped by a crash-recovery
-replace is therefore a rebase for appenders and disjoint row-level
-writers and an explicit error otherwise — never silent loss.
+every writer commits through ONE optimistic loop (``_commit``): the
+writer's attempt builds the new manifest from the head, the loop claims
+the version (the manifest's create-exclusive write is the CAS), flips
+the pointer, and verifies AFTER the flip that the manifest committed
+under its claimed version is its own (``_claim_survived``); a lost
+race reloads the head and asks the attempt again. APPENDS (commit_append
+and SQL INSERT) always rebuild — append entries commute. The row-level
+writers — merge, update and delete (``_commit_rewrite``) — REBASE only
+when their read sets are disjoint: FILE-LEVEL conflict detection proves
+the interposed commits touched none of the rewrite set's (path, delete
+vector) pairs and changed nothing in the table signature (r12 —
+Delta's read-set/write-set disjointness on the pruned file lists;
+overlaps and mid-commit schema/spec changes raise ``"<op>
+conflict"``). Create, clone, compaction, restore and metadata commits
+are single-writer: their segment lists bind to one parent, so a lost
+race — a claim usurped by a crash-recovery replace included — raises.
+Never silent loss.
 
 Filesystem portability: every protocol-relevant filesystem touch goes
 through the ``FS`` adapter (manifest_fs.py). POSIX gets O_EXCL claims,
@@ -85,9 +86,10 @@ FS = LocalFS()
 
 _MANIFESTS = "_manifests"
 _CURRENT = "_current"
-# optimistic-append rebase budget: each retry means another writer won a
-# version claim in the microseconds between our manifest load and write
-_APPEND_RETRIES = 50
+# the commit loop's rebase budget (every writer): each retry means
+# another writer won a version claim in the microseconds between our
+# manifest load and write
+_COMMIT_RETRIES = 50
 # vacuum treats an ahead-of-pointer manifest younger than this as a LIVE
 # in-flight claim (kept, files kept); older ones are crashed leftovers.
 # Claims normally live microseconds — a minute is orders of magnitude of
@@ -113,16 +115,27 @@ def _vacuum_epoch(root: str) -> int:
         return 0
 
 
+def _swept(root: str, paths: Sequence[str],
+           staged_epoch: int | None) -> list[str]:
+    """The staged ``paths`` a vacuum removed since ``staged_epoch`` was
+    read. O(1) — one epoch read, no per-file probe — when provably no
+    vacuum ran since before staging, the common case; per-file probes
+    only happen when a sweep actually raced the commit."""
+    if staged_epoch is not None and _vacuum_epoch(root) == staged_epoch:
+        return []
+    return [p for p in paths if not FS.exists(os.path.join(root, p))]
+
+
 class CommitAborted(RuntimeError):
     """Raised at the flip when the claimed manifest no longer exists —
     the claim was vacuumed (or usurped and then vacuumed) between the
     create-exclusive write and the pointer flip. The commit wrote
-    nothing visible; appenders catch this and rebase."""
+    nothing visible; the commit loop rebases appenders on it."""
 
 
 class MetadataCommitRaced(RuntimeError):
-    """Raised by _commit_metadata when its claim lost to a concurrent
-    commit after the flip — the precise lost-race outcome retry loops
+    """Raised by _commit_metadata when it lost its version to a
+    concurrent commit — the precise lost-race outcome retry loops
     may safely re-probe on. Kept distinct from bare RuntimeError so a
     genuine bug is never swallowed as a race (r13 ADVICE, low)."""
 
@@ -275,9 +288,7 @@ def _write_doc(root: str, version: int, doc: dict,
             raise FileExistsError(
                 f"version {version} is already committed "
                 f"(current={cur}) — stale parent; reload and rebase")
-        if verify_paths is not None and (
-                staged_epoch is None
-                or _vacuum_epoch(root) != staged_epoch):
+        if verify_paths is not None:
             # Adoption is lock-free, so a vacuum can in principle sweep
             # a freshly adopted file before this claim lands (the mtime
             # refresh at adoption makes that a milliseconds-vs-60s race,
@@ -286,13 +297,8 @@ def _write_doc(root: str, version: int, doc: dict,
             # sweep — makes publishing a snapshot that references
             # deleted files structurally impossible: after this check
             # the claim lands under the lock, and a young claim's files
-            # are grace-protected by vacuum's triage (r09 advice). The
-            # check is skipped (O(1), via the vacuum epoch read) when
-            # provably no vacuum ran since before staging — the common
-            # case; per-staged-file probes under the table-wide lock
-            # only happen when a sweep actually raced the commit.
-            missing = [p for p in verify_paths
-                       if not FS.exists(os.path.join(root, p))]
+            # are grace-protected by vacuum's triage (r09 advice).
+            missing = _swept(root, verify_paths, staged_epoch)
             if missing:
                 raise CommitAborted(
                     f"{len(missing)} staged file(s) vanished before the "
@@ -478,6 +484,93 @@ def _claim_survived(root: str, version: int,
         return doc.get("commit_id") == commit_id
     return ({e["path"] for e in entries}
             == {e["path"] for e in _resolve(root, doc)})
+
+
+def _commit(root: str, op: str,
+            attempt: Callable[[dict | None], tuple | None], *,
+            occ: bool, head: dict | None) -> int:
+    """THE optimistic commit protocol, one loop for every writer:
+    ``attempt(head)`` builds the new manifest doc from the head (None
+    while no table exists) and returns the claim ``(doc, staged paths
+    the claim verifies, vacuum epoch read before staging them)`` — or
+    None when there is nothing to commit (a replayed txn). The loop
+    stamps this commit's ``commit_id``, claims the version
+    (``_write_doc``), flips the pointer and checks the committed
+    manifest is ours (``_claim_survived``). Any lost race — the version
+    already claimed or committed, the claim usurped before the flip, or
+    (appenders) a claim vacuumed before its flip — reloads the head and
+    asks ``attempt`` again; the first attempt builds on the doc the
+    writer planned against, so an uncontended commit loads nothing.
+    Rebase or refuse is the attempt's decision: appenders rebuild
+    against any head, row-level writers rebase only while their read
+    set and table signature are unchanged, and single-writer commits
+    (``_once``) refuse every head but their parent.
+
+    With ``occ=True`` (appenders) another writer's claim is a conflict:
+    the loop waits out that claimer's flip window and rebases, and a v1
+    claim that blocks table creation is presumed crashed after half
+    the budget and reclaimed (no committed pointer exists, so vacuum
+    cannot clear it; the reclaim is pointer-checked, and a reclaimed
+    live creator meets CommitAborted at its flip and rebases). With
+    ``occ=False`` the claim may replace an ahead-of-pointer manifest
+    presumed crashed (``_write_doc``), and a vacuumed claim propagates
+    CommitAborted."""
+    commit_id = uuid.uuid4().hex
+    for i in range(_COMMIT_RETRIES):
+        if i:
+            cur = current_version(root)
+            try:
+                head = None if cur is None else _load_doc(root, cur)
+            except FileNotFoundError:
+                continue  # vacuum retired it as the pointer moved on
+        claim = attempt(head)
+        if claim is None:
+            return head["version"]
+        newdoc, verify_paths, staged_epoch = claim
+        newdoc["commit_id"] = commit_id
+        version = newdoc["version"]
+        try:
+            _write_doc(root, version, newdoc, occ=occ,
+                       verify_paths=verify_paths,
+                       staged_epoch=staged_epoch)
+            if (_flip_current(root, version, commit_id=commit_id)
+                    or _claim_survived(root, version,
+                                       commit_id=commit_id)):
+                return version
+        except FileExistsError:
+            if occ and version == 1 and i >= _COMMIT_RETRIES // 2:
+                _reclaim_claim(root, 1)
+            elif occ:
+                # give the claimer its flip window (otherwise every
+                # rebase re-reads the same committed parent and the
+                # whole budget burns inside one race)
+                time.sleep(0.01)
+        except CommitAborted:
+            if not occ:
+                raise
+    raise RuntimeError(
+        f"{op} lost {_COMMIT_RETRIES} version races under {root} — "
+        "extreme writer contention (every claim was taken or usurped "
+        "within its flip window)")
+
+
+def _once(parent: dict | None, claim: tuple,
+          lost: type[Exception] = RuntimeError
+          ) -> Callable[[dict | None], tuple]:
+    """The attempt of a single-writer commit (create, clone, restore,
+    compaction, metadata): its segment list binds to ``parent``, so it
+    claims only on that head, and a lost race raises ``lost``."""
+    pv = parent and parent["version"]
+
+    def attempt(head: dict | None) -> tuple:
+        if (head and head["version"]) != pv:
+            raise lost(
+                f"{claim[0]['op']} lost v{claim[0]['version']} to a "
+                "concurrent commit — the table advanced without it; "
+                "re-run")
+        return claim
+
+    return attempt
 
 
 def _stage_writer(df: DataFrame, part_col: str,
@@ -824,20 +917,20 @@ def create_table(df: DataFrame, path: str, part_col: str,
         part_used = pt["col"]
     entries = _stage_write(staged_df, root, part_used,
                            stats_cols=stats_cols)
-    commit_id = uuid.uuid4().hex
     segs = [_write_segment(root, entries)] if entries else []
-    doc = _make_doc(1, None, segs, commit_id=commit_id,
-                    schema=df.schema.json(), stats_cols=stats_cols,
-                    op="create")
+    doc = _make_doc(1, None, segs, schema=df.schema.json(),
+                    stats_cols=stats_cols, op="create")
     doc["part_col"] = part_used
     if pt:
         doc["part_transform"] = pt
     if cdf:
         doc["cdf_enabled"] = True
         doc["cdf"] = {"mode": "append"}
-    _write_doc(root, 1, doc)
-    _flip_current(root, 1, commit_id=commit_id)
-    return 1
+    # a concurrent creator that wins v1 — before our claim or by
+    # replacing it before our flip — makes this raise FileExistsError
+    return _commit(root, "create", _once(None, (doc, None, None),
+                                         FileExistsError),
+                   occ=False, head=None)
 
 
 def prune_entries(entries: list[dict],
@@ -1390,11 +1483,9 @@ def restore_table(spark: SparkSession, path: str, version: int) -> int:
     tgt = _load_doc(root, version)
     if tgt["version"] == doc["version"]:
         return doc["version"]  # restoring to HEAD: no-op
-    commit_id = uuid.uuid4().hex
     segs = _doc_segments(root, tgt)
-    newv = doc["version"] + 1
-    nd = _make_doc(newv, doc["version"], segs, txns=doc.get("txn"),
-                   commit_id=commit_id, schema=tgt.get("schema"),
+    nd = _make_doc(doc["version"] + 1, doc["version"], segs,
+                   txns=doc.get("txn"), schema=tgt.get("schema"),
                    stats_cols=tgt.get("stats_cols"), op="restore")
     _carry_table_meta(nd, tgt)  # the target's spec/mapping/constraints
     if doc.get("cdf_enabled"):
@@ -1422,11 +1513,8 @@ def restore_table(spark: SparkSession, path: str, version: int) -> int:
             cdf_files = _write_change_files(spark, root, _to_physical(
                 _cdf_diff(old_rows, new_rows), tgt))
         nd["cdf"] = {"mode": "files", "files": cdf_files}
-    if not _publish(root, newv, nd, commit_id):
-        raise RuntimeError(
-            f"restore lost v{newv} to a concurrent commit after its "
-            "claim — the table advanced without it; re-run")
-    return newv
+    return _commit(root, "restore", _once(doc, (nd, None, None)),
+                   occ=False, head=doc)
 
 
 def clone_table(src: str, dst: str, version: int | None = None) -> int:
@@ -1489,19 +1577,17 @@ def clone_table(src: str, dst: str, version: int | None = None) -> int:
             m["version"] if froot == sroot else None,
             paths=sorted(ref_paths.get(froot, ())),
             dvs=sorted(ref_dvs.get(froot, ())))
-    commit_id = uuid.uuid4().hex
     segs = [_write_segment(droot, entries, reused=True)] if entries \
         else []
-    doc = _make_doc(1, None, segs, commit_id=commit_id,
-                    schema=m.get("schema"),
+    doc = _make_doc(1, None, segs, schema=m.get("schema"),
                     stats_cols=m.get("stats_cols"), op="clone")
     _carry_table_meta(doc, m)
     if doc.get("cdf_enabled"):
         doc["cdf"] = {"mode": "append"}  # the clone's v1 inserts ARE
         #                                  its snapshot, like create
-    _write_doc(droot, 1, doc)
-    _flip_current(droot, 1, commit_id=commit_id)
-    return 1
+    return _commit(droot, "clone", _once(None, (doc, None, None),
+                                         FileExistsError),
+                   occ=False, head=None)
 
 
 def _pruned_entries(root: str, m: dict,
@@ -1695,20 +1781,6 @@ def _cdf_diff(old_rows: DataFrame, new_rows: DataFrame) -> DataFrame:
                          .withColumn("_change_type", F.lit("delete"))))
 
 
-def _publish(root: str, version: int, newdoc: dict, commit_id: str,
-             verify_paths: list[str] | None = None,
-             staged_epoch: int | None = None) -> bool:
-    """Claim ``version`` with ``newdoc``, flip the pointer, and report
-    whether the committed manifest is ours (flip proved it, or the
-    post-flip ``_claim_survived`` check found our commit_id). Raises
-    FileExistsError when the version is already taken. Single-writer
-    callers raise on False; ``_commit_rewrite`` rebases."""
-    _write_doc(root, version, newdoc, verify_paths=verify_paths,
-               staged_epoch=staged_epoch)
-    return (_flip_current(root, version, commit_id=commit_id)
-            or _claim_survived(root, version, commit_id=commit_id))
-
-
 def _commit_rewrite(root: str, doc: dict, op: str,
                     plan: tuple[set[str], dict],
                     sets: tuple[list[dict], list[dict], list[dict]],
@@ -1720,8 +1792,9 @@ def _commit_rewrite(root: str, doc: dict, op: str,
                     read_plan: Callable[[dict], tuple[set[str], dict]]
                     | None = None
                     ) -> int:
-    """The commit tail shared by merge, update and delete. The new
-    manifest holds the carried segments by reference, ONE reused
+    """The commit tail shared by merge, update and delete — their
+    attempt for the one commit loop (``_commit``). The new manifest
+    holds the carried segments by reference, ONE reused
     segment (the rehome set plus ``repointed`` — existing files the
     writer kept, e.g. delete's DV-updated and no-match files) and ONE
     segment of ``new_entries``; ``staged`` names further staged files
@@ -1741,23 +1814,39 @@ def _commit_rewrite(root: str, doc: dict, op: str,
     reads partitions it does not rewrite, including ones a concurrent
     commit creates; it covers ``plan``'s partitions with ranges at
     least as wide, so its set unchanged implies ``plan``'s is. Anything
-    else raises ``"<op> conflict: …"``; the staged files stay adopted across
-    attempts (only the manifest reference is rebuilt, like
-    commit_append's optimistic retry)."""
-    carried, rewrite, rehome = sets
-
+    else raises ``"<op> conflict: …"``; the staged files stay adopted
+    across attempts (only the manifest reference is rebuilt, as for
+    commit_append)."""
     def read_set(doc_, rewrite_):
         if read_plan is not None:
             rewrite_ = _rewrite_sets(root, doc_, *read_plan(doc_))[1]
         return {(e["path"], e.get("dv")) for e in rewrite_}
 
-    read0 = read_set(doc, rewrite)
+    read0 = read_set(doc, sets[1])
     sig0 = _table_sig(doc)
-    commit_id = uuid.uuid4().hex
     verify = sorted({e["path"] for e in new_entries}
                     | set(cdf_files) | set(staged))
-    deadline = time.monotonic() + 30.0
-    while True:
+
+    def attempt(head: dict) -> tuple:
+        carried, _, rehome = sets
+        if head is not doc:  # lost the race: rebase or refuse
+            if _mixed_specs(head):
+                raise RuntimeError(
+                    f"{op} conflict: a concurrent partition-spec change "
+                    f"landed mid-{op} — compact, then re-run")
+            if _table_sig(head) != sig0:
+                raise RuntimeError(
+                    f"{op} conflict: a concurrent commit changed the "
+                    f"table's schema/spec/constraints mid-{op} — re-run "
+                    "against the new snapshot")
+            carried, rewrite, rehome = _rewrite_sets(root, head, *plan)
+            if read_set(head, rewrite) != read0:
+                raise RuntimeError(
+                    f"{op} conflict: a concurrent commit touched files "
+                    f"in this {op}'s rewrite set (overlapping key "
+                    "bands) — re-run against the new snapshot")
+            # disjoint: rebase onto the new head with the SAME staged
+            # output
         segs = list(carried)
         reused = rehome + list(repointed)
         if reused:
@@ -1766,49 +1855,16 @@ def _commit_rewrite(root: str, doc: dict, op: str,
             segs.append(_write_segment(root, new_entries))
         segs = _coalesce_segments(root, segs)  # row-level-only workloads
         #                  must respect the manifest-size bound too
-        version = doc["version"] + 1
-        newdoc = _make_doc(version, doc["version"], segs,
-                           txns=doc.get("txn"), commit_id=commit_id,
-                           schema=doc.get("schema"),
+        newdoc = _make_doc(head["version"] + 1, head["version"], segs,
+                           txns=head.get("txn"), schema=head.get("schema"),
                            stats_cols=stats_cols, op=op)
-        _carry_table_meta(newdoc, doc)
+        _carry_table_meta(newdoc, head)
         newdoc.setdefault("part_col", part_used)
-        if doc.get("cdf_enabled"):
+        if head.get("cdf_enabled"):
             newdoc["cdf"] = {"mode": "files", "files": cdf_files}
-        try:
-            if _publish(root, version, newdoc, commit_id,
-                        verify_paths=verify, staged_epoch=staged_epoch):
-                return version
-        except FileExistsError:
-            pass  # version claimed by a concurrent commit: rebase
-        if time.monotonic() >= deadline:
-            raise RuntimeError(
-                f"{op} lost v{version} to concurrent commits "
-                "repeatedly (30s) — quiesce writers or re-run")
-        newhead = _load_doc(root)
-        if newhead["version"] == doc["version"]:
-            # claimer still in flight (claimed-not-flipped): wait for
-            # its flip or its crash-reclaim instead of spinning
-            time.sleep(0.25)
-            continue
-        doc = newhead
-        if _mixed_specs(doc):
-            raise RuntimeError(
-                f"{op} conflict: a concurrent partition-spec change "
-                f"landed mid-{op} — compact, then re-run")
-        if _table_sig(doc) != sig0:
-            raise RuntimeError(
-                f"{op} conflict: a concurrent commit changed the "
-                f"table's schema/spec/constraints mid-{op} — re-run "
-                "against the new snapshot")
-        carried, rewrite, rehome = _rewrite_sets(root, doc, *plan)
-        if read_set(doc, rewrite) != read0:
-            raise RuntimeError(
-                f"{op} conflict: a concurrent commit touched files in "
-                f"this {op}'s rewrite set (overlapping key bands) — "
-                "re-run against the new snapshot")
-        # disjoint: rebase onto the new head with the SAME staged
-        # output; loop re-claims version+1
+        return newdoc, verify, staged_epoch
+
+    return _commit(root, op, attempt, occ=False, head=doc)
 
 
 def _stage_and_commit(spark: SparkSession, root: str, doc: dict, op: str,
@@ -2276,11 +2332,8 @@ def _commit_metadata(root: str, mutate) -> int:
     commits, so a racing writer cannot stale the check). Single-writer
     like compaction and restore: a lost race raises."""
     doc = _load_doc(root)
-    commit_id = uuid.uuid4().hex
-    segs = _doc_segments(root, doc)
-    version = doc["version"] + 1
-    newdoc = _make_doc(version, doc["version"], segs,
-                       txns=doc.get("txn"), commit_id=commit_id,
+    newdoc = _make_doc(doc["version"] + 1, doc["version"],
+                       _doc_segments(root, doc), txns=doc.get("txn"),
                        schema=doc.get("schema"),
                        stats_cols=doc.get("stats_cols"),
                        op="metadata")
@@ -2288,11 +2341,9 @@ def _commit_metadata(root: str, mutate) -> int:
     mutate(newdoc)
     if newdoc.get("cdf_enabled"):
         newdoc["cdf"] = {"mode": "none"}  # metadata: no row changed
-    if not _publish(root, version, newdoc, commit_id):
-        raise MetadataCommitRaced(
-            f"metadata commit lost v{version} to a concurrent commit "
-            "after its claim — re-apply against the new snapshot")
-    return version
+    return _commit(root, "metadata",
+                   _once(doc, (newdoc, None, None), MetadataCommitRaced),
+                   occ=False, head=doc)
 
 
 def rename_column(path: str, old: str, new: str) -> int:
@@ -2751,85 +2802,53 @@ def commit_append(spark: SparkSession, path: str, batch: DataFrame,
     If the table does not exist yet, the first commit creates it.
 
     Appends from CONCURRENT writers are safe: append entries commute, so
-    the commit is optimistic — stage once, then claim version N+1 via the
-    manifest's atomic create-exclusive write; losing the claim reloads
-    the new parent and retries against it (the staged files are already
-    adopted and stay valid — only the manifest reference is rebuilt).
-    Every commit verifies its claim survived the flip
-    (``_claim_survived``), so a claim usurped by a crash-recovery
-    replace rebases too. The row-level writers (merge, update, delete)
-    rebase a lost race when their read sets are disjoint
-    (``_commit_rewrite``); compaction, restore and metadata commits
-    are single-writer (their segment lists bind to one parent), so a
-    lost race there is an explicit error, never silent corruption."""
+    the commit is optimistic — stage once, then run the one commit loop
+    (``_commit``, ``occ=True``): a lost claim, or a claim usurped before
+    its flip, reloads the new parent and rebuilds only the manifest
+    reference against it (the staged files are already adopted and
+    stay valid; files a vacuum swept before the claim are restaged).
+    The row-level writers (merge, update, delete) rebase a lost race
+    when their read sets are disjoint (``_commit_rewrite``);
+    compaction, restore and metadata commits are single-writer (their
+    segment lists bind to one parent), so a lost race there is an
+    explicit error, never silent corruption."""
     root = _norm(path)
-    staged = None
-    staged_seg = None
-    created_phys = None
-    commit_id = uuid.uuid4().hex
+    cur = current_version(root)
+    head0 = None if cur is None else _load_doc(root, cur)
+    staged: list[dict] | None = None
+    staged_seg: dict | None = None
+    # logical→physical map the staged files were written under: the
+    # create path stages identity-named (no mapping exists at v1); a
+    # mid-rebase mapping drift forces a restage below
+    staged_phys: dict | None = None
     staged_epoch = _vacuum_epoch(root)  # BEFORE staging, refreshed on
     #                                     every restage below
-    if current_version(root) is None:
-        FS.makedirs(root)
-        staged = _stage_write(batch, root, part_col)
-        staged_seg = _write_segment(root, staged) if staged else None
-        created_phys = {c: c for c in batch.columns}  # no mapping at v1
-        txns0 = {txn[0]: txn[1]} if txn else {}
-        for i in range(_APPEND_RETRIES):
-            if current_version(root) is not None:
-                break  # a racing creator committed; rebase as an append
-            doc1 = _make_doc(1, None,
-                             [staged_seg] if staged_seg else [],
-                             txns=txns0, commit_id=commit_id,
-                             schema=batch.schema.json(), op="create")
-            doc1["part_col"] = part_col
-            try:
-                _write_doc(root, 1, doc1, occ=True)
-            except FileExistsError:
-                # a live creator is microseconds from its flip, or a
-                # CRASHED creator's leftover claim is blocking v1 (no
-                # committed pointer exists, so vacuum can't clear it).
-                # Wait out the live case; half the budget in, presume
-                # crash and reclaim. The reclaim is pointer-checked
-                # under the flip lock (never deletes a committed v1),
-                # and a reclaimed LIVE creator gets CommitAborted at its
-                # flip and retries — loud, never a silent loss.
-                if i >= _APPEND_RETRIES // 2:
-                    _reclaim_claim(root, 1)
-                else:
-                    time.sleep(0.01)
-                continue
-            try:
-                if (_flip_current(root, 1, commit_id=commit_id)
-                        or _claim_survived(root, 1,
-                                           commit_id=commit_id)):
-                    return 1
-            except CommitAborted:
-                continue
-        if current_version(root) is None:
-            raise RuntimeError(
-                f"table create under {root} unresolved after "
-                f"{_APPEND_RETRIES} attempts")
     stats_backfilled = False
     validated_cons: dict | None = None
-    # logical→physical map the staged files were written under: the
-    # v1-race path stages identity-named (no mapping exists at create);
-    # a mid-rebase mapping drift forces a restage below
-    staged_phys = created_phys
-    for _ in range(_APPEND_RETRIES):
-        try:
-            doc = _load_doc(root)
-        except FileNotFoundError:
-            # a racing creator has written its v1 manifest but not yet
-            # flipped the pointer — microseconds away; wait it out
-            time.sleep(0.01)
-            continue
+
+    def attempt(doc: dict | None) -> tuple | None:
+        nonlocal staged, staged_seg, staged_phys, staged_epoch
+        nonlocal stats_backfilled, validated_cons
+        if doc is None:
+            # no table yet: this commit creates v1 (a racing creator
+            # that wins turns the next attempt into an append)
+            if staged is None:
+                FS.makedirs(root)
+                staged = _stage_write(batch, root, part_col)
+                staged_seg = _write_segment(root, staged) if staged \
+                    else None
+                staged_phys = {c: c for c in batch.columns}
+            doc1 = _make_doc(1, None, [staged_seg] if staged_seg else [],
+                             txns={txn[0]: txn[1]} if txn else {},
+                             schema=batch.schema.json(), op="create")
+            doc1["part_col"] = part_col
+            return doc1, None, None
         part_used = _part_arg(doc, part_col, "append")
         txns = dict(doc.get("txn", {}))
         if txn is not None:
             app, batch_id = txn
             if app in txns and txns[app] >= batch_id:
-                return doc["version"]  # replayed batch: already committed
+                return None  # replayed batch: already committed
             txns[app] = batch_id
         cons = doc.get("constraints")
         if cons and cons != validated_cons:
@@ -2838,9 +2857,8 @@ def commit_append(spark: SparkSession, path: str, batch: DataFrame,
             # only if a concurrent metadata commit changed the set
             _enforce_constraints(batch, doc, "append batch")
             validated_cons = cons
-        if staged is not None and not all(
-                FS.exists(os.path.join(root, e["path"]))
-                for e in staged):
+        if staged is not None and _swept(
+                root, [e["path"] for e in staged], staged_epoch):
             staged = staged_seg = None  # vacuumed mid-stall; restage
         stats_cols = _doc_stats_cols(root, doc)
         if staged and stats_cols and not stats_backfilled and any(
@@ -2902,53 +2920,45 @@ def commit_append(spark: SparkSession, path: str, batch: DataFrame,
             # data files survive but the segment was GC'd as an orphan:
             # rewrite the (tiny) segment from the already-adopted entries
             staged_seg = _write_segment(root, staged)
-        # parent metadata carries by reference: segment DESCRIPTORS are
-        # copied, entry lists never touched
-        segments = (_doc_segments(root, doc)
-                    + ([staged_seg] if staged_seg else []))
-        segments = _coalesce_segments(root, segments)
-        version = doc["version"] + 1
-        newdoc = _make_doc(version, doc["version"], segments, txns=txns,
-                           commit_id=commit_id, schema=schema_json,
-                           stats_cols=stats_cols, op="append")
-        _carry_table_meta(newdoc, doc)
-        if cm_new is not None:
-            newdoc["col_map"] = cm_new  # batch-registered ids override
-        if "part_col" not in newdoc and part_col:
-            newdoc["part_col"] = part_col
-        if doc.get("cdf_enabled"):
-            # an append's added files ARE its insert set — the feed
-            # derives them from the version diff, no sidecar needed
-            newdoc["cdf"] = {"mode": "append"}
-        try:
-            _write_doc(root, version, newdoc, occ=True,
-                       verify_paths=[e["path"] for e in staged or []],
-                       staged_epoch=staged_epoch)
-        except FileExistsError:
-            # another writer claimed this version; give it its flip
-            # window (otherwise every rebase re-reads the same committed
-            # parent and the whole retry budget burns inside one race)
-            time.sleep(0.01)
-            continue
-        except CommitAborted:
-            # staged files swept before the claim landed — the loop-top
-            # existence check restages them against the fresh parent
-            continue
-        try:
-            if (_flip_current(root, version, commit_id=commit_id)
-                    or _claim_survived(root, version,
-                                       commit_id=commit_id)):
-                return version
-        except CommitAborted:
-            pass  # claim reclaimed; the loop-top existence check
-            #      restages only if the files were GC'd too
-        # a single-writer commit usurped the claim between write and
-        # flip (see _claim_survived) — staged files are untouched, only
-        # the manifest reference must be rebuilt against the new parent
-    raise RuntimeError(
-        f"commit_append lost {_APPEND_RETRIES} version races under "
-        f"{root} — extreme writer contention (every claim was taken or "
-        "usurped within its flip window)")
+        newdoc = _append_doc(root, doc, staged_seg, txns=txns,
+                             schema=schema_json, stats_cols=stats_cols,
+                             col_map=cm_new)
+        if part_col:
+            newdoc.setdefault("part_col", part_col)
+        return newdoc, [e["path"] for e in staged], staged_epoch
+
+    return _commit(root, "commit_append", attempt, occ=True, head=head0)
+
+
+def _append_doc(root: str, head: dict, seg: dict | None, *,
+                overwrite: bool = False,
+                txns: dict | None = None, schema: str | None = None,
+                stats_cols: list[str] | None = None,
+                col_map: dict | None = None) -> dict:
+    """The manifest an append-kind commit (commit_append, the SQL
+    INSERT writer) claims on top of ``head``: the parent's segment
+    DESCRIPTORS by reference — entry lists never touched; none for a
+    truncating ``overwrite`` — plus the batch's one new segment, the
+    table metadata carried forward, and the change feed's record that
+    the added files ARE the insert set (derived from the version diff,
+    no sidecar). ``txns``/``schema``/``stats_cols`` default to the
+    head's; ``col_map`` overrides it (a batch's newly registered
+    ids)."""
+    segments = [] if overwrite else _doc_segments(root, head)
+    segments = _coalesce_segments(root, segments + ([seg] if seg else []))
+    newdoc = _make_doc(
+        head["version"] + 1, head["version"], segments,
+        txns=head.get("txn") if txns is None else txns,
+        schema=head.get("schema") if schema is None else schema,
+        stats_cols=(head.get("stats_cols") if stats_cols is None
+                    else stats_cols),
+        op="overwrite" if overwrite else "append")
+    _carry_table_meta(newdoc, head)
+    if col_map is not None:
+        newdoc["col_map"] = col_map
+    if head.get("cdf_enabled"):
+        newdoc["cdf"] = {"mode": "append"}
+    return newdoc
 
 
 def read_changes(spark: SparkSession, path: str, since: int,
@@ -3215,7 +3225,6 @@ def commit_compaction(spark: SparkSession, path: str, part_col: str,
     root = _norm(path)
     m = _load_doc(root)
     cur_pcol = _part_arg(m, part_col, "compaction")
-    commit_id = uuid.uuid4().hex
     by_part: dict[str, list[dict]] = {}
     migrate: list[dict] = []
     for e in _resolve(root, m):
@@ -3285,22 +3294,17 @@ def commit_compaction(spark: SparkSession, path: str, part_col: str,
     if new_entries:
         segs.append(_write_segment(root, new_entries))
     segs = _coalesce_segments(root, segs)
-    version = m["version"] + 1
-    newdoc = _make_doc(version, m["version"], segs, txns=m.get("txn"),
-                       commit_id=commit_id, schema=m.get("schema"),
+    newdoc = _make_doc(m["version"] + 1, m["version"], segs,
+                       txns=m.get("txn"), schema=m.get("schema"),
                        stats_cols=stats_cols, op="compaction")
     _carry_table_meta(newdoc, m)
     newdoc.setdefault("part_col", cur_pcol)
     if m.get("cdf_enabled"):
         newdoc["cdf"] = {"mode": "none"}  # compaction re-homes bytes,
         #                                   no logical row changes
-    if not _publish(root, version, newdoc, commit_id,
-                    verify_paths=[e["path"] for e in new_entries],
-                    staged_epoch=epoch0):
-        raise RuntimeError(
-            f"compaction lost v{version} to a concurrent commit after "
-            f"its claim — the table advanced without it; re-run")
-    return version
+    claim = (newdoc, [e["path"] for e in new_entries], epoch0)
+    return _commit(root, "compaction", _once(m, claim), occ=False,
+                   head=m)
 
 
 # A streaming reader lease older than this is a DEAD stream and stops
@@ -3309,6 +3313,11 @@ def commit_compaction(spark: SparkSession, path: str, part_col: str,
 # trigger interval, far below the multi-day lag a genuinely abandoned
 # checkpoint accumulates.
 _READER_LEASE_TTL_SEC = 86_400.0
+
+
+def _reader_lease_ttl() -> float:
+    return float(os.environ.get("SILVIA_READER_LEASE_TTL_SEC",
+                                _READER_LEASE_TTL_SEC))
 
 
 def _clone_lease_path(root: str, droot: str) -> str:
@@ -3387,9 +3396,7 @@ def _clone_pinned(root: str, now: float
             # version) until the reader-lease TTL — a crashed clone
             # holds its sources for one TTL, same policy as an
             # abandoned streaming checkpoint.
-            ttl = float(os.environ.get("SILVIA_READER_LEASE_TTL_SEC",
-                                       _READER_LEASE_TTL_SEC))
-            if age > ttl:
+            if age > _reader_lease_ttl():
                 FS.remove(fp)  # crashed long ago: release
                 continue
             sv = lease.get("src_version")
@@ -3445,8 +3452,7 @@ def _min_reader_version(root: str, now: float) -> int | None:
     from the ``lease-*.json`` sidecars the manifest streaming source
     refreshes every batch (mtime = liveness)."""
     lease_dir = os.path.join(root, ".stream_admission")
-    ttl = float(os.environ.get("SILVIA_READER_LEASE_TTL_SEC",
-                               _READER_LEASE_TTL_SEC))
+    ttl = _reader_lease_ttl()
     low: int | None = None
     if not FS.isdir(lease_dir):
         return None
@@ -3653,95 +3659,54 @@ def vacuum(path: str, keep_versions: int = 1,
         # Orphan segment files (written by a commit that crashed before
         # its manifest, or by one whose manifest landed after our
         # triage): same mtime grace as orphan data files.
-        for fname in sorted(FS.listdir(man_dir)):
-            if not fname.startswith("seg-") or fname in kept_segs:
-                continue
-            fp = os.path.join(man_dir, fname)
-            try:
-                if now - FS.mtime(fp) > _CLAIM_GRACE_SEC:
-                    FS.remove(fp)
-            except FileNotFoundError:
-                continue
+        _sweep_aged(man_dir, now, _CLAIM_GRACE_SEC,
+                    keep=lambda f: not f.startswith("seg-")
+                    or f in kept_segs)
         # Crashed-writer temp files: the content-atomic write protocols
         # (put_if_absent's .tmp-*, put_atomic's .<name>-* / *.put-*)
         # leak their temp on a crash between write and link/replace —
         # aged ones are swept here so a long-lived table cannot
         # accumulate them. Live lock/lease files never match.
         for d in (man_dir, root):
-            for fname in sorted(FS.listdir(d)):
-                if not (fname.startswith(".tmp-") or ".put-" in fname
-                        or fname.startswith(f".{_CURRENT}-")):
-                    continue
-                fp = os.path.join(d, fname)
-                try:
-                    if now - FS.mtime(fp) > _CLAIM_GRACE_SEC:
-                        FS.remove(fp)
-                except (FileNotFoundError, OSError):
-                    continue
+            _sweep_aged(d, now, _CLAIM_GRACE_SEC,
+                        keep=lambda f: not (
+                            f.startswith(".tmp-") or ".put-" in f
+                            or f.startswith(f".{_CURRENT}-")))
         deleted: list[str] = []
         for part_entry in sorted(FS.listdir(root)):
             part_dir = os.path.join(root, part_entry)
             if "=" not in part_entry or not FS.isdir(part_dir):
                 continue
-            for fname in sorted(FS.listdir(part_dir)):
-                rel = f"{part_entry}/{fname}"
-                if rel in live:
-                    continue
-                fp = os.path.join(part_dir, fname)
-                if rel not in dead_known:
-                    # referenced by NO manifest: either a crashed
-                    # commit's old orphan, or a LIVE commit's freshly
-                    # adopted file whose manifest has not landed yet
-                    # (or landed after our triage listing). Only age
-                    # can tell them apart — the grace spares the young.
-                    try:
-                        if (now - FS.mtime(fp)
-                                <= _CLAIM_GRACE_SEC):
-                            continue
-                    except FileNotFoundError:
-                        continue  # raced its committer's restage cleanup
-                FS.remove(fp)
-                deleted.append(rel)
+            # a file referenced by NO manifest is either a crashed
+            # commit's old orphan, or a LIVE commit's freshly adopted
+            # file whose manifest has not landed yet (or landed after
+            # our triage listing) — only age can tell them apart, so
+            # the grace spares the young; known-dead files go at any age
+            deleted += [f"{part_entry}/{f}" for f in _sweep_aged(
+                part_dir, now, _CLAIM_GRACE_SEC,
+                keep=lambda f: f"{part_entry}/{f}" in live,
+                dead=lambda f: f"{part_entry}/{f}" in dead_known)]
             FS.rmdir_if_empty(part_dir)
         # Delete-vector sidecars: same triage as data files — referenced
         # by a kept manifest → live; otherwise the mtime grace spares an
         # in-flight commit_delete's freshly written vector until its
         # claim lands. (Vectors of retired snapshots simply stop being
         # referenced and age out here; compaction-reconciled ones too.)
-        dv_dir = os.path.join(root, _DELETES)
-        if FS.isdir(dv_dir):
-            for fname in sorted(FS.listdir(dv_dir)):
-                if fname in live_dv or not fname.endswith(".parquet"):
-                    continue
-                fp = os.path.join(dv_dir, fname)
-                try:
-                    if now - FS.mtime(fp) <= _CLAIM_GRACE_SEC:
-                        continue
-                    FS.remove(fp)
-                except FileNotFoundError:
-                    continue
-                deleted.append(f"{_DELETES}/{fname}")
-            FS.rmdir_if_empty(dv_dir)
         # Change-feed sidecars: referenced by a kept manifest's cdf
         # record → live; otherwise the grace spares an in-flight
         # merge/delete's freshly written records until its claim lands.
         # A retired version's records age out with its manifest — the
         # feed's retention window IS the manifest retention window.
-        cdf_dir = os.path.join(root, _CHANGES)
-        if FS.isdir(cdf_dir):
-            for fname in sorted(FS.listdir(cdf_dir)):
-                if (f"{_CHANGES}/{fname}" in live_cdf
-                        or not fname.endswith(".parquet")):
-                    continue
-                fp = os.path.join(cdf_dir, fname)
-                try:
-                    if now - FS.mtime(fp) <= _CLAIM_GRACE_SEC:
-                        continue
-                    FS.remove(fp)
-                except FileNotFoundError:
-                    continue
-                deleted.append(f"{_CHANGES}/{fname}")
-            FS.rmdir_if_empty(cdf_dir)
+        for sub, is_live in ((_DELETES, lambda f: f in live_dv),
+                             (_CHANGES,
+                              lambda f: f"{_CHANGES}/{f}" in live_cdf)):
+            side_dir = os.path.join(root, sub)
+            if not FS.isdir(side_dir):
+                continue
+            deleted += [f"{sub}/{f}" for f in _sweep_aged(
+                side_dir, now, _CLAIM_GRACE_SEC,
+                keep=lambda f: not f.endswith(".parquet") or is_live(f))]
+            FS.rmdir_if_empty(side_dir)
         # Dead streaming-reader leases: past the reader TTL they no
         # longer pin retention (above), so sweep the sidecar too — a
         # long-lived table must not accumulate one file per abandoned
@@ -3749,18 +3714,9 @@ def vacuum(path: str, keep_versions: int = 1,
         # restart batch and removing them degrades a legitimately
         # long-paused stream's first batch to unbounded.
         lease_dir = os.path.join(root, ".stream_admission")
-        ttl = float(os.environ.get("SILVIA_READER_LEASE_TTL_SEC",
-                                   _READER_LEASE_TTL_SEC))
         if FS.isdir(lease_dir):
-            for fname in sorted(FS.listdir(lease_dir)):
-                if not fname.startswith("lease-"):
-                    continue
-                fp = os.path.join(lease_dir, fname)
-                try:
-                    if now - FS.mtime(fp) > ttl:
-                        FS.remove(fp)
-                except (FileNotFoundError, OSError):
-                    continue
+            _sweep_aged(lease_dir, now, _reader_lease_ttl(),
+                        keep=lambda f: not f.startswith("lease-"))
         # epoch bump LAST too: a committer whose lock-free epoch capture
         # landed AFTER the start-bump but whose staging overlapped this
         # sweep would otherwise see an unchanged epoch and skip its
@@ -3770,6 +3726,30 @@ def vacuum(path: str, keep_versions: int = 1,
         FS.put_atomic(os.path.join(root, _MANIFESTS, ".vacuum_epoch"),
                       str(_vacuum_epoch(root) + 1))
     return deleted
+
+
+def _sweep_aged(d: str, now: float, max_age: float,
+                keep: Callable[[str], bool],
+                dead: Callable[[str], bool] = lambda f: False
+                ) -> list[str]:
+    """Vacuum's one sweep: remove the files of directory ``d`` that
+    ``keep`` does not spare and whose mtime is older than ``max_age``
+    seconds — at any age when ``dead`` (known-dead: referenced only by
+    retired manifests). A file that vanishes or cannot be removed
+    mid-sweep is skipped. Returns the removed names."""
+    gone: list[str] = []
+    for fname in sorted(FS.listdir(d)):
+        if keep(fname):
+            continue
+        fp = os.path.join(d, fname)
+        try:
+            if not dead(fname) and now - FS.mtime(fp) <= max_age:
+                continue
+            FS.remove(fp)
+        except OSError:
+            continue
+        gone.append(fname)
+    return gone
 
 
 def ensure_table(root: str, build) -> None:
@@ -3783,8 +3763,10 @@ def ensure_table(root: str, build) -> None:
     Two racing creators: the claim writes serialize on the flip lock,
     so the second either sees the committed pointer (FileExistsError
     from create_table / the stale-version guard) or replaces the
-    first's un-flipped claim — the FIRST then gets CommitAborted at its
-    flip while the second commits. Both losers land here and wait for
+    first's un-flipped claim — the FIRST's flip then publishes the
+    second's manifest, and its post-flip ownership check raises
+    FileExistsError (CommitAborted when a creating commit_append
+    reclaimed the claim instead). Every loser lands here and waits for
     the winner's pointer."""
     if current_version(root) is not None:
         return

@@ -51,23 +51,16 @@ def contract(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryF
 _NEW_CONTRACTS_HERE = "__new_contracts_here__"
 
 _PRIORITY: tuple[str, ...] = (
-    # ============ packing after the one exact-cosine route (evidence
-    # ledger: r09=11, r10=36, r11=22, r12=40, r13=38, r14=42, r15=50;
-    # zero failures ever).
-    # Head: the contracts whose plan-building code changed after their
-    # newest evidence — first the seven whose plans the one exact-cosine
-    # route rewrote (the six consumers of llm_extras.ann_join, whose
-    # bucket members now carry their vectors into the fused kernel, and
-    # sim_join_threshold, now that kernel over a grid of id blocks),
-    # then the manifest/SQL/stream contracts reaching the shared
-    # change-feed walk, the positional entry scan or commit_append's
-    # segment carry, then the still-unchecked one-pass MinHash verify
-    # and SimHash. Then evidence oldest-first: 35 + 11 r09 + 4 of the
-    # 36 r10 fill the 50-slot window. ======
-    # -- plan changed after their newest evidence --
-    "sim_ann_lsh", "sim_ann_lsh_multiprobe", "sim_ann_lsh_multiprobe2",
-    "sim_ann_auto", "sim_ann_indexed", "dedup_docs_embedding",
-    "sim_join_threshold",
+    # ============ packing after the one optimistic commit loop
+    # (evidence ledger: r09=11, r10=36, r11=22, r12=40, r13=38, r14=42,
+    # r15=50; zero failures ever).
+    # Head: every contract whose body commits to a manifest table —
+    # every commit path (create, clone, append, SQL INSERT, row-level
+    # rewrite, compaction, restore, metadata) now runs through the one
+    # commit loop — plus sink_merge_keyed, the directory-swap MERGE the
+    # manifest layer closes. Then evidence oldest-first: the other 10
+    # r09 and 7 of the 36 r10 fill the 50-slot window. ======
+    # -- commit path changed after their newest evidence --
     "stream_changes_cdf", "stream_replicate_table", "scan_changes_row_level",
     "sink_delete_dv", "sink_sql_delete", "sink_restore_version",
     "scan_table_clone", "scan_manifest_renamed", "sink_sql_insert",
@@ -78,12 +71,14 @@ _PRIORITY: tuple[str, ...] = (
     "sink_sql_optimize", "scan_manifest_schema_evolution",
     "scan_partition_evolved", "sink_append_constrained",
     "stream_manifest_source", "stream_manifest_sink",
-    "stream_manifest_admission",
-    "dedup_docs_minhash", "dedup_docs_simhash",
+    "stream_manifest_admission", "scan_manifest_pruned",
+    "scan_manifest_widened", "scan_manifest_zorder",
+    "scan_partition_hidden_days", "scan_catalog_attached",
+    "sim_ann_indexed", "sink_merge_keyed",
     # -- new contracts registered mid-round slot in here --
     _NEW_CONTRACTS_HERE,
     # -- r09-era evidence --
-    "shard_assign_balanced", "sink_merge_keyed", "stream_running_moments",
+    "shard_assign_balanced", "stream_running_moments",
     "text_contamination", "text_repetition_filter", "udf_arrow_scalar",
     "udtf_lateral", "window_anomaly_zscore", "window_lag_lead",
     "window_rank_topn", "window_row_dense_ntile",
@@ -116,16 +111,14 @@ _PRIORITY: tuple[str, ...] = (
     "q16_supplier_part_counts", "q17_small_quantity", "q18_large_orders",
     "q20_dominant_suppliers", "q2_min_cost_supplier", "q6_forecast_revenue",
     "q9_product_profit", "scalar_array", "scalar_cast", "scalar_conditional",
-    "scalar_date", "scan_manifest_pruned", "scan_manifest_widened",
-    "scan_manifest_zorder", "scan_partition_hidden_days",
-    "window_percent_rank", "window_range_frame",
+    "scalar_date", "window_percent_rank", "window_range_frame",
     # -- r13-era evidence --
     "agg_mode_frequent", "agg_time_gapfill", "etl_events_enriched",
     "multimodal_frame_sample", "multimodal_join", "q10_returned_items",
     "q13_order_distribution", "q14_promo_revenue", "q19_disjunctive",
     "q21_waiting_orders", "scalar_hash", "scalar_json", "scalar_map",
-    "scalar_math", "scalar_regexp", "scalar_string", "scan_catalog_attached",
-    "scan_parquet", "scan_schema_evolution", "set_except", "set_intersect",
+    "scalar_math", "scalar_regexp", "scalar_string", "scan_parquet",
+    "scan_schema_evolution", "set_except", "set_intersect",
     "set_union_all", "set_union_distinct", "sink_compaction_small_files",
     "sink_jdbc_postgres", "sink_merge_scd2", "sink_parquet_partitioned",
     "sink_python_datasource", "sort_multikey_nulls", "source_csv_tsv",
@@ -144,6 +137,9 @@ _PRIORITY: tuple[str, ...] = (
     "stream_funnel_live", "stream_session_live", "stream_static_join_live",
     "stream_stream_join_live", "stream_transform_with_state",
     # -- r15-era evidence --
+    "sim_ann_lsh", "sim_ann_lsh_multiprobe", "sim_ann_lsh_multiprobe2",
+    "sim_ann_auto", "dedup_docs_embedding", "sim_join_threshold",
+    "dedup_docs_minhash", "dedup_docs_simhash",
     "stream_session_30m", "stream_tumbling_live",
     "stream_watermark_late", "text_lang_detect", "text_pack_sequences",
     "text_pii_scrub", "text_unicode_normalize", "window_gaps_islands",

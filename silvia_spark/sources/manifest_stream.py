@@ -994,10 +994,13 @@ class ManifestInsertWriter(DataSourceArrowWriter):
       entries (path, partition, rows, bytes, footer min/max for the
       table's stats_cols) in the commit message.
     - ``commit`` (driver, once, after every task succeeded): the same
-      optimistic claim/flip tail as commit_append — new segment +
-      parent segments by reference, ``_write_doc(occ=True)`` with
-      verify_paths + the preflight vacuum epoch, rebase on a lost
-      claim. O(batch + segment count), never O(table files).
+      optimistic commit loop as commit_append (``_commit``,
+      ``occ=True``) over the same append-doc assembly
+      (``_append_doc``: new segment + parent segments by reference);
+      the claim verifies the written files against the preflight
+      vacuum epoch, and a lost claim rebases — unless a vacuum swept
+      the files, which raises (nothing is left to restage). O(batch +
+      segment count), never O(table files).
 
     Scope (loud refusals, never silent drift): append, plus
     whole-table ``INSERT OVERWRITE`` (r14 — the truncate-style
@@ -1188,17 +1191,15 @@ class ManifestInsertWriter(DataSourceArrowWriter):
     # -- driver side --------------------------------------------------------
 
     def commit(self, messages) -> None:
-        import time as _time
-        import uuid as _uuid
-
         from silvia_spark.operators import manifest_table as mt
 
         entries = [e for m in messages if m is not None
                    for e in m.entries]
+        paths = [e["path"] for e in entries]
         root = self.root
-        commit_id = _uuid.uuid4().hex
-        for _ in range(mt._APPEND_RETRIES):
-            doc = mt._load_doc(root)
+        planned = mt._load_doc(root)
+
+        def attempt(doc: dict) -> tuple:
             if dict(doc.get("constraints") or {}) != self.constraints:
                 raise RuntimeError(
                     "table constraints changed while the INSERT ran — "
@@ -1216,52 +1217,25 @@ class ManifestInsertWriter(DataSourceArrowWriter):
                     "CDF was enabled while the INSERT OVERWRITE ran — "
                     "its replaced-row delete records cannot be "
                     "reconstructed now; re-run via commit_merge")
-            seg = (mt._write_segment(root, entries)
-                   if entries else None)
+            if doc is not planned and mt._swept(root, paths, self.epoch0):
+                # unlike commit_append there is nothing to restage —
+                # the executors are gone; surface loudly
+                raise RuntimeError(
+                    "INSERT data files were garbage-collected before "
+                    "the commit landed (a vacuum raced a long-running "
+                    "INSERT): re-run the INSERT")
             # truncate-overwrite: the new manifest references the
             # INSERT's files ONLY; every prior entry stays referenced by
             # the parent manifest, so time travel serves the replaced
             # state until vacuum. An empty INSERT OVERWRITE legitimately
             # truncates to an empty snapshot (read_snapshot serves a
             # typed empty frame).
-            parent = ([] if self.overwrite
-                      else mt._doc_segments(root, doc))
-            segments = mt._coalesce_segments(
-                root, parent + ([seg] if seg else []))
-            version = doc["version"] + 1
-            newdoc = mt._make_doc(
-                version, doc["version"], segments,
-                txns=doc.get("txn"), commit_id=commit_id,
-                schema=doc.get("schema"),
-                stats_cols=doc.get("stats_cols"),
-                op="overwrite" if self.overwrite else "append")
-            mt._carry_table_meta(newdoc, doc)
-            if doc.get("cdf_enabled"):
-                newdoc["cdf"] = {"mode": "append"}
-            try:
-                mt._write_doc(root, version, newdoc, occ=True,
-                              verify_paths=[e["path"] for e in entries],
-                              staged_epoch=self.epoch0)
-            except FileExistsError:
-                _time.sleep(0.01)  # loser: rebase against new parent
-                continue
-            except mt.CommitAborted as e:
-                # unlike commit_append there is nothing to restage —
-                # the executors are gone; surface loudly
-                raise RuntimeError(
-                    "INSERT data files were garbage-collected before "
-                    "the commit landed (a vacuum raced a long-running "
-                    "INSERT): re-run the INSERT") from e
-            try:
-                if (mt._flip_current(root, version, commit_id=commit_id)
-                        or mt._claim_survived(root, version,
-                                              commit_id=commit_id)):
-                    return
-            except mt.CommitAborted:
-                continue
-        raise RuntimeError(
-            f"SQL INSERT lost {mt._APPEND_RETRIES} version races under "
-            f"{root} — extreme writer contention")
+            seg = mt._write_segment(root, entries) if entries else None
+            return (mt._append_doc(root, doc, seg,
+                                   overwrite=self.overwrite),
+                    paths, self.epoch0)
+
+        mt._commit(root, "SQL INSERT", attempt, occ=True, head=planned)
 
     def abort(self, messages) -> None:
         # files without a manifest entry are invisible to every reader

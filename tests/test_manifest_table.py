@@ -445,6 +445,31 @@ def test_usurped_merge_raises_not_silent(spark, tmp_path, monkeypatch):
         _rows(_base(spark)) + [(99, "p1", 990.0)])
 
 
+def test_usurped_create_raises_not_silent(spark, tmp_path, monkeypatch):
+    """A creator's v1 claim replaced before its flip by a competing
+    create_table (the crash-recovery presumption) must not report
+    success: the loser raises FileExistsError and the usurper's rows
+    are the table."""
+    root = str(tmp_path / "t")
+    other = spark.createDataFrame([(2, "p2", 2.0)],
+                                  "k BIGINT, part STRING, v DOUBLE")
+    real_flip = mt._flip_current
+    fired = {}
+
+    def usurping_flip(r, version, entries=None, **kw):
+        if not fired:
+            fired["v"] = version
+            assert mt.create_table(other, root, "part") == 1
+        return real_flip(r, version, entries, **kw)
+
+    monkeypatch.setattr(mt, "_flip_current", usurping_flip)
+    with pytest.raises(FileExistsError, match="lost v1"):
+        mt.create_table(_base(spark), root, "part")
+    assert fired["v"] == 1  # the loser's claim was indeed v1
+    assert mt.current_version(root) == 1
+    assert _rows(mt.read_snapshot(spark, root)) == [(2, "p2", 2.0)]
+
+
 @pytest.mark.full  # CI-mode only (suite-time budget)
 def test_crashed_create_is_reclaimed(spark, tmp_path):
     """A creator that crashed between manifest-write and pointer-flip

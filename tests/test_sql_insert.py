@@ -200,3 +200,62 @@ def test_writer_api_append_mode(spark, tmp_path):
         .mode("append").save()
     assert current_version(root) == 2
     assert read_table(spark, root).where("k = 400").count() == 1
+
+
+@pytest.mark.parametrize("race", ["append_first", "merge_usurps"])
+def test_insert_commit_rebases_lost_race(spark, tmp_path, monkeypatch,
+                                         race):
+    """The writer's driver-side commit runs commit_append's optimistic
+    loop: a lost version race rebases the INSERT onto the new head, so
+    it lands at the next version and neither commit loses a row. A
+    commit_append wins v2 just before the writer's claim (an appender
+    never replaces a live claim, it waits for its flip), or a merge's
+    crash-recovery replace usurps the writer's v2 claim between its
+    claim and its flip. The writer is driven in-process: through SQL
+    its commit runs in a Python worker, out of a monkeypatch's reach."""
+    import pyarrow as pa
+
+    from silvia_spark.operators import manifest_table as mt
+    from silvia_spark.sources.manifest_stream import ManifestInsertWriter
+
+    root = _mk(spark, tmp_path)
+    w = ManifestInsertWriter({"path": root},
+                             read_snapshot(spark, root).schema)
+    msg = w.write(iter([pa.RecordBatch.from_pydict(
+        {"k": pa.array([200, 201], pa.int64()), "v": [2.0, 3.0],
+         "part": ["a", "b"]})]))
+    fired = {}
+    if race == "append_first":
+        real_write = mt._write_doc
+
+        def racy(root_, version, doc, **kw):
+            if not fired:
+                fired["v"] = version
+                commit_append(spark, root, spark.createDataFrame(
+                    [Row(k=300, v=30.0, part="z")]), "part")
+            return real_write(root_, version, doc, **kw)
+
+        monkeypatch.setattr(mt, "_write_doc", racy)
+        want_extra = {(300, 30.0, "z")}
+    else:
+        real_flip = mt._flip_current
+
+        def racy(r, version, entries=None, **kw):
+            if not fired:
+                fired["v"] = version
+                mt.commit_merge(spark, root, spark.createDataFrame(
+                    [Row(k=2, v=202.0, part="b", op="U")]),
+                    ["k", "part"], "part")
+            return real_flip(r, version, entries, **kw)
+
+        monkeypatch.setattr(mt, "_flip_current", racy)
+        want_extra = {(2, 202.0, "b")}
+    w.commit([msg])
+    assert fired["v"] == 2  # the writer's first claim was indeed v2
+    assert current_version(root) == 3
+    assert mt.load_manifest(root)["op"] == "append"
+    got = {tuple(r) for r in read_snapshot(spark, root).collect()}
+    base = {(i, float(i), "a" if i % 2 else "b") for i in range(1, 11)}
+    if race == "merge_usurps":
+        base.discard((2, 2.0, "b"))
+    assert got == base | want_extra | {(200, 2.0, "a"), (201, 3.0, "b")}

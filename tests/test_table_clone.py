@@ -53,6 +53,35 @@ def test_clone_is_zero_copy_and_divergence_is_two_way(spark, tmp_path):
     assert [h["op"] for h in table_history(dst)] == ["delete", "clone"]
 
 
+def test_usurped_clone_raises_not_silent(spark, tmp_path, monkeypatch):
+    """A clone whose v1 claim is replaced before its flip by a competing
+    create_table at the destination must not report success: the clone
+    raises FileExistsError and the usurper's rows are the table."""
+    from silvia_spark.operators import manifest_table as mt
+
+    src = _mk(spark, tmp_path)
+    dst = os.path.join(str(tmp_path), "dst")
+    other = spark.createDataFrame([Row(k=2, v=2.0, part="p2")])
+    real_flip = mt._flip_current
+    fired = {}
+
+    def usurping_flip(r, version, entries=None, **kw):
+        if not fired:
+            fired["v"] = version
+            assert create_table(other.select("k", "v", "part"), dst,
+                                "part") == 1
+        return real_flip(r, version, entries, **kw)
+
+    monkeypatch.setattr(mt, "_flip_current", usurping_flip)
+    with pytest.raises(FileExistsError, match="lost v1"):
+        clone_table(src, dst)
+    assert fired["v"] == 1  # the clone's claim was indeed v1
+    assert current_version(dst) == 1
+    assert sorted(tuple(r) for r in read_snapshot(spark, dst).collect()
+                  ) == [(2, 2.0, "p2")]
+    assert read_snapshot(spark, src).count() == 10  # source untouched
+
+
 def test_clone_dv_folds_source_vector_into_owned_one(spark, tmp_path):
     # one file per partition (5 rows each) + a high dv_max_frac, so a
     # 1-row delete stays under the density crossover and records a
