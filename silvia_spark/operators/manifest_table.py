@@ -486,6 +486,21 @@ def _claim_survived(root: str, version: int,
             == {e["path"] for e in _resolve(root, doc)})
 
 
+def _committed_head(root: str) -> dict | None:
+    """The committed head manifest doc, None while no table exists. A
+    head vacuum retires between the pointer read and the load (the
+    pointer moved on past it) is re-read at the new pointer."""
+    for _ in range(_COMMIT_RETRIES):
+        cur = current_version(root)
+        try:
+            return None if cur is None else _load_doc(root, cur)
+        except FileNotFoundError:
+            continue
+    raise FileNotFoundError(
+        f"the pointer under {root} named a missing manifest "
+        f"{_COMMIT_RETRIES} times in a row")
+
+
 def _commit(root: str, op: str,
             attempt: Callable[[dict | None], tuple | None], *,
             occ: bool, head: dict | None) -> int:
@@ -518,11 +533,7 @@ def _commit(root: str, op: str,
     commit_id = uuid.uuid4().hex
     for i in range(_COMMIT_RETRIES):
         if i:
-            cur = current_version(root)
-            try:
-                head = None if cur is None else _load_doc(root, cur)
-            except FileNotFoundError:
-                continue  # vacuum retired it as the pointer moved on
+            head = _committed_head(root)
         claim = attempt(head)
         if claim is None:
             return head["version"]
@@ -2813,8 +2824,7 @@ def commit_append(spark: SparkSession, path: str, batch: DataFrame,
     segment lists bind to one parent), so a lost race there is an
     explicit error, never silent corruption."""
     root = _norm(path)
-    cur = current_version(root)
-    head0 = None if cur is None else _load_doc(root, cur)
+    head0 = _committed_head(root)
     staged: list[dict] | None = None
     staged_seg: dict | None = None
     # logical→physical map the staged files were written under: the
@@ -3666,12 +3676,15 @@ def vacuum(path: str, keep_versions: int = 1,
         # (put_if_absent's .tmp-*, put_atomic's .<name>-* / *.put-*)
         # leak their temp on a crash between write and link/replace —
         # aged ones are swept here so a long-lived table cannot
-        # accumulate them. Live lock/lease files never match.
+        # accumulate them. Live lock/lease files never match. Best
+        # effort: a temp file left behind is harmless (no reader or
+        # committer ever names it), so no removal error fails vacuum.
         for d in (man_dir, root):
             _sweep_aged(d, now, _CLAIM_GRACE_SEC,
                         keep=lambda f: not (
                             f.startswith(".tmp-") or ".put-" in f
-                            or f.startswith(f".{_CURRENT}-")))
+                            or f.startswith(f".{_CURRENT}-")),
+                        skip=OSError)
         deleted: list[str] = []
         for part_entry in sorted(FS.listdir(root)):
             part_dir = os.path.join(root, part_entry)
@@ -3712,11 +3725,13 @@ def vacuum(path: str, keep_versions: int = 1,
         # long-lived table must not accumulate one file per abandoned
         # checkpoint. Position notes (pos-*) stay: they only bound a
         # restart batch and removing them degrades a legitimately
-        # long-paused stream's first batch to unbounded.
+        # long-paused stream's first batch to unbounded. Best effort
+        # like the temp sweep: a dead lease left behind pins nothing.
         lease_dir = os.path.join(root, ".stream_admission")
         if FS.isdir(lease_dir):
             _sweep_aged(lease_dir, now, _reader_lease_ttl(),
-                        keep=lambda f: not f.startswith("lease-"))
+                        keep=lambda f: not f.startswith("lease-"),
+                        skip=OSError)
         # epoch bump LAST too: a committer whose lock-free epoch capture
         # landed AFTER the start-bump but whose staging overlapped this
         # sweep would otherwise see an unchanged epoch and skip its
@@ -3730,13 +3745,15 @@ def vacuum(path: str, keep_versions: int = 1,
 
 def _sweep_aged(d: str, now: float, max_age: float,
                 keep: Callable[[str], bool],
-                dead: Callable[[str], bool] = lambda f: False
-                ) -> list[str]:
+                dead: Callable[[str], bool] = lambda f: False,
+                skip: type[OSError] = FileNotFoundError) -> list[str]:
     """Vacuum's one sweep: remove the files of directory ``d`` that
     ``keep`` does not spare and whose mtime is older than ``max_age``
     seconds — at any age when ``dead`` (known-dead: referenced only by
-    retired manifests). A file that vanishes or cannot be removed
-    mid-sweep is skipped. Returns the removed names."""
+    retired manifests). A file that vanishes mid-sweep (a racing
+    vacuum or restage removed it) is skipped; any other removal error
+    propagates unless ``skip`` widens the tolerance. Returns the
+    removed names."""
     gone: list[str] = []
     for fname in sorted(FS.listdir(d)):
         if keep(fname):
@@ -3746,7 +3763,7 @@ def _sweep_aged(d: str, now: float, max_age: float,
             if not dead(fname) and now - FS.mtime(fp) <= max_age:
                 continue
             FS.remove(fp)
-        except OSError:
+        except skip:
             continue
         gone.append(fname)
     return gone

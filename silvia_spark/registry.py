@@ -54,12 +54,22 @@ _PRIORITY: tuple[str, ...] = (
     # ============ packing after the one optimistic commit loop
     # (evidence ledger: r09=11, r10=36, r11=22, r12=40, r13=38, r14=42,
     # r15=50; zero failures ever).
-    # Head: every contract whose body commits to a manifest table —
-    # every commit path (create, clone, append, SQL INSERT, row-level
-    # rewrite, compaction, restore, metadata) now runs through the one
-    # commit loop — plus sink_merge_keyed, the directory-swap MERGE the
-    # manifest layer closes. Then evidence oldest-first: the other 10
-    # r09 and 7 of the 36 r10 fill the 50-slot window. ======
+    # Head: the contracts whose code changed after their newest evidence
+    # — first the seven whose plans the one exact-cosine route rewrote
+    # (the six consumers of llm_extras.ann_join, whose bucket members now
+    # carry their vectors into the fused kernel, and sim_join_threshold,
+    # now that kernel over a grid of id blocks), then every contract whose
+    # body commits to a manifest table — every commit path (create,
+    # clone, append, SQL INSERT, row-level rewrite, compaction, restore,
+    # metadata) now runs through the one commit loop — plus
+    # sink_merge_keyed, the directory-swap MERGE the manifest layer
+    # closes, then the still-unchecked one-pass MinHash verify and
+    # SimHash. Then evidence oldest-first: 41 + 9 of the 10 r09 fill the
+    # 50-slot window. ======
+    # -- plan changed after their newest evidence --
+    "sim_ann_lsh", "sim_ann_lsh_multiprobe", "sim_ann_lsh_multiprobe2",
+    "sim_ann_auto", "sim_ann_indexed", "dedup_docs_embedding",
+    "sim_join_threshold",
     # -- commit path changed after their newest evidence --
     "stream_changes_cdf", "stream_replicate_table", "scan_changes_row_level",
     "sink_delete_dv", "sink_sql_delete", "sink_restore_version",
@@ -74,7 +84,8 @@ _PRIORITY: tuple[str, ...] = (
     "stream_manifest_admission", "scan_manifest_pruned",
     "scan_manifest_widened", "scan_manifest_zorder",
     "scan_partition_hidden_days", "scan_catalog_attached",
-    "sim_ann_indexed", "sink_merge_keyed",
+    "sink_merge_keyed",
+    "dedup_docs_minhash", "dedup_docs_simhash",
     # -- new contracts registered mid-round slot in here --
     _NEW_CONTRACTS_HERE,
     # -- r09-era evidence --
@@ -137,9 +148,6 @@ _PRIORITY: tuple[str, ...] = (
     "stream_funnel_live", "stream_session_live", "stream_static_join_live",
     "stream_stream_join_live", "stream_transform_with_state",
     # -- r15-era evidence --
-    "sim_ann_lsh", "sim_ann_lsh_multiprobe", "sim_ann_lsh_multiprobe2",
-    "sim_ann_auto", "dedup_docs_embedding", "sim_join_threshold",
-    "dedup_docs_minhash", "dedup_docs_simhash",
     "stream_session_30m", "stream_tumbling_live",
     "stream_watermark_late", "text_lang_detect", "text_pack_sequences",
     "text_pii_scrub", "text_unicode_normalize", "window_gaps_islands",

@@ -409,6 +409,36 @@ def test_usurped_append_claim_rebases_not_lost(spark, tmp_path,
         MERGED + [(42, "p9", 420.0)])
 
 
+def test_append_rereads_head_retired_before_load(spark, tmp_path,
+                                                 monkeypatch):
+    """commit_append's first head read races a vacuum: between its
+    pointer read and its manifest load, another append moves the
+    pointer on and vacuum retires the head it read. The append must
+    re-read at the new pointer and land on top, not raise."""
+    root = str(tmp_path / "t")
+    mt.create_table(_base(spark), root, "part")
+    other = spark.createDataFrame([(41, "p8", 410.0)],
+                                  "k BIGINT, part STRING, v DOUBLE")
+    batch = spark.createDataFrame([(42, "p9", 420.0)],
+                                  "k BIGINT, part STRING, v DOUBLE")
+    real_load = mt._load_doc
+    fired = {}
+
+    def retiring_load(r, version=None):
+        if not fired and version == 1:
+            fired["v"] = version
+            monkeypatch.setattr(mt, "_load_doc", real_load)
+            mt.commit_append(spark, root, other, "part")
+            raise FileNotFoundError(f"v{version} retired by vacuum")
+        return real_load(r, version)
+
+    monkeypatch.setattr(mt, "_load_doc", retiring_load)
+    assert mt.commit_append(spark, root, batch, "part") == 3
+    assert fired["v"] == 1
+    assert _rows(mt.read_snapshot(spark, root)) == sorted(
+        _rows(_base(spark)) + [(41, "p8", 410.0), (42, "p9", 420.0)])
+
+
 @pytest.mark.full  # CI-mode only (suite-time budget)
 def test_usurped_merge_raises_not_silent(spark, tmp_path, monkeypatch):
     """Two single-writer commits racing is operator error, but it must
