@@ -11,9 +11,13 @@ bearing core:
 - data files accumulate under Hive-style partition dirs
   (``part_col=value/part-<commit>-<n>.parquet``) with commit-unique
   names; files are IMMUTABLE and never renamed over;
-- each commit writes a manifest ``_manifests/v{N}.json`` listing exactly
-  the files (with their partition value + rowcount) that make up
-  snapshot N;
+- each commit writes a manifest ``_manifests/v{N}.json`` in ONE format
+  (``_make_doc``'s): the read ``schema``, the partition column
+  ``part_col``, the commit time ``ts`` and the descriptors of immutable
+  entry-list ``segments`` (``_manifests/seg-*.json``) that together list
+  exactly the files (partition value, rowcount, stats) making up
+  snapshot N. Every reader takes those keys as given — a document
+  without them fails at its first use;
 - visibility is ONE atomic pointer flip: ``_current`` is replaced via
   write-temp + ``os.rename``. Readers resolve ``_current`` → manifest →
   file list, so a crash anywhere before the flip leaves the previous
@@ -231,12 +235,10 @@ def _write_segment(root: str, entries: list[dict],
 
 
 def _resolve(root: str, doc: dict) -> list[dict]:
-    """Full entry list of a manifest doc — inline ``files`` (format v1)
-    or the concatenation of its segments (format v2). O(total files);
-    reads and maintenance ops pay it, commits don't."""
-    if "files" in doc:
-        return doc["files"]
-    return [e for s in doc.get("segments", ())
+    """Full entry list of a manifest doc — the concatenation of its
+    segments. O(total files); reads and maintenance ops pay it, commits
+    don't."""
+    return [e for s in doc["segments"]
             for e in _read_segment(root, s["path"])]
 
 
@@ -247,9 +249,7 @@ def load_manifest(root: str, version: int | None = None) -> dict:
     the full entry list."""
     root = _norm(root)
     doc = _load_doc(root, version)
-    if "files" not in doc:
-        doc = dict(doc)
-        doc["files"] = _resolve(root, doc)
+    doc["files"] = _resolve(root, doc)
     return doc
 
 
@@ -353,20 +353,6 @@ def _make_doc(version: int, parent: int | None,
     return doc
 
 
-def _write_manifest(root: str, version: int, entries: list[dict],
-                    parent: int | None,
-                    txns: dict[str, int] | None = None,
-                    occ: bool = False) -> None:
-    """Format-v1 (inline ``files``) writer — kept for the protocol tests
-    that fabricate tables by hand and as the migration source format;
-    production commit paths write segmented v2 docs via ``_write_doc``."""
-    doc = {"version": version, "parent": parent,
-           "files": sorted(entries, key=lambda e: e["path"])}
-    if txns:
-        doc["txn"] = dict(sorted(txns.items()))
-    _write_doc(root, version, doc, occ=occ)
-
-
 def _flip_current(root: str, version: int,
                   entries: list[dict] | None = None,
                   commit_id: str | None = None) -> bool:
@@ -382,9 +368,8 @@ def _flip_current(root: str, version: int,
 
     Returns True only when this call flipped the pointer AND the
     manifest it made current is the caller's own (``commit_id`` match —
-    O(1), the v2 path — or ``entries`` path-set match for v1 docs,
-    checked under the lock) — a True return therefore PROVES the
-    commit. False means the pointer had already advanced, or the
+    O(1) — or ``entries`` path-set match, checked under the lock) — a
+    True return therefore PROVES the commit. False means the pointer had already advanced, or the
     manifest at ``version`` was usurped before our flip (it is still a
     complete snapshot, so it is flipped for its owner); the caller
     decides with _claim_survived. Raises CommitAborted when the claimed
@@ -471,9 +456,9 @@ def _claim_survived(root: str, version: int,
     committer therefore verifies after the flip: appenders and
     row-level writers rebase on False, single-writer commits raise.
     Identity is the doc's ``commit_id`` (uuid per commit attempt —
-    O(1), no entry resolution) on the v2 path, or exact data-file
-    path-set equality for v1 callers (commit-unique file names make
-    that precise too). Missing manifest (committed then vacuumed inside
+    O(1), no entry resolution), or exact data-file path-set equality
+    for a caller without one (commit-unique file names make that
+    precise too). Missing manifest (committed then vacuumed inside
     the window) counts as not-survived — for appenders the txn record
     makes the ensuing re-commit idempotent."""
     try:
@@ -722,23 +707,10 @@ def _stage_write(df: DataFrame, root: str, part_col: str,
     return _adopt_staged(root, stage, part_col, token, stats_cols)
 
 
-def _doc_stats_cols(root: str, doc: dict) -> list[str]:
-    """The stat columns this table tracks. v2 docs record them directly
-    (O(1)); for v1 docs fall back to the union across entries, so every
-    commit keeps collecting what create_table established without
-    re-plumbing the list."""
-    sc = doc.get("stats_cols")
-    if sc is not None:
-        return sc
-    if "segments" in doc:
-        # v2 docs answer from metadata alone — resolving every entry to
-        # learn "no stats tracked" would put O(table files) back into
-        # the append path this layer exists to avoid
-        return []
-    cols: set[str] = set()
-    for e in _resolve(root, doc):
-        cols |= set(e.get("stats", ()))
-    return sorted(cols)
+def _doc_stats_cols(doc: dict) -> list[str]:
+    """The stat columns this table tracks, as create_table established
+    them (O(1), from metadata alone); no key means no stats index."""
+    return doc.get("stats_cols", [])
 
 
 class SchemaEvolutionError(TypeError):
@@ -781,16 +753,14 @@ def _enforce_constraints(df: DataFrame, doc: dict, what: str) -> None:
     cons = doc.get("constraints") or {}
     if not cons:
         return
-    sch = _read_schema(doc)
-    if sch is not None:
-        # a narrow batch NULL-fills table columns it doesn't carry on
-        # READ — evaluate constraints the same way (NULL passes), so a
-        # predicate referencing an evolved column doesn't fail analysis
-        have = set(df.columns)
-        missing = {f.name: F.lit(None).cast(f.dataType)
-                   for f in sch.fields if f.name not in have}
-        if missing:
-            df = df.withColumns(missing)
+    # a narrow batch NULL-fills table columns it doesn't carry on
+    # READ — evaluate constraints the same way (NULL passes), so a
+    # predicate referencing an evolved column doesn't fail analysis
+    have = set(df.columns)
+    missing = {f.name: F.lit(None).cast(f.dataType)
+               for f in _read_schema(doc).fields if f.name not in have}
+    if missing:
+        df = df.withColumns(missing)
     flags = {name: F.coalesce(F.expr(expr), F.lit(True))
              for name, expr in cons.items()}
     import functools
@@ -811,12 +781,9 @@ def _enforce_constraints(df: DataFrame, doc: dict, what: str) -> None:
 
 
 def _read_schema(doc: dict):
-    sj = doc.get("schema")
-    if not sj:
-        return None
     from pyspark.sql.types import StructType
 
-    return StructType.fromJson(json.loads(sj))
+    return StructType.fromJson(json.loads(doc["schema"]))
 
 
 # Same-family widening ladders (Delta's type-widening tiers, the subset
@@ -839,8 +806,8 @@ def widens_to(from_t: str, to_t: str) -> bool:
     return False
 
 
-def _evolve_schema(table_schema_json: str | None, batch_schema,
-                   evolve: bool) -> str | None:
+def _evolve_schema(table_schema_json: str, batch_schema,
+                   evolve: bool) -> str:
     """Additive + widening schema evolution (A16's mergeSchema
     discipline inside the manifest layer): columns NEW in the batch are
     appended to the table schema; columns MISSING from the batch are
@@ -851,10 +818,7 @@ def _evolve_schema(table_schema_json: str | None, batch_schema,
     table's wider schema without changing it. With ``evolve=False``
     new columns and widenings are refused by policy; renames, cross-
     family promotions, and narrowing of complex types always raise.
-    Returns the (possibly unchanged) schema json; None for legacy
-    tables that never recorded a schema."""
-    if table_schema_json is None:
-        return None
+    Returns the (possibly unchanged) schema json."""
     from pyspark.sql.types import StructType
 
     tbl = StructType.fromJson(json.loads(table_schema_json))
@@ -1065,15 +1029,13 @@ def _read_entries(spark: SparkSession, root: str, m: dict,
                 by_spec.setdefault(
                     (_entry_spec(e), e.get("base", root)),
                     []).append(e)
-        sch = _read_schema(m)
         cm = m.get("col_map")
-        phys_names = ({_phys_name(cm, f.name) for f in sch.fields}
-                      if sch is not None else None)
+        phys_names = {_phys_name(cm, f.name)
+                      for f in _read_schema(m).fields}
         for (spec, base), es in by_spec.items():
             scan = _reader(spark, base, m).parquet(
                 *[_entry_path(root, e) for e in es])
-            if (phys_names is not None and spec not in phys_names
-                    and spec in scan.columns):
+            if spec not in phys_names and spec in scan.columns:
                 # hidden partitioning: a dir column that is not a table
                 # column (a days/bucket/truncate derivation — current
                 # OR from a since-evolved spec) never surfaces; dropped
@@ -1183,55 +1145,30 @@ def _prune_physical(doc: dict, prune: dict | None) -> dict | None:
 
 def _reader(spark: SparkSession, root: str, doc: dict):
     """Snapshot reader: basePath recovers the partition column from the
-    Hive-style dir names; when the manifest records a schema, the read
-    uses it EXPLICITLY — files written before a column existed NULL-fill
-    it (the parquet reader matches by name), and time travel reads each
-    version with the schema it committed under. Spark surfaces partition
-    columns last, matching the inference path's column order. Under a
-    column mapping the read schema carries PHYSICAL names (what the
-    files contain); ``_to_logical`` re-labels the frame."""
-    r = spark.read
+    Hive-style dir names; the read uses the manifest's recorded schema
+    EXPLICITLY — files written before a column existed NULL-fill it (the
+    parquet reader matches by name), and time travel reads each version
+    with the schema it committed under. Spark surfaces partition columns
+    last, matching the inference path's column order. Under a column
+    mapping the read schema carries PHYSICAL names (what the files
+    contain); ``_to_logical`` re-labels the frame."""
     sch = _read_schema(doc)
     cm = doc.get("col_map")
-    if sch is not None and cm is not None:
+    if cm is not None:
         from pyspark.sql.types import StructField, StructType
 
         sch = StructType([StructField(_phys_name(cm, f.name),
                                       f.dataType, f.nullable, f.metadata)
                           for f in sch.fields])
-    if sch is not None:
-        r = r.schema(sch)
-    return r.option("basePath", root)
+    return spark.read.schema(sch).option("basePath", root)
 
 
-def _empty_like(spark: SparkSession, root: str, m: dict) -> DataFrame:
-    """Empty frame with snapshot ``m``'s read schema. When the manifest
-    records a schema this is pure metadata (no file touched): the fields
-    reordered the way a real read surfaces them (partition column last).
-    Legacy fallback: read ONE file per distinct partition value — Spark
-    infers the partition column's type from the SET of directory values,
-    so keeping every distinct value reproduces the full-list read's
-    schema exactly (one file alone could infer int for 'part=1' where
-    the full table with 'part=alpha' infers string) at O(partitions)
-    listing cost."""
-    sch = _read_schema(m)
-    part_col = m.get("part_col")
-    if sch is not None and part_col is not None:
-        from pyspark.sql.types import StructType
+def _empty_like(spark: SparkSession, m: dict) -> DataFrame:
+    """Empty frame with snapshot ``m``'s read schema — pure metadata
+    (no file touched), fields in read order (``_cdf_fields``)."""
+    from pyspark.sql.types import StructType
 
-        ordered = StructType(
-            [f for f in sch.fields if f.name != part_col]
-            + [f for f in sch.fields if f.name == part_col])
-        return spark.createDataFrame([], ordered)
-    entries = _resolve(root, m)
-    if not entries:
-        raise ValueError(f"snapshot v{m['version']} is empty")
-    one_per_value: dict[str, str] = {}
-    for e in entries:
-        one_per_value.setdefault(e["partition"],
-                                 os.path.join(root, e["path"]))
-    return (spark.read.option("basePath", root)
-            .parquet(*one_per_value.values()).limit(0))
+    return spark.createDataFrame([], StructType(_cdf_fields(m)))
 
 
 def _seg_overlaps(desc: dict, prune: dict[str, tuple]) -> bool:
@@ -1256,18 +1193,14 @@ def _split_segments(root: str, doc: dict, touched: set[str],
     """(carried segment descriptors, resolved entries of the rest).
     A segment is carried by reference iff its partition set is disjoint
     from ``touched`` — the rewrite-only-what-changed primitive shared by
-    the row-level writers (``_rewrite_sets``) and compaction. v1 docs
-    (inline ``files``) have nothing to carry: everything resolves, and
-    the commit's rewrite migrates the table to the segmented format.
-    With ``cur_pcol`` set (compaction), segments stamped with an OLDER
+    the row-level writers (``_rewrite_sets``) and compaction. With
+    ``cur_pcol`` set (compaction), segments stamped with an OLDER
     partition spec always resolve — their partition values live in a
     different domain than ``touched``, and compaction is the op that
     migrates them."""
-    if "files" in doc:
-        return [], doc["files"]
     carried: list[dict] = []
     resolved: list[dict] = []
-    for s in doc.get("segments", ()):
+    for s in doc["segments"]:
         old_spec = (cur_pcol is not None
                     and s.get("pcol", cur_pcol) != cur_pcol)
         if old_spec or touched & set(s["partitions"]):
@@ -1275,16 +1208,6 @@ def _split_segments(root: str, doc: dict, touched: set[str],
         else:
             carried.append(s)
     return carried, resolved
-
-
-def _doc_segments(root: str, doc: dict) -> list[dict]:
-    """The segment descriptors a new manifest carries from ``doc`` by
-    reference. A v1 doc (inline ``files``) migrates here: its entries
-    become one reused segment, written once."""
-    if "files" in doc:
-        return ([_write_segment(root, doc["files"], reused=True)]
-                if doc["files"] else [])
-    return list(doc.get("segments", ()))
 
 
 # manifest-doc size bound: a commit that would push the segment count
@@ -1317,10 +1240,6 @@ def _diff_entries(root: str, m_since: dict, m_to: dict) -> list[dict]:
     (commit-unique file names — every entry is new by construction) and
     only ``reused``-marked ones (re-homes, folds) are diffed against the
     old snapshot, restricted to the partitions they touch."""
-    if "segments" not in m_to or "segments" not in m_since:
-        old = {e["path"] for e in _resolve(root, m_since)}
-        return [e for e in _resolve(root, m_to)
-                if e["path"] not in old]
     since_names = {s["path"] for s in m_since["segments"]}
     new_segs = [s for s in m_to["segments"]
                 if s["path"] not in since_names]
@@ -1336,17 +1255,6 @@ def _diff_entries(root: str, m_since: dict, m_to: dict) -> list[dict]:
     return fresh + [e for s in reused_segs
                     for e in _read_segment(root, s["path"])
                     if e["path"] not in old]
-
-
-def _doc_ts(root: str, doc: dict) -> float:
-    """Commit wall time: recorded in the doc (r11+); older manifests
-    fall back to the manifest file's mtime (preserved by copy2-style
-    fixture copies; good enough for history listings of pre-ts
-    tables)."""
-    ts = doc.get("ts")
-    if ts is not None:
-        return float(ts)
-    return FS.mtime(_manifest_path(root, doc["version"]))
 
 
 # History checkpointing (r12, verdict item 5): refresh the rolled-up
@@ -1415,7 +1323,7 @@ def table_history(path: str, limit: int | None = None,
             doc = _load_doc(root, v)
         except (FileNotFoundError, ValueError):
             break  # vacuum-retired: history ends at the retention edge
-        out.append({"version": v, "ts": _doc_ts(root, doc),
+        out.append({"version": v, "ts": float(doc["ts"]),
                     "op": doc.get("op", "unknown"),
                     "parent": doc.get("parent")})
         walked += 1
@@ -1451,11 +1359,10 @@ def version_at(path: str, ts: float) -> int:
     seen — the NEWEST retained version whose commit time is <= ts
     (Delta's TIMESTAMP AS OF resolution). Commit timestamps are not
     guaranteed monotone along the parent chain (a rebased claim
-    refreshes its ts; clocks skew; pre-r11 docs fall back to file
-    mtime), so resolution runs over a MONOTONE-ADJUSTED history —
-    each version's effective ts is the running max from oldest to
-    newest, Delta's timestamp-adjustment rule — which keeps the
-    answer well-ordered: a later version never resolves for an
+    refreshes its ts; clocks skew), so resolution runs over a
+    MONOTONE-ADJUSTED history — each version's effective ts is the
+    running max from oldest to newest, Delta's timestamp-adjustment
+    rule — which keeps the answer well-ordered: a later version never resolves for an
     earlier wall time. Raises when ts predates the oldest retained
     commit (time travel cannot cross the vacuum horizon) or the
     first commit."""
@@ -1494,9 +1401,9 @@ def restore_table(spark: SparkSession, path: str, version: int) -> int:
     tgt = _load_doc(root, version)
     if tgt["version"] == doc["version"]:
         return doc["version"]  # restoring to HEAD: no-op
-    segs = _doc_segments(root, tgt)
-    nd = _make_doc(doc["version"] + 1, doc["version"], segs,
-                   txns=doc.get("txn"), schema=tgt.get("schema"),
+    nd = _make_doc(doc["version"] + 1, doc["version"],
+                   list(tgt["segments"]),
+                   txns=doc.get("txn"), schema=tgt["schema"],
                    stats_cols=tgt.get("stats_cols"), op="restore")
     _carry_table_meta(nd, tgt)  # the target's spec/mapping/constraints
     if doc.get("cdf_enabled"):
@@ -1517,10 +1424,10 @@ def restore_table(spark: SparkSession, path: str, version: int) -> int:
             cols = [f.name for f in _cdf_fields(tgt)]
             old_rows = (_read_entries(spark, root, tgt, old_side)
                         .select(*cols) if old_side
-                        else _empty_like(spark, root, tgt).select(*cols))
+                        else _empty_like(spark, tgt).select(*cols))
             new_rows = (_read_entries(spark, root, tgt, new_side)
                         .select(*cols) if new_side
-                        else _empty_like(spark, root, tgt).select(*cols))
+                        else _empty_like(spark, tgt).select(*cols))
             cdf_files = _write_change_files(spark, root, _to_physical(
                 _cdf_diff(old_rows, new_rows), tgt))
         nd["cdf"] = {"mode": "files", "files": cdf_files}
@@ -1590,7 +1497,7 @@ def clone_table(src: str, dst: str, version: int | None = None) -> int:
             dvs=sorted(ref_dvs.get(froot, ())))
     segs = [_write_segment(droot, entries, reused=True)] if entries \
         else []
-    doc = _make_doc(1, None, segs, schema=m.get("schema"),
+    doc = _make_doc(1, None, segs, schema=m["schema"],
                     stats_cols=m.get("stats_cols"), op="clone")
     _carry_table_meta(doc, m)
     if doc.get("cdf_enabled"):
@@ -1602,14 +1509,10 @@ def clone_table(src: str, dst: str, version: int | None = None) -> int:
 
 
 def _pruned_entries(root: str, m: dict,
-                    prune: dict[str, tuple] | None
-                    ) -> tuple[list[dict], bool, bool]:
+                    prune: dict[str, tuple] | None) -> list[dict]:
     """Resolve a manifest doc's entry list under the min/max prune
     index — the shared driver-side core of read_snapshot AND the batch
-    DataSource's partition planning. Returns (entries, nonempty,
-    pruned): `nonempty` says the unpruned snapshot held rows (so an
-    empty pruned list means "everything pruned", not "empty table"),
-    `pruned` whether any pruning predicate was active.
+    DataSource's partition planning.
 
     Hidden-transform partition pruning: a prune on the SOURCE column
     maps through the transform to directory skipping (monotone
@@ -1622,11 +1525,10 @@ def _pruned_entries(root: str, m: dict,
     always kept (stats pruning still applies; it keys on data content,
     not the directory domain)."""
     pvals = _transform_prune(m.get("part_transform"), prune)
-    cur_spec = m.get("part_col")
+    cur_spec = m["part_col"]
     prune = _prune_physical(m, prune)  # the stats index keys on
     #                                    physical names under a mapping
-    if (prune or pvals) and "segments" in m:
-        nonempty = any(s["count"] for s in m["segments"])
+    if prune or pvals:
         entries = [e for s in m["segments"]
                    if _seg_overlaps(s, prune or {})
                    and (pvals is None
@@ -1635,14 +1537,13 @@ def _pruned_entries(root: str, m: dict,
                    for e in _read_segment(root, s["path"])]
     else:
         entries = _resolve(root, m)
-        nonempty = bool(entries)
     if pvals:
         entries = [e for e in entries
                    if _entry_spec(e) != cur_spec
                    or pvals(e["partition"])]
     if prune:
         entries = prune_entries(entries, prune)
-    return entries, nonempty, bool(prune or pvals)
+    return entries
 
 
 def read_snapshot(spark: SparkSession, path: str,
@@ -1661,20 +1562,12 @@ def read_snapshot(spark: SparkSession, path: str,
     list it runs over."""
     root = _norm(path)
     m = _load_doc(root, version)
-    entries, nonempty, pruned = _pruned_entries(root, m, prune)
-    if pruned and not entries and nonempty:
-        # everything pruned: an empty frame with the snapshot
-        # schema — never a full-snapshot listing just for a schema
-        return _empty_like(spark, root, m)
+    entries = _pruned_entries(root, m, prune)
     if not entries:
-        if _read_schema(m) is not None:
-            # a genuinely empty snapshot (e.g. after DELETE FROM t
-            # with no WHERE, r14) is a legitimate state: serve the
-            # typed empty frame, same as the all-pruned branch
-            return _empty_like(spark, root, m)
-        raise ValueError(
-            f"snapshot v{m['version']} is empty and records no "
-            "schema (pre-r09 v1 doc): nothing to infer a frame from")
+        # everything pruned, or a genuinely empty snapshot (e.g. after
+        # DELETE FROM t with no WHERE): the typed empty frame from the
+        # recorded schema — never a listing just for a schema
+        return _empty_like(spark, m)
     return _read_entries(spark, root, m, entries)
 
 
@@ -1795,7 +1688,7 @@ def _cdf_diff(old_rows: DataFrame, new_rows: DataFrame) -> DataFrame:
 def _commit_rewrite(root: str, doc: dict, op: str,
                     plan: tuple[set[str], dict],
                     sets: tuple[list[dict], list[dict], list[dict]],
-                    new_entries: list[dict], *, part_used: str,
+                    new_entries: list[dict], *,
                     stats_cols: list[str], cdf_files: list[str],
                     staged_epoch: int,
                     repointed: Sequence[dict] = (),
@@ -1867,10 +1760,9 @@ def _commit_rewrite(root: str, doc: dict, op: str,
         segs = _coalesce_segments(root, segs)  # row-level-only workloads
         #                  must respect the manifest-size bound too
         newdoc = _make_doc(head["version"] + 1, head["version"], segs,
-                           txns=head.get("txn"), schema=head.get("schema"),
+                           txns=head.get("txn"), schema=head["schema"],
                            stats_cols=stats_cols, op=op)
         _carry_table_meta(newdoc, head)
-        newdoc.setdefault("part_col", part_used)
         if head.get("cdf_enabled"):
             newdoc["cdf"] = {"mode": "files", "files": cdf_files}
         return newdoc, verify, staged_epoch
@@ -1903,14 +1795,14 @@ def _stage_and_commit(spark: SparkSession, root: str, doc: dict, op: str,
         # rows) to read instead of a per-consumer table diff
         cols = new_rows.columns
         old = (old_rows if old_rows is not None
-               else _empty_like(spark, root, doc))
+               else _empty_like(spark, doc))
         cdf_files = _write_change_files(spark, root, _to_physical(
             _cdf_diff(old.select(*cols), new_rows), doc))
     new_entries = _stage_write(
         _derive_for_stage(_to_physical(out, doc), doc), root,
         part_used, stats_cols=stats_cols)
     return _commit_rewrite(root, doc, op, plan, sets, new_entries,
-                           part_used=part_used, stats_cols=stats_cols,
+                           stats_cols=stats_cols,
                            cdf_files=cdf_files, staged_epoch=epoch0,
                            read_plan=read_plan)
 
@@ -1976,7 +1868,7 @@ def commit_merge(spark: SparkSession, path: str, changes: DataFrame,
     doc = _load_doc(root)
     _refuse_mixed_specs(doc, "merge")
     part_used = _part_arg(doc, part_col, "merge")
-    stats_cols = _doc_stats_cols(root, doc)
+    stats_cols = _doc_stats_cols(doc)
     # the key columns the per-file min/max index covers shrink the
     # rewrite set INSIDE touched partitions
     key_cols = [k for k in keys if k != part_col and k in stats_cols]
@@ -2036,11 +1928,7 @@ def commit_update(spark: SparkSession, path: str,
     root = _norm(path)
     doc = _load_doc(root)
     _refuse_mixed_specs(doc, "update")
-    part_col = doc.get("part_col")
-    if not part_col:
-        raise ValueError(
-            "predicate update needs a recorded partition column "
-            "(pre-r08 layout): commit once via commit_append")
+    part_col = doc["part_col"]
     pt = doc.get("part_transform")
     if not assigns:
         raise ValueError("UPDATE needs at least one assignment")
@@ -2061,7 +1949,7 @@ def commit_update(spark: SparkSession, path: str,
     # _part_arg expects the transform SOURCE for hidden-spec tables
     part_used = _part_arg(doc, pt["source"] if pt else part_col,
                           "update")
-    stats_cols = _doc_stats_cols(root, doc)
+    stats_cols = _doc_stats_cols(doc)
     key_cols = list(stats_cols)
     cond = F.expr(where) if where is not None else F.lit(True)
     touched, rng, _ = _touched_ranges(snap.where(cond), doc, part_col,
@@ -2227,16 +2115,12 @@ def commit_delete(spark: SparkSession, path: str,
     _refuse_mixed_specs(doc, "delete")
     pt = doc.get("part_transform")
     if where is not None:
-        part_col = doc.get("part_col")
-        if not part_col:
-            raise ValueError(
-                "predicate delete needs a recorded partition column "
-                "(pre-r08 layout): commit once via commit_append")
+        part_col = doc["part_col"]
         if pt:
             part_col = pt["source"]  # _part_arg names the SOURCE
         key_cols = []
     part_used = _part_arg(doc, part_col, "delete")
-    stats_cols = _doc_stats_cols(root, doc)
+    stats_cols = _doc_stats_cols(doc)
     if where is not None:
         # Predicate mode: range columns are the WHOLE stats index —
         # min/max over the matching rows per partition, from one
@@ -2330,7 +2214,7 @@ def commit_delete(spark: SparkSession, path: str,
     finally:
         matched.unpersist()
     return _commit_rewrite(root, doc, "delete", plan, sets, new_entries,
-                           part_used=part_used, stats_cols=stats_cols,
+                           stats_cols=stats_cols,
                            cdf_files=cdf_files, staged_epoch=epoch0,
                            repointed=repointed, staged=staged)
 
@@ -2344,8 +2228,8 @@ def _commit_metadata(root: str, mutate) -> int:
     like compaction and restore: a lost race raises."""
     doc = _load_doc(root)
     newdoc = _make_doc(doc["version"] + 1, doc["version"],
-                       _doc_segments(root, doc), txns=doc.get("txn"),
-                       schema=doc.get("schema"),
+                       list(doc["segments"]), txns=doc.get("txn"),
+                       schema=doc["schema"],
                        stats_cols=doc.get("stats_cols"),
                        op="metadata")
     _carry_table_meta(newdoc, doc)
@@ -2369,12 +2253,8 @@ def rename_column(path: str, old: str, new: str) -> int:
     def mutate(nd: dict) -> None:
         from pyspark.sql.types import StructField, StructType
 
-        sj = nd.get("schema")
-        if not sj:
-            raise ValueError(
-                "rename_column needs a recorded schema (pre-r09 "
-                "v1-format table): commit once to migrate")
-        if nd.get("part_col") in (old, new):
+        sj = nd["schema"]
+        if nd["part_col"] in (old, new):
             raise ValueError(
                 f"cannot rename the partition column {old!r}: its "
                 "physical name is the directory layout")
@@ -2417,12 +2297,8 @@ def drop_column(path: str, name: str) -> int:
     def mutate(nd: dict) -> None:
         from pyspark.sql.types import StructType
 
-        sj = nd.get("schema")
-        if not sj:
-            raise ValueError(
-                "drop_column needs a recorded schema (pre-r09 "
-                "v1-format table): commit once to migrate")
-        if nd.get("part_col") == name:
+        sj = nd["schema"]
+        if nd["part_col"] == name:
             raise ValueError(
                 f"cannot drop the partition column {name!r}")
         sch = StructType.fromJson(json.loads(sj))
@@ -2579,8 +2455,8 @@ def _part_arg(doc: dict, part_col: str, what: str) -> str:
     table's spec: under a transform the caller names the SOURCE column
     and the commit stages under the derived one."""
     pt = doc.get("part_transform")
-    expected = pt["source"] if pt else doc.get("part_col")
-    if expected and part_col != expected:
+    expected = pt["source"] if pt else doc["part_col"]
+    if part_col != expected:
         raise ValueError(
             f"{what} partitioned by {part_col!r} but the table's "
             f"current spec is {expected!r}"
@@ -2613,12 +2489,8 @@ def set_partition_column(path: str, new_col: str,
     def mutate(nd: dict) -> None:
         from pyspark.sql.types import StructType
 
-        sj = nd.get("schema")
-        if not sj:
-            raise ValueError(
-                "set_partition_column needs a recorded schema "
-                "(pre-r09 v1-format table): commit once to migrate")
-        old = nd.get("part_col")
+        sj = nd["schema"]
+        old = nd["part_col"]
         sch = StructType.fromJson(json.loads(sj))
         names = [f.name for f in sch.fields]
         if transform:
@@ -2656,7 +2528,7 @@ def set_partition_column(path: str, new_col: str,
         # stamp every existing segment with the spec it was written
         # under, so carry-by-reference decisions never need to read an
         # entry list to learn its domain
-        for s in nd.get("segments", ()):
+        for s in nd["segments"]:
             s.setdefault("pcol", old)
         nd["part_col"] = target
         if pt:
@@ -2670,13 +2542,9 @@ def set_partition_column(path: str, new_col: str,
 
 def _mixed_specs(doc: dict) -> bool:
     """Whether the snapshot holds files under more than one partition
-    spec — O(segments) via the evolution-time stamps (inline v1-format
-    docs check entry paths directly)."""
-    cur = doc.get("part_col")
-    if "segments" in doc:
-        return any(s.get("pcol", cur) != cur
-                   for s in doc["segments"])
-    return any(_entry_spec(e) != cur for e in doc.get("files", ()))
+    spec — O(segments) via the evolution-time stamps."""
+    cur = doc["part_col"]
+    return any(s.get("pcol", cur) != cur for s in doc["segments"])
 
 
 def _constraint_refs(expr: str, col: str) -> bool:
@@ -2870,7 +2738,7 @@ def commit_append(spark: SparkSession, path: str, batch: DataFrame,
         if staged is not None and _swept(
                 root, [e["path"] for e in staged], staged_epoch):
             staged = staged_seg = None  # vacuumed mid-stall; restage
-        stats_cols = _doc_stats_cols(root, doc)
+        stats_cols = _doc_stats_cols(doc)
         if staged and stats_cols and not stats_backfilled and any(
                 set(stats_cols) - set(e.get("stats", {}))
                 for e in staged):
@@ -2897,8 +2765,7 @@ def commit_append(spark: SparkSession, path: str, batch: DataFrame,
                 #       and rewriting the segment each retry would churn
             else:
                 staged_seg = _write_segment(root, staged)
-        schema_json = _evolve_schema(doc.get("schema"), batch.schema,
-                                     evolve)
+        schema_json = _evolve_schema(doc["schema"], batch.schema, evolve)
         cm_new = None
         if doc.get("col_map") is not None:
             # columns NEW in this batch get ids + physical names BEFORE
@@ -2933,8 +2800,6 @@ def commit_append(spark: SparkSession, path: str, batch: DataFrame,
         newdoc = _append_doc(root, doc, staged_seg, txns=txns,
                              schema=schema_json, stats_cols=stats_cols,
                              col_map=cm_new)
-        if part_col:
-            newdoc.setdefault("part_col", part_col)
         return newdoc, [e["path"] for e in staged], staged_epoch
 
     return _commit(root, "commit_append", attempt, occ=True, head=head0)
@@ -2954,12 +2819,12 @@ def _append_doc(root: str, head: dict, seg: dict | None, *,
     no sidecar). ``txns``/``schema``/``stats_cols`` default to the
     head's; ``col_map`` overrides it (a batch's newly registered
     ids)."""
-    segments = [] if overwrite else _doc_segments(root, head)
+    segments = [] if overwrite else list(head["segments"])
     segments = _coalesce_segments(root, segments + ([seg] if seg else []))
     newdoc = _make_doc(
         head["version"] + 1, head["version"], segments,
         txns=head.get("txn") if txns is None else txns,
-        schema=head.get("schema") if schema is None else schema,
+        schema=head["schema"] if schema is None else schema,
         stats_cols=(head.get("stats_cols") if stats_cols is None
                     else stats_cols),
         op="overwrite" if overwrite else "append")
@@ -3007,7 +2872,7 @@ def read_changes(spark: SparkSession, path: str, since: int,
     if not row_level:
         new_entries = _diff_entries(root, m_since, m_to)
         if not new_entries:
-            return _empty_like(spark, root, m_to)
+            return _empty_like(spark, m_to)
         # read with the DESTINATION snapshot's schema: a feed crossing
         # a schema-evolution boundary NULL-fills the new columns for
         # files written before they existed. Delete vectors as of
@@ -3023,20 +2888,15 @@ def read_changes(spark: SparkSession, path: str, since: int,
     # same dv) and cancel without being read — only segments new in
     # `to` or dropped from `since` resolve (r11 review finding: the
     # full _resolve pair read every segment of both snapshots for a
-    # one-file change). v1-format docs (inline files) fall back to
-    # their own inline lists.
-    if "segments" in m_since and "segments" in m_to:
-        to_names = {s["path"] for s in m_to["segments"]}
-        since_names = {s["path"] for s in m_since["segments"]}
-        fresh = [e for s in m_to["segments"]
-                 if s["path"] not in since_names
-                 for e in _read_segment(root, s["path"])]
-        dropped = [e for s in m_since["segments"]
-                   if s["path"] not in to_names
-                   for e in _read_segment(root, s["path"])]
-    else:
-        fresh = _resolve(root, m_to)
-        dropped = _resolve(root, m_since)
+    # one-file change).
+    to_names = {s["path"] for s in m_to["segments"]}
+    since_names = {s["path"] for s in m_since["segments"]}
+    fresh = [e for s in m_to["segments"]
+             if s["path"] not in since_names
+             for e in _read_segment(root, s["path"])]
+    dropped = [e for s in m_since["segments"]
+               if s["path"] not in to_names
+               for e in _read_segment(root, s["path"])]
     by_to = {e["path"]: e for e in fresh}
     by_since = {e["path"]: e for e in dropped}
     added = [e for p, e in by_to.items() if p not in by_since]
@@ -3048,12 +2908,12 @@ def read_changes(spark: SparkSession, path: str, since: int,
                 if p in by_since and e.get("dv") != by_since[p].get("dv")
                 and e.get("dv")]
     ins = (_read_entries(spark, root, m_to, added) if added
-           else _empty_like(spark, root, m_to))
+           else _empty_like(spark, m_to))
     # removed files read under TO's schema/mapping but with THEIR OWN
     # (since-side) delete vectors: rows already dead at `since` were
     # never visible, so they are not deletes of this window
     dele = (_read_entries(spark, root, m_to, removed) if removed
-            else _empty_like(spark, root, m_to))
+            else _empty_like(spark, m_to))
     # re-homed unchanged rows appear on both sides — cancel them
     out = _cdf_diff(dele, ins)
     if dv_grown:
@@ -3080,10 +2940,11 @@ def read_changes(spark: SparkSession, path: str, since: int,
 
 
 def _cdf_fields(m: dict) -> list:
-    """The feed's data fields in read order (partition column last,
-    matching read_snapshot)."""
+    """A snapshot's data fields in read order (partition column last,
+    matching read_snapshot): the change feed's and every empty read's
+    schema."""
     sch = _read_schema(m)
-    pc = m.get("part_col")
+    pc = m["part_col"]
     return ([f for f in sch.fields if f.name != pc]
             + [f for f in sch.fields if f.name == pc])
 
@@ -3294,7 +3155,7 @@ def commit_compaction(spark: SparkSession, path: str, part_col: str,
                 zorder_key([F.col(c) for c in ocols], bounds))
         else:
             compacted = compacted.sortWithinPartitions(*ocols)
-    stats_cols = _doc_stats_cols(root, m)
+    stats_cols = _doc_stats_cols(m)
     epoch0 = _vacuum_epoch(root)
     new_entries = _stage_write(compacted, root, cur_pcol, max_records,
                                stats_cols=stats_cols)
@@ -3305,10 +3166,9 @@ def commit_compaction(spark: SparkSession, path: str, part_col: str,
         segs.append(_write_segment(root, new_entries))
     segs = _coalesce_segments(root, segs)
     newdoc = _make_doc(m["version"] + 1, m["version"], segs,
-                       txns=m.get("txn"), schema=m.get("schema"),
+                       txns=m.get("txn"), schema=m["schema"],
                        stats_cols=stats_cols, op="compaction")
     _carry_table_meta(newdoc, m)
-    newdoc.setdefault("part_col", cur_pcol)
     if m.get("cdf_enabled"):
         newdoc["cdf"] = {"mode": "none"}  # compaction re-homes bytes,
         #                                   no logical row changes
@@ -3430,18 +3290,15 @@ def _clone_pinned(root: str, now: float
                 d = _load_doc(droot, int(mf[1:-5]))
             except (FileNotFoundError, ValueError):
                 continue
-            if "files" in d:
-                es = d["files"]
-            else:
-                es = []
-                for sg in d.get("segments", ()):
-                    if sg["path"] in seen_segs:
-                        continue
-                    seen_segs.add(sg["path"])
-                    try:
-                        es.extend(_read_segment(droot, sg["path"]))
-                    except FileNotFoundError:
-                        continue
+            es = []
+            for sg in d["segments"]:
+                if sg["path"] in seen_segs:
+                    continue
+                seen_segs.add(sg["path"])
+                try:
+                    es.extend(_read_segment(droot, sg["path"]))
+                except FileNotFoundError:
+                    continue
             for e in es:
                 if e.get("base") == root:
                     live.add(e["path"])
@@ -3539,12 +3396,6 @@ def vacuum(path: str, keep_versions: int = 1,
         cur = current_version(root)
         if cur is None:
             raise FileNotFoundError(f"no committed snapshot under {root}")
-        # epoch bump FIRST (still under the lock, before any deletion):
-        # even a vacuum that crashes mid-sweep leaves the epoch moved,
-        # so every commit whose staging overlapped it re-verifies its
-        # staged files at claim time (_write_doc staged_epoch)
-        FS.put_atomic(os.path.join(root, _MANIFESTS, ".vacuum_epoch"),
-                      str(_vacuum_epoch(root) + 1))
         now0 = time.time()
         keep_from = max(1, cur - keep_versions + 1)
         if respect_readers:
@@ -3639,13 +3490,20 @@ def vacuum(path: str, keep_versions: int = 1,
                     raise  # an unreadable CURRENT manifest is corruption
                 keep.discard(v)  # mid-write claim on a non-atomic FS:
                 continue  # its segments/files are young — grace-spared
-            kept_segs |= {s["path"] for s in doc.get("segments", ())}
+            kept_segs |= {s["path"] for s in doc["segments"]}
             kept_entries = _resolve(root, doc)
             live |= {e["path"] for e in kept_entries}
             live_dv |= {e["dv"] for e in kept_entries if e.get("dv")}
             live_cdf |= set(doc.get("cdf", {}).get("files", ()))
         live |= clone_live
         live_dv |= clone_dv
+        # epoch bump before the first segment or data-file deletion
+        # (still under the lock): even a vacuum that crashes mid-sweep
+        # leaves the epoch moved, so every commit whose staging
+        # overlapped it re-verifies its staged files at claim time
+        # (_write_doc staged_epoch)
+        FS.put_atomic(os.path.join(root, _MANIFESTS, ".vacuum_epoch"),
+                      str(_vacuum_epoch(root) + 1))
         # Known-dead files = those referenced ONLY by manifests retired
         # above. Segments shared with a kept manifest (carried forward
         # by reference) are NOT dead — the `live` check in the sweep
@@ -3653,10 +3511,7 @@ def vacuum(path: str, keep_versions: int = 1,
         # via kept_segs. Dead segments are removed with their manifests.
         dead_known: set[str] = set()
         for doc in retired_docs:
-            if "files" in doc:
-                dead_known |= {e["path"] for e in doc["files"]}
-                continue
-            for s in doc.get("segments", ()):
+            for s in doc["segments"]:
                 if s["path"] in kept_segs:
                     continue
                 try:

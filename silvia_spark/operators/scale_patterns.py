@@ -649,7 +649,7 @@ def _fixture_table_dir(prefix: str, sf_dir: str, table: str,
       path and fail new code confusingly."""
     import hashlib
 
-    ver = 2  # segmented manifests + fully-covered stats rollups (r09)
+    ver = 3  # one doc format: segments + schema + part_col + ts
     srcf = os.path.join(sf_dir, f"{table}.parquet")
     digest = hashlib.md5(
         os.path.abspath(srcf).encode()).hexdigest()[:10]

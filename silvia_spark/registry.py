@@ -51,21 +51,22 @@ def contract(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryF
 _NEW_CONTRACTS_HERE = "__new_contracts_here__"
 
 _PRIORITY: tuple[str, ...] = (
-    # ============ packing after the one optimistic commit loop
+    # ============ packing after the one manifest format
     # (evidence ledger: r09=11, r10=36, r11=22, r12=40, r13=38, r14=42,
     # r15=50; zero failures ever).
     # Head: the contracts whose code changed after their newest evidence
     # — first the seven whose plans the one exact-cosine route rewrote
     # (the six consumers of llm_extras.ann_join, whose bucket members now
     # carry their vectors into the fused kernel, and sim_join_threshold,
-    # now that kernel over a grid of id blocks), then every contract whose
-    # body commits to a manifest table — every commit path (create,
-    # clone, append, SQL INSERT, row-level rewrite, compaction, restore,
-    # metadata) now runs through the one commit loop — plus
-    # sink_merge_keyed, the directory-swap MERGE the manifest layer
-    # closes, then the still-unchecked one-pass MinHash verify and
-    # SimHash. Then evidence oldest-first: 41 + 9 of the 10 r09 fill the
-    # 50-slot window. ======
+    # now that kernel over a grid of id blocks), then the 31 whose bodies
+    # commit to a manifest table. With sim_ann_indexed, which reads the
+    # ANN index table, those are the 32 contracts whose bodies reach
+    # manifest code: every commit path runs through the one commit loop,
+    # and every reader and writer takes the one manifest doc format
+    # (segments, schema, part_col, ts) as given. Then sink_merge_keyed,
+    # the directory-swap MERGE the manifest layer closes, and the
+    # still-unchecked one-pass MinHash verify and SimHash. Then evidence
+    # oldest-first: 41 + 9 of the 10 r09 fill the 50-slot window. ======
     # -- plan changed after their newest evidence --
     "sim_ann_lsh", "sim_ann_lsh_multiprobe", "sim_ann_lsh_multiprobe2",
     "sim_ann_auto", "sim_ann_indexed", "dedup_docs_embedding",

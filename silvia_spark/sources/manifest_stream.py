@@ -103,26 +103,15 @@ def _table_schema(root: str, version: int | None = None) -> StructType:
     """The snapshot read schema in read order (data fields, partition
     column last — matching read_snapshot's column order). Time travel
     reads under the pinned version's OWN schema/names."""
-    from silvia_spark.operators.manifest_table import _load_doc
+    from silvia_spark.operators.manifest_table import _cdf_fields, _load_doc
 
-    doc = _load_doc(root, version)
-    sj = doc.get("schema")
-    if not sj:
-        raise ValueError(
-            f"{root} records no schema (pre-r09 v1-format table): "
-            "commit once to migrate, or read via read_snapshot")
-    sch = StructType.fromJson(json.loads(sj))
-    part_col = doc.get("part_col")
-    return StructType([f for f in sch.fields if f.name != part_col]
-                      + [f for f in sch.fields if f.name == part_col])
+    return StructType(_cdf_fields(_load_doc(root, version)))
 
 
-def _type_map(schema_json: str | None) -> dict[str, str]:
+def _type_map(schema_json: str) -> dict[str, str]:
     """name → simpleString type map, the nullability-free comparison the
     mid-stream evolution guard uses (same normalization as
     _evolve_schema)."""
-    if not schema_json:
-        return {}
     sch = StructType.fromJson(json.loads(schema_json))
     return {f.name: f.dataType.simpleString() for f in sch.fields}
 
@@ -205,7 +194,7 @@ class ManifestStreamReader(DataSourceStreamReader):
         doc = _load_doc(self.root)
         # the partition FIELD is resolved by NAME from the table's
         # metadata — a user-supplied schema may reorder or drop columns
-        self.part_col = doc.get("part_col")
+        self.part_col = doc["part_col"]
         # the reader's DELIVERY schema types — the evolution guard
         # compares each batch's end-version schema against THIS (what
         # the stream can represent), never against a moving snapshot
@@ -396,7 +385,7 @@ class ManifestStreamReader(DataSourceStreamReader):
         # deliver by omission (the consumer chose the post-drop schema)
         cm_to = m_to.get("col_map")
         to_types = {_phys_name(cm_to, n): t
-                    for n, t in _type_map(m_to.get("schema")).items()}
+                    for n, t in _type_map(m_to["schema"]).items()}
         if self.schema_types:
             dropped = [c for c, t in to_types.items()
                        if c not in self.retired
@@ -734,9 +723,7 @@ def _read_slice(schema, phys_of, part_col, cdf, partition: _FileSlice):
     # table's current one — part_value fills the DIR column, and
     # the current partition column reads as plain file data
     dircol = None if partition.is_cdf else (
-        partition.pcol
-        or (phys_of.get(part_col) if part_col
-            else None))
+        partition.pcol or phys_of.get(part_col))
     data_cols = [phys_of[f.name] for f in schema.fields
                  if phys_of[f.name] in present
                  and phys_of[f.name] != dircol]
@@ -866,7 +853,7 @@ class ManifestBatchReader(DataSourceReader):
         self.changes_since = options.get("changessince")
         self.version = _resolve_version(self.root, options)
         doc = _load_doc(self.root, self.version)
-        self.part_col = doc.get("part_col")
+        self.part_col = doc["part_col"]
         cm = doc.get("col_map")
         self.phys_of = {f.name: _phys_name(cm, f.name)
                         for f in schema.fields}
@@ -924,8 +911,7 @@ class ManifestBatchReader(DataSourceReader):
                                 self.version)
                     or [_FileSlice("", None)])
         m = _load_doc(self.root, self.version)
-        entries, _, _ = _pruned_entries(self.root, m,
-                                        self._prune or None)
+        entries = _pruned_entries(self.root, m, self._prune or None)
         if not entries:
             # the API requires >= 1 partition; an empty slice keeps
             # the everything-pruned read a valid empty frame
@@ -1059,23 +1045,15 @@ class ManifestInsertWriter(DataSourceArrowWriter):
             raise ValueError(
                 "table holds multiple partition specs: run "
                 "commit_compaction before SQL INSERTs")
-        part_col = doc.get("part_col")
-        if not part_col:
+        want = [(f.name, f.dataType.simpleString())
+                for f in mt._read_schema(doc).fields]
+        got = [(f.name, f.dataType.simpleString()) for f in schema.fields]
+        if got != want:
             raise ValueError(
-                "table records no partition column (pre-r08 layout): "
-                "commit once via commit_append to migrate")
-        if doc.get("schema"):
-            tbl = StructType.fromJson(json.loads(doc["schema"]))
-            want = [(f.name, f.dataType.simpleString())
-                    for f in tbl.fields]
-            got = [(f.name, f.dataType.simpleString())
-                   for f in schema.fields]
-            if got != want:
-                raise ValueError(
-                    f"INSERT schema {got} must match the table schema "
-                    f"{want} exactly (no additive evolution through "
-                    "SQL; use commit_append(evolve=True))")
-        self.part_col = part_col          # derived col under transform
+                f"INSERT schema {got} must match the table schema "
+                f"{want} exactly (no additive evolution through SQL; use "
+                "commit_append(evolve=True))")
+        self.part_col = doc["part_col"]   # derived col under transform
         self.pt = doc.get("part_transform")
         self.col_map = doc.get("col_map")
         self.col_names = [f.name for f in schema.fields]
@@ -1087,7 +1065,7 @@ class ManifestInsertWriter(DataSourceArrowWriter):
         # footer stats keyed by PHYSICAL name — the staged files carry
         # physical columns and the prune side maps logical→physical
         self.stats_cols = [mt._phys_name(self.col_map, c)
-                           for c in mt._doc_stats_cols(self.root, doc)]
+                           for c in mt._doc_stats_cols(doc)]
         self.constraints = dict(doc.get("constraints") or {})
         self.epoch0 = mt._vacuum_epoch(self.root)
 
@@ -1207,7 +1185,7 @@ class ManifestInsertWriter(DataSourceArrowWriter):
                     "re-run the INSERT")
             if (doc.get("col_map") != self.col_map
                     or doc.get("part_transform") != self.pt
-                    or doc.get("part_col") != self.part_col):
+                    or doc["part_col"] != self.part_col):
                 raise RuntimeError(
                     "table partition spec / column mapping changed "
                     "while the INSERT ran — files were written under "

@@ -459,11 +459,7 @@ def merge_into_sql(spark: SparkSession, sql: str,
     spec = parse_merge(sql)
     root = _norm(path or resolve_table_root(spec.target, catalog))
     doc = _load_doc(root)
-    part_used = part_col = doc.get("part_col")  # the directory column
-    if not part_col:
-        raise ValueError(
-            "table records no partition column (pre-r08 layout): "
-            "commit once via commit_append to migrate")
+    part_used = part_col = doc["part_col"]  # the directory column
     _refuse_mixed_specs(doc, "merge")
     pt = doc.get("part_transform")
     if pt:
@@ -482,7 +478,7 @@ def merge_into_sql(spark: SparkSession, sql: str,
         raise ValueError(f"target and source share the name {tq!r} — "
                          "alias one of them")
 
-    empty = _empty_like(spark, root, doc)  # the schema, no file read
+    empty = _empty_like(spark, doc)  # the schema, no file read
     src0 = _source_df(spark, spec.source, sq)
     tcols, scols = list(empty.columns), list(src0.columns)
     schema = {f.name: f.dataType for f in empty.schema.fields}
@@ -570,7 +566,7 @@ def merge_into_sql(spark: SparkSession, sql: str,
 
     on_expr = F.expr(spec.on_sql)
     src_keys = src0.select(*skeys)
-    stats_cols = _doc_stats_cols(root, doc)
+    stats_cols = _doc_stats_cols(doc)
     # the key columns the per-file min/max index covers shrink the
     # rewrite set INSIDE touched partitions
     key_cols = [k for k in tkeys if k != part_col and k in stats_cols]
@@ -789,7 +785,7 @@ def delete_sql(spark: SparkSession, sql: str,
 
 def _doc_part_source(doc: dict) -> str:
     pt = doc.get("part_transform")
-    return pt["source"] if pt else doc.get("part_col")
+    return pt["source"] if pt else doc["part_col"]
 
 
 def create_table_sql(spark: SparkSession, sql: str,
@@ -917,5 +913,5 @@ def describe_history_sql(spark: SparkSession, sql: str,
     return spark.createDataFrame(
         [(int(h["version"]), str(h.get("op") or ""),
           (None if h.get("parent") is None else int(h["parent"])),
-          float(h.get("ts") or 0.0)) for h in hist],
+          float(h["ts"])) for h in hist],
         "version long, op string, parent long, ts double")

@@ -21,6 +21,7 @@ import pytest
 
 from silvia_spark.operators import manifest_table as mt
 from silvia_spark.operators.manifest_fs import LeaseLost
+from tests.fab_manifest import write_manifest
 
 moto = pytest.importorskip("moto")
 boto3 = pytest.importorskip("boto3")
@@ -61,7 +62,7 @@ def _fab(fs) -> str:
     cannot stage here)."""
     root = f"/tbl-{uuid.uuid4().hex[:8]}"
     fs.put_atomic(os.path.join(root, "part=p1", "f1.parquet"), "x")
-    mt._write_manifest(
+    write_manifest(
         root, 1, [{"path": "part=p1/f1.parquet", "partition": "p1",
                    "rows": 1}], parent=None)
     assert mt._flip_current(root, 1)
@@ -72,11 +73,11 @@ def test_s3_claim_flip_and_time_travel(s3fs):
     root = _fab(s3fs)
     assert mt.current_version(root) == 1
     # optimistic claim: second writer at the same version loses loudly
-    mt._write_manifest(root, 2, [{"path": "part=p1/f2.parquet",
-                                  "partition": "p1", "rows": 1}],
-                       parent=1, occ=True)
+    write_manifest(root, 2, [{"path": "part=p1/f2.parquet",
+                              "partition": "p1", "rows": 1}],
+                   parent=1, occ=True)
     with pytest.raises(FileExistsError):
-        mt._write_manifest(root, 2, [], parent=1, occ=True)
+        write_manifest(root, 2, [], parent=1, occ=True)
     s3fs.put_atomic(os.path.join(root, "part=p1", "f2.parquet"), "y")
     assert mt._flip_current(root, 2)
     assert mt.current_version(root) == 2
@@ -161,15 +162,15 @@ def test_s3_vacuum_retires_and_grace_spares(s3fs, monkeypatch):
     root = _fab(s3fs)
     # v2 rewrites the table; v1 becomes retirable
     s3fs.put_atomic(os.path.join(root, "part=p1", "f2.parquet"), "y")
-    mt._write_manifest(root, 2, [{"path": "part=p1/f2.parquet",
-                                  "partition": "p1", "rows": 1}],
-                       parent=1, occ=True)
+    write_manifest(root, 2, [{"path": "part=p1/f2.parquet",
+                              "partition": "p1", "rows": 1}],
+                   parent=1, occ=True)
     assert mt._flip_current(root, 2)
     # a YOUNG ahead-of-pointer claim with its adopted file
     s3fs.put_atomic(os.path.join(root, "part=p1", "f3.parquet"), "z")
-    mt._write_manifest(root, 3, [{"path": "part=p1/f3.parquet",
-                                  "partition": "p1", "rows": 1}],
-                       parent=2, occ=True)
+    write_manifest(root, 3, [{"path": "part=p1/f3.parquet",
+                              "partition": "p1", "rows": 1}],
+                   parent=2, occ=True)
 
     deleted = mt.vacuum(root, keep_versions=1)
     assert deleted == ["part=p1/f1.parquet"], deleted

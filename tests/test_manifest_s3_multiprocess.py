@@ -22,6 +22,7 @@ import uuid
 import pytest
 
 from silvia_spark.operators import manifest_table as mt
+from tests.fab_manifest import write_manifest
 
 moto = pytest.importorskip("moto")
 boto3 = pytest.importorskip("boto3")
@@ -49,15 +50,9 @@ for j in range(3):
     done = False
     for attempt in range(120):
         doc = mt._load_doc(root)
-        if "files" in doc:
-            parent = ([mt._write_segment(root, doc["files"],
-                                         reused=True)]
-                      if doc["files"] else [])
-        else:
-            parent = list(doc.get("segments", ()))
         v = doc["version"] + 1
-        nd = mt._make_doc(v, doc["version"], parent + [seg],
-                          commit_id=cid)
+        nd = mt._make_doc(v, doc["version"], doc["segments"] + [seg],
+                          commit_id=cid, schema=doc["schema"])
         nd["part_col"] = "part"
         try:
             mt._write_doc(root, v, nd, occ=True)
@@ -131,9 +126,9 @@ def test_s3_cross_process_commit_stress(s3_env, monkeypatch):
     monkeypatch.setattr(mt, "FS", fs)
     root = "/tbl"
     fs.put_atomic(os.path.join(root, "part=p1", "f0.parquet"), "x")
-    mt._write_manifest(root, 1, [{"path": "part=p1/f0.parquet",
-                                  "partition": "p1", "rows": 1}],
-                       parent=None)
+    write_manifest(root, 1, [{"path": "part=p1/f0.parquet",
+                              "partition": "p1", "rows": 1}],
+                   parent=None)
     assert mt._flip_current(root, 1)
 
     env = dict(os.environ, SILVIA_S3_ENDPOINT=endpoint,

@@ -11,6 +11,7 @@ import os
 import pytest
 
 from silvia_spark.operators import manifest_table as mt
+from tests.fab_manifest import write_manifest
 
 
 def _base(spark):
@@ -335,7 +336,7 @@ def _fab_table(tmp_path):
     os.makedirs(os.path.join(root, "part=p1"))
     with open(os.path.join(root, "part=p1", "f1.parquet"), "w") as f:
         f.write("x")
-    mt._write_manifest(
+    write_manifest(
         root, 1, [{"path": "part=p1/f1.parquet", "partition": "p1",
                    "rows": 1}], parent=None)
     mt._flip_current(root, 1)
@@ -355,7 +356,7 @@ def test_vacuum_spares_inflight_claims(tmp_path):
         f.write("y")
     claim = [{"path": "part=p1/f1.parquet", "partition": "p1", "rows": 1},
              {"path": "part=p1/f2.parquet", "partition": "p1", "rows": 1}]
-    mt._write_manifest(root, 2, claim, parent=1, occ=True)
+    write_manifest(root, 2, claim, parent=1, occ=True)
 
     assert mt.vacuum(root) == []
     assert os.path.exists(mt._manifest_path(root, 2))
@@ -373,7 +374,7 @@ def test_flip_aborts_on_vacuumed_claim(tmp_path):
     leftover), the flip must abort loudly — a pointer to a missing
     manifest would brick every subsequent read."""
     root = _fab_table(tmp_path)
-    mt._write_manifest(root, 2, [], parent=1, occ=True)
+    write_manifest(root, 2, [], parent=1, occ=True)
     os.remove(mt._manifest_path(root, 2))
     with pytest.raises(mt.CommitAborted):
         mt._flip_current(root, 2)
@@ -508,9 +509,9 @@ def test_crashed_create_is_reclaimed(spark, tmp_path):
     presume the crash, and reclaim v1."""
     root = str(tmp_path / "t")
     os.makedirs(os.path.join(root, mt._MANIFESTS))
-    mt._write_manifest(root, 1, [{"path": "part=px/ghost.parquet",
-                                  "partition": "px", "rows": 1}],
-                       parent=None, occ=True)
+    write_manifest(root, 1, [{"path": "part=px/ghost.parquet",
+                              "partition": "px", "rows": 1}],
+                   parent=None, occ=True)
     batch = spark.createDataFrame([(1, "p1", 10.0)],
                                   "k BIGINT, part STRING, v DOUBLE")
     assert mt.commit_append(spark, root, batch, "part") == 1
@@ -524,7 +525,7 @@ def test_reclaim_refuses_committed_version(tmp_path):
     root = _fab_table(tmp_path)
     assert mt._reclaim_claim(root, 1) is False
     assert os.path.exists(mt._manifest_path(root, 1))
-    mt._write_manifest(root, 2, [], parent=1, occ=True)
+    write_manifest(root, 2, [], parent=1, occ=True)
     assert mt._reclaim_claim(root, 2) is True
     assert not os.path.exists(mt._manifest_path(root, 2))
 
@@ -639,7 +640,7 @@ def test_vacuum_spares_commit_staged_mid_sweep(tmp_path, monkeypatch):
     monkeypatch.setattr(mt.os, "listdir", real_listdir)
     assert os.path.exists(os.path.join(root, "part=p1", "f2.parquet"))
     # the committer's claim + flip proceed once vacuum releases the lock
-    mt._write_manifest(
+    write_manifest(
         root, 2,
         [{"path": "part=p1/f1.parquet", "partition": "p1", "rows": 1},
          {"path": "part=p1/f2.parquet", "partition": "p1", "rows": 1}],
@@ -762,29 +763,38 @@ def test_schema_evolution_policy_and_type_conflicts(spark, tmp_path):
     assert mt.current_version(root) == 1  # nothing committed
 
 
-def test_v1_format_tables_still_read_and_migrate(spark, tmp_path):
-    """A table whose manifests predate the segment format (inline
-    ``files``) keeps reading, and its first append migrates it to
-    segments without losing entries."""
+def test_legacy_manifest_fails_before_any_claim(spark, tmp_path):
+    """Every reader and writer takes the one manifest format's keys as
+    given: a doc in an older shape (inline ``files``, no segments,
+    schema, part_col or ts) fails loudly at its first use — never read
+    as an empty table — and a failing writer stages, claims and deletes
+    nothing."""
+    import json
+
     root = str(tmp_path / "t")
     mt.create_table(_base(spark), root, "part")
-    # rewrite v1 as an inline-files doc (the old format); the pointer
-    # comes off first — the stale-version guard refuses any writes at
-    # or below a committed version
-    m = mt.load_manifest(root, 1)
-    os.remove(os.path.join(root, mt._CURRENT))
-    os.remove(mt._manifest_path(root, 1))
-    mt._write_manifest(root, 1, m["files"], parent=None)
-    mt._flip_current(root, 1)
-    assert _rows(mt.read_snapshot(spark, root)) == _rows(_base(spark))
+    files = mt.load_manifest(root, 1)["files"]
+    with open(mt._manifest_path(root, 1), "w") as f:
+        json.dump({"version": 1, "parent": None, "files": files}, f)
 
+    def tree():
+        return sorted(os.path.relpath(os.path.join(d, n), root)
+                      for d, _, ns in os.walk(root) for n in ns)
+
+    with open(os.path.join(root, mt._CURRENT)) as f:
+        current = f.read()
+    before = tree()
     b = spark.createDataFrame([(10, "p2", 100.0)],
                               "k BIGINT, part STRING, v DOUBLE")
-    assert mt.commit_append(spark, root, b, "part") == 2
-    d2 = mt._load_doc(root)
-    assert "files" not in d2 and len(d2["segments"]) == 2
-    assert _rows(mt.read_snapshot(spark, root)) == sorted(
-        _rows(_base(spark)) + [(10, "p2", 100.0)])
+    with pytest.raises(KeyError):
+        mt.read_snapshot(spark, root)
+    with pytest.raises(KeyError):
+        mt.commit_append(spark, root, b, "part")
+    with pytest.raises(KeyError):
+        mt.vacuum(root)
+    with open(os.path.join(root, mt._CURRENT)) as f:
+        assert f.read() == current
+    assert tree() == before
 
 
 def test_vacuum_under_slow_reader(spark, tmp_path):
@@ -868,32 +878,6 @@ def test_segment_rollup_voided_by_statless_entry(tmp_path):
     ])
     assert desc2["stats"] == {"x": [0, 30]}
     assert not mt._seg_overlaps(desc2, {"x": (50, 60)})
-
-
-def test_stats_cols_survive_v1_migration(spark, tmp_path):
-    """r09 review finding: the first commit on a v1-format table must
-    carry the computed stats-column union into the v2 doc, or stats
-    collection silently stops for every later commit."""
-    root = str(tmp_path / "t")
-    mt.create_table(_base(spark), root, "part", stats_cols=["k"])
-    m = mt.load_manifest(root, 1)
-    os.remove(os.path.join(root, mt._CURRENT))
-    os.remove(mt._manifest_path(root, 1))
-    mt._write_manifest(root, 1, m["files"], parent=None)  # v1 format
-    mt._flip_current(root, 1)
-
-    b = spark.createDataFrame([(10, "p2", 100.0)],
-                              "k BIGINT, part STRING, v DOUBLE")
-    mt.commit_append(spark, root, b, "part")
-    d2 = mt._load_doc(root)
-    assert d2.get("stats_cols") == ["k"]
-    b2 = spark.createDataFrame([(11, "p2", 110.0)],
-                               "k BIGINT, part STRING, v DOUBLE")
-    mt.commit_append(spark, root, b2, "part")
-    # the post-migration append still collects per-file k stats
-    new = [e for e in mt.load_manifest(root)["files"]
-           if e["partition"] == "p2" and e["rows"] == 1]
-    assert new and all("stats" in e and "k" in e["stats"] for e in new)
 
 
 def test_stale_committer_cannot_claim_passed_version(spark, tmp_path):
@@ -1221,7 +1205,7 @@ def test_flip_leaselost_defers_to_claim_survived(tmp_path, monkeypatch):
     root = _fab_table(tmp_path)
     claim = [{"path": "part=p1/f1.parquet", "partition": "p1",
               "rows": 1}]
-    mt._write_manifest(root, 2, claim, parent=1, occ=True)
+    write_manifest(root, 2, claim, parent=1, occ=True)
 
     def takeover_then_leaselost(r, path, data, claim_path=None):
         mt.FS.put_atomic(path, data)  # the takeover flipped our claim
@@ -1236,7 +1220,7 @@ def test_flip_leaselost_defers_to_claim_survived(tmp_path, monkeypatch):
     # pointer still behind the claimed version: genuinely indeterminate
     # (nothing became visible; _claim_survived's match would lie) —
     # re-raise
-    mt._write_manifest(root, 3, claim, parent=2, occ=True)
+    write_manifest(root, 3, claim, parent=2, occ=True)
 
     def leaselost_only(r, path, data, claim_path=None):
         raise mt.LeaseLost("fenced, nothing flipped")

@@ -8,21 +8,19 @@ and Delta with checkpoints + log segments. r09's segmented manifests
 segment (its batch) and a doc of ≤ _MAX_SEGMENTS descriptors carried by
 reference.
 
-This tool measures both shapes against synthetic tables of fabricated
-entries (fake file paths — commit paths never open parent data files,
-so the metadata cost is measured in isolation) and records:
+This tool measures the segmented shape against synthetic tables of
+fabricated entries (fake file paths — commit paths never open parent
+data files, so the metadata cost is measured in isolation) and records:
 
 - per-commit wall time of a real 1-row ``commit_append`` (includes the
   constant Spark staging overhead, reported separately via a baseline
   stage+adopt of the same batch);
 - the bytes of manifest metadata WRITTEN per commit;
-- driver peak allocation during the commit (tracemalloc);
-- the legacy shape's per-commit metadata cost at the same entry counts
-  (a full inline-files manifest write, what r08 paid on EVERY commit);
-- the one-time migration cost the first segmented append pays on a
-  legacy-format table.
+- driver peak allocation during the commit (tracemalloc).
 
-Writes MANIFEST_SCALE.json; the findings go in SCALE.md §manifest.
+Writes MANIFEST_SCALE.json; the findings go in SCALE.md §manifest. The
+``legacy_*`` and ``migration_*`` fields of the recorded file are history:
+they measured the inline-files manifest format, which no longer exists.
 
 Run: python tools/bench_manifest_scale.py [counts...]
 """
@@ -55,19 +53,16 @@ def _fab_entries(n: int) -> list[dict]:
             for i in range(n)]
 
 
-def _fab_table(n: int, segmented: bool, schema_json: str) -> str:
+def _fab_table(n: int, schema_json: str) -> str:
     root = os.path.join(tempfile.mkdtemp(prefix="silvia_mscale_"), "tbl")
     os.makedirs(os.path.join(root, mt._MANIFESTS))
     entries = _fab_entries(n)
-    if segmented:
-        segs = [mt._write_segment(root, entries[i:i + SEG_SIZE])
-                for i in range(0, n, SEG_SIZE)]
-        doc = mt._make_doc(1, None, segs, commit_id=uuid.uuid4().hex,
-                           schema=schema_json)
-        doc["part_col"] = "part"
-        mt._write_doc(root, 1, doc)
-    else:
-        mt._write_manifest(root, 1, entries, parent=None)
+    segs = [mt._write_segment(root, entries[i:i + SEG_SIZE])
+            for i in range(0, n, SEG_SIZE)]
+    doc = mt._make_doc(1, None, segs, commit_id=uuid.uuid4().hex,
+                       schema=schema_json)
+    doc["part_col"] = "part"
+    mt._write_doc(root, 1, doc)
     mt._flip_current(root, 1)
     return root
 
@@ -109,8 +104,7 @@ def main() -> None:
                  "configs": {}}
     for n in counts:
         cfg: dict = {}
-        # --- segmented (r09) table: timed real appends ---------------
-        root = _fab_table(n, segmented=True, schema_json=schema_json)
+        root = _fab_table(n, schema_json)
         times, bytes_, peaks = [], [], []
         for _ in range(N_COMMITS):
             mark = time.time()
@@ -132,46 +126,10 @@ def main() -> None:
         cfg["segments_after"] = len(mt._load_doc(root)["segments"])
         shutil.rmtree(os.path.dirname(root))
 
-        # --- legacy (r08) shape: the inline-files manifest write every
-        # commit paid, measured directly at the same entry count -------
-        root = _fab_table(n, segmented=False, schema_json=schema_json)
-        entries = mt._resolve(root, mt._load_doc(root))
-        lw, lpeaks = [], []
-        for i in range(N_COMMITS):
-            tracemalloc.start()
-            t0 = time.perf_counter()
-            mt._write_manifest(root, 100 + i, entries + [
-                {"path": f"part=p0/part-new{i}.parquet",
-                 "partition": "p0", "rows": 1}], parent=99 + i)
-            lw.append(time.perf_counter() - t0)
-            _, peak = tracemalloc.get_traced_memory()
-            tracemalloc.stop()
-            lpeaks.append(peak)
-        cfg["legacy_metadata_write_min_sec"] = round(min(lw), 4)
-        cfg["legacy_metadata_bytes_per_commit"] = os.path.getsize(
-            mt._manifest_path(root, 100))
-        cfg["legacy_driver_peak_mb"] = round(max(lpeaks) / 2**20, 2)
-        for i in range(N_COMMITS):
-            os.remove(mt._manifest_path(root, 100 + i))
-
-        # --- migration: first segmented append on a legacy table ------
-        tracemalloc.start()
-        t0 = time.perf_counter()
-        mt.commit_append(spark, root, batch, "part")
-        cfg["migration_commit_sec"] = round(time.perf_counter() - t0, 4)
-        _, peak = tracemalloc.get_traced_memory()
-        tracemalloc.stop()
-        cfg["migration_driver_peak_mb"] = round(peak / 2**20, 2)
-        shutil.rmtree(os.path.dirname(root))
-
         out["configs"][str(n)] = cfg
         print(f"n={n}: segmented {cfg['segmented_commit_min_sec']}s "
               f"({cfg['segmented_metadata_bytes_per_commit']}B, "
-              f"{cfg['segmented_driver_peak_mb']}MB peak) vs legacy "
-              f"metadata-only {cfg['legacy_metadata_write_min_sec']}s "
-              f"({cfg['legacy_metadata_bytes_per_commit']}B, "
-              f"{cfg['legacy_driver_peak_mb']}MB peak); migration "
-              f"{cfg['migration_commit_sec']}s", flush=True)
+              f"{cfg['segmented_driver_peak_mb']}MB peak)", flush=True)
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     with open(os.path.join(repo, "MANIFEST_SCALE.json"), "w") as f:
